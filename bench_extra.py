@@ -158,23 +158,10 @@ def run_quality(spark, work):
 
 
 def run_lsh(spark, work):
-    from louvain_spark.operators.similarity import (
-        cosine_topk_lsh,
-        rademacher_planes,
-        _bucket_expr,
-    )
+    from louvain_spark.operators.similarity import cosine_topk_lsh
 
     cvecs = prep_vecs(spark, work)
     dim_v = 64
-    planes = rademacher_planes(dim_v, 10, 4, 42)
-    with timed("lsh.bucketize_only"):
-        qb = cvecs.select(
-            F.col("id").alias("query_id"),
-            F.explode(
-                F.array(*[_bucket_expr(F.col("vec"), planes[t], t) for t in range(4)])
-            ).alias("bucket"),
-        )
-        noop(qb)
     with timed("lsh.full_cold"):
         cosine_topk_lsh(
             spark, cvecs, cvecs, k=10, dim=dim_v, n_planes=10, n_tables=4,

@@ -17,22 +17,14 @@ from louvain_spark.operators.graph import canonicalize, checksum, symmetrize, ve
 from louvain_spark.plans.loop import StepResult, SuperstepRunner
 
 
-def _tag_min(df: DataFrame, impl: str) -> DataFrame:
+def _tag_min(df: DataFrame) -> DataFrame:
     """Attach `_mn` = per-src min(dst).
 
-    impl='window': one shuffle — but a vertex's ENTIRE neighborhood lands
-    in one window task with no map-side partial aggregation, so a power-law
-    hub concentrates in a single straggler task (AQE splits skewed *joins*,
-    not windows).
-
-    impl='groupby': two shuffles — groupBy(min) does map-side partial
-    aggregation (hub minima reduce before the shuffle) and the join back on
-    src is AQE-skew-splittable. The scale-safe default for graphs with
-    heavy hitters."""
-    if impl == "window":
-        from pyspark.sql import Window
-
-        return df.withColumn("_mn", F.min("dst").over(Window.partitionBy("src")))
+    groupBy(min) does map-side partial aggregation (hub minima reduce
+    before the shuffle) and the join back on src is AQE-skew-splittable —
+    the skew-safe shape for power-law hubs. (A one-shuffle window form
+    funnels a hub's whole neighborhood through one task: AQE splits
+    skewed joins, not windows.)"""
     mins = df.groupBy("src").agg(F.min("dst").alias("_mn"))
     # shuffle-hash pin: mins is |V|-sized — left to AQE this join can
     # pick a |V|-row broadcast whose driver-side build OOMs at tight
@@ -44,7 +36,7 @@ def _tag_min(df: DataFrame, impl: str) -> DataFrame:
     return df.join(mins.hint("shuffle_hash"), "src")
 
 
-def _large_star(edges: DataFrame, impl: str = "groupby", dedup: bool = False) -> DataFrame:
+def _large_star(edges: DataFrame, dedup: bool = False) -> DataFrame:
     """For each u: m = min(Γ(u) ∪ {u}); emit (v, m) for v ∈ Γ(u), v > u.
 
     dedup=False skips the intermediate distinct (one full shuffle per
@@ -53,20 +45,20 @@ def _large_star(edges: DataFrame, impl: str = "groupby", dedup: bool = False) ->
     collapses dupes; the round's single canonicalize dedups at the end).
     Emitted rows always have src=v > dst=m, so no self-loops either."""
     sym = symmetrize(edges)
-    tagged = _tag_min(sym, impl).withColumn("_m", F.least(F.col("src"), F.col("_mn")))
+    tagged = _tag_min(sym).withColumn("_m", F.least(F.col("src"), F.col("_mn")))
     out = tagged.where(F.col("dst") > F.col("src")).select(
         F.col("dst").alias("src"), F.col("_m").alias("dst")
     )
     return canonicalize(out) if dedup else out
 
 
-def _small_star(edges: DataFrame, impl: str = "groupby") -> DataFrame:
+def _small_star(edges: DataFrame) -> DataFrame:
     """Orient u = max(pair); m = min(Γ_small(u) ∪ {u});
     emit (v, m) for v ∈ Γ_small(u) ∪ {u}, v ≠ m."""
     oriented = edges.select(
         F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
     )
-    tagged = _tag_min(oriented, impl).withColumn("_m", F.col("_mn"))
+    tagged = _tag_min(oriented).withColumn("_m", F.col("_mn"))
     out1 = tagged.where(F.col("dst") != F.col("_m")).select(
         F.col("dst").alias("src"), F.col("_m").alias("dst")
     )
@@ -83,17 +75,11 @@ def connected_components(
     max_iter: int = 50,
     runner: SuperstepRunner | None = None,
     start_state: DataFrame | None = None,
-    star_impl: str = "groupby",
 ) -> DataFrame:
     """assignments(id, component) with component = min vertex id reachable.
 
     Pass a SuperstepRunner for durable checkpoints/ledger; pass
     (runner, start_state) from SuperstepRunner.resume to continue a run.
-
-    star_impl: 'groupby' (default — skew-safe: map-side partial min +
-    AQE-splittable join back, the right shape for power-law hubs) or
-    'window' (one shuffle per rewrite but the hub's whole neighborhood
-    funnels through one window task — only for degree-bounded graphs).
 
     Round batching (chaining 2 rounds per action to halve the per-action
     serial floor, r3 VERDICT #5) was tried and MEASURED WORSE — 4-5x wall
@@ -114,16 +100,13 @@ def connected_components(
         # fixpoint checksum rides the checkpoint action as observed
         # metrics — one Spark job per superstep, no re-scan
         obs = Observation()
-        nxt = _small_star(_large_star(cur, star_impl), star_impl).observe(
+        nxt = _small_star(_large_star(cur)).observe(
             obs,
             F.count(F.lit(1)).alias("n"),
             F.coalesce(
                 F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")), F.lit(0)
             ).alias("h"),
         )
-        from louvain_spark.plans.explain import dump as _dump
-
-        _dump(nxt, "cc_round")
         nxt = runner.advance(StepResult(nxt))
         vals = obs.get
         sig = (int(vals["n"]), int(vals["h"]))

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from louvain_spark.plans.gate import broadcast_or_shuffle
+
 # Portable (Java regex == RE2) PII patterns. Deliberately conservative:
 # ASCII word boundaries, no lookarounds, no backreferences.
 EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
@@ -62,7 +64,6 @@ def strip_boilerplate_lines(
     max_line_df: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_keys: int = 4_000_000,
 ) -> DataFrame:
     """(doc_id, n_lines, n_kept, clean_text) — C4/CCNet-style boilerplate
     removal: drop every line whose normalized form (lower+trim) appears
@@ -76,10 +77,10 @@ def strip_boilerplate_lines(
     (partial (key, doc) dedup shuffles on both columns, so a footer in
     10^9 documents never converges on one task). Only the OFFENDER key
     set — lines with df > max_line_df, the small side by construction —
-    joins back, count-gated broadcast-else-shuffle_hash (the `_with_ids`
-    pattern): in the common broadcast regime the line table is never
-    reshuffled by its skewed key. Reassembly is one per-doc aggregate;
-    order restoration is array_sort on (pos, line) structs, no window.
+    joins back through the dimension-join gate (plans/gate.py): in the
+    common broadcast regime the line table is never reshuffled by its
+    skewed key. Reassembly is one per-doc aggregate; order restoration
+    is array_sort on (pos, line) structs, no window.
     """
     t = F.coalesce(F.col(text_col), F.lit(""))
     nonempty = F.filter(F.split(t, "\n"), lambda x: F.length(x) > 0)
@@ -93,12 +94,10 @@ def strip_boilerplate_lines(
         .select("_key")
         .localCheckpoint(eager=True)
     )
-    if bkeys.count() <= broadcast_keys:
-        bkeys = F.broadcast(bkeys)
-    else:
-        bkeys = bkeys.hint("shuffle_hash")
     flagged = lines.join(
-        bkeys.withColumn("_boiler", F.lit(True)), "_key", "left"
+        broadcast_or_shuffle(bkeys, bkeys.count()).withColumn("_boiler", F.lit(True)),
+        "_key",
+        "left",
     )
     keep = F.col("_boiler").isNull()
     agg = flagged.groupBy("doc_id").agg(

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from louvain_spark.operators.textstats import lower_tokens as _tokens
+from louvain_spark.plans.gate import broadcast_or_shuffle
 
 
 def encode_documents(
@@ -34,7 +35,6 @@ def encode_documents(
     id_col: str = "doc_id",
     text_col: str = "text",
     unk_id: int = -1,
-    broadcast_terms: int = 4_000_000,
 ) -> DataFrame:
     """(doc_id, n_tokens, token_ids) — every document encoded as an
     ``array<bigint>`` of vocabulary ids, order-preserving, out-of-vocab
@@ -50,10 +50,9 @@ def encode_documents(
     a shuffle to re-prove what the builder already guarantees).
 
     Scale: one posexplode + one keyed join + one per-doc collect. The
-    dictionary join is count-gated broadcast-else-shuffle_hash (the
-    `_with_ids` pattern, operators/induce.py:92) — a top-k vocabulary
-    broadcasts, a 10M+-term open vocabulary falls back to a hash join
-    keyed on term, where the count table is distinct so join fan-out is
+    dictionary join goes through the dimension-join gate (plans/gate.py):
+    a top-k vocabulary broadcasts, a 10M+-term open vocabulary falls back
+    to a hash join keyed on term, where the count table is distinct so join fan-out is
     exactly 1 and hot tokens cannot amplify rows. Order restoration is
     array_sort on (pos, id) structs inside the aggregate — no window,
     no secondary sort pass.
@@ -67,11 +66,7 @@ def encode_documents(
     v = vocab.select(
         "term", F.col("term_id").cast("long").alias("_tid")
     ).localCheckpoint(eager=True)
-    if v.count() <= broadcast_terms:
-        v = F.broadcast(v)
-    else:
-        v = v.hint("shuffle_hash")
-    enc = ex.join(v, "term", "left").select(
+    enc = ex.join(broadcast_or_shuffle(v, v.count()), "term", "left").select(
         "doc_id",
         "pos",
         F.coalesce("_tid", F.lit(int(unk_id)).cast("long")).alias("tid"),

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from louvain_spark.plans.gate import broadcast_or_shuffle
+
 
 def membership(
     transcripts: DataFrame,
@@ -89,28 +91,20 @@ def entity_vertices(mem: DataFrame, rank_partitions: int = 64) -> DataFrame:
     )
 
 
-def _with_ids(
-    mem: DataFrame, vertices: DataFrame, broadcast_nodes: int = 4_000_000
-) -> DataFrame:
+def _with_ids(mem: DataFrame, vertices: DataFrame) -> DataFrame:
     """Attach vertex ids to membership rows via the entity dictionary.
 
     The dictionary is O(|entities|), which includes one conv: entity per
     conversation — broadcastable at test scale but ~10^10 rows at the
     10^12-turn design point, far past any broadcast. Same count-gated
-    auto-choice as typed_edges/pagerank/lpa/louvain dimension joins:
-    broadcast below broadcast_nodes rows, shuffled-hash join on entity
-    name above it (hash, not sort-merge: the dictionary side skips the
-    sort and the membership side is orders of magnitude larger; entity
+    auto-choice as every other dimension join (plans/gate.py): broadcast
+    while small, shuffled-hash join on entity name above the gate (entity
     names hash uniformly). vertices from entity_vertices is already
     localCheckpointed (plans/rank.py), so the gate's count() reads
     checkpoint blocks — no lineage re-execution.
     """
     d = vertices.select(F.col("name").alias("entity"), "id", F.col("vtype"))
-    if vertices.count() <= broadcast_nodes:
-        d = F.broadcast(d)
-    else:
-        d = d.hint("shuffle_hash")
-    return mem.join(d, "entity")
+    return mem.join(broadcast_or_shuffle(d, vertices.count()), "entity")
 
 
 def cooccurrence_edges(
@@ -347,7 +341,6 @@ def typed_edges(
     dst_col,
     etype: str,
     vertices: DataFrame | None = None,
-    broadcast_nodes: int = 4_000_000,
 ) -> DataFrame:
     """Directed typed relation edges — the co-occurrence-orthogonal edge
     family the reference materializes as Who-[:BELONGS_TO]->organization
@@ -356,10 +349,10 @@ def typed_edges(
 
     Aggregates BEFORE the dictionary join (map-side partial count, the
     wide shuffle carries only name pairs), then maps names→ids against
-    `vertices` (id, name) — broadcast while the dictionary is below
-    broadcast_nodes rows (the same auto-gate as pagerank/lpa/louvain),
-    shuffle join above it. Returns (src, dst, etype, weight) with ids when
-    vertices is given, else (src_name, dst_name, etype, weight).
+    `vertices` (id, name) through the dimension-join gate
+    (plans/gate.py): broadcast while small, shuffle_hash above it.
+    Returns (src, dst, etype, weight) with ids when vertices is given,
+    else (src_name, dst_name, etype, weight).
     """
     pairs = df.select(F.col(src_col).alias("_sn"), F.col(dst_col).alias("_dn"))
     agg = pairs.groupBy("_sn", "_dn").agg(
@@ -372,9 +365,13 @@ def typed_edges(
             F.lit(etype).alias("etype"),
             "weight",
         )
-    jb = F.broadcast if vertices.count() <= broadcast_nodes else (lambda d: d)
-    ds = jb(vertices.select(F.col("name").alias("_sn"), F.col("id").alias("src")))
-    dd = jb(vertices.select(F.col("name").alias("_dn"), F.col("id").alias("dst")))
+    n = vertices.count()
+    ds = broadcast_or_shuffle(
+        vertices.select(F.col("name").alias("_sn"), F.col("id").alias("src")), n
+    )
+    dd = broadcast_or_shuffle(
+        vertices.select(F.col("name").alias("_dn"), F.col("id").alias("dst")), n
+    )
     return (
         agg.join(ds, "_sn")
         .join(dd, "_dn")

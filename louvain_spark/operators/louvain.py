@@ -44,24 +44,12 @@ with self-loops kept → repeat while level modularity gain ≥ 1e-7.
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
 
 import pandas as pd
-
-_DBG = bool(os.environ.get("LOUVAIN_DEBUG"))
-
-
-def _dbg_mark(label: str):
-    if _DBG:
-        import sys as _sys
-        import time as _time
-
-        print(f"[louvain-dbg] {label} t={_time.monotonic():.1f}", file=_sys.stderr, flush=True)
-
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
-
-# dimension-table broadcast gate for _renumber (tests monkeypatch it)
-_RENUMBER_BROADCAST_LIMIT = 4_000_000
 
 from louvain_spark.operators._louvain_kernel import (
     MIN_GAIN,
@@ -69,7 +57,8 @@ from louvain_spark.operators._louvain_kernel import (
     one_level_csr,
 )
 from louvain_spark.operators.graph import vertex_ids
-from louvain_spark.plans.loop import StepResult, SuperstepRunner
+from louvain_spark.plans.gate import broadcast_or_shuffle
+from louvain_spark.plans.loop import StepResult, SuperstepRunner, stats_reset
 
 
 class NoCheckpointError(ValueError):
@@ -78,23 +67,6 @@ class NoCheckpointError(ValueError):
     Subclasses ValueError for callers that caught the old shape, but lets
     the CLI distinguish 'nothing to resume' (exit 3) from an unrelated
     ValueError raised mid-recomputation (which must propagate)."""
-
-
-def _stats_reset(spark: SparkSession, df: DataFrame, base_dir: str, tag: str) -> DataFrame:
-    """Parquet write-read roundtrip to reset Catalyst size estimates.
-
-    localCheckpoint preserves the origin plan's estimated sizeInBytes, and
-    SizeInBytesOnlyStats estimates joins as the PRODUCT of child sizes —
-    a frame fed back through k joins per iteration grows its BigInt
-    estimate ~k× per sweep until the optimizer spends minutes multiplying
-    million-digit integers (observed: InjectRuntimeFilter →
-    BigInteger.multiplyToomCook3 pegging one core). Reading back from
-    parquet replaces the estimate with the real file size. This doubles as
-    the durable per-sweep checkpoint the north_rule asks for.
-    """
-    path = os.path.join(base_dir, tag)
-    df.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
 
 
 def _normalize(edges: DataFrame, weight_col: str | None) -> DataFrame:
@@ -120,10 +92,7 @@ def _renumber(assign: DataFrame) -> DataFrame:
     # remap is |communities|-sized — at level 0 of a big graph worst-case
     # O(|V|), so the broadcast is count-gated like every other dimension
     # join (the count reads dense_sorted_rank's checkpoint blocks)
-    if remap.count() <= _RENUMBER_BROADCAST_LIMIT:
-        remap = F.broadcast(remap)
-    else:
-        remap = remap.hint("shuffle_hash")
+    remap = broadcast_or_shuffle(remap, remap.count())
     return assign.join(remap, "community").select(
         "id", F.col("_new").alias("community")
     )
@@ -198,12 +167,11 @@ def _one_level_parallel(
     resolution: float,
     seed: int,
     level: int,
+    ckpt_dir: str,
     max_sweeps: int = 16,
     n_blocks: int | None = None,
     block_target: int = 64,
     min_moved_frac: float = 0.02,
-    ckpt_dir: str | None = None,
-    broadcast_nodes: int = 4_000_000,
     total_w: float | None = None,
     n_nodes: int | None = None,
 ) -> tuple[DataFrame, float]:
@@ -221,7 +189,6 @@ def _one_level_parallel(
     from louvain_spark.operators.quality import modularity as q_mod
 
     e = edges.persist()
-    _dbg_mark("par-setup-start")
     # total weight and vertex count are loop/level invariants the caller
     # usually already knows (Σw survives coarsening exactly; auto mode
     # counts ids for its threshold gate) — accept them to skip the
@@ -243,10 +210,6 @@ def _one_level_parallel(
     # negligible modularity (coarsening recovers it next level; quality
     # bound vs the sequential oracle is test-enforced)
     min_moved = max(1, int(n_nodes * min_moved_frac)) if n_blocks > 1 else 1
-    if ckpt_dir is None:
-        import tempfile
-
-        ckpt_dir = tempfile.mkdtemp(prefix="louvain-sweep-ckpt-")
 
     loops = e.where(F.col("src") == F.col("dst")).select(
         F.col("src").alias("id"), F.col("w").alias("self_w")
@@ -281,17 +244,10 @@ def _one_level_parallel(
     assign = k.select(
         "id", F.col("id").alias("community"), "k"
     ).localCheckpoint(eager=True)
-    _dbg_mark("par-setup-done")
     res, mm, lvl, sd = float(resolution), float(m), int(level), int(seed)
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
-
-        if _DBG:
-            import sys as _sys
-            import time as _time
-
-            _kt0 = _time.monotonic()
 
         moved_ids, new_coms = block_local_moves(
             pdf["src"].to_numpy(),
@@ -310,32 +266,9 @@ def _one_level_parallel(
             int(pdf["_blk"].iloc[0]),
             n_blocks,
         )
-        if _DBG:
-            print(
-                f"[kernel] blk={int(pdf['_blk'].iloc[0])} sweep={int(pdf['_sweep'].iloc[0])}"
-                f" rows={len(pdf)} moved={len(moved_ids)}"
-                f" wall={_time.monotonic() - _kt0:.2f}s",
-                file=_sys.stderr,
-                flush=True,
-            )
         return pd.DataFrame({"id": moved_ids, "new_com": new_coms}).astype("int64")
 
     for sweep in range(max_sweeps):
-        if _DBG:
-            import sys as _sys
-            import time as _time
-
-            _t0 = _time.monotonic()
-
-            def _mark(label, _t0=_t0):
-                print(
-                    f"[louvain-par]   {label} +{_time.monotonic() - _t0:.2f}s",
-                    file=_sys.stderr,
-                    flush=True,
-                )
-        else:
-            def _mark(label):
-                pass
         # ONE combined per-vertex dimension per sweep — (id, community, k,
         # Σ_tot of its community) — joined twice (src side and dst side)
         # through TWO ALIASES OF THE IDENTICAL SUBTREE, both keyed on id:
@@ -343,26 +276,23 @@ def _one_level_parallel(
         # so Spark's exchange/stage reuse builds it ONCE per sweep (the
         # former per-side projections defeated reuse and paid two
         # broadcast builds plus a cache-fill stage). The dimension is
-        # |V|-sized, tiny next to the edge table: below broadcast_nodes
-        # it ships as broadcast hash joins, so the only shuffle per sweep
-        # is the groupBy(_blk) feeding the kernel; above it, fall back to
-        # shuffle joins (the same size regime where a real cluster would).
-        use_bc = n_nodes <= broadcast_nodes
-        jb = F.broadcast if use_bc else (lambda df: df)
+        # |V|-sized, tiny next to the edge table: below the dimension-join
+        # gate (plans/gate.py) it ships as broadcast hash joins, so the
+        # only shuffle per sweep is the groupBy(_blk) feeding the kernel;
+        # above it, shuffle_hash joins.
         # Σ_tot via a window over the checkpointed assign state — ONE
         # exchange (community) inside the dim broadcast's build job. The
         # former groupBy(tot)+join form paid two sequential broadcast
         # builds per sweep (tot, then assign⋈tot); identical values, the
         # window sum is over the same groups (r7 barrier trim).
-        from pyspark.sql import Window as _W
-
         dim = assign.select(
             "id", "community", "k",
-            F.sum("k").over(_W.partitionBy("community")).alias("tot"),
+            F.sum("k").over(Window.partitionBy("community")).alias("tot"),
         )
-        dd, ds = dim.alias("_dd"), dim.alias("_ds")
+        dd = broadcast_or_shuffle(dim.alias("_dd"), n_nodes)
+        ds = broadcast_or_shuffle(dim.alias("_ds"), n_nodes)
         tagged = (
-            sym.join(jb(dd), F.col("dst") == F.col("_dd.id"))
+            sym.join(dd, F.col("dst") == F.col("_dd.id"))
             .select(
                 "src",
                 "dst",
@@ -370,7 +300,7 @@ def _one_level_parallel(
                 F.col("_dd.community").alias("cd"),
                 F.col("_dd.tot").alias("tot_cd"),
             )
-            .join(jb(ds), F.col("src") == F.col("_ds.id"))
+            .join(ds, F.col("src") == F.col("_ds.id"))
             .select(
                 "src",
                 "dst",
@@ -392,7 +322,7 @@ def _one_level_parallel(
         # kernel cogroup, moved broadcast, assign merge — as stages of a
         # single job; the moved-count observation fills during the write,
         # and the roundtrip doubles as the durable sweep checkpoint + the
-        # Catalyst stats reset (see _stats_reset).
+        # Catalyst stats reset (see plans/loop.stats_reset).
         # observe on the MERGED root (not on moved_df): an Observation
         # under a BroadcastExchange fails its exactly-once assertion — the
         # root select executes exactly once, in the write job
@@ -417,45 +347,20 @@ def _one_level_parallel(
             )
             .select("id", "community", "k")
         )
-        if sweep == 1:  # steady-state sweep plan (plans/r07 capture)
-            from louvain_spark.plans.explain import dump as _dump
-
-            _dump(merged, "louvain_sweep")
-        assign = _stats_reset(spark, merged, ckpt_dir, f"assign-l{level}-s{sweep}")
+        assign = stats_reset(
+            spark, merged, os.path.join(ckpt_dir, f"assign-l{level}-s{sweep}")
+        )
         moved = int(obs.get["n"])
         # frees sweep 0's initial eager localCheckpoint blocks (|V|-sized);
         # later sweeps' prev_assign is parquet-backed — a no-op there
         prev_assign.unpersist()
-        _mark("sweep-action")
-        if _DBG:
-            qe = assign._jdf.queryExecution()
-            adigits = len(str(qe.analyzed().stats().sizeInBytes()))
-            tq = tagged._jdf.queryExecution()
-            tdigits = len(str(tq.analyzed().stats().sizeInBytes()))
-            print(
-                f"[louvain-par]   stats-digits: assign={adigits} tagged={tdigits}"
-                f" assign_plan={len(qe.toString())}",
-                file=__import__("sys").stderr,
-                flush=True,
-            )
-        if _DBG:
-            import sys as _sys
-            import time as _time
-
-            print(
-                f"[louvain-par] level={level} sweep={sweep} moved={moved} t={_time.monotonic():.1f}",
-                file=_sys.stderr,
-                flush=True,
-            )
         if moved < min_moved:
             # the sub-threshold sweep's few moves are already applied (the
             # merge rides the same action) — keep them, stop sweeping
             break
 
     assign = assign.select("id", "community")  # drop the loop-carried k
-    _dbg_mark("par-mod-start")
     mod = q_mod(e.withColumnRenamed("w", "weight"), assign, resolution, "weight")
-    _dbg_mark("par-mod-done")
     e.unpersist()
     k.unpersist()
     sym.unpersist()
@@ -536,48 +441,52 @@ def louvain(
     """
     if runner is None:
         runner = SuperstepRunner(spark, "adhoc", f"louvain-{mode}")
-    import tempfile
-
+    # without a durable checkpoint_dir the per-level edge tables and sweep
+    # states go to a private temp dir, removed on return: the returned
+    # mapping is runner.advance output, which never reads from it
+    owned = runner.checkpoint_dir is None
     ckpt_base = runner.checkpoint_dir or tempfile.mkdtemp(prefix="louvain-ckpt-")
-    one_level = _dispatch_one_level(spark, mode, ckpt_base, parallel_opts)
+    try:
+        one_level = _dispatch_one_level(spark, mode, ckpt_base, parallel_opts)
 
-    ids = vertex_ids(edges, vertices).persist()
-    # materialize the normalized canonical edge table once: every sweep
-    # re-plans over it, and carrying the caller's lineage (e.g. an inline
-    # local relation) into each task binary dominated sweep time by 4-10x
-    _dbg_mark("normalize-start")
-    e = _stats_reset(spark, _normalize(edges, weight_col), ckpt_base, "edges-l0")
-    _dbg_mark("normalize-done")
-    total_w = e.agg(F.coalesce(F.sum("w"), F.lit(0.0))).collect()[0][0]
-    if not total_w:
-        from louvain_spark.plans.rank import dense_sorted_rank
-
-        assign = dense_sorted_rank(ids, "id", id_col="community").select(
-            "id", F.col("community").cast("long")
+        ids = vertex_ids(edges, vertices).persist()
+        # materialize the normalized canonical edge table once: every sweep
+        # re-plans over it, and carrying the caller's lineage (e.g. an inline
+        # local relation) into each task binary dominated sweep time by 4-10x
+        e = stats_reset(
+            spark, _normalize(edges, weight_col), os.path.join(ckpt_base, "edges-l0")
         )
-        return assign, 0.0
+        total_w = e.agg(F.coalesce(F.sum("w"), F.lit(0.0))).collect()[0][0]
+        if not total_w:
+            from louvain_spark.plans.rank import dense_sorted_rank
 
-    # level 0 (always kept, as in python-louvain generate_dendrogram)
-    assign, mod, needs_rn = one_level(
-        spark, e, ids, resolution, seed, 0, total_w=float(total_w)
-    )
-    _dbg_mark("level0-done")
-    if needs_rn:
-        assign = _renumber(assign)
-    _dbg_mark("renumber0-done")
-    mapping = runner.advance(StepResult(assign, metric=mod))
-    _dbg_mark("advance0-done")
-    # level boundaries are natural checkpoints: cut lineage so each level's
-    # sweeps replan against a flat, materialized graph
-    cur_edges = _stats_reset(spark, _coarsen(e, mapping), ckpt_base, "edges-l1")
-    _dbg_mark("coarsen0-done")
-    mapping, mod = _level_loop(
-        spark, one_level, runner, ckpt_base, mapping, mod, cur_edges,
-        start_level=1, max_levels=max_levels, resolution=resolution,
-        seed=seed, min_gain=min_gain, total_w=float(total_w),
-    )
-    ids.unpersist()
-    return mapping, float(mod)
+            assign = dense_sorted_rank(ids, "id", id_col="community").select(
+                "id", F.col("community").cast("long")
+            )
+            return assign, 0.0
+
+        # level 0 (always kept, as in python-louvain generate_dendrogram)
+        assign, mod, needs_rn = one_level(
+            spark, e, ids, resolution, seed, 0, total_w=float(total_w)
+        )
+        if needs_rn:
+            assign = _renumber(assign)
+        mapping = runner.advance(StepResult(assign, metric=mod))
+        # level boundaries are natural checkpoints: cut lineage so each level's
+        # sweeps replan against a flat, materialized graph
+        cur_edges = stats_reset(
+            spark, _coarsen(e, mapping), os.path.join(ckpt_base, "edges-l1")
+        )
+        mapping, mod = _level_loop(
+            spark, one_level, runner, ckpt_base, mapping, mod, cur_edges,
+            start_level=1, max_levels=max_levels, resolution=resolution,
+            seed=seed, min_gain=min_gain, total_w=float(total_w),
+        )
+        ids.unpersist()
+        return mapping, float(mod)
+    finally:
+        if owned:
+            shutil.rmtree(ckpt_base, ignore_errors=True)
 
 
 def _level_loop(
@@ -591,11 +500,9 @@ def _level_loop(
             .distinct()
             .localCheckpoint(eager=True)
         )
-        _dbg_mark(f"level{level}-ids-ready")
         assign, new_mod, needs_rn = one_level(
             spark, cur_edges, cur_ids, resolution, seed, level, total_w=total_w
         )
-        _dbg_mark(f"level{level}-done")
         if new_mod - mod < min_gain:
             break
         if needs_rn:
@@ -609,10 +516,10 @@ def _level_loop(
             )
         )
         mod = new_mod
-        cur_edges = _stats_reset(
-            spark, _coarsen(cur_edges, assign), ckpt_base, f"edges-l{level + 1}"
+        cur_edges = stats_reset(
+            spark, _coarsen(cur_edges, assign),
+            os.path.join(ckpt_base, f"edges-l{level + 1}"),
         )
-        _dbg_mark(f"coarsen{level}-done")
     return mapping, float(mod)
 
 
@@ -634,8 +541,6 @@ def resume_louvain(
     coarsen(edges-l0, mapping) regardless of where the run died.
     Idempotent on completed runs (re-checks the last level and stops).
     """
-    import os as _os
-
     runner, mapping, step = SuperstepRunner.resume(
         spark, run_id, f"louvain-{mode}", checkpoint_dir
     )
@@ -654,9 +559,10 @@ def resume_louvain(
         .select("metric")
         .first()[0]
     )
-    e0 = spark.read.parquet(_os.path.join(checkpoint_dir, "edges-l0"))
-    cur_edges = _stats_reset(
-        spark, _coarsen(e0, mapping), checkpoint_dir, f"edges-l{step + 1}"
+    e0 = spark.read.parquet(os.path.join(checkpoint_dir, "edges-l0"))
+    cur_edges = stats_reset(
+        spark, _coarsen(e0, mapping),
+        os.path.join(checkpoint_dir, f"edges-l{step + 1}"),
     )
     one_level = _dispatch_one_level(spark, mode, checkpoint_dir, parallel_opts)
     return _level_loop(

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from louvain_spark.operators.graph import symmetrize, vertex_ids
+from louvain_spark.plans.gate import broadcast_or_shuffle
 from louvain_spark.plans.loop import StepResult, SuperstepRunner
 
 
@@ -25,7 +26,6 @@ def label_propagation(
     weight_col: str | None = "weight",
     max_iter: int = 20,
     runner: SuperstepRunner | None = None,
-    broadcast_nodes: int = 4_000_000,
     start_state: DataFrame | None = None,
     steps_per_action: int = 1,
 ) -> DataFrame:
@@ -34,9 +34,9 @@ def label_propagation(
     Pass (runner, start_state) from SuperstepRunner.resume to continue an
     interrupted run mid-iteration from its last durable checkpoint.
 
-    Below broadcast_nodes vertices the per-superstep label table ships as
-    broadcast hash joins (one shuffle per superstep: the histogram
-    groupBy); above it, shuffle joins.
+    Below the dimension-join gate (plans/gate.py) the per-superstep label
+    table ships as broadcast hash joins (one shuffle per superstep: the
+    histogram groupBy); above it, shuffle_hash joins.
 
     steps_per_action chains that many synchronous supersteps into one
     driver action (same floor-cutting pattern as pagerank; the chained
@@ -55,7 +55,7 @@ def label_propagation(
     adj = symmetrize(edges.select("src", "dst", w.cast("double").alias("w")), "w").persist()
     adj.count()
     ids = vertex_ids(edges, vertices).persist()
-    jb = F.broadcast if ids.count() <= broadcast_nodes else (lambda df: df)
+    n_ids = ids.count()
 
     if start_state is not None:
         labels = start_state
@@ -70,11 +70,9 @@ def label_propagation(
         cur, inner = labels, []
         new_labels = None
         for s in range(batch):
+            nbr = cur.select(F.col("id").alias("dst"), F.col("community").alias("nbr_label"))
             hist = (
-                adj.join(
-                    jb(cur.select(F.col("id").alias("dst"), F.col("community").alias("nbr_label"))),
-                    "dst",
-                )
+                adj.join(broadcast_or_shuffle(nbr, n_ids), "dst")
                 .groupBy(F.col("src").alias("id"), F.col("nbr_label"))
                 .agg(F.sum("w").alias("s"))
             )
@@ -87,7 +85,7 @@ def label_propagation(
             # labels spans exactly the vertex set (initialized from ids,
             # preserved by construction) — joining ids back in would be a
             # third join of pure per-superstep serial floor
-            new_labels = cur.join(jb(best), "id", "left").select(
+            new_labels = cur.join(broadcast_or_shuffle(best, n_ids), "id", "left").select(
                 "id", F.coalesce("new_label", "community").alias("community"),
                 (F.coalesce("new_label", "community") != F.col("community")).alias("_moved"),
             )

@@ -31,7 +31,6 @@ def pagerank(
     weight_col: str | None = "weight",
     directed: bool = False,
     runner: SuperstepRunner | None = None,
-    broadcast_nodes: int = 4_000_000,
     start_state: DataFrame | None = None,
     steps_per_action: int = 1,
 ) -> DataFrame:
@@ -39,11 +38,6 @@ def pagerank(
 
     Pass (runner, start_state) from SuperstepRunner.resume to continue an
     interrupted run mid-iteration from its last durable checkpoint.
-
-    Below broadcast_nodes vertices the per-superstep rank/contrib/dangling
-    dimension tables ship as broadcast hash joins — the only shuffle per
-    superstep is the contribution groupBy. Above it, shuffle joins (the
-    regime where the dimensions no longer fit executor memory).
 
     steps_per_action chains that many supersteps into ONE driver action
     (r3 VERDICT #5: the ~2s/action plan+schedule floor dominates N→4N
@@ -97,8 +91,7 @@ def pagerank(
     # iddang/contribs/checkpointed ranks are partitioned on id, so
     # exchange reuse elides most of the hinted shuffles. Bytes argument
     # holds at every scale: exchanging the |V|-row dimension once beats
-    # broadcasting it to every executor (and above broadcast_nodes this
-    # was already the join shape).
+    # broadcasting it to every executor.
     jb = lambda df: df.hint("shuffle_hash")  # noqa: E731
 
     if start_state is not None:
@@ -188,10 +181,6 @@ def pagerank(
                 F.sum(F.when(F.col("_dangling"), F.col("score"))), F.lit(0.0)
             ).alias("dangling"),
         ).select("id", "score")
-        if done > 0:  # steady-state batch plan (plans/r07 capture)
-            from louvain_spark.plans.explain import dump as _dump
-
-            _dump(new_ranks, "pagerank_batch")
         new_ranks = runner.advance(
             StepResult(new_ranks, observation=obs, metric_key="delta", steps=batch)
         )

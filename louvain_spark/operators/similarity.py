@@ -33,25 +33,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
-def dot_col(a, b, dim: int | None = None):
-    """JVM-side dot product of two array<float/double> columns (F8).
-
-    With `dim` given, the fold is unrolled into a flat codegen-able sum:
-    Catalyst higher-order functions (aggregate/zip_with) are
-    CodegenFallback — evaluated interpretively per ELEMENT with per-call
-    InternalRow allocation — which made the LSH pair-scoring stage spend
-    its wall on expression interpretation (measured ~6s of a 15s stage at
-    10M candidate pairs × 64 dims). The unrolled form keeps the exact
-    left-fold association and operand casts ((((0.0 + x0·y0) + x1·y1) + …,
-    float operands promoted to double per element), so every sum is
-    BIT-IDENTICAL to the HOF form — the ANN oracle hashes pin this.
-    Without `dim` (unknown width) the HOF form remains.
-    """
-    if dim is not None:
-        expr = F.lit(0.0)
-        for i in range(int(dim)):
-            expr = expr + F.get(a, i) * F.get(b, i).cast("double")
-        return expr
+def dot_col(a, b):
+    """JVM-side dot product of two array<float/double> columns (F8): a
+    left fold (((0.0 + x0·y0) + x1·y1) + …, float operands promoted to
+    double per element."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y.cast("double")),
         F.lit(0.0),
@@ -102,7 +87,7 @@ def _topk_core(
     Query rows are processed in blocks sized so the score matrix stays
     ~16MB, with the score buffer preallocated once and reused across
     blocks (matmul out=, in-place negate, sparse self-exclusion writes).
-    Two reasons, both measured (tools/diag_ivf_cell.py, BENCH r5):
+    Two reasons, both measured (BENCH/BASELINE.md r5):
     (a) peak memory — an unblocked hot cell (e.g. 30k queries × 5k
     items) transiently allocates ~4GB of fp64/int64 temporaries, an OOM
     risk at 4g/core executors; (b) allocation churn — full-width
@@ -189,7 +174,7 @@ def _make_topk_cell_arrow(kk: int, thr: float | None, excl: bool):
     applyInPandas form of the same math at the scaling preset (60k
     vectors, 64 lists), where pandas list-column materialization plus a
     per-row top-k loop made the IVF re-rank ~8x slower than its matmul
-    work (BENCH/BASELINE.md r5, tools/diag_ivf_phases.py)."""
+    work (BENCH/BASELINE.md r5)."""
     import pyarrow as pa
 
     out_schema = pa.schema(
@@ -207,26 +192,6 @@ def _make_topk_cell_arrow(kk: int, thr: float | None, excl: bool):
         return pa.table(
             {"query_id": out_q, "item_id": out_i, "sim": out_s}, schema=out_schema
         )
-
-    return cell
-
-
-def _make_topk_cell(kk: int, thr: float | None, excl: bool):
-    """applyInPandas form of _make_topk_cell_arrow (same _topk_core math,
-    same contract) — kept for callers/tests that feed pandas frames."""
-
-    def cell(qpdf: pd.DataFrame, ipdf: pd.DataFrame) -> pd.DataFrame:
-        if len(qpdf) == 0 or len(ipdf) == 0:
-            return pd.DataFrame({"query_id": [], "item_id": [], "sim": []}).astype(
-                {"query_id": "int64", "item_id": "int64", "sim": "float64"}
-            )
-        qv = np.array(list(qpdf["_qv"]), dtype=np.float64)
-        mat = np.array(list(ipdf["_iv"]), dtype=np.float64)
-        out_q, out_i, out_s = _topk_core(
-            qpdf["query_id"].to_numpy(), qv, ipdf["item_id"].to_numpy(), mat,
-            kk, thr, excl,
-        )
-        return pd.DataFrame({"query_id": out_q, "item_id": out_i, "sim": out_s})
 
     return cell
 
@@ -316,47 +281,18 @@ def rademacher_planes(
     ]
 
 
-def _bucket_expr(vec_col, planes_t: list[list[float]], table: int):
-    """Bucket key for one hash table: sign bits of the vector's projection
-    onto each ±1 plane, packed into a string — pure Catalyst (zip_with /
-    aggregate HOFs), no Python in the hot path.
-
-    Kept as the HOF fold deliberately (r7 measurement): an unrolled flat
-    add/subtract chain (n_planes·dim ≈ 2560 terms per row) was 4× SLOWER
-    (10.4s vs 2.5s per table side at 30k×64-dim) — the giant projection
-    overwhelms codegen and falls back to interpreted evaluation of a deep
-    expression tree — and a vectorized pandas-UDF variant measured no
-    faster end-to-end than this fold (11.9s vs 10.5s full stage)."""
-    bits = [
-        F.when(
-            F.aggregate(
-                F.zip_with(
-                    vec_col,
-                    F.array(*[F.lit(x) for x in row]),
-                    lambda a, b: a.cast("double") * b,
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            >= 0,
-            F.lit("1"),
-        ).otherwise(F.lit("0"))
-        for row in planes_t
-    ]
-    return F.concat(F.lit(f"{table}:"), *bits)
-
-
 def _bucket_keys_udf(planes, n_tables: int):
     """All n_tables bucket keys for a vector as ONE vectorized Arrow
     kernel call (pandas_udf → array<string>), replacing n_tables·n_planes
-    interpreted HOF folds per row (measured 3.1s per side at 30k×64-dim
-    ×40 planes vs ~0.4s for this kernel).
+    interpreted Catalyst HOF folds per row (measured 3.1s per side at
+    30k×64-dim ×40 planes vs ~0.4s for this kernel).
 
-    BIT-IDENTICAL keys to _bucket_expr: the projection accumulates with
-    the same left fold — per dimension i, acc = acc + vec[i]·plane[i] in
-    float64, vectorized ACROSS rows/planes (the numpy loop runs over
-    dims, so each element's additions happen in the exact HOF order) —
-    and the sign test is the same `>= 0`. Planes are closure-captured
+    Key for table t: f"{t}:" followed by one sign bit per plane, '1' when
+    the vector's projection onto the ±1 plane is `>= 0`. The projection is
+    a left fold — per dimension i, acc = acc + vec[i]·plane[i] in float64,
+    vectorized ACROSS rows/planes (the numpy loop runs over dims, so each
+    element's additions happen in dimension order) — the same fold the
+    DuckDB twin in the oracle evaluates. Planes are closure-captured
     (O(n_tables·n_planes·dim) floats, shipped once per executor)."""
     sign = [np.asarray(t, dtype=np.float64) for t in planes[:n_tables]]  # (planes, dim)
     from pyspark.sql.functions import pandas_udf
@@ -505,7 +441,11 @@ def cosine_topk_lsh(
       600k clustered 64-dim vectors (killed two hosts' tmpfs) vs ~4 GB
       for this form (r7: the former in-join JVM pair dot — 10M wide
       join rows + interpreted HOF fold — measured 10.5s vs ~2s for the
-      cogrouped cells at the 30k bench shape).
+      cogrouped cells at the 30k bench shape). Neither side is
+      snapshotted here, so every action on the result (a count, then a
+      collect) re-runs the callers' upstream lineage — often a
+      pandas-UDF featurize — once more; localCheckpoint the inputs or the
+      result when you take several actions.
     - 'rejoin': bucket join and dedup move only (bucket, id) pairs and
       vectors rejoin once per UNIQUE candidate. Wins only when
       candidates per query < 2·n_tables (highly selective setups with
@@ -615,32 +555,14 @@ def train_ivf_centroids(
     return [[float(v) for v in row] for row in c]
 
 
-def _ivf_assign_expr(vec_col, centroids: list[list[float]], top: int):
-    """Top-`top` centroid indices for a vector, as a JVM-side expression:
-    array of (dot, idx) structs → sort desc → slice → extract idx.
-    Width is O(n_lists·dim) literal terms PER ROW — fine for a handful of
-    lists, a codegen blow-up beyond (measured 2x+ the whole-query cost at
-    n_lists=64); cosine_topk_ivf uses the Arrow kernel below instead and
-    this stays as the all-JVM small-index variant."""
-    scored = F.array(*[
-        F.struct(
-            (-dot_col(vec_col, F.array(*[F.lit(float(v)) for v in c]))).alias("negdot"),
-            F.lit(j).alias("idx"),
-        )
-        for j, c in enumerate(centroids)
-    ])
-    return F.transform(F.slice(F.array_sort(scored), 1, top), lambda s: s["idx"])
-
-
 def _ivf_assign_udf(centroids: list[list[float]], top: int):
     """Top-`top` centroid indices as a VECTORIZED Arrow kernel: one numpy
     matmul per batch against the closure-captured centroid matrix
     (O(n_lists·dim) floats, shipped once per executor). Ties break to the
-    smaller index (stable argsort on -dots), the same order as
-    _ivf_assign_expr's (negdot, idx) struct sort and as the independent
-    golden generator (tools/gen_ivf_golden.py) — all three pick identical
-    lists whenever the margin exceeds ulp noise, which the generator
-    asserts."""
+    smaller index (stable argsort on -dots), the same order as the
+    independent golden generator (tools/gen_ivf_golden.py) — both pick
+    identical lists whenever the margin exceeds ulp noise, which the
+    generator asserts."""
     from pyspark.sql.functions import pandas_udf
 
     c_t = np.asarray(centroids, dtype=np.float64).T  # (dim, n_lists)
@@ -705,13 +627,13 @@ def cosine_topk_ivf(
     # lineage executes once with or without a snapshot — the former
     # eager localCheckpoint was a pure extra materialization pass
     # (measured 0.65s of the stage's cold wall at the 30k bench shape).
-    # i keeps its snapshot: it feeds both the bounded training sample
-    # and the assignment pass.
+    # i is snapshotted only when it trains the centroids: then it feeds
+    # both the bounded training sample and the assignment pass; with
+    # pre-trained centroids the assignment pass is its only consumer.
     q = queries.select(F.col(q_id).alias("query_id"), F.col(q_vec).alias("_qv"))
-    i = items.select(
-        F.col(i_id).alias("item_id"), F.col(i_vec).alias("_iv")
-    ).localCheckpoint(eager=True)
+    i = items.select(F.col(i_id).alias("item_id"), F.col(i_vec).alias("_iv"))
     if centroids is None:
+        i = i.localCheckpoint(eager=True)
         centroids = train_ivf_centroids(
             i, dim, n_lists=n_lists, kmeans_iters=kmeans_iters, sample=sample,
             i_vec="_iv", i_id="item_id",
@@ -734,7 +656,7 @@ def cosine_topk_ivf(
     # and the re-rank item side consume ix0, and without a checkpoint
     # each consumer re-executes the Arrow assignment kernel (plus its
     # python-worker stage spin-up). Fresh-process A/B at the 30k bench
-    # shape (tools/diag_ivf_counts_ab.py, output bit-identical): quiet
+    # shape (output bit-identical): quiet
     # host 5.9s vs 16.4s cold; contended host per-arm minima 10.2s vs
     # 11.5s over 5 reps — the duplicated-kernel cost is host-dependent
     # but the materialized form's minimum never loses, and at scale the

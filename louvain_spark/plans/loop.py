@@ -17,9 +17,28 @@ from __future__ import annotations
 import os
 import time
 from dataclasses import dataclass
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F  # noqa: F401 (used in resume)
+from pyspark.sql import functions as F
+
+
+def stats_reset(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
+    """Write `df` to parquet at `path` and read it back.
+
+    Iterative state must cross a parquet roundtrip now and then, not only
+    localCheckpoint: localCheckpoint keeps the origin plan's Catalyst
+    sizeInBytes estimate, and SizeInBytesOnlyStats estimates a join as the
+    PRODUCT of its children, so a frame fed back through k joins per
+    superstep grows its estimate ~k× per step until the optimizer spends
+    minutes multiplying million-digit BigIntegers (observed: 30 PageRank
+    supersteps on a 20-vertex graph die with "BigInteger would overflow
+    supported range"; Louvain sweeps peg a core in InjectRuntimeFilter).
+    Reading back from parquet replaces the estimate with the real file
+    size. The files double as a durable checkpoint of the state.
+    """
+    df.write.mode("overwrite").parquet(path)
+    return spark.read.parquet(path)
 
 
 @dataclass
@@ -49,15 +68,12 @@ class SuperstepRunner:
     parquet and recorded in the ledger, enabling mid-iteration resume.
 
     Every `stats_reset_every` consecutive localCheckpoints the state is
-    instead parquet-roundtripped through a session temp dir. This is NOT
-    optional hygiene: localCheckpoint preserves the origin plan's Catalyst
-    sizeInBytes estimate, and SizeInBytesOnlyStats estimates a join as the
-    PRODUCT of its children, so an operator running k joins per superstep
-    compounds the estimate ~k× per step until the optimizer spends minutes
-    multiplying million-digit BigIntegers and dies with "BigInteger would
-    overflow supported range" (observed at 30 PageRank supersteps on a
-    20-vertex graph — plan-size-driven, not data-driven). The roundtrip
-    replaces the estimate with the real file size.
+    instead parquet-roundtripped through a session temp dir (see
+    stats_reset — not optional hygiene).
+
+    checkpoint_dir must be a local path (or a file:// URI): the ledger is
+    written and its checkpoints' footers are read driver-side with
+    pyarrow (see _append_ledger). Other URI schemes raise ValueError.
     """
 
     def __init__(
@@ -69,6 +85,16 @@ class SuperstepRunner:
         checkpoint_every: int = 1,
         stats_reset_every: int = 4,
     ):
+        if checkpoint_dir is not None:
+            uri = urlparse(checkpoint_dir)
+            if uri.scheme not in ("", "file"):
+                raise ValueError(
+                    f"SuperstepRunner checkpoint_dir {checkpoint_dir!r} has URI "
+                    f"scheme {uri.scheme!r}: the run ledger is written and read "
+                    "on the local filesystem (driver-side pyarrow), so pass a "
+                    "local path or a file:// URI (on HDFS/S3, a fuse mount)"
+                )
+            checkpoint_dir = uri.path if uri.scheme else checkpoint_dir
         self.spark = spark
         self.run_id = run_id
         self.operator = operator
@@ -139,9 +165,9 @@ class SuperstepRunner:
 
         LOCAL-FS ASSUMPTION (same contract as sources.io.upsert_by_key):
         the footer read + pyarrow append assume checkpoint_dir is a local
-        path. On HDFS/S3 pass a fuse mount, or swap this for a Spark
-        append write (the pre-r2 implementation) at the cost of one tiny
-        Spark job per superstep.
+        path (__init__ rejects other URI schemes). On HDFS/S3 pass a fuse
+        mount, or swap this for a Spark append write (the pre-r2
+        implementation) at the cost of one tiny Spark job per superstep.
         """
         if self.ledger_path is None:
             return
@@ -194,16 +220,14 @@ class SuperstepRunner:
             and self.superstep // self.checkpoint_every > self._ckpt_bucket
         ):
             ckpt_path = self._ckpt_path(self.superstep)
-            state.write.mode("overwrite").parquet(ckpt_path)
-            state = self.spark.read.parquet(ckpt_path)
+            state = stats_reset(self.spark, state, ckpt_path)
             self._ckpt_bucket = self.superstep // self.checkpoint_every
             self._local_since_reset = 0  # parquet roundtrip resets stats too
         elif self._local_since_reset + steps >= self.stats_reset_every:
             # alternate between two paths so a reset never overwrites the
             # files backing the frame it is reading from (stats_reset_every=1)
             path = os.path.join(self._stats_reset_dir(), f"reset={self._resets % 2}")
-            state.write.mode("overwrite").parquet(path)
-            state = self.spark.read.parquet(path)
+            state = stats_reset(self.spark, state, path)
             self._resets += 1
             self._local_since_reset = 0
         else:

@@ -45,7 +45,7 @@ DEFAULT_CONF = {
 # mmap and returned by munmap, so numpy temporaries above that size are
 # page-faulted in from scratch on EVERY kernel call — measured on this
 # host as 20x run-to-run swings on identical argpartition input
-# (tools/diag_ivf_cell.py, BENCH/BASELINE.md r5). Raising the threshold
+# (BENCH/BASELINE.md r5). Raising the threshold
 # and matching the trim threshold lets the worker's heap recycle buffers
 # up to 128MB across calls (the kernels themselves block their
 # temporaries well below that — see similarity._topk_core). Workers read

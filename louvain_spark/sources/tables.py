@@ -20,8 +20,8 @@ TABLES = [
 ]
 
 
-def _scan_row_groups(path: str) -> tuple[int, int]:
-    """(total_bytes, row_groups) of a local parquet file or directory.
+def _scan_row_groups(path: str) -> tuple[int, int, int]:
+    """(total_bytes, row_groups, rows) of a local parquet file or directory.
 
     Parquet scan parallelism is bounded by ROW GROUPS, not byte splits: a
     byte-range split only yields the rows of row groups that START inside

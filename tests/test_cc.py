@@ -111,24 +111,3 @@ def test_ledger_partition_rows_match_checkpoint(spark, tmp_path):
     for r in rows:
         assert r["min_pid"] >= 0
         assert r["total"] == spark.read.parquet(r["checkpoint_path"]).count()
-
-
-def test_cc_star_impls_agree(spark):
-    """The skew-safe groupby stars and the single-shuffle window stars are
-    alternative physical forms of the same rewrite — identical labels on a
-    hub-heavy graph (the shape where the choice matters)."""
-    from tests import graphs
-    from tests.conftest import edges_df
-
-    edges, n = graphs.g_star_hub(n_leaves=120, n_random=30, seed=3)
-    e = edges_df(spark, edges)
-    verts = spark.createDataFrame([(i,) for i in range(n)], "id long")
-    a = {
-        r["id"]: r["component"]
-        for r in connected_components(spark, e, vertices=verts, star_impl="groupby").collect()
-    }
-    b = {
-        r["id"]: r["component"]
-        for r in connected_components(spark, e, vertices=verts, star_impl="window").collect()
-    }
-    assert a == b

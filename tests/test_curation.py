@@ -159,8 +159,9 @@ def test_strip_boilerplate_threshold_keeps_under_df(spark):
     assert got[1] == "shared\nmine" and got[2] == "shared\nyours"
 
 
-def test_strip_boilerplate_offender_join_broadcast_gate(spark):
+def test_strip_boilerplate_offender_join_broadcast_gate(spark, monkeypatch):
     from louvain_spark.operators.curation import strip_boilerplate_lines
+    from louvain_spark.plans import gate
 
     docs = spark.createDataFrame(
         [(1, "shared\na"), (2, "shared\nb"), (3, "shared\nc")],
@@ -173,9 +174,10 @@ def test_strip_boilerplate_offender_join_broadcast_gate(spark):
         .toString()
     )
     assert "BroadcastHashJoin" in plan, plan
-    # forced shuffle path (broadcast_keys=0) must produce identical rows
+    # forced shuffle path (BROADCAST_MAX_ROWS=0) must produce identical rows
     a = sorted(map(tuple, strip_boilerplate_lines(docs, max_line_df=2).collect()))
-    forced = strip_boilerplate_lines(docs, max_line_df=2, broadcast_keys=0)
+    monkeypatch.setattr(gate, "BROADCAST_MAX_ROWS", 0)
+    forced = strip_boilerplate_lines(docs, max_line_df=2)
     plan_f = forced._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" not in plan_f.split("== Final Plan ==")[-1], plan_f
     assert sorted(map(tuple, forced.collect())) == a

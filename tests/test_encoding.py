@@ -115,8 +115,9 @@ def test_bigram_lm_repeated_text_scores_lower(spark):
     assert got[1] < got[2]
 
 
-def test_encode_vocab_join_broadcast_gate(spark):
+def test_encode_vocab_join_broadcast_gate(spark, monkeypatch):
     from louvain_spark.operators.webstats import build_vocab
+    from louvain_spark.plans import gate
 
     docs = _docs(spark)
     vocab = build_vocab(docs, top_k=100, min_df=1)
@@ -129,10 +130,11 @@ def test_encode_vocab_join_broadcast_gate(spark):
         .toString()
     )
     assert "BroadcastHashJoin" in plan, plan
-    # above the gate (forced with broadcast_terms=0): shuffle join, and
+    # above the gate (forced with BROADCAST_MAX_ROWS=0): shuffle join, and
     # output identical
     small = encode_documents(docs, vocab).collect()
-    forced = encode_documents(docs, vocab, broadcast_terms=0)
+    monkeypatch.setattr(gate, "BROADCAST_MAX_ROWS", 0)
+    forced = encode_documents(docs, vocab)
     plan_f = forced._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" not in plan_f.split("== Final Plan ==")[-1], plan_f
     assert sorted(map(tuple, forced.collect())) == sorted(map(tuple, small))

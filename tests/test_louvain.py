@@ -139,6 +139,30 @@ def test_parallel_mode_multiblock(spark):
     assert abs(got_mod - want_mod) < 1e-6
 
 
+def test_adhoc_runner_removes_its_checkpoint_dir(spark, tmp_path):
+    """Without a checkpoint_dir, louvain() keeps its per-level edges and
+    sweep states in a private louvain-ckpt-* temp dir and removes it on
+    return; the result still collects, with the same assignments as a
+    run on a durable checkpoint_dir."""
+    import glob
+    import os
+    import tempfile
+
+    from louvain_spark.plans.loop import SuperstepRunner
+
+    edges, n = graphs.g_ring_of_cliques(k=8, c=5)
+    opts = {"n_blocks": 4, "block_target": 1}
+    pattern = os.path.join(tempfile.gettempdir(), "louvain-ckpt-*")
+    before = set(glob.glob(pattern))
+    got, _ = _run(spark, edges, n, mode="parallel", parallel_opts=opts)
+    assert set(glob.glob(pattern)) <= before
+    runner = SuperstepRunner(
+        spark, "leak", "louvain-parallel", checkpoint_dir=str(tmp_path / "ck")
+    )
+    want, _ = _run(spark, edges, n, mode="parallel", parallel_opts=opts, runner=runner)
+    assert got == want
+
+
 def test_auto_mode_small_graph_equals_exact(spark):
     """Below the auto threshold every level runs the exact kernel → full
     oracle partition parity, same as mode='exact'."""

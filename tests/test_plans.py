@@ -54,16 +54,18 @@ def test_dictionary_join_broadcasts(spark):
     assert "BroadcastHashJoin" in plan, plan
 
 
-def test_dictionary_join_shuffles_above_gate(spark):
-    """Above broadcast_nodes the dictionary is O(|conversations|) — at the
+def test_dictionary_join_shuffles_above_gate(spark, monkeypatch):
+    """Above the gate the dictionary is O(|conversations|) — at the
     10^12-turn design point ~10^10 rows, never broadcastable; the gate
     must fall back to a shuffled join on entity name (r5 VERDICT #2)."""
     from louvain_spark.operators.induce import _with_ids
+    from louvain_spark.plans import gate
 
     t = transcripts_df(spark, preset="tiny")
     mem = membership(t)
     verts = entity_vertices(mem)
-    plan = _plan(_with_ids(mem, verts, broadcast_nodes=0))
+    monkeypatch.setattr(gate, "BROADCAST_MAX_ROWS", 0)
+    plan = _plan(_with_ids(mem, verts))
     assert "BroadcastHashJoin" not in plan, plan
     assert re.search(r"ShuffledHashJoin|SortMergeJoin", plan), plan
 
@@ -74,13 +76,14 @@ def test_renumber_remap_join_gated(spark, monkeypatch):
     (r5 VERDICT #2). Below the gate: broadcast; above: shuffled join,
     identical assignments."""
     from louvain_spark.operators import louvain as lv
+    from louvain_spark.plans import gate
 
     assign = spark.createDataFrame(
         [(i, 100 + (i % 3) * 7) for i in range(30)], "id long, community long"
     )
     small = lv._renumber(assign)
     assert "BroadcastHashJoin" in _plan(small)
-    monkeypatch.setattr(lv, "_RENUMBER_BROADCAST_LIMIT", 0)
+    monkeypatch.setattr(gate, "BROADCAST_MAX_ROWS", 0)
     big = lv._renumber(assign)
     plan = _plan(big)
     assert "BroadcastHashJoin" not in plan, plan

@@ -274,6 +274,35 @@ def test_ivf_topk_clustered_recall(spark):
     assert c1 == c2, "IVF training must be deterministic"
 
 
+def test_ivf_pretrained_centroids_same_topk(spark):
+    """Passing the centroids a self-trained run trains (the index is a pure
+    function of the data) reproduces that run's top-k exactly."""
+    from louvain_spark.operators.similarity import (
+        cosine_topk_ivf,
+        train_ivf_centroids,
+    )
+
+    rng = np.random.RandomState(11)
+    centers = rng.randn(3, 16)
+    rows = []
+    for j in range(240):
+        v = centers[j % 3] + 0.05 * rng.randn(16)
+        rows.append((j, [float(x) for x in v / np.linalg.norm(v)]))
+    df = spark.createDataFrame(rows, "id long, vec array<double>")
+
+    def topk(**kw):
+        return sorted(
+            (r["query_id"], r["item_id"], r["rank"], r["sim"])
+            for r in cosine_topk_ivf(
+                spark, df, df, k=5, dim=16, n_lists=8, n_probe=2, **kw
+            ).collect()
+        )
+
+    trained = topk()
+    centroids = train_ivf_centroids(df, 16, n_lists=8)
+    assert topk(centroids=centroids) == trained
+
+
 def test_lsh_rerank_modes_identical(spark):
     """'bucket' (scale default: score inside the bucket join, dedup by
     max) and 'rejoin' (bare-id exchanges, vectors rejoin once) must
