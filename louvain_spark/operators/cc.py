@@ -6,6 +6,10 @@ re-emit, so each round is one shuffle and the edge set converges to stars
 (every node linked directly to its component's minimum id) in O(log²n)
 rounds — O(log n) in practice. No floats, exact result; oracle =
 networkx.connected_components (SURVEY.md §2.8).
+
+At or below gate.ONE_BLOCK_MAX_EDGES input edges the whole run is one
+task instead (_block_kernels.cc_block: min-label hooking plus pointer
+jumping, to convergence).
 """
 
 from __future__ import annotations
@@ -13,7 +17,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from louvain_spark.operators._block_kernels import cc_block, one_block
 from louvain_spark.operators.graph import canonicalize, checksum, symmetrize, vertex_ids
+from louvain_spark.plans.gate import fits_one_block
 from louvain_spark.plans.loop import StepResult, SuperstepRunner
 
 
@@ -89,16 +95,39 @@ def connected_components(
     shuffle sizes and join strategies sane. PageRank keeps batching (its
     intermediate is a narrow (id,score) table); CC stays one round per
     action by design.
+
+    At or below gate.ONE_BLOCK_MAX_EDGES input edges the run is one kernel
+    task that ignores max_iter and runs to convergence. It makes ONE
+    runner advance whose state is the star edge table (component, id), so
+    it resumes only from before the kernel; a checkpoint written by either
+    path resumes on either.
     """
     if runner is None:
         runner = SuperstepRunner(spark, "adhoc", "cc")
+    if fits_one_block(edges):
+        # star edges from a checkpoint join the same components
+        pairs = edges.select("src", "dst")
+        if start_state is not None:
+            pairs = pairs.unionByName(start_state.select("src", "dst"))
+        labels, steps, _ = one_block(
+            pairs.withColumn("w", F.lit(1.0)), vertices, None, cc_block,
+            "component", "long",
+        )
+        stars = labels.where(F.col("id") != F.col("component")).select(
+            F.col("component").alias("src"), F.col("id").alias("dst")
+        )
+        # a fresh run also counts its initial state as superstep 0
+        runner.advance(
+            StepResult(stars, moved=0, steps=steps + (start_state is None), one_block=True)
+        )
+        return labels
     cur = start_state if start_state is not None else canonicalize(edges)
     if start_state is None:
         cur = runner.advance(StepResult(cur))
     prev_sig = checksum(cur, "src", "dst")
     for _ in range(max_iter):
         # fixpoint checksum rides the checkpoint action as observed
-        # metrics — one Spark job per superstep, no re-scan
+        # metrics — one action per superstep, no re-scan
         obs = Observation()
         nxt = _small_star(_large_star(cur)).observe(
             obs,

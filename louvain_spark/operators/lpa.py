@@ -7,15 +7,24 @@ LPA can 2-cycle on bipartite-ish structures — max_iter bounds it, and the
 moved-count is recorded per superstep in the ledger).
 Oracle: seeded synchronous numpy/dict reimplementation with the same
 tie-break (tests/).
+
+At or below gate.ONE_BLOCK_MAX_EDGES input edges the whole run is one
+task (_block_kernels.lpa_block), which stops at the first fixpoint. Above
+it the supersteps run distributed, one driver action per batch of
+steps_per_action supersteps (under AQE each query stage of that action
+runs as its own Spark job).
 """
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
+from louvain_spark.operators._block_kernels import lpa_block, one_block
 from louvain_spark.operators.graph import symmetrize, vertex_ids
-from louvain_spark.plans.gate import broadcast_or_shuffle
+from louvain_spark.plans.gate import broadcast_or_shuffle, fits_one_block
 from louvain_spark.plans.loop import StepResult, SuperstepRunner
 
 
@@ -47,12 +56,31 @@ def label_propagation(
     the final labels are identical to the unbatched trajectory. Default
     is 1 (per-step behavior); bench/driver call sites opt into 2 where
     the per-action serial floor dominates.
+
+    At or below gate.ONE_BLOCK_MAX_EDGES input edges the run is one
+    kernel task and steps_per_action has no effect. It makes ONE runner
+    advance (steps = iterations run), so it resumes only from before the
+    kernel; a checkpoint written by either path resumes on either.
     """
     if runner is None:
         runner = SuperstepRunner(spark, "adhoc", "lpa")
 
     w = F.col(weight_col) if weight_col else F.lit(1.0)
-    adj = symmetrize(edges.select("src", "dst", w.cast("double").alias("w")), "w").persist()
+    wedges = edges.select("src", "dst", w.cast("double").alias("w"))
+    if fits_one_block(edges):
+        labels, steps, moved = one_block(
+            wedges, vertices,
+            None if start_state is None else start_state.select("id", "community"),
+            partial(lpa_block, max_iter=max_iter), "community", "long",
+        )
+        # a fresh run also counts its initial state as superstep 0
+        return runner.advance(
+            StepResult(
+                labels, moved=None if moved is None else int(moved),
+                steps=steps + (start_state is None), one_block=True,
+            )
+        )
+    adj = symmetrize(wedges, "w").persist()
     adj.count()
     ids = vertex_ids(edges, vertices).persist()
     n_ids = ids.count()
@@ -96,7 +124,7 @@ def label_propagation(
                 inner.append(nxt)
                 cur = nxt
         # moved-count (last step of the batch) rides the checkpoint action
-        # — one job per batch of steps_per_action supersteps
+        # — one action per batch of steps_per_action supersteps
         obs = Observation()
         observed = new_labels.observe(
             obs, F.coalesce(F.sum(F.col("_moved").cast("long")), F.lit(0)).alias("moved")

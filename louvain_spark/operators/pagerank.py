@@ -5,19 +5,32 @@ rank·w/out_strength per dst → groupBy(dst).sum; damping
 (1-d)/N + d·(contribs + dangling_mass/N); iterate until L∞ < tol.
 Oracle: numpy power iteration, allclose 1e-6 (BASELINE.md).
 
+A vertex whose out-strength is 0 (no out-edges, or only zero-weight
+ones) is dangling: networkx's stochastic_graph rule.
+
+At or below gate.ONE_BLOCK_MAX_EDGES input edges the whole run is one
+task (_block_kernels.pagerank_block), which stops at the first step whose
+L∞ delta is below tol. Above it the supersteps below run distributed.
+
 Scale notes: ranks and out-strengths are (id, value) tables shuffled on
 id; the contrib join is the only wide op per superstep and AQE's skew
 split covers hot dst ids. The convergence scalars (L∞ delta, dangling
-mass) are observed metrics on the checkpoint action — one Spark job per
-superstep total, so per-superstep fixed cost stays flat as cores grow.
+mass) are observed metrics on the checkpoint action — one driver action
+per batch of steps_per_action supersteps, with no collect. An action is
+not one Spark job: under AQE each query stage runs as its own job, 7.2
+jobs per step at steps_per_action=2 on a 12.7k-edge graph.
 """
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from louvain_spark.operators._block_kernels import one_block, pagerank_block
 from louvain_spark.operators.graph import symmetrize, vertex_ids
+from louvain_spark.plans.gate import fits_one_block
 from louvain_spark.plans.loop import StepResult, SuperstepRunner
 
 
@@ -43,7 +56,7 @@ def pagerank(
     (r3 VERDICT #5: the ~2s/action plan+schedule floor dominates N→4N
     scaling at low core counts). Inside a batch the next step's dangling
     mass is a 1-row in-plan aggregate (broadcast crossJoin) instead of an
-    observed scalar, intermediate ranks are persisted so the single job
+    observed scalar, intermediate ranks are persisted so the single action
     computes each step once, and convergence (L∞ < tol) is checked at
     batch boundaries. At tol=0 trajectories are identical for every batch
     size (pinned by tests). At tol>0 a batched run may take up to
@@ -52,23 +65,46 @@ def pagerank(
     point (per-vertex drift ≤ ~damping·tol), so accuracy only improves.
     Default is 1 (per-step early stopping, the historical behavior);
     bench/driver call sites opt into 2 where the serial floor dominates.
+
+    At or below gate.ONE_BLOCK_MAX_EDGES input edges the run is one
+    kernel task and steps_per_action has no effect. It makes ONE runner
+    advance (steps = iterations run), so it resumes only from before the
+    kernel; a checkpoint written by either path resumes on either.
     """
     if runner is None:
         runner = SuperstepRunner(spark, "adhoc", "pagerank")
 
     w = F.col(weight_col) if weight_col else F.lit(1.0)
-    adj = (
-        edges.select("src", "dst", w.cast("double").alias("w"))
-        if directed
-        else symmetrize(edges.select("src", "dst", w.cast("double").alias("w")), "w")
-    )
+    wedges = edges.select("src", "dst", w.cast("double").alias("w"))
+    if fits_one_block(edges):
+        scores, steps, delta = one_block(
+            wedges, vertices,
+            None if start_state is None else start_state.select("id", "score"),
+            partial(
+                pagerank_block, damping=damping, tol=tol, max_iter=max_iter,
+                directed=directed,
+            ),
+            "score", "double",
+        )
+        # a fresh run also counts its initial state as superstep 0
+        return runner.advance(
+            StepResult(
+                scores, metric=delta, steps=steps + (start_state is None),
+                one_block=True,
+            )
+        )
+    adj = wedges if directed else symmetrize(wedges, "w")
     ids = vertex_ids(edges, vertices).persist()
     n = ids.count()
     if n == 0:
         ids.unpersist()
         return spark.createDataFrame([], "id long, score double")
 
-    out_strength = adj.groupBy("src").agg(F.sum("w").alias("out_w"))
+    # an out-strength of 0 leaves the vertex out, so it counts as
+    # dangling instead of dividing by zero
+    out_strength = (
+        adj.groupBy("src").agg(F.sum("w").alias("out_w")).where(F.col("out_w") != 0)
+    )
     # normalized contribution fraction per edge is loop-invariant: cache it.
     # shuffle_hash hint: out_strength is O(|V|) — left to AQE this join can
     # pick a |V|-sized broadcast whose driver-side build OOMs at tight
@@ -159,7 +195,7 @@ def pagerank(
             else:
                 scored = joined.select("id", score_expr, "_dangling")
             if s < batch - 1:
-                # persist (no action): the one batch job computes this step
+                # persist (no action): the batch's one action computes this step
                 # once and later stages read the cache — without it the
                 # next step's 3 references would recompute the subtree
                 scored = scored.persist()
@@ -171,8 +207,8 @@ def pagerank(
                 dang_over_n = F.col("_dm") / F.lit(float(n))
                 cur = scored.select("id", "score")
         # convergence scalars (last step's L∞ delta + next batch's dangling
-        # mass) ride the checkpoint action as observed metrics — ONE Spark
-        # job per batch of steps_per_action supersteps
+        # mass) ride the checkpoint action as observed metrics — one
+        # action per batch of steps_per_action supersteps
         obs = Observation()
         new_ranks = scored.observe(
             obs,

@@ -7,6 +7,13 @@ localCheckpoint), appends a ledger row per partition (run_id, operator,
 superstep, partition_id, rows, moved, metric, wall_ms, checkpoint_path),
 and exposes resume(run_id) → (last superstep, its checkpointed state).
 
+Cost: each advance is one driver action (a localCheckpoint or a parquet
+write), not one Spark job: under AQE every query stage of the action's
+plan runs as its own job. Below gate.ONE_BLOCK_MAX_EDGES, PageRank, LPA
+and CC make a single advance for their whole one-block kernel run
+(steps = the kernel's iterations), so the ledger holds one row for it and
+such a run resumes only from before the kernel.
+
 The reference's ad-hoc resume story is its legacy-cluster reconciliation
 (/root/reference/tool/Neo4jLouvainProcessor.py:305-364); this replaces it
 with explicit per-superstep lineage.
@@ -53,11 +60,16 @@ class StepResult:
     moved_key: str | None = None
     metric_key: str | None = None
     # logical supersteps this advance represents: operators that chain
-    # multiple supersteps into one action (PageRank/LPA steps_per_action;
-    # CC stays at 1 by design, see cc.py) pass >1 so the ledger/checkpoint
-    # counter stays in LOGICAL superstep units — resume and max_iter
-    # accounting agree with the unbatched trajectory
+    # multiple supersteps into one action (PageRank/LPA steps_per_action,
+    # one-block kernel runs; distributed CC stays at 1 by design, see
+    # cc.py) pass >1 so the ledger/checkpoint counter stays in LOGICAL
+    # superstep units — resume and max_iter accounting agree with the
+    # unbatched trajectory
     steps: int = 1
+    # the state is one whole-graph kernel's output (operators/
+    # _block_kernels.py): its plan has no chain of joins, so the advance
+    # does not tick the stats-reset clock
+    one_block: bool = False
 
 
 class SuperstepRunner:
@@ -209,6 +221,7 @@ class SuperstepRunner:
         """Record one completed superstep; return the lineage-cut state."""
         steps = max(1, int(result.steps))
         self.superstep += steps
+        ticks = 0 if result.one_block else steps
         t0 = time.monotonic()
         state = result.state
         ckpt_path = None
@@ -223,7 +236,7 @@ class SuperstepRunner:
             state = stats_reset(self.spark, state, ckpt_path)
             self._ckpt_bucket = self.superstep // self.checkpoint_every
             self._local_since_reset = 0  # parquet roundtrip resets stats too
-        elif self._local_since_reset + steps >= self.stats_reset_every:
+        elif self._local_since_reset + ticks >= self.stats_reset_every:
             # alternate between two paths so a reset never overwrites the
             # files backing the frame it is reading from (stats_reset_every=1)
             path = os.path.join(self._stats_reset_dir(), f"reset={self._resets % 2}")
@@ -235,7 +248,7 @@ class SuperstepRunner:
             # count in LOGICAL supersteps: a batched advance preserves a
             # plan with ~steps× the joins, so the stats-explosion clock
             # (see class docstring) ticks steps× faster per advance
-            self._local_since_reset += steps
+            self._local_since_reset += ticks
         wall_ms = int((time.monotonic() - t0) * 1000)
         moved, metric = result.moved, result.metric
         if result.observation is not None:

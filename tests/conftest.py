@@ -5,7 +5,10 @@ import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
+from louvain_spark.plans import gate  # noqa: E402
 from louvain_spark.session import get_spark  # noqa: E402
+
+_ONE_BLOCK_DEFAULT = gate.ONE_BLOCK_MAX_EDGES
 
 
 @pytest.fixture(scope="session")
@@ -30,3 +33,29 @@ def edges_df(spark, triples, weighted=True):
         a, b = (u, v) if u <= v else (v, u)
         rows.append((a, b, w))
     return spark.createDataFrame(rows, "src long, dst long, weight double")
+
+
+def use_gate_side(monkeypatch, side: str) -> None:
+    """Run PageRank, LPA and CC on one side of gate.ONE_BLOCK_MAX_EDGES:
+    "one_block" keeps the default gate, "distributed" sets it to 0."""
+    assert side in ("one_block", "distributed"), side
+    monkeypatch.setattr(
+        gate, "ONE_BLOCK_MAX_EDGES", _ONE_BLOCK_DEFAULT if side == "one_block" else 0
+    )
+
+
+@pytest.fixture
+def gate_side(request, monkeypatch):
+    """The gate side a test runs on; parametrize it indirectly, most
+    simply through on_both_sides."""
+    use_gate_side(monkeypatch, request.param)
+    return request.param
+
+
+def on_both_sides(values):
+    """Params (value, gate side) for `@pytest.mark.parametrize("x,gate_side",
+    ..., indirect=["gate_side"])`: each value on the default gate under its
+    plain id, then on the distributed side as "<id>-distributed"."""
+    return [pytest.param(v, "one_block", id=str(v)) for v in values] + [
+        pytest.param(v, "distributed", id=f"{v}-distributed") for v in values
+    ]

@@ -69,6 +69,46 @@ def g_empty_edges():
     return [], 4
 
 
+def g_empty():
+    """No vertices, no edges."""
+    return [], 0
+
+
+def g_single_vertex():
+    """One isolated vertex."""
+    return [], 1
+
+
+def g_self_loops_only():
+    """Four vertices, each with only a self-loop (weights differ)."""
+    return [(i, i, float(i + 1)) for i in range(4)], 4
+
+
+def g_duplicate_both_orientations():
+    """A path and a triangle whose pairs repeat as (u, v) and (v, u)."""
+    e = [(0, 1, 1.0), (1, 0, 1.0), (1, 2, 2.0), (2, 1, 1.0), (1, 2, 1.0)]
+    e += [(3, 4, 1.0), (4, 5, 1.0), (5, 3, 1.0), (4, 3, 3.0)]
+    return e, 6
+
+
+def g_zero_weight():
+    """Zero-weight edges beside weighted ones; vertex 4's only edge has
+    weight 0, and vertex 2 has a zero-weight and a weighted edge."""
+    e = [(0, 1, 1.0), (1, 2, 1.0), (2, 3, 0.0), (3, 0, 2.0), (4, 0, 0.0)]
+    return e, 5
+
+
+def g_zero_out_strength():
+    """Vertices 3 and 4 share one edge of weight 0: both have out-strength
+    0, which PageRank treats as dangling."""
+    return [(0, 1, 1.0), (1, 2, 1.0), (3, 4, 0.0)], 5
+
+
+def g_hub_10k():
+    """A hub with 10k leaves and a few leaf-leaf edges."""
+    return g_star_hub(n_leaves=10_000, n_random=50)
+
+
 def g_random(n: int, p: float, seed: int, weighted: bool = False):
     """Erdős–Rényi-ish random graph, deterministic in seed."""
     rng = np.random.RandomState(seed)

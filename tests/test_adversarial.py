@@ -1,0 +1,67 @@
+"""PageRank, LPA and CC on adversarial graphs, on both sides of the
+one-block gate (plans/gate.ONE_BLOCK_MAX_EDGES).
+
+Edges are passed as written, not canonicalized, so duplicate pairs keep
+both orientations. Oracles: test_pagerank.np_pagerank, the synchronous
+LPA dict oracle and networkx.connected_components.
+"""
+
+import numpy as np
+import pytest
+
+from louvain_spark.operators.cc import connected_components
+from louvain_spark.operators.lpa import label_propagation
+from louvain_spark.operators.pagerank import pagerank
+from tests import graphs
+from tests.conftest import on_both_sides
+from tests.test_cc import _nx_components
+from tests.test_lpa_triangles import sync_lpa
+from tests.test_pagerank import np_pagerank
+
+GRAPHS = [
+    "g_empty",
+    "g_single_vertex",
+    "g_self_loops_only",
+    "g_duplicate_both_orientations",
+    "g_zero_weight",
+    "g_zero_out_strength",
+    "g_hub_10k",
+]
+PR_ITERS = 5
+LPA_ITERS = 10  # the hub 2-cycles under synchronous LPA
+
+
+def _graph(spark, fixture):
+    edges, n = getattr(graphs, fixture)()
+    e = spark.createDataFrame(
+        [(int(u), int(v), float(w)) for u, v, w in edges], "src long, dst long, weight double"
+    )
+    verts = spark.createDataFrame([(i,) for i in range(n)], "id long")
+    return edges, n, e, verts
+
+
+@pytest.mark.parametrize("fixture,gate_side", on_both_sides(GRAPHS), indirect=["gate_side"])
+def test_pagerank_adversarial(spark, fixture, gate_side):
+    edges, n, e, verts = _graph(spark, fixture)
+    rows = pagerank(spark, e, vertices=verts, max_iter=PR_ITERS, tol=0.0).collect()
+    assert sorted(r["id"] for r in rows) == list(range(n))
+    if n:
+        got = np.zeros(n)
+        for r in rows:
+            got[r["id"]] = r["score"]
+        assert np.allclose(got, np_pagerank(edges, n, max_iter=PR_ITERS), rtol=0.0, atol=1e-9)
+        assert abs(got.sum() - 1.0) < 1e-9
+
+
+@pytest.mark.parametrize("fixture,gate_side", on_both_sides(GRAPHS), indirect=["gate_side"])
+def test_lpa_adversarial(spark, fixture, gate_side):
+    edges, n, e, verts = _graph(spark, fixture)
+    got = label_propagation(spark, e, vertices=verts, max_iter=LPA_ITERS).collect()
+    assert {r["id"]: r["community"] for r in got} == sync_lpa(edges, n, LPA_ITERS)
+
+
+@pytest.mark.parametrize("fixture,gate_side", on_both_sides(GRAPHS), indirect=["gate_side"])
+def test_cc_adversarial(spark, fixture, gate_side):
+    edges, n, e, verts = _graph(spark, fixture)
+    got = connected_components(spark, e, vertices=verts).collect()
+    assert {r["id"]: r["component"] for r in got} == _nx_components(edges, n)

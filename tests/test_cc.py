@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from louvain_spark.operators.cc import connected_components
 from louvain_spark.plans.loop import SuperstepRunner
 from tests import graphs
-from tests.conftest import edges_df
+from tests.conftest import edges_df, on_both_sides, use_gate_side
 
 
 def _nx_components(edges, n):
@@ -29,10 +29,11 @@ def _run(spark, edges, n, **kw):
 
 
 @pytest.mark.parametrize(
-    "fixture",
-    ["g_two_triangles", "g_two_cliques", "g_disconnected", "g_star_hub"],
+    "fixture,gate_side",
+    on_both_sides(["g_two_triangles", "g_two_cliques", "g_disconnected", "g_star_hub"]),
+    indirect=["gate_side"],
 )
-def test_cc_goldens(spark, fixture):
+def test_cc_goldens(spark, fixture, gate_side):
     edges, n = getattr(graphs, fixture)()
     assert _run(spark, edges, n) == _nx_components(edges, n)
 
@@ -43,8 +44,10 @@ def test_cc_empty_edges(spark):
     assert got == {i: i for i in range(n)}
 
 
-@pytest.mark.parametrize("seed", [1, 2, 3, 4, 5])
-def test_cc_random(spark, seed):
+@pytest.mark.parametrize(
+    "seed,gate_side", on_both_sides([1, 2, 3, 4, 5]), indirect=["gate_side"]
+)
+def test_cc_random(spark, seed, gate_side):
     # sparse → many components, several CC rounds needed
     edges, n = graphs.g_random(80, 0.02, seed)
     assert _run(spark, edges, n) == _nx_components(edges, n)
@@ -55,6 +58,11 @@ def test_cc_weight_permutation_invariant(spark):
     base = _run(spark, edges, n)
     permuted = [(u, v, w * 7.5 + 1) for u, v, w in edges]
     assert _run(spark, permuted, n) == base
+
+
+@pytest.mark.parametrize("gate_side", ["distributed"], indirect=True)
+def test_cc_weight_permutation_invariant_distributed(spark, gate_side):
+    test_cc_weight_permutation_invariant(spark)
 
 
 def test_cc_resume_equals_uninterrupted(spark, tmp_path):
@@ -86,6 +94,35 @@ def test_cc_resume_equals_uninterrupted(spark, tmp_path):
     assert set(ledger.columns) >= {
         "run_id", "operator", "superstep", "partition_id", "rows_out", "wall_ms",
     }
+
+
+@pytest.mark.parametrize(
+    "first,second",
+    [("one_block", "distributed"), ("distributed", "one_block"),
+     ("distributed", "distributed")],
+)
+def test_cc_resume_across_paths(spark, tmp_path, monkeypatch, first, second):
+    """A checkpoint written on either side of the one-block gate (the
+    distributed side after one round) resumes on either side to the
+    uninterrupted components."""
+    edges, n = graphs.g_random(100, 0.015, seed=3)
+    e = edges_df(spark, edges)
+    verts = spark.createDataFrame([(i,) for i in range(n)], "id long")
+    full = connected_components(spark, e, vertices=verts)
+    want = {r["id"]: r["component"] for r in full.collect()}
+
+    d = str(tmp_path / "ck")
+    use_gate_side(monkeypatch, first)
+    r1 = SuperstepRunner(spark, "cc-x", "cc", checkpoint_dir=d)
+    connected_components(spark, e, vertices=verts, runner=r1, max_iter=1)
+    use_gate_side(monkeypatch, second)
+    r2, state, step = SuperstepRunner.resume(spark, "cc-x", "cc", d)
+    assert step >= 0 and state is not None
+    resumed = connected_components(
+        spark, e, vertices=verts, runner=r2, start_state=state
+    )
+    got = {r["id"]: r["component"] for r in resumed.collect()}
+    assert got == want
 
 
 def test_ledger_partition_rows_match_checkpoint(spark, tmp_path):

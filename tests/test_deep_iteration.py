@@ -9,19 +9,28 @@ pagerank_events at max_iter=30). The SuperstepRunner now parquet-
 roundtrips every stats_reset_every localCheckpoints; these tests run the
 exact crash shape — NO checkpoint_dir, ≥30 supersteps — under a wall-time
 bound far below the pre-fix behavior (>7 min hang on a 20-vertex graph).
+
+Only the distributed superstep loops chain joins, so every test here runs
+with the one-block gate off.
 """
 
 import time
 
 import numpy as np
+import pytest
 
 from louvain_spark.operators.lpa import label_propagation
 from louvain_spark.operators.pagerank import pagerank
 from tests import graphs
-from tests.conftest import edges_df
+from tests.conftest import edges_df, use_gate_side
 from tests.test_pagerank import np_pagerank
 
 WALL_BOUND_S = 180  # pre-fix: optimizer alone burned >420s by superstep ~25
+
+
+@pytest.fixture(autouse=True)
+def _distributed(monkeypatch):
+    use_gate_side(monkeypatch, "distributed")
 
 
 def test_pagerank_30_supersteps_adhoc_runner(spark):

@@ -1,17 +1,24 @@
-"""The dimension-join gate (plans/gate.py) above its threshold.
+"""The size gates of plans/gate.py.
 
-LPA's label joins and the parallel Louvain sweep's dimension joins switch
-from broadcast to shuffle_hash there; the result must not change.
-BROADCAST_MAX_ROWS = 0 forces every gated join onto the shuffle side.
+Above BROADCAST_MAX_ROWS, LPA's label joins and the parallel Louvain
+sweep's dimension joins switch from broadcast to shuffle_hash; the result
+must not change. BROADCAST_MAX_ROWS = 0 forces every gated join onto the
+shuffle side.
+
+At or below ONE_BLOCK_MAX_EDGES, PageRank, LPA and CC run as one kernel
+task that makes one runner advance; ONE_BLOCK_MAX_EDGES = 0 turns it off.
 """
 
 import pytest
 
+from louvain_spark.operators.cc import connected_components
 from louvain_spark.operators.louvain import louvain
 from louvain_spark.operators.lpa import label_propagation
+from louvain_spark.operators.pagerank import pagerank
 from louvain_spark.plans import gate
+from louvain_spark.plans.loop import SuperstepRunner
 from tests import graphs
-from tests.conftest import edges_df
+from tests.conftest import edges_df, use_gate_side
 
 
 def _graph(spark, edges, n):
@@ -21,6 +28,7 @@ def _graph(spark, edges, n):
 
 
 def test_lpa_above_gate_matches_default(spark, monkeypatch):
+    use_gate_side(monkeypatch, "distributed")  # the label joins run there
     edges, n = graphs.g_random(60, 0.08, seed=5, weighted=True)
     e, verts = _graph(spark, edges, n)
 
@@ -49,3 +57,45 @@ def test_louvain_parallel_above_gate_matches_default(spark, monkeypatch):
     got, got_mod = run()
     assert got == want
     assert got_mod == pytest.approx(want_mod, abs=1e-12)
+
+
+def test_fits_one_block(spark, monkeypatch):
+    three, empty = spark.range(3), spark.range(0)
+    assert gate.fits_one_block(three) and gate.fits_one_block(empty)
+    monkeypatch.setattr(gate, "ONE_BLOCK_MAX_EDGES", 3)
+    assert gate.fits_one_block(three)
+    monkeypatch.setattr(gate, "ONE_BLOCK_MAX_EDGES", 2)
+    assert not gate.fits_one_block(three)
+    monkeypatch.setattr(gate, "ONE_BLOCK_MAX_EDGES", 0)
+    assert not gate.fits_one_block(empty)
+
+
+_RUNS = {
+    "pagerank": lambda s, e, v, r: pagerank(s, e, vertices=v, max_iter=7, tol=0.0, runner=r),
+    "lpa": lambda s, e, v, r: label_propagation(s, e, vertices=v, max_iter=7, runner=r),
+    "cc": lambda s, e, v, r: connected_components(s, e, vertices=v, runner=r),
+}
+
+
+@pytest.mark.parametrize("operator", list(_RUNS))
+def test_one_block_run_is_one_advance(spark, tmp_path, operator):
+    """Below the gate a run makes one runner advance that counts its
+    iterations, writes one checkpoint, and skips the stats-reset roundtrip
+    (its plan has no chain of joins)."""
+    edges, n = graphs.g_ring_of_cliques(k=4, c=4)
+    e, verts = _graph(spark, edges, n)
+    d = str(tmp_path / "ck")
+    run = _RUNS[operator]
+    runner = SuperstepRunner(spark, "one", operator, checkpoint_dir=d, stats_reset_every=1)
+    run(spark, e, verts, runner)
+    ledger = spark.read.parquet(runner.ledger_path).select("superstep").distinct().collect()
+    assert [r["superstep"] for r in ledger] == [runner.superstep]
+    # iterations plus the initial state's superstep 0, as on the
+    # distributed side (PageRank at tol=0 runs all 7)
+    assert runner.superstep >= 1
+    assert operator != "pagerank" or runner.superstep == 7
+
+    local = SuperstepRunner(spark, "one", operator, stats_reset_every=1)
+    run(spark, e, verts, local)
+    assert local.superstep == runner.superstep
+    assert local._resets == 0 and local._tmp_dir is None

@@ -6,7 +6,7 @@ import pytest
 from louvain_spark.operators.lpa import label_propagation
 from louvain_spark.operators.triangles import triangle_count, triangles_per_vertex
 from tests import graphs
-from tests.conftest import edges_df
+from tests.conftest import edges_df, on_both_sides, use_gate_side
 
 
 def sync_lpa(edges, n, max_iter=20):
@@ -45,9 +45,11 @@ def _partition_sets(d):
 
 
 @pytest.mark.parametrize(
-    "fixture", ["g_two_triangles", "g_two_cliques", "g_disconnected", "g_ring_of_cliques"]
+    "fixture,gate_side",
+    on_both_sides(["g_two_triangles", "g_two_cliques", "g_disconnected", "g_ring_of_cliques"]),
+    indirect=["gate_side"],
 )
-def test_lpa_matches_sync_oracle(spark, fixture):
+def test_lpa_matches_sync_oracle(spark, fixture, gate_side):
     edges, n = getattr(graphs, fixture)()
     e = edges_df(spark, edges)
     verts = spark.createDataFrame([(i,) for i in range(n)], "id long")
@@ -62,6 +64,11 @@ def test_lpa_weighted(spark):
     verts = spark.createDataFrame([(i,) for i in range(n)], "id long")
     got = {r["id"]: r["community"] for r in label_propagation(spark, e, vertices=verts).collect()}
     assert got == sync_lpa(edges, n)
+
+
+@pytest.mark.parametrize("gate_side", ["distributed"], indirect=True)
+def test_lpa_weighted_distributed(spark, gate_side):
+    test_lpa_weighted(spark)
 
 
 @pytest.mark.parametrize(
@@ -115,3 +122,32 @@ def test_lpa_resume_matches_uninterrupted(spark, tmp_path):
     )
     got = {r["id"]: r["community"] for r in resumed.collect()}
     assert got == want
+
+
+@pytest.mark.parametrize(
+    "first,second",
+    [("one_block", "distributed"), ("distributed", "one_block"),
+     ("distributed", "distributed")],
+)
+def test_lpa_resume_across_paths(spark, tmp_path, monkeypatch, first, second):
+    """A checkpoint written on either side of the one-block gate resumes on
+    either side to the uninterrupted labels."""
+    from louvain_spark.plans.loop import SuperstepRunner
+
+    edges, n = graphs.g_ring_of_cliques(k=4, c=5)
+    e = edges_df(spark, edges)
+    verts = spark.createDataFrame([(i,) for i in range(n)], "id long")
+    full = label_propagation(spark, e, vertices=verts, max_iter=8)
+    want = {r["id"]: r["community"] for r in full.collect()}
+
+    d = str(tmp_path / "ck")
+    use_gate_side(monkeypatch, first)
+    r1 = SuperstepRunner(spark, "lpa-x", "lpa", checkpoint_dir=d)
+    label_propagation(spark, e, vertices=verts, max_iter=2, runner=r1)
+    use_gate_side(monkeypatch, second)
+    r2, state, step = SuperstepRunner.resume(spark, "lpa-x", "lpa", d)
+    assert step >= 1 and state is not None
+    resumed = label_propagation(
+        spark, e, vertices=verts, max_iter=6, runner=r2, start_state=state
+    )
+    assert {r["id"]: r["community"] for r in resumed.collect()} == want

@@ -2,7 +2,10 @@
 Spark and their DuckDB oracles side-by-side at sf0.01, compare row count,
 schema (column names), and an order-insensitive value hash.
 
-Usage: python tools/check_oracle.py [query ...]   (default: all oracled)
+Usage: python tools/check_oracle.py [--distributed] [query ...]
+(default: all oracled). --distributed sets gate.ONE_BLOCK_MAX_EDGES = 0
+before any query runs, so PageRank, LPA and CC take their distributed
+superstep path instead of the one-block kernel.
 """
 
 from __future__ import annotations
@@ -61,12 +64,24 @@ def value_hash(df) -> str:
 
 
 def main() -> None:
+    import argparse
+
     import duckdb
 
     import __spark_entry__ as entry
     from louvain_spark import get_spark
+    from louvain_spark.plans import gate
 
-    want = sys.argv[1:]
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("queries", nargs="*", help="query names (default: all oracled)")
+    ap.add_argument(
+        "--distributed", action="store_true",
+        help="run PageRank, LPA and CC on their distributed path",
+    )
+    args = ap.parse_args()
+    if args.distributed:
+        gate.ONE_BLOCK_MAX_EDGES = 0
+    want = args.queries
     qs = entry.queries()
     oracles = entry.oracle_sql()
     names = [n for n in (want or oracles.keys()) if n in qs]
