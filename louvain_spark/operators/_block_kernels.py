@@ -166,7 +166,9 @@ def one_block(
     edges(src, dst, w); vertices(id) or None; state(id, <value>) or None.
     value_type is "long" (a label) or "double" (a score). Returns (the
     localCheckpointed result (id, <value>), the kernel's step count, its
-    metric); an empty graph gives no rows, 0 steps and None.
+    metric); an empty graph gives no rows, 0 steps and None. Louvain's
+    dendrogram tail (operators/louvain.py) runs through here too, with
+    each node's min member vertex id as its long state.
 
     The group holds the packed rows (src, dst, w, kind, group) in one
     Python worker; gate.ONE_BLOCK_MAX_EDGES bounds its memory.

@@ -11,13 +11,13 @@ is the genuinely weighted mode of the older path
 
 Three local-move modes ('auto' composes the other two):
 
-- mode='exact': the level graph's local-move phase runs as one
-  applyInPandas block executing the deterministic CSR kernel
-  (_louvain_kernel.py) — bit-for-bit the sequential oracle's visit order,
-  so partitions match exactly, not just modularity. Coarsening between
-  levels is fully distributed. Since coarsened graphs shrink
-  geometrically, at 100TB scale you run level 0 in parallel mode and
-  switch to exact once the level graph fits one block.
+- mode='exact': the whole dendrogram runs as one applyInPandas task, the
+  deterministic CSR kernel (_louvain_kernel.dendrogram_csr) looping
+  local moves → renumber → coarsen over every level — bit-for-bit the
+  sequential oracle's visit order, so partitions match exactly, not just
+  modularity. Since coarsened graphs shrink geometrically, at 100TB scale
+  you run level 0 in parallel mode and switch to exact once the level
+  graph fits one block.
 
 - mode='parallel': Grappolo-style block-parallel local moves: nodes are
   hash-partitioned into blocks sized to the graph (coarse levels collapse
@@ -31,18 +31,25 @@ Three local-move modes ('auto' composes the other two):
   on order-invariant graphs) rather than exact partition, which is
   order-dependent by nature.
 
-- mode='auto': per dendrogram level, parallel while the level graph has
-  more than auto_exact_max vertices (default block_target ×
-  defaultParallelism), exact once it has coarsened below that — the
+- mode='auto': parallel levels while the level graph has more than
+  auto_exact_max vertices (default block_target × defaultParallelism),
+  then every remaining level in the exact kernel task (the tail) — the
   executable form of the "run level 0 in parallel, switch to exact" story.
 
 Level loop (all modes): renumber communities by first appearance over
-ascending node order → coarsen groupBy(min(c_src,c_dst), max(...)).sum(w)
-with self-loops kept → repeat while level modularity gain ≥ 1e-7.
+ascending node order (≡ rank by min member vertex id) → coarsen
+groupBy(min(c_src,c_dst), max(...)).sum(w) with self-loops kept → repeat
+while level modularity gain ≥ 1e-7. Between two parallel levels the
+renumber, the modularity and the coarsening are distributed; the tail
+does all three in its task, renumbering the handoff level by its
+(community → min member id) rows and taking its modularity as the
+singleton modularity of the coarse graph. The tail makes one runner
+advance, so a run resumes from before it, not from inside it.
 """
 
 from __future__ import annotations
 
+import math
 import os
 import shutil
 import tempfile
@@ -51,10 +58,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
+from louvain_spark.operators._block_kernels import one_block
 from louvain_spark.operators._louvain_kernel import (
     MIN_GAIN,
     block_local_moves,
-    one_level_csr,
+    dendrogram_csr,
 )
 from louvain_spark.operators.graph import vertex_ids
 from louvain_spark.plans.gate import broadcast_or_shuffle
@@ -115,48 +123,6 @@ def _coarsen(edges: DataFrame, assign: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# exact mode: one applyInPandas block per level
-# ---------------------------------------------------------------------------
-
-def _one_level_exact(
-    spark: SparkSession,
-    edges: DataFrame,
-    ids: DataFrame,
-    resolution: float,
-    seed: int,
-    level: int,
-) -> tuple[DataFrame, float]:
-    # feed isolated vertices as zero-weight self-loops so the kernel sees them
-    padded = edges.unionByName(
-        ids.select(F.col("id").alias("src"), F.col("id").alias("dst"), F.lit(0.0).alias("w"))
-    ).withColumn("_g", F.lit(0))
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        src = pdf["src"].to_numpy()
-        dst = pdf["dst"].to_numpy()
-        w = pdf["w"].to_numpy()
-        node_ids = np.unique(np.concatenate([src, dst]))
-        com, mod = one_level_csr(node_ids, src, dst, w, resolution, seed, level)
-        return pd.DataFrame(
-            {"id": node_ids, "community": com, "_mod": np.full(len(node_ids), mod)}
-        )
-
-    out = (
-        padded.groupBy("_g")
-        .applyInPandas(kernel, "id long, community long, _mod double")
-        .persist()
-    )
-    mod = out.select("_mod").first()[0]
-    # the caller's checkpoint/advance cuts lineage — safe to free the cache
-    # immediately (cached blocks otherwise accumulate across levels/resumes)
-    assign = out.select("id", "community").localCheckpoint(eager=True)
-    out.unpersist()
-    return assign, float(mod)
-
-
-# ---------------------------------------------------------------------------
 # parallel mode: synchronous DataFrame sweeps
 # ---------------------------------------------------------------------------
 
@@ -168,13 +134,13 @@ def _one_level_parallel(
     seed: int,
     level: int,
     ckpt_dir: str,
+    n_nodes: int,
     max_sweeps: int = 16,
     n_blocks: int | None = None,
     block_target: int = 64,
     min_moved_frac: float = 0.02,
     total_w: float | None = None,
-    n_nodes: int | None = None,
-) -> tuple[DataFrame, float]:
+) -> DataFrame:
     """Block-parallel local-move phase (Grappolo-style, the north-star shape).
 
     Nodes are hash-partitioned into blocks; each sweep ships every block its
@@ -185,21 +151,15 @@ def _one_level_parallel(
     fixpoint, tracking local Σ_tot deltas. Cross-block state refreshes
     between sweeps; sweeps stop when nothing moves. Order-dependent (as all
     parallel Louvain is) — validated on modularity + order-invariant graphs.
+    Returns the level's assignment (id, community); the callers guarantee
+    a total edge weight > 0.
     """
-    from louvain_spark.operators.quality import modularity as q_mod
-
     e = edges.persist()
-    # total weight and vertex count are loop/level invariants the caller
-    # usually already knows (Σw survives coarsening exactly; auto mode
-    # counts ids for its threshold gate) — accept them to skip the
-    # duplicate per-level aggregate/count jobs (r7)
+    # the total weight is a loop/level invariant the caller usually
+    # already knows (Σw survives coarsening exactly) — accept it to skip
+    # the duplicate per-level aggregate job (r7); n_nodes is the count the
+    # caller's tail decision already took
     m = total_w if total_w is not None else e.agg(F.sum("w")).collect()[0][0]
-    if not m:
-        assign = ids.select("id", F.col("id").alias("community"))
-        e.unpersist()
-        return assign, 0.0
-    if n_nodes is None:
-        n_nodes = ids.count()
     if n_blocks is None:
         # scale block count to the graph: coarse levels collapse to one
         # block (sequential local moves → guaranteed convergence, the
@@ -359,57 +319,129 @@ def _one_level_parallel(
             # merge rides the same action) — keep them, stop sweeping
             break
 
-    assign = assign.select("id", "community")  # drop the loop-carried k
-    mod = q_mod(e.withColumnRenamed("w", "weight"), assign, resolution, "weight")
     e.unpersist()
     k.unpersist()
     sym.unpersist()
-    return assign, float(mod)
+    return assign.select("id", "community")  # drop the loop-carried k
 
 
 # ---------------------------------------------------------------------------
+# the tail: every level that fits one block, in one applyInPandas task
+# ---------------------------------------------------------------------------
 
-def _dispatch_one_level(spark, mode, ckpt_base, parallel_opts):
-    """Level-phase dispatcher for mode in {'exact', 'parallel', 'auto'}.
-
-    The returned callable yields (assign, modularity, needs_renumber):
-    the exact kernel already renumbers communities 0..k-1 by first
-    appearance over ascending node ids — identical to _renumber's
-    min-member-rank order — so exact levels skip the extra distributed
-    rank entirely; parallel levels still need it.
-    """
-
-    def run_exact(spark, e, ids, resolution, seed, level, total_w=None, n_nodes=None):
-        assign, mod = _one_level_exact(spark, e, ids, resolution, seed, level)
-        return assign, mod, False
-
-    if mode == "exact":
-        return run_exact
-    popts = dict(parallel_opts or {})
+def _tail_max(spark: SparkSession, mode: str, popts: dict) -> float:
+    """The largest level graph, in vertices, that runs in the tail: every
+    level in exact mode, none in parallel mode, auto_exact_max (popped
+    from popts) in auto mode."""
     auto_exact_max = popts.pop("auto_exact_max", None)
-
-    def run_parallel(spark, e, ids, resolution, seed, level, total_w=None, n_nodes=None):
-        assign, mod = _one_level_parallel(
-            spark, e, ids, resolution, seed, level, ckpt_dir=ckpt_base,
-            total_w=total_w, n_nodes=n_nodes, **popts
-        )
-        return assign, mod, True
-
+    if mode == "exact":
+        return math.inf
     if mode == "parallel":
-        return run_parallel
+        return -1
     if mode != "auto":
         raise ValueError(f"unknown louvain mode: {mode!r}")
-    threshold = auto_exact_max
-    if threshold is None:
-        threshold = popts.get("block_target", 64) * spark.sparkContext.defaultParallelism
+    if auto_exact_max is not None:
+        return auto_exact_max
+    return popts.get("block_target", 64) * spark.sparkContext.defaultParallelism
 
-    def run_auto(spark, e, ids, resolution, seed, level, total_w=None, n_nodes=None):
-        n = n_nodes if n_nodes is not None else ids.count()
-        if n <= threshold:
-            return run_exact(spark, e, ids, resolution, seed, level)
-        return run_parallel(spark, e, ids, resolution, seed, level, total_w=total_w, n_nodes=n)
 
-    return run_auto
+def _compose(mapping: DataFrame, assign: DataFrame) -> DataFrame:
+    """(vertex → level node) then (level node → community)."""
+    return (
+        mapping.withColumnRenamed("community", "_c")
+        .join(assign.withColumnRenamed("id", "_c"), "_c")
+        .select("id", "community")
+    )
+
+
+def _tail(
+    runner, edges, nodes, mapping, level, max_levels, resolution, seed, min_gain
+) -> tuple[DataFrame, float]:
+    """Levels `level`, `level`+1, … in one task (dendrogram_csr).
+
+    edges: the level graph (src, dst, w); nodes: its vertices with their
+    min member vertex id (id, rep); mapping: vertex → level node, or None
+    at level 0. The kept levels make one runner advance; when none is
+    kept, the renumbered mapping is returned without one.
+    """
+
+    def kernel(b):
+        import numpy as np
+
+        rep = np.empty(len(b.ids), dtype=np.int64)
+        rep[b.state_at] = b.state_label
+        com, mod, kept = dendrogram_csr(
+            rep, b.src, b.dst, b.w, resolution, seed, level, max_levels, min_gain
+        )
+        return com, kept, mod
+
+    out, kept, mod = one_block(
+        edges, nodes, nodes.select("id", F.col("rep").alias("community")),
+        kernel, "community", "long",
+    )
+    if mapping is not None:
+        out = _compose(mapping, out)
+    if kept:
+        out = runner.advance(StepResult(out, metric=mod, steps=kept, one_block=True))
+    return out, float(mod)
+
+
+def _levels(
+    spark, runner, ckpt_base, edges, ids, mapping, mod, level, n, tail_max,
+    popts, max_levels, resolution, seed, min_gain, total_w=None,
+) -> tuple[DataFrame, float]:
+    """Dendrogram levels from `level` on (shared by louvain() and
+    resume_louvain()): parallel levels while the level graph has more
+    than tail_max vertices, then the tail.
+
+    edges: the level graph; ids: its n vertices, or None to take them
+    from mapping; mapping: vertex → level node, or None at level 0; mod:
+    the previous level's modularity, read only by a parallel level's gain
+    check. Whether the next level is the tail depends on the community
+    count alone, so a resumed run takes the same path as a fresh one.
+    """
+    from louvain_spark.operators.quality import modularity as q_mod
+
+    while n > tail_max:
+        if level >= max(1, max_levels):
+            return mapping, float(mod)
+        if ids is None:
+            ids = (
+                mapping.select(F.col("community").alias("id"))
+                .distinct()
+                .localCheckpoint(eager=True)
+            )
+        assign = _one_level_parallel(
+            spark, edges, ids, resolution, seed, level, ckpt_base, n,
+            total_w=total_w, **popts,
+        )
+        n_next = assign.select("community").distinct().count()
+        # a level handing off to the tail keeps its raw labels: the tail
+        # renumbers them and recomputes their modularity (level 0 has no
+        # gain check to feed)
+        handoff = n_next <= tail_max
+        new_mod = None
+        if level > 0 or not handoff:
+            new_mod = q_mod(edges.withColumnRenamed("w", "weight"), assign, resolution, "weight")
+            if level > 0 and new_mod - mod < min_gain:
+                return mapping, float(mod)
+        if not handoff:
+            assign = _renumber(assign)
+        if mapping is None:  # level 0: coarsen from the checkpoint
+            mapping = assign = runner.advance(StepResult(assign, metric=new_mod))
+        else:
+            mapping = runner.advance(StepResult(_compose(mapping, assign), metric=new_mod))
+        # level boundaries are natural checkpoints: cut lineage so the next
+        # level replans against a flat, materialized graph
+        edges = stats_reset(
+            spark, _coarsen(edges, assign), os.path.join(ckpt_base, f"edges-l{level + 1}")
+        )
+        ids, n, mod, level = None, n_next, new_mod, level + 1
+    if mapping is None:
+        nodes = ids.select("id", F.col("id").alias("rep"))
+    else:
+        nodes = mapping.groupBy(F.col("community").alias("id")).agg(F.min("id").alias("rep"))
+    return _tail(runner, edges, nodes, mapping, level, max_levels, resolution, seed, min_gain)
 
 
 def louvain(
@@ -434,22 +466,22 @@ def louvain(
     mode='auto' is the executable form of the 100TB story: each dendrogram
     level runs parallel block sweeps while the level graph is larger than
     auto_exact_max vertices (parallel_opts key; default block_target ×
-    defaultParallelism) and switches to the exact single-block kernel once
-    the coarsened graph fits — coarse levels shrink geometrically, so the
+    defaultParallelism), and every level from the first that fits runs in
+    one exact kernel task — coarse levels shrink geometrically, so the
     tail of the dendrogram converges sequentially instead of burning
     multi-block sweeps on tiny graphs.
     """
+    popts = dict(parallel_opts or {})
+    tail_max = _tail_max(spark, mode, popts)
     if runner is None:
         runner = SuperstepRunner(spark, "adhoc", f"louvain-{mode}")
+    ids = vertex_ids(edges, vertices).persist()
     # without a durable checkpoint_dir the per-level edge tables and sweep
     # states go to a private temp dir, removed on return: the returned
     # mapping is runner.advance output, which never reads from it
     owned = runner.checkpoint_dir is None
     ckpt_base = runner.checkpoint_dir or tempfile.mkdtemp(prefix="louvain-ckpt-")
     try:
-        one_level = _dispatch_one_level(spark, mode, ckpt_base, parallel_opts)
-
-        ids = vertex_ids(edges, vertices).persist()
         # materialize the normalized canonical edge table once: every sweep
         # re-plans over it, and carrying the caller's lineage (e.g. an inline
         # local relation) into each task binary dominated sweep time by 4-10x
@@ -464,63 +496,17 @@ def louvain(
                 "id", F.col("community").cast("long")
             )
             return assign, 0.0
-
-        # level 0 (always kept, as in python-louvain generate_dendrogram)
-        assign, mod, needs_rn = one_level(
-            spark, e, ids, resolution, seed, 0, total_w=float(total_w)
+        # level 0 is always kept, as in python-louvain generate_dendrogram;
+        # exact mode needs no vertex count, it starts in the tail
+        n = 0 if tail_max == math.inf else ids.count()
+        return _levels(
+            spark, runner, ckpt_base, e, ids, None, None, 0, n, tail_max, popts,
+            max_levels, resolution, seed, min_gain, total_w=float(total_w),
         )
-        if needs_rn:
-            assign = _renumber(assign)
-        mapping = runner.advance(StepResult(assign, metric=mod))
-        # level boundaries are natural checkpoints: cut lineage so each level's
-        # sweeps replan against a flat, materialized graph
-        cur_edges = stats_reset(
-            spark, _coarsen(e, mapping), os.path.join(ckpt_base, "edges-l1")
-        )
-        mapping, mod = _level_loop(
-            spark, one_level, runner, ckpt_base, mapping, mod, cur_edges,
-            start_level=1, max_levels=max_levels, resolution=resolution,
-            seed=seed, min_gain=min_gain, total_w=float(total_w),
-        )
-        ids.unpersist()
-        return mapping, float(mod)
     finally:
+        ids.unpersist()
         if owned:
             shutil.rmtree(ckpt_base, ignore_errors=True)
-
-
-def _level_loop(
-    spark, one_level, runner, ckpt_base, mapping, mod, cur_edges,
-    start_level, max_levels, resolution, seed, min_gain, total_w=None,
-):
-    """Dendrogram levels ≥ 1 (shared by louvain() and resume_louvain())."""
-    for level in range(start_level, max_levels):
-        cur_ids = (
-            mapping.select(F.col("community").alias("id"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        assign, new_mod, needs_rn = one_level(
-            spark, cur_edges, cur_ids, resolution, seed, level, total_w=total_w
-        )
-        if new_mod - mod < min_gain:
-            break
-        if needs_rn:
-            assign = _renumber(assign)
-        mapping = runner.advance(
-            StepResult(
-                mapping.withColumnRenamed("community", "_c")
-                .join(assign.withColumnRenamed("id", "_c"), "_c")
-                .select("id", "community"),
-                metric=new_mod,
-            )
-        )
-        mod = new_mod
-        cur_edges = stats_reset(
-            spark, _coarsen(cur_edges, assign),
-            os.path.join(ckpt_base, f"edges-l{level + 1}"),
-        )
-    return mapping, float(mod)
 
 
 def resume_louvain(
@@ -535,12 +521,16 @@ def resume_louvain(
     parallel_opts: dict | None = None,
 ) -> tuple[DataFrame, float]:
     """Continue a Louvain run from its durable checkpoints (north_rule:
-    resumable mid-iteration). Each completed dendrogram level is a
-    superstep in the run ledger; the original normalized edge table is at
-    <dir>/edges-l0, so the next level's graph is recomputed as
-    coarsen(edges-l0, mapping) regardless of where the run died.
-    Idempotent on completed runs (re-checks the last level and stops).
+    resumable mid-iteration). Each completed parallel level is a superstep
+    in the run ledger, and the tail one advance over the levels it kept,
+    so a run resumes after a parallel level or after the tail. The
+    original normalized edge table is at <dir>/edges-l0, so the next
+    level's graph is recomputed as coarsen(edges-l0, mapping) regardless
+    of where the run died. Idempotent on completed runs (re-checks the
+    last level and stops).
     """
+    popts = dict(parallel_opts or {})
+    tail_max = _tail_max(spark, mode, popts)
     runner, mapping, step = SuperstepRunner.resume(
         spark, run_id, f"louvain-{mode}", checkpoint_dir
     )
@@ -548,25 +538,32 @@ def resume_louvain(
         raise NoCheckpointError(
             f"no louvain checkpoint for run_id={run_id} in {checkpoint_dir}"
         )
-    ledger = spark.read.parquet(runner.ledger_path)
-    mod = (
-        ledger.where(
-            (F.col("run_id") == run_id)
-            & (F.col("operator") == f"louvain-{mode}")
-            & (F.col("superstep") == step)
-            & F.col("metric").isNotNull()
+    n = 0 if tail_max == math.inf else mapping.select("community").distinct().count()
+    mod = None
+    if n > tail_max:  # a parallel level's gain check reads the last modularity
+        ledger = spark.read.parquet(runner.ledger_path)
+        row = (
+            ledger.where(
+                (F.col("run_id") == run_id)
+                & (F.col("operator") == f"louvain-{mode}")
+                & (F.col("superstep") == step)
+                & F.col("metric").isNotNull()
+            )
+            .select("metric")
+            .first()
         )
-        .select("metric")
-        .first()[0]
-    )
+        if row is None:  # only a level that handed off to the tail has none
+            raise ValueError(
+                f"louvain run {run_id} handed level {step} to the one-task tail; "
+                "resume it with the mode and parallel_opts it ran with"
+            )
+        mod = row[0]
     e0 = spark.read.parquet(os.path.join(checkpoint_dir, "edges-l0"))
     cur_edges = stats_reset(
         spark, _coarsen(e0, mapping),
         os.path.join(checkpoint_dir, f"edges-l{step + 1}"),
     )
-    one_level = _dispatch_one_level(spark, mode, checkpoint_dir, parallel_opts)
-    return _level_loop(
-        spark, one_level, runner, checkpoint_dir, mapping, float(mod), cur_edges,
-        start_level=step + 1, max_levels=max_levels, resolution=resolution,
-        seed=seed, min_gain=min_gain,
+    return _levels(
+        spark, runner, checkpoint_dir, cur_edges, None, mapping, mod, step + 1, n,
+        tail_max, popts, max_levels, resolution, seed, min_gain,
     )

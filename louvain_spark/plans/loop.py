@@ -12,7 +12,10 @@ write), not one Spark job: under AQE every query stage of the action's
 plan runs as its own job. Below gate.ONE_BLOCK_MAX_EDGES, PageRank, LPA
 and CC make a single advance for their whole one-block kernel run
 (steps = the kernel's iterations), so the ledger holds one row for it and
-such a run resumes only from before the kernel.
+such a run resumes only from before the kernel. Louvain's dendrogram tail
+(every level once the level graph fits one block: all of them in exact
+mode) is one advance too, with steps = the levels it kept; a Louvain run
+resumes after a parallel level or before the tail, never inside it.
 
 The reference's ad-hoc resume story is its legacy-cluster reconciliation
 (/root/reference/tool/Neo4jLouvainProcessor.py:305-364); this replaces it

@@ -1,20 +1,28 @@
 """PageRank, LPA and CC on adversarial graphs, on both sides of the
-one-block gate (plans/gate.ONE_BLOCK_MAX_EDGES).
+one-block gate (plans/gate.ONE_BLOCK_MAX_EDGES); Louvain in each mode, on
+both sides of the broadcast gate (plans/gate.BROADCAST_MAX_ROWS).
 
 Edges are passed as written, not canonicalized, so duplicate pairs keep
 both orientations. Oracles: test_pagerank.np_pagerank, the synchronous
-LPA dict oracle and networkx.connected_components.
+LPA dict oracle, networkx.connected_components and
+tests/oracle/louvain_ref.
 """
+
+from functools import lru_cache
 
 import numpy as np
 import pytest
 
 from louvain_spark.operators.cc import connected_components
+from louvain_spark.operators.louvain import louvain
 from louvain_spark.operators.lpa import label_propagation
 from louvain_spark.operators.pagerank import pagerank
+from louvain_spark.plans import gate
 from tests import graphs
 from tests.conftest import on_both_sides
+from tests.oracle import louvain_ref
 from tests.test_cc import _nx_components
+from tests.test_louvain import canon
 from tests.test_lpa_triangles import sync_lpa
 from tests.test_pagerank import np_pagerank
 
@@ -65,3 +73,33 @@ def test_cc_adversarial(spark, fixture, gate_side):
     edges, n, e, verts = _graph(spark, fixture)
     got = connected_components(spark, e, vertices=verts).collect()
     assert {r["id"]: r["component"] for r in got} == _nx_components(edges, n)
+
+
+# auto_exact_max=0 keeps auto on its parallel levels to the end
+LOUVAIN_MODES = {
+    "exact": {"mode": "exact"},
+    "parallel": {"mode": "parallel"},
+    "auto": {"mode": "auto", "parallel_opts": {"auto_exact_max": 0}},
+}
+
+
+@lru_cache(maxsize=None)
+def _louvain_oracle(fixture):
+    edges, n = getattr(graphs, fixture)()
+    return canon(louvain_ref.best_partition(range(n), edges))
+
+
+@pytest.mark.parametrize("join", ["broadcast", "shuffle"])
+@pytest.mark.parametrize("mode", list(LOUVAIN_MODES))
+@pytest.mark.parametrize("fixture", GRAPHS)
+def test_louvain_adversarial(spark, monkeypatch, fixture, mode, join):
+    if join == "shuffle":
+        monkeypatch.setattr(gate, "BROADCAST_MAX_ROWS", 0)
+    edges, n, e, verts = _graph(spark, fixture)
+    assign, mod = louvain(spark, e, vertices=verts, **LOUVAIN_MODES[mode])
+    got = {r["id"]: r["community"] for r in assign.collect()}
+    assert sorted(got) == list(range(n))
+    assert set(got.values()) == set(range(len(set(got.values()))))
+    if mode == "exact":
+        assert canon(got) == _louvain_oracle(fixture)
+    assert abs(mod - louvain_ref.partition_modularity(range(n), edges, got)) < 1e-9

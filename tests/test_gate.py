@@ -7,6 +7,8 @@ shuffle side.
 
 At or below ONE_BLOCK_MAX_EDGES, PageRank, LPA and CC run as one kernel
 task that makes one runner advance; ONE_BLOCK_MAX_EDGES = 0 turns it off.
+Louvain's dendrogram tail makes one advance the same way, in exact mode
+and in auto mode at or below auto_exact_max vertices.
 """
 
 import pytest
@@ -99,3 +101,18 @@ def test_one_block_run_is_one_advance(spark, tmp_path, operator):
     run(spark, e, verts, local)
     assert local.superstep == runner.superstep
     assert local._resets == 0 and local._tmp_dir is None
+
+
+@pytest.mark.parametrize("mode", ["exact", "auto"])
+def test_louvain_tail_is_one_advance(spark, tmp_path, mode):
+    """Below auto's threshold, and always in exact mode, every dendrogram
+    level runs in one kernel task that makes one runner advance counting
+    the levels it kept."""
+    edges, n = graphs.g_ring_of_cliques(k=8, c=5)
+    e, verts = _graph(spark, edges, n)
+    runner = SuperstepRunner(
+        spark, "tail", f"louvain-{mode}", checkpoint_dir=str(tmp_path / "ck")
+    )
+    louvain(spark, e, vertices=verts, mode=mode, runner=runner)
+    ledger = spark.read.parquet(runner.ledger_path).select("superstep").distinct().collect()
+    assert [r["superstep"] for r in ledger] == [runner.superstep]

@@ -2,6 +2,8 @@
 
 import os
 
+import pytest
+
 from louvain_spark.cli import main as cli_main
 from louvain_spark.operators.louvain import louvain, resume_louvain
 from louvain_spark.plans.loop import SuperstepRunner
@@ -33,6 +35,46 @@ def test_louvain_resume_equals_uninterrupted(spark, tmp_path):
     again_assign, again_mod = resume_louvain(spark, "lv-part", part_dir)
     assert {r["id"]: r["community"] for r in again_assign.collect()} == want
     assert abs(again_mod - full_mod) < 1e-9
+
+
+RESUME_MODES = {
+    "exact": None,
+    "auto": {"auto_exact_max": 20, "n_blocks": 2},
+    "parallel": {"n_blocks": 2},
+}
+RESUME_GRAPHS = {
+    "ring_of_cliques": graphs.g_ring_of_cliques,
+    "random": lambda: graphs.g_random(200, 0.03, seed=5, weighted=True),
+}
+_uninterrupted: dict = {}
+
+
+@pytest.mark.parametrize("stop", [1, 2])
+@pytest.mark.parametrize("graph", list(RESUME_GRAPHS))
+@pytest.mark.parametrize("mode", list(RESUME_MODES))
+def test_louvain_resume_from_each_level(spark, tmp_path, mode, graph, stop):
+    """A run cut at max_levels=stop and resumed equals the uninterrupted
+    run, in every mode."""
+    edges, n = RESUME_GRAPHS[graph]()
+    e = edges_df(spark, edges)
+    verts = spark.createDataFrame([(i,) for i in range(n)], "id long")
+    opts, op = RESUME_MODES[mode], f"louvain-{mode}"
+    if (mode, graph) not in _uninterrupted:
+        assign, mod = louvain(spark, e, vertices=verts, mode=mode, parallel_opts=opts)
+        _uninterrupted[mode, graph] = {r["id"]: r["community"] for r in assign.collect()}, mod
+    want, want_mod = _uninterrupted[mode, graph]
+
+    d = str(tmp_path / "part")
+    runner = SuperstepRunner(spark, "lv-part", op, checkpoint_dir=d)
+    louvain(
+        spark, e, vertices=verts, mode=mode, parallel_opts=opts, runner=runner,
+        max_levels=stop,
+    )
+    got_assign, got_mod = resume_louvain(
+        spark, "lv-part", d, mode=mode, parallel_opts=opts
+    )
+    assert {r["id"]: r["community"] for r in got_assign.collect()} == want
+    assert abs(got_mod - want_mod) < 1e-9
 
 
 def test_cli_induce_and_cc(spark, tmp_path):
