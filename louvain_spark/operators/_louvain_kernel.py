@@ -19,9 +19,12 @@ Architectures*, VLDB'23). Independent implementation from the oracle
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 
 MIN_GAIN = 1e-7
+BLOCK_TARGET = 64  # parallel levels: nodes per block
 
 
 def one_level_csr(
@@ -126,9 +129,38 @@ def one_level_csr(
         if new_mod - cur_mod < min_gain:
             break
 
-    # renumber by first appearance over ascending node index
+    return _renumber(com), new_mod
+
+
+def _renumber(com: np.ndarray) -> np.ndarray:
+    """Labels 0..k-1 by first appearance over ascending node index."""
     _, first, inv = np.unique(com, return_index=True, return_inverse=True)
-    return np.argsort(np.argsort(first))[inv], new_mod
+    return np.argsort(np.argsort(first))[inv]
+
+
+def _modularity(
+    com: np.ndarray, s: np.ndarray, d: np.ndarray, w: np.ndarray, resolution: float
+) -> float:
+    """quality.modularity of labels 0..k-1 over canonical edges (self-loops
+    once in m and in their community, twice in its degree)."""
+    m = float(w.sum())
+    n = int(com.max()) + 1
+    cs, cd = com[s], com[d]
+    inside = cs == cd
+    in_c = np.bincount(cs[inside], weights=w[inside], minlength=n)
+    deg = np.bincount(cs, weights=w, minlength=n) + np.bincount(cd, weights=w, minlength=n)
+    return float((in_c * resolution / m - (deg / (2.0 * m)) ** 2).sum())
+
+
+def _coarsen(com, s, d, w):
+    """The community graph: weights summed per community pair, self-loops
+    kept. Returns (src, dst, w, node count)."""
+    n = int(com.max()) + 1
+    keys, inv = np.unique(
+        np.minimum(com[s], com[d]) * n + np.maximum(com[s], com[d]),
+        return_inverse=True,
+    )
+    return keys // n, keys % n, np.bincount(inv, weights=w), n
 
 
 def dendrogram_csr(
@@ -141,6 +173,8 @@ def dendrogram_csr(
     start_level: int,
     max_levels: int,
     min_gain: float = MIN_GAIN,
+    tail_max: float = math.inf,
+    sweeps: dict | None = None,
 ) -> tuple[np.ndarray, float, int]:
     """Every dendrogram level from start_level on, over one level graph.
 
@@ -149,40 +183,167 @@ def dendrogram_csr(
     Ranking the nodes by rep is the renumber of the level that built
     this graph (louvain._renumber). From level 0 the nodes are the
     vertices, and level 0 is always kept. Above it the previous level's
-    modularity is the singleton partition's on this graph, and a level
-    is kept while it gains at least min_gain, up to max_levels.
+    modularity is the singleton partition's on this graph.
+
+    While the level graph has more than tail_max nodes a level is a
+    parallel one (parallel_level_csr with the keyword arguments `sweeps`),
+    kept up to max(1, max_levels) levels and, above level 0, while it
+    gains at least min_gain — louvain._levels' distributed loop. The rest
+    are one_level_csr levels, kept while they gain at least min_gain, up
+    to max_levels.
 
     Returns (final community per node, 0..k-1 in rep order; the
     modularity of the last kept level; the number of levels kept).
     """
     n = len(rep)
+    order = np.argsort(rep, kind="stable")
     label = np.empty(n, dtype=np.int64)
-    label[np.argsort(rep, kind="stable")] = np.arange(n)
+    label[order] = np.arange(n)
     s, d = label[src], label[dst]
     w = np.asarray(w, dtype=np.float64)
+    m = float(w.sum())
     final = label
-    mod = None
-    if start_level > 0:
-        m = float(w.sum())
-        k = np.bincount(s, weights=w, minlength=n) + np.bincount(d, weights=w, minlength=n)
-        loops = s == d
-        self_w = np.bincount(s[loops], weights=w[loops], minlength=n)
-        mod = float((self_w * resolution / m - (k / (2.0 * m)) ** 2).sum())
+    mod = None if start_level == 0 else _modularity(np.arange(n), s, d, w, resolution)
     level, kept = start_level, 0
+    while n > tail_max:
+        if level >= max(1, max_levels):
+            return final, mod, kept
+        # the blocks hash node ids: the vertex ids at level 0, the
+        # renumbered 0..n-1 above it
+        ids = rep[order] if level == 0 else np.arange(n)
+        com = _renumber(
+            parallel_level_csr(ids, s, d, w, m, resolution, seed, level, **sweeps)
+        )
+        new_mod = None
+        if level > 0 or com.max() + 1 > tail_max:  # level 0 handing off has no check
+            new_mod = _modularity(com, s, d, w, resolution)
+            if level > 0 and new_mod - mod < min_gain:
+                return final, mod, kept
+        final, mod, kept = com[final], new_mod, kept + 1
+        s, d, w, n = _coarsen(com, s, d, w)
+        level += 1
+    if kept:  # the exact levels start from the coarse graph's singletons
+        mod = _modularity(np.arange(n), s, d, w, resolution)
     while level == 0 or level < max_levels:
         com, new_mod = one_level_csr(np.arange(n), s, d, w, resolution, seed, level)
         if mod is not None and new_mod - mod < min_gain:
             break
         final, mod, kept = com[final], new_mod, kept + 1
-        # coarsen: sum the weights per community pair, self-loops kept
-        n = int(com.max()) + 1
-        keys, inv = np.unique(
-            np.minimum(com[s], com[d]) * n + np.maximum(com[s], com[d]),
-            return_inverse=True,
-        )
-        s, d, w = keys // n, keys % n, np.bincount(inv, weights=w)
+        s, d, w, n = _coarsen(com, s, d, w)
         level += 1
     return final, mod, kept
+
+
+_P1, _P2, _P3, _P4, _P5 = (
+    np.uint64(p)
+    for p in (
+        0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9,
+        0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5,
+    )
+)
+
+
+def _rotl(x: np.ndarray, r: int) -> np.ndarray:
+    return (x << np.uint64(r)) | (x >> np.uint64(64 - r))
+
+
+def xxhash64(x: np.ndarray, int32: bool = False, seed: int = 42) -> np.ndarray:
+    """Spark's xxhash64(col) (default seed 42) of each value, as int64.
+
+    Spark hashes a long column as 8 bytes and an int, short or byte
+    column as 4 (int32=True)."""
+    v = np.ascontiguousarray(x, dtype=np.int64).view(np.uint64)
+    if int32:
+        h = (np.uint64(seed) + _P5 + np.uint64(4)) ^ ((v & np.uint64(0xFFFFFFFF)) * _P1)
+        h = _rotl(h, 23) * _P2 + _P3
+    else:
+        h = (np.uint64(seed) + _P5 + np.uint64(8)) ^ (_rotl(v * _P2, 31) * _P1)
+        h = _rotl(h, 27) * _P1 + _P4
+    h = (h ^ (h >> np.uint64(33))) * _P2
+    h = (h ^ (h >> np.uint64(29))) * _P3
+    return (h ^ (h >> np.uint64(32))).view(np.int64)
+
+
+def sweep_plan(
+    n: int,
+    cores: int,
+    n_blocks: int | None = None,
+    block_target: int = BLOCK_TARGET,
+    min_moved_frac: float = 0.02,
+) -> tuple[int, int]:
+    """(blocks, stop count) of a parallel level over n nodes.
+
+    Without an explicit n_blocks the blocks scale to the graph: coarse
+    levels collapse to one block (sequential local moves, guaranteed
+    convergence), big ones fan out to one block per core. Sweeps stop
+    once one moves fewer than min_moved_frac of the nodes — negligible
+    modularity that the next level recovers — or, in one block, nothing.
+    """
+    if n_blocks is None:
+        n_blocks = max(1, min(cores, n // block_target))
+    return n_blocks, max(1, int(n * min_moved_frac)) if n_blocks > 1 else 1
+
+
+def parallel_level_csr(
+    ids: np.ndarray,
+    s: np.ndarray,
+    d: np.ndarray,
+    w: np.ndarray,
+    m: float,
+    resolution: float,
+    seed: int,
+    level: int,
+    cores: int,
+    int32: bool = False,
+    max_sweeps: int = 16,
+    **plan,
+) -> np.ndarray:
+    """One parallel level over a whole level graph, sweep for sweep the
+    distributed one (louvain._one_level_parallel).
+
+    ids: sorted node ids, the values the blocks hash (int32: as Spark
+    hashes an int column); s/d: canonical edges as indices into ids,
+    self-loops kept; w: weights; m: total weight. plan: sweep_plan's
+    keyword arguments. Block b holds the symmetric non-loop rows whose
+    src hashes to b (pmod(xxhash64(src), blocks)). Each sweep tags them
+    with the sweep-start communities and Σ_tot, runs block_local_moves
+    per block and only then applies every block's moves. Returns the
+    community per node, labelled by a member's index.
+    """
+    n = len(ids)
+    n_blocks, min_moved = sweep_plan(n, cores, **plan)
+    loop = s == d
+    heads = np.concatenate([s[~loop], d[~loop]])
+    tails = np.concatenate([d[~loop], s[~loop]])
+    hw = np.concatenate([w[~loop], w[~loop]])
+    k = np.bincount(heads, weights=hw, minlength=n) + 2.0 * np.bincount(
+        s[loop], weights=w[loop], minlength=n
+    )
+    blk = np.mod(xxhash64(ids, int32), n_blocks)[heads]
+    order = np.argsort(blk, kind="stable")
+    heads, tails, hw = heads[order], tails[order], hw[order]
+    bounds = np.searchsorted(blk[order], np.arange(n_blocks + 1))
+    com = np.arange(n)
+    for sweep in range(max_sweeps):
+        tot = np.bincount(com, weights=k, minlength=n)
+        new = com.copy()
+        moved = 0
+        for b in range(n_blocks):
+            rows = slice(bounds[b], bounds[b + 1])
+            u, v = heads[rows], tails[rows]
+            if not len(u):  # no group reaches the distributed kernel
+                continue
+            cu, cv = com[u], com[v]
+            mv, to = block_local_moves(
+                ids[u], ids[v], hw[rows], ids[cu], ids[cv], k[u], tot[cu], tot[cv],
+                resolution, m, seed, level, sweep, b, n_blocks,
+            )
+            new[np.searchsorted(ids, mv)] = np.searchsorted(ids, to)
+            moved += len(mv)
+        com = new
+        if moved < min_moved:
+            break
+    return com
 
 
 def block_local_moves(

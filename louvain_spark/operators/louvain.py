@@ -27,24 +27,37 @@ Three local-move modes ('auto' composes the other two):
   fixpoint, tracking local Σ_tot deltas. Sweep 0 activates all nodes
   (bulk consolidation); later sweeps activate a deterministic
   pseudo-random half to damp cross-block swap cycles; the loop stops when
-  a sweep moves <1% of nodes. Validated on modularity (allclose vs oracle
-  on order-invariant graphs) rather than exact partition, which is
-  order-dependent by nature.
+  a sweep moves <2% of nodes (min_moved_frac). Validated on modularity
+  (allclose vs oracle on order-invariant graphs) rather than exact
+  partition, which is order-dependent by nature.
 
 - mode='auto': parallel levels while the level graph has more than
   auto_exact_max vertices (default block_target × defaultParallelism),
-  then every remaining level in the exact kernel task (the tail) — the
-  executable form of the "run level 0 in parallel, switch to exact" story.
+  then every remaining level exact — the executable form of the "run
+  level 0 in parallel, switch to exact" story.
+
+Where the levels run: from the first level graph with at most
+gate.LOUVAIN_ONE_TASK_MAX_EDGES edges, or (exact levels) at most
+auto_exact_max vertices, every remaining level runs in ONE applyInPandas
+task (dendrogram_csr): parallel levels through parallel_level_csr, which
+replays the distributed sweeps block for block — the same xxhash64
+blocks, sweep-start snapshots, RNG seeds and stopping rule — so the
+partition does not depend on the side of the gate (up to the summation
+order of non-integer weights). Above the gate each parallel level runs
+as distributed sweeps (_one_level_parallel), the only path for a graph
+that outgrows one task. So below the gate 'parallel' and 'auto' are one
+task end to end, like 'exact'.
 
 Level loop (all modes): renumber communities by first appearance over
 ascending node order (≡ rank by min member vertex id) → coarsen
 groupBy(min(c_src,c_dst), max(...)).sum(w) with self-loops kept → repeat
-while level modularity gain ≥ 1e-7. Between two parallel levels the
-renumber, the modularity and the coarsening are distributed; the tail
-does all three in its task, renumbering the handoff level by its
-(community → min member id) rows and taking its modularity as the
-singleton modularity of the coarse graph. The tail makes one runner
-advance, so a run resumes from before it, not from inside it.
+while level modularity gain ≥ 1e-7. Between two distributed levels the
+renumber, the modularity and the coarsening are distributed; the task
+does all three itself, renumbering its first level graph by its
+(community → min member id) rows and taking that level's modularity as
+the singleton modularity of the coarse graph. The task makes one runner
+advance and writes no per-sweep state, so a run resumes from before it,
+not from inside it.
 """
 
 from __future__ import annotations
@@ -57,14 +70,18 @@ import tempfile
 import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ByteType, IntegerType, ShortType
 
 from louvain_spark.operators._block_kernels import one_block
 from louvain_spark.operators._louvain_kernel import (
+    BLOCK_TARGET,
     MIN_GAIN,
     block_local_moves,
     dendrogram_csr,
+    sweep_plan,
 )
 from louvain_spark.operators.graph import vertex_ids
+from louvain_spark.plans import gate
 from louvain_spark.plans.gate import broadcast_or_shuffle
 from louvain_spark.plans.loop import StepResult, SuperstepRunner, stats_reset
 
@@ -137,7 +154,7 @@ def _one_level_parallel(
     n_nodes: int,
     max_sweeps: int = 16,
     n_blocks: int | None = None,
-    block_target: int = 64,
+    block_target: int = BLOCK_TARGET,
     min_moved_frac: float = 0.02,
     total_w: float | None = None,
 ) -> DataFrame:
@@ -149,28 +166,18 @@ def _one_level_parallel(
     (_louvain_kernel.block_local_moves — the same CSR/numpy construction as
     the exact kernel) runs sequential python-louvain moves to in-block
     fixpoint, tracking local Σ_tot deltas. Cross-block state refreshes
-    between sweeps; sweeps stop when nothing moves. Order-dependent (as all
-    parallel Louvain is) — validated on modularity + order-invariant graphs.
+    between sweeps; sweeps stop once one moves too few nodes (sweep_plan).
+    Order-dependent (as all parallel Louvain is) — validated on modularity
+    + order-invariant graphs.
     Returns the level's assignment (id, community); the callers guarantee
-    a total edge weight > 0.
+    a total edge weight > 0. _louvain_kernel.parallel_level_csr runs the
+    same sweeps over a whole level graph in one task.
     """
+    n_blocks, min_moved = sweep_plan(
+        n_nodes, spark.sparkContext.defaultParallelism, n_blocks, block_target,
+        min_moved_frac,
+    )
     e = edges.persist()
-    # the total weight is a loop/level invariant the caller usually
-    # already knows (Σw survives coarsening exactly) — accept it to skip
-    # the duplicate per-level aggregate job (r7); n_nodes is the count the
-    # caller's tail decision already took
-    m = total_w if total_w is not None else e.agg(F.sum("w")).collect()[0][0]
-    if n_blocks is None:
-        # scale block count to the graph: coarse levels collapse to one
-        # block (sequential local moves → guaranteed convergence, the
-        # "switch to exact once it fits" half of the north-star design);
-        # big level-0 graphs fan out to one block per core.
-        n_blocks = max(1, min(spark.sparkContext.defaultParallelism, n_nodes // block_target))
-    # local-move tail cutoff: sweeps moving <1% of nodes contribute
-    # negligible modularity (coarsening recovers it next level; quality
-    # bound vs the sequential oracle is test-enforced)
-    min_moved = max(1, int(n_nodes * min_moved_frac)) if n_blocks > 1 else 1
-
     loops = e.where(F.col("src") == F.col("dst")).select(
         F.col("src").alias("id"), F.col("w").alias("self_w")
     )
@@ -195,145 +202,160 @@ def _one_level_parallel(
         .persist()
     )
     sym = sym.persist()
+    # unpersisted on an error too: a failed sweep must not leave the
+    # level's edge and degree tables cached
+    try:
+        # the total weight is a loop/level invariant the caller usually
+        # already knows (Σw survives coarsening exactly) — accept it to skip
+        # the duplicate per-level aggregate job (r7)
+        m = total_w if total_w is not None else e.agg(F.sum("w")).collect()[0][0]
 
-    # the sweep-state parquet carries (id, community, k): k is loop-
-    # invariant, and folding it into the checkpointed state removes one
-    # |V|-dimension join (+ its broadcast build stage) from EVERY sweep's
-    # plan — per-sweep wall is dominated by the count of sequential query
-    # stages, not data volume (r7 probe: 137 jobs ≈ 0.2s each)
-    assign = k.select(
-        "id", F.col("id").alias("community"), "k"
-    ).localCheckpoint(eager=True)
-    res, mm, lvl, sd = float(resolution), float(m), int(level), int(seed)
+        # the sweep-state parquet carries (id, community, k): k is loop-
+        # invariant, and folding it into the checkpointed state removes one
+        # |V|-dimension join (+ its broadcast build stage) from EVERY sweep's
+        # plan — per-sweep wall is dominated by the count of sequential query
+        # stages, not data volume (r7 probe: 137 jobs ≈ 0.2s each)
+        assign = k.select(
+            "id", F.col("id").alias("community"), "k"
+        ).localCheckpoint(eager=True)
+        res, mm, lvl, sd = float(resolution), float(m), int(level), int(seed)
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
+        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+            import numpy as np
 
-        moved_ids, new_coms = block_local_moves(
-            pdf["src"].to_numpy(),
-            pdf["dst"].to_numpy(),
-            pdf["w"].to_numpy(dtype=np.float64),
-            pdf["cu"].to_numpy(),
-            pdf["cd"].to_numpy(),
-            pdf["k"].to_numpy(dtype=np.float64),
-            pdf["tot_cu"].to_numpy(dtype=np.float64),
-            pdf["tot_cd"].to_numpy(dtype=np.float64),
-            res,
-            mm,
-            sd,
-            lvl,
-            int(pdf["_sweep"].iloc[0]),
-            int(pdf["_blk"].iloc[0]),
-            n_blocks,
-        )
-        return pd.DataFrame({"id": moved_ids, "new_com": new_coms}).astype("int64")
-
-    for sweep in range(max_sweeps):
-        # ONE combined per-vertex dimension per sweep — (id, community, k,
-        # Σ_tot of its community) — joined twice (src side and dst side)
-        # through TWO ALIASES OF THE IDENTICAL SUBTREE, both keyed on id:
-        # the canonicalized broadcast exchange is the same on both sides,
-        # so Spark's exchange/stage reuse builds it ONCE per sweep (the
-        # former per-side projections defeated reuse and paid two
-        # broadcast builds plus a cache-fill stage). The dimension is
-        # |V|-sized, tiny next to the edge table: below the dimension-join
-        # gate (plans/gate.py) it ships as broadcast hash joins, so the
-        # only shuffle per sweep is the groupBy(_blk) feeding the kernel;
-        # above it, shuffle_hash joins.
-        # Σ_tot via a window over the checkpointed assign state — ONE
-        # exchange (community) inside the dim broadcast's build job. The
-        # former groupBy(tot)+join form paid two sequential broadcast
-        # builds per sweep (tot, then assign⋈tot); identical values, the
-        # window sum is over the same groups (r7 barrier trim).
-        dim = assign.select(
-            "id", "community", "k",
-            F.sum("k").over(Window.partitionBy("community")).alias("tot"),
-        )
-        dd = broadcast_or_shuffle(dim.alias("_dd"), n_nodes)
-        ds = broadcast_or_shuffle(dim.alias("_ds"), n_nodes)
-        tagged = (
-            sym.join(dd, F.col("dst") == F.col("_dd.id"))
-            .select(
-                "src",
-                "dst",
-                "w",
-                F.col("_dd.community").alias("cd"),
-                F.col("_dd.tot").alias("tot_cd"),
+            moved_ids, new_coms = block_local_moves(
+                pdf["src"].to_numpy(),
+                pdf["dst"].to_numpy(),
+                pdf["w"].to_numpy(dtype=np.float64),
+                pdf["cu"].to_numpy(),
+                pdf["cd"].to_numpy(),
+                pdf["k"].to_numpy(dtype=np.float64),
+                pdf["tot_cu"].to_numpy(dtype=np.float64),
+                pdf["tot_cd"].to_numpy(dtype=np.float64),
+                res,
+                mm,
+                sd,
+                lvl,
+                int(pdf["_sweep"].iloc[0]),
+                int(pdf["_blk"].iloc[0]),
+                n_blocks,
             )
-            .join(ds, F.col("src") == F.col("_ds.id"))
-            .select(
-                "src",
-                "dst",
-                "w",
-                "cd",
-                "tot_cd",
-                F.col("_ds.community").alias("cu"),
-                F.col("_ds.k").alias("k"),
-                F.col("_ds.tot").alias("tot_cu"),
-            )
-            .withColumn("_blk", F.pmod(F.xxhash64("src"), F.lit(n_blocks)).cast("int"))
-            .withColumn("_sweep", F.lit(sweep))
-        )
-        moved_df = tagged.groupBy("_blk").applyInPandas(
-            kernel, "id long, new_com long"
-        )
-        # ONE driver-blocking action per sweep: the parquet write of the
-        # UPDATED assignments. It pulls the whole chain — dim cache fill,
-        # kernel cogroup, moved broadcast, assign merge — as stages of a
-        # single job; the moved-count observation fills during the write,
-        # and the roundtrip doubles as the durable sweep checkpoint + the
-        # Catalyst stats reset (see plans/loop.stats_reset).
-        # observe on the MERGED root (not on moved_df): an Observation
-        # under a BroadcastExchange fails its exactly-once assertion — the
-        # root select executes exactly once, in the write job
-        obs = Observation()
-        prev_assign = assign
-        # moved_df merges via a shuffle-hash join, NOT broadcast: a
-        # broadcast of the kernel's output would run the whole
-        # tagged-join + kernel pipeline as a separate broadcast-build
-        # job before the write job could start; the shuffle join keeps
-        # kernel and write inside ONE action (and is the right shape
-        # above the broadcast gate anyway — both sides key on id).
-        merged = (
-            prev_assign.join(moved_df.hint("shuffle_hash"), "id", "left")
-            .select(
-                "id",
-                F.coalesce("new_com", "community").alias("community"),
-                "k",
-                F.col("new_com").isNotNull().alias("_m"),
-            )
-            .observe(
-                obs, F.coalesce(F.sum(F.col("_m").cast("long")), F.lit(0)).alias("n")
-            )
-            .select("id", "community", "k")
-        )
-        assign = stats_reset(
-            spark, merged, os.path.join(ckpt_dir, f"assign-l{level}-s{sweep}")
-        )
-        moved = int(obs.get["n"])
-        # frees sweep 0's initial eager localCheckpoint blocks (|V|-sized);
-        # later sweeps' prev_assign is parquet-backed — a no-op there
-        prev_assign.unpersist()
-        if moved < min_moved:
-            # the sub-threshold sweep's few moves are already applied (the
-            # merge rides the same action) — keep them, stop sweeping
-            break
+            return pd.DataFrame({"id": moved_ids, "new_com": new_coms}).astype("int64")
 
-    e.unpersist()
-    k.unpersist()
-    sym.unpersist()
-    return assign.select("id", "community")  # drop the loop-carried k
+        for sweep in range(max_sweeps):
+            # ONE combined per-vertex dimension per sweep — (id, community, k,
+            # Σ_tot of its community) — joined twice (src side and dst side)
+            # through TWO ALIASES OF THE IDENTICAL SUBTREE, both keyed on id:
+            # the canonicalized broadcast exchange is the same on both sides,
+            # so Spark's exchange/stage reuse builds it ONCE per sweep (the
+            # former per-side projections defeated reuse and paid two
+            # broadcast builds plus a cache-fill stage). The dimension is
+            # |V|-sized, tiny next to the edge table: below the dimension-join
+            # gate (plans/gate.py) it ships as broadcast hash joins, so the
+            # only shuffle per sweep is the groupBy(_blk) feeding the kernel;
+            # above it, shuffle_hash joins.
+            # Σ_tot via a window over the checkpointed assign state — ONE
+            # exchange (community) inside the dim broadcast's build job. The
+            # former groupBy(tot)+join form paid two sequential broadcast
+            # builds per sweep (tot, then assign⋈tot); identical values, the
+            # window sum is over the same groups (r7 barrier trim).
+            dim = assign.select(
+                "id", "community", "k",
+                F.sum("k").over(Window.partitionBy("community")).alias("tot"),
+            )
+            dd = broadcast_or_shuffle(dim.alias("_dd"), n_nodes)
+            ds = broadcast_or_shuffle(dim.alias("_ds"), n_nodes)
+            tagged = (
+                sym.join(dd, F.col("dst") == F.col("_dd.id"))
+                .select(
+                    "src",
+                    "dst",
+                    "w",
+                    F.col("_dd.community").alias("cd"),
+                    F.col("_dd.tot").alias("tot_cd"),
+                )
+                .join(ds, F.col("src") == F.col("_ds.id"))
+                .select(
+                    "src",
+                    "dst",
+                    "w",
+                    "cd",
+                    "tot_cd",
+                    F.col("_ds.community").alias("cu"),
+                    F.col("_ds.k").alias("k"),
+                    F.col("_ds.tot").alias("tot_cu"),
+                )
+                .withColumn("_blk", F.pmod(F.xxhash64("src"), F.lit(n_blocks)).cast("int"))
+                .withColumn("_sweep", F.lit(sweep))
+            )
+            moved_df = tagged.groupBy("_blk").applyInPandas(
+                kernel, "id long, new_com long"
+            )
+            # ONE driver-blocking action per sweep: the parquet write of the
+            # UPDATED assignments. It pulls the whole chain — dim cache fill,
+            # kernel cogroup, moved broadcast, assign merge — as stages of a
+            # single job; the moved-count observation fills during the write,
+            # and the roundtrip doubles as the durable sweep checkpoint + the
+            # Catalyst stats reset (see plans/loop.stats_reset).
+            # observe on the MERGED root (not on moved_df): an Observation
+            # under a BroadcastExchange fails its exactly-once assertion — the
+            # root select executes exactly once, in the write job
+            obs = Observation()
+            prev_assign = assign
+            # moved_df merges via a shuffle-hash join, NOT broadcast: a
+            # broadcast of the kernel's output would run the whole
+            # tagged-join + kernel pipeline as a separate broadcast-build
+            # job before the write job could start; the shuffle join keeps
+            # kernel and write inside ONE action (and is the right shape
+            # above the broadcast gate anyway — both sides key on id).
+            merged = (
+                prev_assign.join(moved_df.hint("shuffle_hash"), "id", "left")
+                .select(
+                    "id",
+                    F.coalesce("new_com", "community").alias("community"),
+                    "k",
+                    F.col("new_com").isNotNull().alias("_m"),
+                )
+                .observe(
+                    obs, F.coalesce(F.sum(F.col("_m").cast("long")), F.lit(0)).alias("n")
+                )
+                .select("id", "community", "k")
+            )
+            assign = stats_reset(
+                spark, merged, os.path.join(ckpt_dir, f"assign-l{level}-s{sweep}")
+            )
+            moved = int(obs.get["n"])
+            # frees sweep 0's initial eager localCheckpoint blocks (|V|-sized);
+            # later sweeps' prev_assign is parquet-backed — a no-op there
+            prev_assign.unpersist()
+            if moved < min_moved:
+                # the sub-threshold sweep's few moves are already applied (the
+                # merge rides the same action) — keep them, stop sweeping
+                break
+
+        return assign.select("id", "community")  # drop the loop-carried k
+    finally:
+        for df in (e, k, sym):
+            df.unpersist()
 
 
 # ---------------------------------------------------------------------------
-# the tail: every level that fits one block, in one applyInPandas task
+# one task: every level from the first that fits, in one applyInPandas task
 # ---------------------------------------------------------------------------
+
+_SWEEP_OPTS = {"max_sweeps", "n_blocks", "block_target", "min_moved_frac"}
+
 
 def _tail_max(spark: SparkSession, mode: str, popts: dict) -> float:
-    """The largest level graph, in vertices, that runs in the tail: every
+    """The largest level graph, in vertices, that runs exact levels: every
     level in exact mode, none in parallel mode, auto_exact_max (popped
-    from popts) in auto mode."""
+    from popts) in auto mode. The other popts keys must be sweep options."""
     auto_exact_max = popts.pop("auto_exact_max", None)
+    if set(popts) - _SWEEP_OPTS:
+        raise ValueError(
+            f"unknown louvain parallel_opts {sorted(set(popts) - _SWEEP_OPTS)}; "
+            f"expected auto_exact_max or {sorted(_SWEEP_OPTS)}"
+        )
     if mode == "exact":
         return math.inf
     if mode == "parallel":
@@ -342,7 +364,15 @@ def _tail_max(spark: SparkSession, mode: str, popts: dict) -> float:
         raise ValueError(f"unknown louvain mode: {mode!r}")
     if auto_exact_max is not None:
         return auto_exact_max
-    return popts.get("block_target", 64) * spark.sparkContext.defaultParallelism
+    return popts.get("block_target", BLOCK_TARGET) * spark.sparkContext.defaultParallelism
+
+
+def _level_graph(spark: SparkSession, edges: DataFrame, path: str) -> tuple[DataFrame, int]:
+    """stats_reset of a level graph, and its edge count, observed during
+    the write (no extra job)."""
+    obs = Observation()
+    out = stats_reset(spark, edges.observe(obs, F.count(F.lit(1)).alias("n")), path)
+    return out, int(obs.get["n"])
 
 
 def _compose(mapping: DataFrame, assign: DataFrame) -> DataFrame:
@@ -354,16 +384,27 @@ def _compose(mapping: DataFrame, assign: DataFrame) -> DataFrame:
     )
 
 
-def _tail(
-    runner, edges, nodes, mapping, level, max_levels, resolution, seed, min_gain
+def _one_task(
+    spark, runner, edges, nodes, mapping, level, max_levels, resolution, seed,
+    min_gain, tail_max, popts,
 ) -> tuple[DataFrame, float]:
-    """Levels `level`, `level`+1, … in one task (dendrogram_csr).
+    """Levels `level`, `level`+1, … in one task (dendrogram_csr): parallel
+    levels while the level graph has more than tail_max vertices, then
+    exact ones.
 
     edges: the level graph (src, dst, w); nodes: its vertices with their
     min member vertex id (id, rep); mapping: vertex → level node, or None
     at level 0. The kept levels make one runner advance; when none is
     kept, the renumbered mapping is returned without one.
     """
+    src_type = edges.schema["src"].dataType
+    sweeps = dict(
+        popts,
+        cores=spark.sparkContext.defaultParallelism,
+        # Spark hashes an int column as 4 bytes; the level-0 vertex ids
+        # keep the caller's type, coarse node ids are longs
+        int32=level == 0 and isinstance(src_type, (IntegerType, ShortType, ByteType)),
+    )
 
     def kernel(b):
         import numpy as np
@@ -371,7 +412,8 @@ def _tail(
         rep = np.empty(len(b.ids), dtype=np.int64)
         rep[b.state_at] = b.state_label
         com, mod, kept = dendrogram_csr(
-            rep, b.src, b.dst, b.w, resolution, seed, level, max_levels, min_gain
+            rep, b.src, b.dst, b.w, resolution, seed, level, max_levels, min_gain,
+            tail_max, sweeps,
         )
         return com, kept, mod
 
@@ -387,22 +429,24 @@ def _tail(
 
 
 def _levels(
-    spark, runner, ckpt_base, edges, ids, mapping, mod, level, n, tail_max,
+    spark, runner, ckpt_base, edges, n_edges, ids, mapping, mod, level, n, tail_max,
     popts, max_levels, resolution, seed, min_gain, total_w=None,
 ) -> tuple[DataFrame, float]:
     """Dendrogram levels from `level` on (shared by louvain() and
-    resume_louvain()): parallel levels while the level graph has more
-    than tail_max vertices, then the tail.
+    resume_louvain()): distributed parallel levels while the level graph
+    has more than tail_max vertices and more than
+    gate.LOUVAIN_ONE_TASK_MAX_EDGES edges, then the rest in one task.
 
-    edges: the level graph; ids: its n vertices, or None to take them
-    from mapping; mapping: vertex → level node, or None at level 0; mod:
-    the previous level's modularity, read only by a parallel level's gain
-    check. Whether the next level is the tail depends on the community
-    count alone, so a resumed run takes the same path as a fresh one.
+    edges: the level graph, with n_edges edges; ids: its n vertices, or
+    None to take them from mapping (n is read only above the edge gate);
+    mapping: vertex → level node, or None at level 0; mod: the previous
+    level's modularity, read only by a distributed level's gain check.
+    Every branch depends on the level graph alone, so a resumed run takes
+    the same path as a fresh one.
     """
     from louvain_spark.operators.quality import modularity as q_mod
 
-    while n > tail_max:
+    while n_edges > gate.LOUVAIN_ONE_TASK_MAX_EDGES and n > tail_max:
         if level >= max(1, max_levels):
             return mapping, float(mod)
         if ids is None:
@@ -416,9 +460,9 @@ def _levels(
             total_w=total_w, **popts,
         )
         n_next = assign.select("community").distinct().count()
-        # a level handing off to the tail keeps its raw labels: the tail
-        # renumbers them and recomputes their modularity (level 0 has no
-        # gain check to feed)
+        # a level handing off to the exact levels keeps its raw labels:
+        # the task renumbers them and recomputes their modularity (level 0
+        # has no gain check to feed)
         handoff = n_next <= tail_max
         new_mod = None
         if level > 0 or not handoff:
@@ -433,7 +477,7 @@ def _levels(
             mapping = runner.advance(StepResult(_compose(mapping, assign), metric=new_mod))
         # level boundaries are natural checkpoints: cut lineage so the next
         # level replans against a flat, materialized graph
-        edges = stats_reset(
+        edges, n_edges = _level_graph(
             spark, _coarsen(edges, assign), os.path.join(ckpt_base, f"edges-l{level + 1}")
         )
         ids, n, mod, level = None, n_next, new_mod, level + 1
@@ -441,7 +485,10 @@ def _levels(
         nodes = ids.select("id", F.col("id").alias("rep"))
     else:
         nodes = mapping.groupBy(F.col("community").alias("id")).agg(F.min("id").alias("rep"))
-    return _tail(runner, edges, nodes, mapping, level, max_levels, resolution, seed, min_gain)
+    return _one_task(
+        spark, runner, edges, nodes, mapping, level, max_levels, resolution, seed,
+        min_gain, tail_max, popts,
+    )
 
 
 def louvain(
@@ -466,10 +513,15 @@ def louvain(
     mode='auto' is the executable form of the 100TB story: each dendrogram
     level runs parallel block sweeps while the level graph is larger than
     auto_exact_max vertices (parallel_opts key; default block_target ×
-    defaultParallelism), and every level from the first that fits runs in
-    one exact kernel task — coarse levels shrink geometrically, so the
-    tail of the dendrogram converges sequentially instead of burning
-    multi-block sweeps on tiny graphs.
+    defaultParallelism), and every level from the first that fits runs
+    exact — coarse levels shrink geometrically, so the tail of the
+    dendrogram converges sequentially instead of burning multi-block
+    sweeps on tiny graphs. At or below gate.LOUVAIN_ONE_TASK_MAX_EDGES
+    edges the parallel levels run in the same single task as the exact
+    ones, with the partition the distributed sweeps give.
+
+    parallel_opts keys: auto_exact_max, and the sweep plan's max_sweeps,
+    n_blocks, block_target and min_moved_frac (_louvain_kernel.sweep_plan).
     """
     popts = dict(parallel_opts or {})
     tail_max = _tail_max(spark, mode, popts)
@@ -488,7 +540,9 @@ def louvain(
         e = stats_reset(
             spark, _normalize(edges, weight_col), os.path.join(ckpt_base, "edges-l0")
         )
-        total_w = e.agg(F.coalesce(F.sum("w"), F.lit(0.0))).collect()[0][0]
+        total_w, n_edges = e.agg(
+            F.coalesce(F.sum("w"), F.lit(0.0)), F.count(F.lit(1))
+        ).first()
         if not total_w:
             from louvain_spark.plans.rank import dense_sorted_rank
 
@@ -497,16 +551,38 @@ def louvain(
             )
             return assign, 0.0
         # level 0 is always kept, as in python-louvain generate_dendrogram;
-        # exact mode needs no vertex count, it starts in the tail
-        n = 0 if tail_max == math.inf else ids.count()
+        # only a distributed level needs the vertex count
+        n = 0
+        if tail_max < math.inf and n_edges > gate.LOUVAIN_ONE_TASK_MAX_EDGES:
+            n = ids.count()
         return _levels(
-            spark, runner, ckpt_base, e, ids, None, None, 0, n, tail_max, popts,
-            max_levels, resolution, seed, min_gain, total_w=float(total_w),
+            spark, runner, ckpt_base, e, n_edges, ids, None, None, 0, n, tail_max,
+            popts, max_levels, resolution, seed, min_gain, total_w=float(total_w),
         )
     finally:
         ids.unpersist()
         if owned:
             shutil.rmtree(ckpt_base, ignore_errors=True)
+
+
+def _ledger_modularity(spark, runner, run_id, operator, step) -> float:
+    ledger = spark.read.parquet(runner.ledger_path)
+    row = (
+        ledger.where(
+            (F.col("run_id") == run_id)
+            & (F.col("operator") == operator)
+            & (F.col("superstep") == step)
+            & F.col("metric").isNotNull()
+        )
+        .select("metric")
+        .first()
+    )
+    if row is None:  # only a level that handed off to the exact levels has none
+        raise ValueError(
+            f"louvain run {run_id} handed level {step} to its exact levels; "
+            "resume it with the mode and parallel_opts it ran with"
+        )
+    return row[0]
 
 
 def resume_louvain(
@@ -521,13 +597,14 @@ def resume_louvain(
     parallel_opts: dict | None = None,
 ) -> tuple[DataFrame, float]:
     """Continue a Louvain run from its durable checkpoints (north_rule:
-    resumable mid-iteration). Each completed parallel level is a superstep
-    in the run ledger, and the tail one advance over the levels it kept,
-    so a run resumes after a parallel level or after the tail. The
-    original normalized edge table is at <dir>/edges-l0, so the next
-    level's graph is recomputed as coarsen(edges-l0, mapping) regardless
-    of where the run died. Idempotent on completed runs (re-checks the
-    last level and stops).
+    resumable mid-iteration). Each completed distributed level is a
+    superstep in the run ledger, and the one-task run one advance over the
+    levels it kept, so a run resumes after a distributed level or after
+    the task. The original normalized edge table is at <dir>/edges-l0, so
+    the next level's graph is recomputed as coarsen(edges-l0, mapping)
+    regardless of where the run died; it takes the same gate decision as
+    a fresh run would. Idempotent on completed runs (re-checks the last
+    level and stops).
     """
     popts = dict(parallel_opts or {})
     tail_max = _tail_max(spark, mode, popts)
@@ -538,32 +615,16 @@ def resume_louvain(
         raise NoCheckpointError(
             f"no louvain checkpoint for run_id={run_id} in {checkpoint_dir}"
         )
-    n = 0 if tail_max == math.inf else mapping.select("community").distinct().count()
-    mod = None
-    if n > tail_max:  # a parallel level's gain check reads the last modularity
-        ledger = spark.read.parquet(runner.ledger_path)
-        row = (
-            ledger.where(
-                (F.col("run_id") == run_id)
-                & (F.col("operator") == f"louvain-{mode}")
-                & (F.col("superstep") == step)
-                & F.col("metric").isNotNull()
-            )
-            .select("metric")
-            .first()
-        )
-        if row is None:  # only a level that handed off to the tail has none
-            raise ValueError(
-                f"louvain run {run_id} handed level {step} to the one-task tail; "
-                "resume it with the mode and parallel_opts it ran with"
-            )
-        mod = row[0]
     e0 = spark.read.parquet(os.path.join(checkpoint_dir, "edges-l0"))
-    cur_edges = stats_reset(
-        spark, _coarsen(e0, mapping),
-        os.path.join(checkpoint_dir, f"edges-l{step + 1}"),
+    cur_edges, n_edges = _level_graph(
+        spark, _coarsen(e0, mapping), os.path.join(checkpoint_dir, f"edges-l{step + 1}")
     )
+    n, mod = 0, None
+    if tail_max < math.inf and n_edges > gate.LOUVAIN_ONE_TASK_MAX_EDGES:
+        n = mapping.select("community").distinct().count()
+        if n > tail_max:  # a distributed level's gain check reads the last modularity
+            mod = _ledger_modularity(spark, runner, run_id, f"louvain-{mode}", step)
     return _levels(
-        spark, runner, checkpoint_dir, cur_edges, None, mapping, mod, step + 1, n,
-        tail_max, popts, max_levels, resolution, seed, min_gain,
+        spark, runner, checkpoint_dir, cur_edges, n_edges, None, mapping, mod, step + 1,
+        n, tail_max, popts, max_levels, resolution, seed, min_gain,
     )

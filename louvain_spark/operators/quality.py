@@ -25,31 +25,29 @@ def modularity(
     a_src = assignments.select(F.col("id").alias("src"), F.col("community").alias("c_src"))
     a_dst = assignments.select(F.col("id").alias("dst"), F.col("community").alias("c_dst"))
     tagged = e.join(a_src, "src").join(a_dst, "dst").persist()
-
-    m = tagged.agg(F.sum("w")).collect()[0][0]
-    if not m:
-        tagged.unpersist()
-        return 0.0
-
-    in_c = (
-        tagged.where(F.col("c_src") == F.col("c_dst"))
-        .groupBy(F.col("c_src").alias("community"))
-        .agg(F.sum("w").alias("in_w"))
-    )
-    # deg_c: every endpoint contributes w; self-loop endpoints both land in
-    # the same community → contributes 2w, matching networkx degree.
-    deg = (
-        tagged.select(F.col("c_src").alias("community"), "w")
-        .union(tagged.select(F.col("c_dst").alias("community"), "w"))
-        .groupBy("community")
-        .agg(F.sum("w").alias("deg_w"))
-    )
-    per_c = deg.join(in_c, "community", "left").select(
-        (
-            F.coalesce(F.col("in_w"), F.lit(0.0)) * F.lit(resolution) / F.lit(float(m))
-            - F.pow(F.col("deg_w") / F.lit(2.0 * float(m)), F.lit(2.0))
-        ).alias("q")
-    )
-    q = per_c.agg(F.sum("q")).collect()[0][0]
-    tagged.unpersist()
-    return float(q)
+    try:
+        m = tagged.agg(F.sum("w")).collect()[0][0]
+        if not m:
+            return 0.0
+        in_c = (
+            tagged.where(F.col("c_src") == F.col("c_dst"))
+            .groupBy(F.col("c_src").alias("community"))
+            .agg(F.sum("w").alias("in_w"))
+        )
+        # deg_c: every endpoint contributes w; self-loop endpoints both land
+        # in the same community → contributes 2w, matching networkx degree.
+        deg = (
+            tagged.select(F.col("c_src").alias("community"), "w")
+            .union(tagged.select(F.col("c_dst").alias("community"), "w"))
+            .groupBy("community")
+            .agg(F.sum("w").alias("deg_w"))
+        )
+        per_c = deg.join(in_c, "community", "left").select(
+            (
+                F.coalesce(F.col("in_w"), F.lit(0.0)) * F.lit(resolution) / F.lit(float(m))
+                - F.pow(F.col("deg_w") / F.lit(2.0 * float(m)), F.lit(2.0))
+            ).alias("q")
+        )
+        return float(per_c.agg(F.sum("q")).collect()[0][0])
+    finally:
+        tagged.unpersist()  # on an error too

@@ -1,4 +1,4 @@
-"""The size gates: broadcast vs shuffle joins, one block vs supersteps.
+"""The size gates: broadcast vs shuffle joins, one task vs supersteps.
 
 A dimension table (vertex dictionary, per-vertex state, community remap,
 offender-key set, vocabulary) joins a much larger fact side. Below
@@ -21,9 +21,32 @@ holds the Arrow batches, the packed pandas group and the kernel's arrays
 at once. Measured peak RSS of that worker per input edge (random graph of
 mean degree 10, 0.5M to 2M edges, numpy 1.26): LPA 380-390 bytes,
 PageRank 175-180, CC 100. At 1M edges the largest, LPA, peaks at 361 MiB,
-and its ten steps take 3.1 s on one core of a 4-core Xeon host. Tests and
-`tools/check_oracle.py --distributed` set ONE_BLOCK_MAX_EDGES = 0, which
-turns the one-block path off.
+and its ten steps take 3.1 s on one core of a 4-core Xeon host.
+
+Louvain asks LOUVAIN_ONE_TASK_MAX_EDGES of each level graph, with the
+edge count its total-weight aggregate or its level write already
+observes. At or below it every remaining level, parallel ones included,
+runs in one applyInPandas task (_louvain_kernel.dendrogram_csr), with
+the partition the distributed sweeps give. Its bound is compute, not
+memory: one task runs the block kernels on one core where the
+distributed sweeps use every core, but pays no per-stage latency. The
+value is below a measured break-even. Whole louvain(mode="auto") calls
+on synth co-occurrence graphs (seed 2, window 8), local[4] with 16
+partitions, 4-core Xeon host, two alternating runs per side:
+
+    edges    vertices   one task      distributed
+    10.4k    2.2k       4.8, 3.5 s    22.9, 17.8 s
+    42.1k    9.2k       11.5, 8.1 s   28.1, 24.1 s
+    89.9k    20.2k      17.5, 13.6 s  29.7, 26.0 s
+    157.4k   36.2k      27.2, 26.6 s  29.8, 27.2 s
+
+The distributed side stays near 25-30 s (stage latency) while one task
+grows ~0.17 ms per edge, so they meet near 165k edges on 4 cores; a
+wider host speeds up only the distributed side, so the gate sits at
+100k.
+
+Tests and `tools/check_oracle.py --distributed` set ONE_BLOCK_MAX_EDGES
+and LOUVAIN_ONE_TASK_MAX_EDGES to 0, which turns both one-task paths off.
 """
 
 from __future__ import annotations
@@ -33,6 +56,7 @@ from pyspark.sql import functions as F
 
 BROADCAST_MAX_ROWS = 4_000_000
 ONE_BLOCK_MAX_EDGES = 1_000_000
+LOUVAIN_ONE_TASK_MAX_EDGES = 100_000
 
 
 def broadcast_or_shuffle(df: DataFrame, rows: int) -> DataFrame:

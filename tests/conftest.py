@@ -9,6 +9,7 @@ from louvain_spark.plans import gate  # noqa: E402
 from louvain_spark.session import get_spark  # noqa: E402
 
 _ONE_BLOCK_DEFAULT = gate.ONE_BLOCK_MAX_EDGES
+_LOUVAIN_ONE_TASK_DEFAULT = gate.LOUVAIN_ONE_TASK_MAX_EDGES
 
 
 @pytest.fixture(scope="session")
@@ -35,12 +36,26 @@ def edges_df(spark, triples, weighted=True):
     return spark.createDataFrame(rows, "src long, dst long, weight double")
 
 
+def cached_rdds(spark) -> set[int]:
+    """Ids of the persisted RDDs, except localCheckpoint ones: Spark frees
+    those when they are garbage-collected, not on unpersist."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    return {
+        int(i) for i in rdds.keySet()
+        if not rdds[i].rdd().getCreationSite().startswith("localCheckpoint")
+    }
+
+
 def use_gate_side(monkeypatch, side: str) -> None:
-    """Run PageRank, LPA and CC on one side of gate.ONE_BLOCK_MAX_EDGES:
-    "one_block" keeps the default gate, "distributed" sets it to 0."""
+    """Run PageRank, LPA and CC on one side of gate.ONE_BLOCK_MAX_EDGES,
+    and Louvain's parallel levels on one side of
+    gate.LOUVAIN_ONE_TASK_MAX_EDGES: "one_block" keeps the default gates,
+    "distributed" sets both to 0."""
     assert side in ("one_block", "distributed"), side
+    one = side == "one_block"
+    monkeypatch.setattr(gate, "ONE_BLOCK_MAX_EDGES", _ONE_BLOCK_DEFAULT if one else 0)
     monkeypatch.setattr(
-        gate, "ONE_BLOCK_MAX_EDGES", _ONE_BLOCK_DEFAULT if side == "one_block" else 0
+        gate, "LOUVAIN_ONE_TASK_MAX_EDGES", _LOUVAIN_ONE_TASK_DEFAULT if one else 0
     )
 
 

@@ -1,22 +1,31 @@
 """PageRank, LPA and CC on adversarial graphs, on both sides of the
 one-block gate (plans/gate.ONE_BLOCK_MAX_EDGES); Louvain in each mode, on
-both sides of the broadcast gate (plans/gate.BROADCAST_MAX_ROWS).
+both sides of the broadcast gate (plans/gate.BROADCAST_MAX_ROWS) and, for
+its parallel levels, of plans/gate.LOUVAIN_ONE_TASK_MAX_EDGES.
+
+Triangles, modularity and cluster_summary run on the same graphs.
 
 Edges are passed as written, not canonicalized, so duplicate pairs keep
 both orientations. Oracles: test_pagerank.np_pagerank, the synchronous
-LPA dict oracle, networkx.connected_components and
-tests/oracle/louvain_ref.
+LPA dict oracle, networkx.connected_components and networkx.triangles,
+tests/oracle/louvain_ref (partitions and their modularity) and a pandas
+groupby for cluster_summary.
 """
 
 from functools import lru_cache
 
+import networkx as nx
 import numpy as np
+import pandas as pd
 import pytest
 
 from louvain_spark.operators.cc import connected_components
+from louvain_spark.operators.clusters import cluster_summary
 from louvain_spark.operators.louvain import louvain
 from louvain_spark.operators.lpa import label_propagation
 from louvain_spark.operators.pagerank import pagerank
+from louvain_spark.operators.quality import modularity
+from louvain_spark.operators.triangles import triangle_count, triangles_per_vertex
 from louvain_spark.plans import gate
 from tests import graphs
 from tests.conftest import on_both_sides
@@ -81,6 +90,11 @@ LOUVAIN_MODES = {
     "parallel": {"mode": "parallel"},
     "auto": {"mode": "auto", "parallel_opts": {"auto_exact_max": 0}},
 }
+# the parallel levels run in one task under the default gates, and as
+# distributed sweeps on the "-distributed" side
+LOUVAIN_SIDES = [pytest.param(m, "one_block", id=m) for m in LOUVAIN_MODES] + [
+    pytest.param(m, "distributed", id=f"{m}-distributed") for m in ("parallel", "auto")
+]
 
 
 @lru_cache(maxsize=None)
@@ -90,9 +104,9 @@ def _louvain_oracle(fixture):
 
 
 @pytest.mark.parametrize("join", ["broadcast", "shuffle"])
-@pytest.mark.parametrize("mode", list(LOUVAIN_MODES))
+@pytest.mark.parametrize("mode,gate_side", LOUVAIN_SIDES, indirect=["gate_side"])
 @pytest.mark.parametrize("fixture", GRAPHS)
-def test_louvain_adversarial(spark, monkeypatch, fixture, mode, join):
+def test_louvain_adversarial(spark, monkeypatch, fixture, mode, gate_side, join):
     if join == "shuffle":
         monkeypatch.setattr(gate, "BROADCAST_MAX_ROWS", 0)
     edges, n, e, verts = _graph(spark, fixture)
@@ -103,3 +117,45 @@ def test_louvain_adversarial(spark, monkeypatch, fixture, mode, join):
     if mode == "exact":
         assert canon(got) == _louvain_oracle(fixture)
     assert abs(mod - louvain_ref.partition_modularity(range(n), edges, got)) < 1e-9
+
+
+@pytest.mark.parametrize("fixture", GRAPHS)
+def test_triangles_adversarial(spark, fixture):
+    edges, n, e, verts = _graph(spark, fixture)
+    want = nx.triangles(graphs.to_nx(edges, n))
+    assert triangle_count(e) == sum(want.values()) // 3
+    got = triangles_per_vertex(e, verts).collect()
+    assert {r["id"]: r["triangles"] for r in got} == want
+
+
+def _partitions(fixture, n):
+    """The oracle's Louvain partition and a striped one."""
+    return [_louvain_oracle(fixture), {v: v % 3 for v in range(n)}]
+
+
+def _assign_df(spark, part):
+    return spark.createDataFrame(sorted(part.items()), "id long, community long")
+
+
+@pytest.mark.parametrize("fixture", GRAPHS)
+def test_modularity_adversarial(spark, fixture):
+    edges, n, e, _ = _graph(spark, fixture)
+    for part in _partitions(fixture, n):
+        got = modularity(e, _assign_df(spark, part))
+        assert abs(got - louvain_ref.partition_modularity(range(n), edges, part)) < 1e-12
+
+
+@pytest.mark.parametrize("fixture", GRAPHS)
+def test_cluster_summary_adversarial(spark, fixture):
+    n = getattr(graphs, fixture)()[1]
+    names = {v: f"v{(7 * v) % max(n, 1):05d}" for v in range(n)}  # not in id order
+    named = spark.createDataFrame(sorted(names.items()), "id long, name string")
+    for part in _partitions(fixture, n):
+        got = cluster_summary(_assign_df(spark, part), named).collect()
+        pdf = pd.DataFrame({"community": list(part.values()), "name": [names[v] for v in part]})
+        want = {
+            (c, len(g), g.min(), "|".join(sorted(g)))
+            for c, g in pdf.groupby("community")["name"]
+            if len(g) >= 2
+        }
+        assert {tuple(r) for r in got} == want

@@ -8,7 +8,8 @@ shuffle side.
 At or below ONE_BLOCK_MAX_EDGES, PageRank, LPA and CC run as one kernel
 task that makes one runner advance; ONE_BLOCK_MAX_EDGES = 0 turns it off.
 Louvain's dendrogram tail makes one advance the same way, in exact mode
-and in auto mode at or below auto_exact_max vertices.
+and in auto mode at or below auto_exact_max vertices, and so do its
+parallel levels at or below LOUVAIN_ONE_TASK_MAX_EDGES edges.
 """
 
 import pytest
@@ -44,6 +45,7 @@ def test_lpa_above_gate_matches_default(spark, monkeypatch):
 
 
 def test_louvain_parallel_above_gate_matches_default(spark, monkeypatch):
+    use_gate_side(monkeypatch, "distributed")  # the sweep's joins run there
     edges, n = graphs.g_ring_of_cliques(k=8, c=5)
     e, verts = _graph(spark, edges, n)
 
@@ -116,3 +118,26 @@ def test_louvain_tail_is_one_advance(spark, tmp_path, mode):
     louvain(spark, e, vertices=verts, mode=mode, runner=runner)
     ledger = spark.read.parquet(runner.ledger_path).select("superstep").distinct().collect()
     assert [r["superstep"] for r in ledger] == [runner.superstep]
+
+
+@pytest.mark.parametrize("side", ["one_block", "distributed"])
+def test_louvain_parallel_levels_below_gate_are_one_advance(spark, monkeypatch, tmp_path, side):
+    """At or below LOUVAIN_ONE_TASK_MAX_EDGES the parallel levels run in
+    the one task too: one advance, no per-sweep state on disk. With the
+    gate at 0 each level is a distributed superstep with sweep states."""
+    use_gate_side(monkeypatch, side)
+    edges, n = graphs.g_ring_of_cliques(k=8, c=5)
+    e, verts = _graph(spark, edges, n)
+    d = tmp_path / "ck"
+    runner = SuperstepRunner(spark, "par", "louvain-parallel", checkpoint_dir=str(d))
+    louvain(
+        spark, e, vertices=verts, mode="parallel", runner=runner,
+        parallel_opts={"n_blocks": 4, "block_target": 1},
+    )
+    ledger = spark.read.parquet(runner.ledger_path).select("superstep").distinct().collect()
+    sweeps = list(d.glob("assign-l*-s*"))
+    if side == "one_block":
+        assert [r["superstep"] for r in ledger] == [runner.superstep] and not sweeps
+    else:
+        assert sweeps and len(ledger) == runner.superstep + 1
+

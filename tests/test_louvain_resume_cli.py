@@ -42,17 +42,24 @@ RESUME_MODES = {
     "auto": {"auto_exact_max": 20, "n_blocks": 2},
     "parallel": {"n_blocks": 2},
 }
+# the parallel levels run in one task under the default gates, and as
+# distributed sweeps on the "-distributed" side
+RESUME_SIDES = [pytest.param(m, "one_block", id=m) for m in RESUME_MODES] + [
+    pytest.param(m, "distributed", id=f"{m}-distributed") for m in ("auto", "parallel")
+]
 RESUME_GRAPHS = {
     "ring_of_cliques": graphs.g_ring_of_cliques,
     "random": lambda: graphs.g_random(200, 0.03, seed=5, weighted=True),
 }
+# uninterrupted results per (mode, graph), whichever gate side ran first:
+# both sides must give the same partition
 _uninterrupted: dict = {}
 
 
 @pytest.mark.parametrize("stop", [1, 2])
 @pytest.mark.parametrize("graph", list(RESUME_GRAPHS))
-@pytest.mark.parametrize("mode", list(RESUME_MODES))
-def test_louvain_resume_from_each_level(spark, tmp_path, mode, graph, stop):
+@pytest.mark.parametrize("mode,gate_side", RESUME_SIDES, indirect=["gate_side"])
+def test_louvain_resume_from_each_level(spark, tmp_path, mode, gate_side, graph, stop):
     """A run cut at max_levels=stop and resumed equals the uninterrupted
     run, in every mode."""
     edges, n = RESUME_GRAPHS[graph]()

@@ -4,7 +4,7 @@ import pytest
 
 from louvain_spark.operators.quality import modularity
 from tests import graphs
-from tests.conftest import edges_df
+from tests.conftest import cached_rdds, edges_df
 
 
 def py_modularity(edges, partition, resolution=1.0, weighted=True):
@@ -60,3 +60,14 @@ def test_modularity_random_vs_networkx(spark):
     got = modularity(edges_df(spark, edges), _assign_df(spark, part))
     want = nx.community.modularity(g, comms, weight="weight")
     assert abs(got - want) < 1e-9
+
+
+def test_failed_modularity_leaves_nothing_cached(spark):
+    """A resolution that is not a number fails the last aggregate (ANSI
+    cast), after the first one has cached the tagged edges; they must
+    not stay cached."""
+    edges, n = graphs.g_two_cliques()
+    before = cached_rdds(spark)
+    with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
+        modularity(edges_df(spark, edges), _assign_df(spark, {i: i // 5 for i in range(n)}), "x")
+    assert cached_rdds(spark) <= before

@@ -3,9 +3,11 @@ Spark and their DuckDB oracles side-by-side at sf0.01, compare row count,
 schema (column names), and an order-insensitive value hash.
 
 Usage: python tools/check_oracle.py [--distributed] [query ...]
-(default: all oracled). --distributed sets gate.ONE_BLOCK_MAX_EDGES = 0
-before any query runs, so PageRank, LPA and CC take their distributed
-superstep path instead of the one-block kernel.
+(default: all oracled). --distributed sets gate.ONE_BLOCK_MAX_EDGES and
+gate.LOUVAIN_ONE_TASK_MAX_EDGES to 0 before any query runs, so PageRank,
+LPA and CC take their distributed superstep path instead of the one-block
+kernel, and Louvain's parallel levels run as distributed sweeps instead
+of in one task.
 """
 
 from __future__ import annotations
@@ -76,11 +78,12 @@ def main() -> None:
     ap.add_argument("queries", nargs="*", help="query names (default: all oracled)")
     ap.add_argument(
         "--distributed", action="store_true",
-        help="run PageRank, LPA and CC on their distributed path",
+        help="run PageRank, LPA, CC and Louvain's parallel levels distributed",
     )
     args = ap.parse_args()
     if args.distributed:
         gate.ONE_BLOCK_MAX_EDGES = 0
+        gate.LOUVAIN_ONE_TASK_MAX_EDGES = 0
     want = args.queries
     qs = entry.queries()
     oracles = entry.oracle_sql()
