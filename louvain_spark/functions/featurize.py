@@ -58,9 +58,18 @@ def featurize_batch(texts: pd.Series, dim: int = 64, ngram: int = 3) -> pd.Serie
     Bit-identical to the scalar per-gram definition (_fnv1a_bytes), which
     the tests pin.
     """
+    if len(texts) == 0:
+        return pd.Series([], dtype=object)
+    return pd.Series(list(featurize_matrix(texts, dim, ngram)))
+
+
+def featurize_matrix(texts, dim: int = 64, ngram: int = 3) -> np.ndarray:
+    """featurize_batch's vectors as one (n, dim) float32 matrix. The
+    padded byte matrix is n × the longest text, so callers with many rows
+    pass them in chunks."""
     n = len(texts)
     if n == 0:
-        return pd.Series([], dtype=object)
+        return np.zeros((0, dim), dtype=np.float32)
     vals = list(texts)
     isnull = np.fromiter((t is None for t in vals), dtype=bool, count=n)
     enc = [b"" if t is None else str(t).encode("utf-8") for t in vals]
@@ -100,7 +109,7 @@ def featurize_batch(texts: pd.Series, dim: int = 64, ngram: int = 3) -> pd.Serie
     norms = np.linalg.norm(acc, axis=1, keepdims=True)
     mat = np.where(norms > 0, acc / np.maximum(norms, 1e-300), acc).astype(np.float32)
     mat[isnull] = 0.0
-    return pd.Series(list(mat))
+    return mat
 
 
 def featurize_udf(dim: int = 64, ngram: int = 3):

@@ -214,10 +214,9 @@ def _one_level_parallel(
         # invariant, and folding it into the checkpointed state removes one
         # |V|-dimension join (+ its broadcast build stage) from EVERY sweep's
         # plan — per-sweep wall is dominated by the count of sequential query
-        # stages, not data volume (r7 probe: 137 jobs ≈ 0.2s each)
-        assign = k.select(
-            "id", F.col("id").alias("community"), "k"
-        ).localCheckpoint(eager=True)
+        # stages, not data volume (r7 probe: 137 jobs ≈ 0.2s each). Sweep
+        # 0 reads the singleton state straight from the cached k.
+        assign = k.select("id", F.col("id").alias("community"), "k")
         res, mm, lvl, sd = float(resolution), float(m), int(level), int(seed)
 
         def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -301,7 +300,6 @@ def _one_level_parallel(
             # under a BroadcastExchange fails its exactly-once assertion — the
             # root select executes exactly once, in the write job
             obs = Observation()
-            prev_assign = assign
             # moved_df merges via a shuffle-hash join, NOT broadcast: a
             # broadcast of the kernel's output would run the whole
             # tagged-join + kernel pipeline as a separate broadcast-build
@@ -309,7 +307,7 @@ def _one_level_parallel(
             # kernel and write inside ONE action (and is the right shape
             # above the broadcast gate anyway — both sides key on id).
             merged = (
-                prev_assign.join(moved_df.hint("shuffle_hash"), "id", "left")
+                assign.join(moved_df.hint("shuffle_hash"), "id", "left")
                 .select(
                     "id",
                     F.coalesce("new_com", "community").alias("community"),
@@ -325,9 +323,6 @@ def _one_level_parallel(
                 spark, merged, os.path.join(ckpt_dir, f"assign-l{level}-s{sweep}")
             )
             moved = int(obs.get["n"])
-            # frees sweep 0's initial eager localCheckpoint blocks (|V|-sized);
-            # later sweeps' prev_assign is parquet-backed — a no-op there
-            prev_assign.unpersist()
             if moved < min_moved:
                 # the sub-threshold sweep's few moves are already applied (the
                 # merge rides the same action) — keep them, stop sweeping
@@ -449,16 +444,17 @@ def _levels(
     while n_edges > gate.LOUVAIN_ONE_TASK_MAX_EDGES and n > tail_max:
         if level >= max(1, max_levels):
             return mapping, float(mod)
-        if ids is None:
-            ids = (
-                mapping.select(F.col("community").alias("id"))
-                .distinct()
-                .localCheckpoint(eager=True)
+        own_ids = ids is None
+        if own_ids:
+            ids = mapping.select(F.col("community").alias("id")).distinct().persist()
+        try:
+            assign = _one_level_parallel(
+                spark, edges, ids, resolution, seed, level, ckpt_base, n,
+                total_w=total_w, **popts,
             )
-        assign = _one_level_parallel(
-            spark, edges, ids, resolution, seed, level, ckpt_base, n,
-            total_w=total_w, **popts,
-        )
+        finally:
+            if own_ids:
+                ids.unpersist()
         n_next = assign.select("community").distinct().count()
         # a level handing off to the exact levels keeps its raw labels:
         # the task renumbers them and recomputes their modularity (level 0

@@ -100,7 +100,12 @@ def _topk_core(
 
     Per-row selection is bit-identical to the unblocked formulation
     (same per-row argpartition head on the same negated values, same
-    (item_id, -sim) lexsort keys) — the ANN goldens pin this."""
+    (item_id, -sim) lexsort keys) — the ANN goldens pin this.
+
+    Ties at the k-th place are not broken by item id: argpartition picks
+    an arbitrary subset of the items tied at the boundary before the
+    lexsort orders it (items 40, 30, 20 tied at 1.0 give 40 for k=1,
+    where cosine_topk_brute's window gives 20)."""
     nq, ni = qv.shape[0], mat.shape[0]
     n_take = min(kk, ni)
     if block_rows is None:

@@ -1,4 +1,5 @@
-"""The size gates: broadcast vs shuffle joins, one task vs supersteps.
+"""The size gates: broadcast vs shuffle joins, one task vs supersteps,
+crossJoin vs blocked top-1 match.
 
 A dimension table (vertex dictionary, per-vertex state, community remap,
 offender-key set, vocabulary) joins a much larger fact side. Below
@@ -45,8 +46,24 @@ grows ~0.17 ms per edge, so they meet near 165k edges on 4 cores; a
 wider host speeds up only the distributed side, so the gate sits at
 100k.
 
+The daily→all-time migration (streaming/incremental.migrate) matches
+daily cluster centroids against all-time ones. BLOCKED_MATCH_ABOVE bounds
+the candidate pairs, n_day × n_alltime, of its crossJoin brute match;
+above it the match runs as the cogrouped block nested-loop. The migration
+also runs in one applyInPandas task when both sides' member rows fit it,
+counted as n_day and n_alltime: n_day × n_alltime at or below
+BLOCKED_MATCH_ABOVE, which also bounds the task's centroid score work
+(communities ≤ members), and n_day + n_alltime at or below
+ONE_BLOCK_MAX_EDGES, which bounds its memory as it does the block
+kernels'. Measured peak RSS of that worker
+(member texts of ~25 bytes, 250k to 1M rows, a quarter of them daily,
+numpy 1.26): ~300 bytes per member row above the idle worker's ~123 MiB;
+1M rows peak at 439 MiB and take 13 s in the kernel on one core of the
+4-core Xeon host, at 25M centroid pairs.
+
 Tests and `tools/check_oracle.py --distributed` set ONE_BLOCK_MAX_EDGES
-and LOUVAIN_ONE_TASK_MAX_EDGES to 0, which turns both one-task paths off.
+and LOUVAIN_ONE_TASK_MAX_EDGES to 0, which turns every one-task path off,
+the migration's included.
 """
 
 from __future__ import annotations
@@ -57,6 +74,7 @@ from pyspark.sql import functions as F
 BROADCAST_MAX_ROWS = 4_000_000
 ONE_BLOCK_MAX_EDGES = 1_000_000
 LOUVAIN_ONE_TASK_MAX_EDGES = 100_000
+BLOCKED_MATCH_ABOVE = 25_000_000
 
 
 def broadcast_or_shuffle(df: DataFrame, rows: int) -> DataFrame:

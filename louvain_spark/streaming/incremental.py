@@ -8,68 +8,54 @@ orphan vertices at ≥ 0.95 (:602-692). No Structured Streaming in the
 reference — this is snapshot-to-snapshot incremental batch (SURVEY.md
 §2.9): joins + anti-joins + union + overwrite, resumable like any other
 engine stage.
+
+When both sides' member rows fit one Python worker (gate.ONE_BLOCK_MAX_EDGES
+rows together, gate.BLOCKED_MATCH_ABOVE daily × all-time rows), migrate
+computes the centroids, the top-1 match and the fresh ids in one
+applyInPandas task (remap_kernel) with the distributed path's arithmetic;
+above either bound the centroids are Spark aggregates and the match is
+the crossJoin brute or, above BLOCKED_MATCH_ABOVE candidate pairs, the
+blocked nested-loop. Both give the same (daily → all-time community)
+remap, which Spark applies with a relabel join, an anti-join and a union.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from louvain_spark.functions.featurize import featurize
+from louvain_spark.functions.featurize import featurize, featurize_matrix
 from louvain_spark.functions.scalars import l2_normalize
 from louvain_spark.operators.similarity import cosine_topk_brute
+from louvain_spark.plans import gate
 from louvain_spark.plans.rank import dense_sorted_rank
 
 CLUSTER_MATCH_THRESHOLD = 0.8   # eventMove.py:459-463
 ORPHAN_MATCH_THRESHOLD = 0.95   # eventMove.py:602-692
 
-# above this many candidate PAIRS (|Q|·|I| — crossJoin cost is the
-# product, not either side alone), top-1 matching routes through the
-# cogrouped block nested-loop (cosine_topk_blocked) instead of the
-# crossJoin brute — fine for thousands of centroids per side, a
-# scale-killer at millions (VERDICT r2 #9)
-BLOCKED_MATCH_ABOVE = 25_000_000
 
-
-def _topk_auto(
-    queries: DataFrame,
-    items: DataFrame,
-    k: int,
-    min_sim: float,
-    blocked_above: int = BLOCKED_MATCH_ABOVE,
-    sizes: tuple[int, int] | None = None,
-) -> DataFrame:
-    """Exact top-k: crossJoin brute below `blocked_above` pairs, blocked
-    nested-loop above it. Both forms enumerate every pair, so results are
-    identical up to float summation order (brute folds the dot product
-    sequentially in Catalyst, blocked uses numpy matmul) — near-tie
-    similarities can rank differently across the gate.
+def _topk_auto(queries: DataFrame, items: DataFrame, k: int, min_sim: float) -> DataFrame:
+    """Exact top-k: crossJoin brute up to gate.BLOCKED_MATCH_ABOVE
+    candidate pairs (|Q|·|I|), blocked nested-loop above it. Both forms
+    enumerate every pair, so results are identical up to float summation
+    order (brute folds the dot product sequentially in Catalyst, blocked
+    uses numpy matmul) — near-tie similarities can rank differently
+    across the gate.
 
     Inputs are snapshotted (eager localCheckpoint) BEFORE sizing: the
     centroid/featurize lineages behind them are the dominant cost of a
     migration call, and counting then re-executing them for the match
     would pay that cost twice per micro-batch. Row counts ride the
     snapshot action itself via Observation (one job per side, no separate
-    count() jobs); callers that already know the sizes pass `sizes` and
-    the match is the only job."""
-    from pyspark.sql import Observation
-
+    count() jobs)."""
     from louvain_spark.operators.similarity import cosine_topk_blocked
 
-    if sizes is None:
-        obs_q, obs_i = Observation(), Observation()
-        q = queries.observe(obs_q, F.count(F.lit(1)).alias("n")).localCheckpoint(
-            eager=True
-        )
-        i = items.observe(obs_i, F.count(F.lit(1)).alias("n")).localCheckpoint(
-            eager=True
-        )
-        n_q, n_i = obs_q.get["n"], obs_i.get["n"]
-    else:
-        q = queries.localCheckpoint(eager=True)
-        i = items.localCheckpoint(eager=True)
-        n_q, n_i = sizes
-    if n_q * n_i <= blocked_above:
+    obs_q, obs_i = Observation(), Observation()
+    q = queries.observe(obs_q, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
+    i = items.observe(obs_i, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
+    if obs_q.get["n"] * obs_i.get["n"] <= gate.BLOCKED_MATCH_ABOVE:
         return cosine_topk_brute(q, i, k=k, min_sim=min_sim, exclude_self=False)
     return cosine_topk_blocked(
         q.sparkSession, q, i, k=k, min_sim=min_sim, exclude_self=False,
@@ -139,7 +125,7 @@ def match_clusters(
     each daily cluster matched to at most one all-time cluster (greedy by
     similarity, ties → lower all-time id), mirroring the theta cross join
     + sort of eventMove.py:438-475. Routes through the blocked nested-loop
-    above BLOCKED_MATCH_ABOVE centroids on either side."""
+    above gate.BLOCKED_MATCH_ABOVE candidate pairs."""
     top = _topk_auto(
         daily_centroids.select(F.col("community").alias("id"), F.col("centroid").alias("vec")),
         alltime_centroids.select(F.col("community").alias("id"), F.col("centroid").alias("vec")),
@@ -173,7 +159,32 @@ def migrate(
       assignment (the reference never reassigns existing nodes);
     - orphan handling (singletons at ≥ orphan_threshold) is the same
       match at a stricter threshold, applied to unmatched singletons.
+
+    The (daily → all-time community) remap comes from one task when both
+    sides fit (_remap_one_task), else from the distributed centroid
+    aggregates and match (_remap_distributed); both give the same remap.
     """
+    args = (daily_assign, daily_attrs, alltime_assign, alltime_attrs, text_col, dim,
+            threshold, orphan_threshold)
+    remap = _remap_one_task(*args)
+    if remap is None:
+        remap = _remap_distributed(*args)
+    relabeled = (
+        daily_assign.withColumnRenamed("community", "daily_community")
+        .join(remap, "daily_community")
+        .select("id", F.col("alltime_community").alias("community"))
+    )
+    # existing all-time vertices keep their assignment
+    new_only = relabeled.join(alltime_assign.select("id"), "id", "left_anti")
+    return alltime_assign.select("id", "community").unionByName(new_only)
+
+
+def _remap_distributed(
+    daily_assign, daily_attrs, alltime_assign, alltime_attrs, text_col, dim, threshold,
+    orphan_threshold,
+) -> DataFrame:
+    """(daily_community, alltime_community): centroid aggregates, the
+    top-1 match and the fresh-id rank as Spark jobs."""
     d_cent = cluster_centroids(daily_assign, daily_attrs, text_col, dim).persist()
     a_cent = cluster_centroids(alltime_assign, alltime_attrs, text_col, dim).persist()
 
@@ -202,18 +213,138 @@ def migrate(
         (F.col("_rk") + 1 + max_alltime).cast("long").alias("alltime_community"),
     )
     remap = matches.unionByName(fresh)
-
-    relabeled = (
-        daily_assign.withColumnRenamed("community", "daily_community")
-        .join(remap, "daily_community")
-        .select("id", F.col("alltime_community").alias("community"))
-    )
-    # existing all-time vertices keep their assignment
-    new_only = relabeled.join(alltime_assign.select("id"), "id", "left_anti")
-    merged = alltime_assign.select("id", "community").unionByName(new_only)
     d_cent.unpersist()
     a_cent.unpersist()
-    return merged
+    return remap
+
+
+def _members(assign: DataFrame, attrs: DataFrame, text_col: str, side: int) -> DataFrame:
+    """(_side, id, community, _text, _has) per member: a left join, so a
+    member without an attrs row still counts toward its community's size,
+    the all-time max and the unmatched set."""
+    a = attrs.select("id", F.col(text_col).alias("_text"), F.lit(True).alias("_has"))
+    return assign.join(a, "id", "left").select(
+        F.lit(side).alias("_side"),
+        F.col("id").cast("long").alias("id"),
+        F.col("community").cast("long").alias("community"),
+        F.coalesce("_text", F.lit("")).alias("_text"),
+        F.coalesce("_has", F.lit(False)).alias("_has"),
+    )
+
+
+def _remap_one_task(
+    daily_assign, daily_attrs, alltime_assign, alltime_attrs, text_col, dim, threshold,
+    orphan_threshold,
+) -> DataFrame | None:
+    """(daily_community, alltime_community) from one applyInPandas task
+    (remap_kernel), or None when the member rows do not fit it.
+
+    Both sides' member rows are cached; their counts ride the action that
+    fills the cache. They fit when n_day·n_alltime ≤
+    gate.BLOCKED_MATCH_ABOVE (the kernel scores every centroid pair, and
+    communities ≤ members) and n_day + n_alltime ≤
+    gate.ONE_BLOCK_MAX_EDGES (the worker holds every member row)."""
+    if gate.ONE_BLOCK_MAX_EDGES <= 0:
+        return None
+    members = (
+        _members(daily_assign, daily_attrs, text_col, 0)
+        .unionByName(_members(alltime_assign, alltime_attrs, text_col, 1))
+        .persist()
+    )
+    try:
+        obs = Observation()
+        day = F.col("_side") == 0
+        members.observe(
+            obs, F.count(F.when(day, 1)).alias("d"), F.count(F.when(~day, 1)).alias("a")
+        ).write.format("noop").mode("overwrite").save()
+        n_d, n_a = obs.get["d"], obs.get["a"]
+        if n_d * n_a > gate.BLOCKED_MATCH_ABOVE or n_d + n_a > gate.ONE_BLOCK_MAX_EDGES:
+            return None
+
+        def run(pdf: pd.DataFrame) -> pd.DataFrame:
+            return remap_kernel(pdf, dim, threshold, orphan_threshold)
+
+        return (
+            members.withColumn("_g", F.lit(0))
+            .groupBy("_g")
+            .applyInPandas(run, "daily_community long, alltime_community long")
+            .localCheckpoint(eager=True)
+        )
+    finally:
+        members.unpersist()
+
+
+def remap_kernel(
+    pdf: pd.DataFrame, dim: int, threshold: float, orphan_threshold: float
+) -> pd.DataFrame:
+    """_remap_distributed's remap from the member rows (_members) of both
+    sides, with its arithmetic: float64 sums of the float32 member
+    vectors, the mean cast to float32, l2_normalize's norm (float32
+    squares folded in float64), and each score a float64 left fold over
+    the dims, as dot_col does. The top-1 all-time centroid of a daily one
+    is the highest score, ties to the lower all-time id."""
+    day = pdf[pdf["_side"].to_numpy() == 0]
+    allt = pdf[pdf["_side"].to_numpy() == 1]
+    d_com, d_vec = _unit_centroids(day, dim)
+    a_com, a_vec = _unit_centroids(allt, dim)
+    best, sim = _top1(d_vec, a_vec)
+    # an attrs table that repeats an id repeats its member rows
+    pairs = day[["community", "id"]].drop_duplicates()
+    all_d, sizes = np.unique(pairs["community"].to_numpy(), return_counts=True)
+    sz = sizes[np.searchsorted(all_d, d_com)]
+    ok = (sim >= threshold) & (sz >= 2) | (sim >= orphan_threshold)
+    matched = d_com[ok]
+    unmatched = np.setdiff1d(all_d, matched)
+    top = int(allt["community"].max()) if len(allt) else -1
+    return pd.DataFrame({
+        "daily_community": np.concatenate([matched, unmatched]),
+        "alltime_community": np.concatenate(
+            [a_com[best[ok]], np.arange(len(unmatched)) + 1 + top]
+        ),
+    }).astype("int64")
+
+
+def _unit_centroids(rows: pd.DataFrame, dim: int) -> tuple[np.ndarray, np.ndarray]:
+    """(sorted communities, float32 unit centroids) over the members with
+    an attrs row, as cluster_centroids computes them. Texts are featurized
+    in chunks of 10k rows, which bounds the padded byte matrix."""
+    rows = rows[rows["_has"].to_numpy()]
+    com, inv = np.unique(rows["community"].to_numpy(), return_inverse=True)
+    order = np.argsort(inv, kind="stable")
+    inv, texts = inv[order], rows["_text"].to_numpy()[order]
+    sums = np.zeros((len(com), dim))
+    for a in range(0, len(inv), 10_000):
+        c = inv[a : a + 10_000]
+        starts = np.flatnonzero(np.r_[True, c[1:] != c[:-1]])
+        vec = featurize_matrix(texts[a : a + 10_000], dim).astype(np.float64)
+        sums[c[starts]] += np.add.reduceat(vec, starts, axis=0)
+    mean = (sums / np.bincount(inv, minlength=len(com))[:, None]).astype(np.float32)
+    sq = mean * mean
+    norm2 = np.zeros(len(com))
+    for j in range(dim):
+        norm2 += sq[:, j]
+    norm = np.sqrt(norm2)[:, None]
+    return com, np.where(norm > 0, (mean / norm).astype(np.float32), mean)
+
+
+def _top1(q: np.ndarray, items: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Per row of q, the index of its highest-scoring item row (the first,
+    so the lowest item, on a tie) and that score; −inf without items.
+    Rows go in blocks of ~16 MB of scores."""
+    best = np.zeros(len(q), dtype=np.int64)
+    sim = np.full(len(q), -np.inf)
+    if not len(q) or not len(items):
+        return best, sim
+    qd, it = q.astype(np.float64), items.astype(np.float64).T.copy()
+    step = max(1, (16 << 20) // (8 * it.shape[1]))
+    for a in range(0, len(q), step):
+        acc = np.zeros((len(qd[a : a + step]), it.shape[1]))
+        tmp = np.empty_like(acc)
+        for j in range(it.shape[0]):
+            acc += np.multiply(qd[a : a + step, j, None], it[j], out=tmp)
+        best[a : a + step] = acc.argmax(axis=1)
+        sim[a : a + step] = acc[np.arange(len(acc)), best[a : a + step]]
+    return best, sim
 
 
 def match_orphan_vertices(

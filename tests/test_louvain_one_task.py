@@ -77,6 +77,27 @@ def test_failed_sweep_leaves_nothing_cached(spark, monkeypatch):
     assert cached_rdds(spark) <= before
 
 
+def test_parallel_level_leaves_three_local_checkpoints(spark, monkeypatch):
+    """One distributed level and sweep: the sweep-0 state is read from the
+    cached degree table, so the only localCheckpoints left (freed when
+    garbage-collected, not on unpersist) are the renumbering rank's two
+    and the runner's result; nothing stays cached."""
+    use_gate_side(monkeypatch, "distributed")
+    e = edges_df(spark, graphs.g_ring_of_cliques(k=8, c=5)[0])
+
+    def local_checkpoints() -> set[int]:
+        rdds = spark.sparkContext._jsc.getPersistentRDDs()
+        return {
+            int(i) for i in rdds.keySet()
+            if rdds[i].rdd().getCreationSite().startswith("localCheckpoint")
+        }
+
+    lc, cached = local_checkpoints(), cached_rdds(spark)
+    louvain(spark, e, mode="parallel", max_levels=1, parallel_opts={"max_sweeps": 1})
+    assert len(local_checkpoints() - lc) <= 3
+    assert cached_rdds(spark) <= cached
+
+
 def test_unknown_parallel_opt_is_rejected(spark):
     e = edges_df(spark, graphs.g_two_cliques()[0])
     with pytest.raises(ValueError, match="nblocks"):

@@ -1,11 +1,14 @@
 """Incremental merge (daily→all-time) + streaming ingestion equivalence."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from louvain_spark.operators.induce import cooccurrence_edges
+from louvain_spark.plans import gate
 from louvain_spark.streaming.incremental import cluster_centroids, migrate
 from louvain_spark.streaming.ingest import compact_increments, stream_edge_increments
 from louvain_spark.synth import transcripts_df
+from tests.conftest import on_both_sides, use_gate_side
 
 
 def test_migrate_matches_and_relabels(spark):
@@ -179,7 +182,7 @@ def test_stream_windowed_rates_watermark(spark, tmp_path):
     assert len(got) > 5
 
 
-def test_match_routing_above_gate_no_crossjoin(spark):
+def test_match_routing_above_gate_no_crossjoin(spark, monkeypatch):
     """VERDICT r2 #9: above BLOCKED_MATCH_ABOVE the matcher must use the
     cogrouped block nested-loop — no CartesianProduct/BroadcastNestedLoop
     in the plan — and return the identical top-1 result."""
@@ -198,7 +201,8 @@ def test_match_routing_above_gate_no_crossjoin(spark):
 
     unit = vecs.select("id", l2_normalize("vec").alias("vec"))
     q = unit.where(F.col("id") < 40)
-    blocked = _topk_auto(q, unit, k=1, min_sim=0.0, blocked_above=0)
+    monkeypatch.setattr(gate, "BLOCKED_MATCH_ABOVE", 0)
+    blocked = _topk_auto(q, unit, k=1, min_sim=0.0)
     plan = blocked._sc._jvm.PythonSQLUtils.explainString(
         blocked._jdf.queryExecution(), "formatted"
     )
@@ -365,3 +369,104 @@ def test_stream_dedup_docs_first_arrival_only(spark, tmp_path):
         for r in stored.where("text like '%quick%'").collect()
     }
     assert fox_ids <= {1, 2} and len(fox_ids) == 1
+
+
+@pytest.mark.parametrize(
+    "case,gate_side",
+    [
+        pytest.param(t, "distributed", id=f"{t.__name__.removeprefix('test_migrate_')}-distributed")
+        for t in (
+            test_migrate_matches_and_relabels,
+            test_migrate_existing_vertices_keep_assignment,
+            test_migrate_subgraph_edges_and_orphans,
+        )
+    ],
+    indirect=["gate_side"],
+)
+def test_migrate_distributed(spark, case, gate_side):
+    """The migrate tests above run the one-task remap (the default gate);
+    here they run the distributed centroid aggregates and match."""
+    case(spark)
+
+
+# all-time member text, and daily texts scoring 0.9565 and 0.9407 against it
+BASE = "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo lima mike"
+ABOVE = BASE.removeprefix("alpha ")
+BELOW = BASE.replace("bravo", "x")
+
+# case: (daily assign, daily attrs, all-time assign, all-time attrs, merged)
+MIGRATE_CASES = {
+    "empty_daily": ([], [], [(1, 3), (2, 3)], [(1, BASE)], {1: 3, 2: 3}),
+    # fresh ids rank the daily communities from 0
+    "empty_alltime": (
+        [(10, 7), (11, 7), (12, 2)], [(10, BASE), (11, BASE), (12, "x")], [], [],
+        {10: 1, 11: 1, 12: 0},
+    ),
+    # member 11 has no attrs row but makes community 0 a pair, which
+    # matches at 0.94; community 5 has no centroid and gets a fresh id
+    "community_without_attrs": (
+        [(10, 0), (11, 0), (12, 5), (13, 5)], [(10, BELOW)], [(1, 3)], [(1, BASE)],
+        {1: 3, 10: 3, 11: 3, 12: 4, 13: 4},
+    ),
+    # a null text featurizes as the empty string
+    "null_and_empty_text": (
+        [(10, 0), (11, 0)], [(10, None), (11, "")], [(1, 3), (2, 3), (5, 8)],
+        [(1, ""), (2, None), (5, BASE)], {1: 3, 2: 3, 5: 8, 10: 3, 11: 3},
+    ),
+    "tie_goes_to_lower_alltime_id": (
+        [(10, 0), (11, 0)], [(10, BASE), (11, BASE)], [(1, 9), (2, 4)],
+        [(1, BASE), (2, BASE)], {1: 9, 2: 4, 10: 4, 11: 4},
+    ),
+    # singletons match only at ≥ 0.95; a pair at 0.94 matches at ≥ 0.8
+    "singleton_orphan_threshold": (
+        [(10, 0), (11, 1), (12, 2), (13, 2)],
+        [(10, ABOVE), (11, BELOW), (12, BELOW), (13, BELOW)], [(1, 3)], [(1, BASE)],
+        {1: 3, 10: 3, 11: 4, 12: 3, 13: 3},
+    ),
+}
+
+
+@pytest.mark.parametrize(
+    "case,gate_side", on_both_sides(list(MIGRATE_CASES)), indirect=["gate_side"]
+)
+def test_migrate_edge_cases(spark, case, gate_side):
+    d_assign, d_attrs, at_assign, at_attrs, want = MIGRATE_CASES[case]
+    assign_schema, attrs_schema = "id long, community long", "id long, text string"
+    merged = migrate(
+        spark,
+        spark.createDataFrame(d_assign, assign_schema),
+        spark.createDataFrame(d_attrs, attrs_schema),
+        spark.createDataFrame(at_assign, assign_schema),
+        spark.createDataFrame(at_attrs, attrs_schema),
+    )
+    assert {r["id"]: r["community"] for r in merged.collect()} == want
+
+
+def test_migrate_synth_day_same_on_both_sides(spark, monkeypatch):
+    """A synth snapshot and day slice on a shared entity dictionary (the
+    perfbench daily_rank shape, smaller): the merged table is the same
+    from the one-task remap and from the distributed one. Its clusters
+    score 0.85-0.94 against their best all-time match, so a 0.9 threshold
+    leaves both matched and fresh ones."""
+    from louvain_spark.operators.induce import entity_vertices, membership
+    from louvain_spark.operators.louvain import louvain
+
+    snap_t = transcripts_df(spark, n_conv=150, seed=11)
+    day_t = transcripts_df(spark, n_conv=60, seed=12, conv_offset=150)
+    verts = entity_vertices(membership(snap_t.unionByName(day_t))).localCheckpoint()
+    attrs = verts.select("id", F.col("name").alias("text"))
+    snap_a, _ = louvain(spark, cooccurrence_edges(snap_t, vertices=verts, window=4)[1])
+    day_a, _ = louvain(spark, cooccurrence_edges(day_t, vertices=verts, window=4)[1])
+    snap_a, day_a = snap_a.localCheckpoint(), day_a.localCheckpoint()
+    top = snap_a.agg(F.max("community")).first()[0]
+
+    got = {}
+    for side in ("one_block", "distributed"):
+        use_gate_side(monkeypatch, side)
+        merged = migrate(spark, day_a, attrs, snap_a, attrs, threshold=0.9)
+        got[side] = sorted(map(tuple, merged.collect()))
+    assert got["one_block"] == got["distributed"]
+    new = dict(got["one_block"])
+    day_only = {r["id"] for r in day_a.collect()} - {r["id"] for r in snap_a.collect()}
+    coms = {new[i] for i in day_only}
+    assert min(coms) <= top < max(coms)  # some day clusters matched, some fresh

@@ -7,7 +7,9 @@ Usage: python tools/check_oracle.py [--distributed] [query ...]
 gate.LOUVAIN_ONE_TASK_MAX_EDGES to 0 before any query runs, so PageRank,
 LPA and CC take their distributed superstep path instead of the one-block
 kernel, and Louvain's parallel levels run as distributed sweeps instead
-of in one task.
+of in one task. The same zero also turns off the one-task daily→all-time
+migration (streaming/incremental.migrate), but no oracle query calls it:
+its distributed side is covered by tests only.
 """
 
 from __future__ import annotations
@@ -78,7 +80,8 @@ def main() -> None:
     ap.add_argument("queries", nargs="*", help="query names (default: all oracled)")
     ap.add_argument(
         "--distributed", action="store_true",
-        help="run PageRank, LPA, CC and Louvain's parallel levels distributed",
+        help="run PageRank, LPA, CC, Louvain's parallel levels and the "
+        "migration (which no oracle query calls) distributed",
     )
     args = ap.parse_args()
     if args.distributed:
