@@ -36,7 +36,9 @@ from pyspark.sql import functions as F
 def dot_col(a, b):
     """JVM-side dot product of two array<float/double> columns (F8): a
     left fold (((0.0 + x0·y0) + x1·y1) + …, float operands promoted to
-    double per element."""
+    double per element. The one-task migration's numpy scores
+    (streaming/incremental._top1, behind remap_kernel) copy this fold
+    order and must change with it."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y.cast("double")),
         F.lit(0.0),

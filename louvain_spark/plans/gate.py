@@ -61,6 +61,22 @@ numpy 1.26): ~300 bytes per member row above the idle worker's ~123 MiB;
 1M rows peak at 439 MiB and take 13 s in the kernel on one core of the
 4-core Xeon host, at 25M centroid pairs.
 
+Neither bound was set for this path, so the switch was timed: whole
+migrate() calls, one task vs the distributed remap, on member rows read
+from parquet (texts ~25 bytes, daily communities of 5, all-time of 10;
+n_day a quarter of the rows, or fewer where n_day × n_alltime ≤
+BLOCKED_MATCH_ABOVE requires it), local[4] with 16 partitions, 4-core
+Xeon host, two alternating runs per side:
+
+    member rows  n_day   one task      distributed
+    10k          2,500   5.7, 2.2 s    24.5, 16.5 s
+    100k         250     5.8, 3.2 s    25.5, 19.4 s
+    500k         50      12.8, 7.3 s   41.4, 27.1 s
+    1M           25      17.7, 10.8 s  44.8, 33.4 s
+
+One task wins at every size up to the sum bound: featurizing on one core
+costs less than the distributed path's stages. So both bounds stand.
+
 Tests and `tools/check_oracle.py --distributed` set ONE_BLOCK_MAX_EDGES
 and LOUVAIN_ONE_TASK_MAX_EDGES to 0, which turns every one-task path off,
 the migration's included.

@@ -9,14 +9,16 @@ reference — this is snapshot-to-snapshot incremental batch (SURVEY.md
 §2.9): joins + anti-joins + union + overwrite, resumable like any other
 engine stage.
 
-When both sides' member rows fit one Python worker (gate.ONE_BLOCK_MAX_EDGES
-rows together, gate.BLOCKED_MATCH_ABOVE daily × all-time rows), migrate
-computes the centroids, the top-1 match and the fresh ids in one
-applyInPandas task (remap_kernel) with the distributed path's arithmetic;
-above either bound the centroids are Spark aggregates and the match is
-the crossJoin brute or, above BLOCKED_MATCH_ABOVE candidate pairs, the
-blocked nested-loop. Both give the same (daily → all-time community)
-remap, which Spark applies with a relabel join, an anti-join and a union.
+migrate caches both sides' member rows once and counts them on the
+action that fills the cache. When they fit one Python worker
+(gate.ONE_BLOCK_MAX_EDGES rows together, gate.BLOCKED_MATCH_ABOVE daily ×
+all-time rows), it computes the centroids, the top-1 match and the fresh
+ids in one applyInPandas task (remap_kernel) with the distributed path's
+arithmetic; above either bound the centroids are Spark aggregates over
+the same cache and the match is the crossJoin brute or, above
+BLOCKED_MATCH_ABOVE candidate pairs, the blocked nested-loop. Both give
+the same (daily → all-time community) remap, which Spark applies with a
+relabel join, an anti-join and a union.
 """
 
 from __future__ import annotations
@@ -81,9 +83,19 @@ def cluster_centroids(
     attrs: (id, <text_col>) vertex attributes. The deterministic stand-in
     for the reference's per-cluster why/what embeddings. wide_agg overrides
     the dim-based path choice (tests only); both paths are exact.
+
+    remap_kernel (_unit_centroids) mirrors this arithmetic in numpy for
+    the one-task migration — float64 sums, the mean cast to float32,
+    l2_normalize's norm — and must change with it.
     """
-    vec = featurize(F.coalesce(F.col(text_col), F.lit("")), dim=dim)
-    member_vecs = assignments.join(attrs, "id").select("community", vec.alias("v"))
+    texts = assignments.join(attrs, "id").select("community", F.col(text_col).alias("_text"))
+    return _centroids(texts, dim, wide_agg)
+
+
+def _centroids(texts: DataFrame, dim: int, wide_agg: bool | None = None) -> DataFrame:
+    """cluster_centroids from (community, _text) member rows."""
+    vec = featurize(F.coalesce(F.col("_text"), F.lit("")), dim=dim)
+    member_vecs = texts.select("community", vec.alias("v"))
     if wide_agg is False or (wide_agg is None and dim > WIDE_AGG_MAX_DIM):
         return _centroids_exploded(member_vecs)
     n = member_vecs.groupBy("community").agg(
@@ -160,15 +172,25 @@ def migrate(
     - orphan handling (singletons at ≥ orphan_threshold) is the same
       match at a stricter threshold, applied to unmatched singletons.
 
-    The (daily → all-time community) remap comes from one task when both
-    sides fit (_remap_one_task), else from the distributed centroid
-    aggregates and match (_remap_distributed); both give the same remap.
+    Both sides' member rows (_members) are cached once. The (daily →
+    all-time community) remap comes from one task when they fit
+    (_remap_one_task), else from distributed centroid aggregates and
+    match over the same cache (_remap_distributed); both give the same
+    remap.
     """
-    args = (daily_assign, daily_attrs, alltime_assign, alltime_attrs, text_col, dim,
-            threshold, orphan_threshold)
-    remap = _remap_one_task(*args)
-    if remap is None:
-        remap = _remap_distributed(*args)
+    members = (
+        _members(daily_assign, daily_attrs, text_col, 0)
+        .unionByName(_members(alltime_assign, alltime_attrs, text_col, 1))
+        .persist()
+    )
+    try:
+        remap = _remap_one_task(members, dim, threshold, orphan_threshold)
+        if remap is None:
+            remap = _remap_distributed(
+                members, daily_assign, dim, threshold, orphan_threshold
+            )
+    finally:
+        members.unpersist()
     relabeled = (
         daily_assign.withColumnRenamed("community", "daily_community")
         .join(remap, "daily_community")
@@ -177,45 +199,6 @@ def migrate(
     # existing all-time vertices keep their assignment
     new_only = relabeled.join(alltime_assign.select("id"), "id", "left_anti")
     return alltime_assign.select("id", "community").unionByName(new_only)
-
-
-def _remap_distributed(
-    daily_assign, daily_attrs, alltime_assign, alltime_attrs, text_col, dim, threshold,
-    orphan_threshold,
-) -> DataFrame:
-    """(daily_community, alltime_community): centroid aggregates, the
-    top-1 match and the fresh-id rank as Spark jobs."""
-    d_cent = cluster_centroids(daily_assign, daily_attrs, text_col, dim).persist()
-    a_cent = cluster_centroids(alltime_assign, alltime_attrs, text_col, dim).persist()
-
-    # singleton daily clusters face the stricter orphan threshold
-    sizes = daily_assign.groupBy("community").agg(F.count(F.lit(1)).alias("sz"))
-    matches = (
-        match_clusters(d_cent, a_cent, threshold=min(threshold, orphan_threshold))
-        .join(sizes.withColumnRenamed("community", "daily_community"), "daily_community")
-        .where(
-            (F.col("sim") >= F.lit(threshold)) & (F.col("sz") >= 2)
-            | (F.col("sim") >= F.lit(orphan_threshold))
-        )
-        .select("daily_community", "alltime_community")
-    )
-
-    max_alltime = (
-        alltime_assign.agg(F.coalesce(F.max("community"), F.lit(-1))).collect()[0][0]
-    )
-    unmatched = (
-        daily_assign.select("community")
-        .distinct()
-        .join(matches.withColumnRenamed("daily_community", "community"), "community", "left_anti")
-    )
-    fresh = dense_sorted_rank(unmatched, "community", id_col="_rk").select(
-        F.col("community").alias("daily_community"),
-        (F.col("_rk") + 1 + max_alltime).cast("long").alias("alltime_community"),
-    )
-    remap = matches.unionByName(fresh)
-    d_cent.unpersist()
-    a_cent.unpersist()
-    return remap
 
 
 def _members(assign: DataFrame, attrs: DataFrame, text_col: str, side: int) -> DataFrame:
@@ -232,46 +215,74 @@ def _members(assign: DataFrame, attrs: DataFrame, text_col: str, side: int) -> D
     )
 
 
-def _remap_one_task(
-    daily_assign, daily_attrs, alltime_assign, alltime_attrs, text_col, dim, threshold,
-    orphan_threshold,
-) -> DataFrame | None:
-    """(daily_community, alltime_community) from one applyInPandas task
-    (remap_kernel), or None when the member rows do not fit it.
+def _remap_distributed(
+    members: DataFrame, daily_assign: DataFrame, dim, threshold, orphan_threshold
+) -> DataFrame:
+    """(daily_community, alltime_community): centroid aggregates over the
+    cached member rows, the top-1 match and the fresh-id rank as Spark
+    jobs."""
+    def side(s: int) -> DataFrame:
+        return members.where(F.col("_side") == s)
 
-    Both sides' member rows are cached; their counts ride the action that
-    fills the cache. They fit when n_day·n_alltime ≤
-    gate.BLOCKED_MATCH_ABOVE (the kernel scores every centroid pair, and
-    communities ≤ members) and n_day + n_alltime ≤
+    d_cent = _centroids(side(0).where("_has"), dim).persist()
+    a_cent = _centroids(side(1).where("_has"), dim).persist()
+
+    # singleton daily clusters face the stricter orphan threshold
+    sizes = daily_assign.groupBy("community").agg(F.count(F.lit(1)).alias("sz"))
+    matches = (
+        match_clusters(d_cent, a_cent, threshold=min(threshold, orphan_threshold))
+        .join(sizes.withColumnRenamed("community", "daily_community"), "daily_community")
+        .where(
+            (F.col("sim") >= F.lit(threshold)) & (F.col("sz") >= 2)
+            | (F.col("sim") >= F.lit(orphan_threshold))
+        )
+        .select("daily_community", "alltime_community")
+    )
+
+    max_alltime = side(1).agg(F.coalesce(F.max("community"), F.lit(-1))).collect()[0][0]
+    unmatched = (
+        daily_assign.select("community")
+        .distinct()
+        .join(matches.withColumnRenamed("daily_community", "community"), "community", "left_anti")
+    )
+    fresh = dense_sorted_rank(unmatched, "community", id_col="_rk").select(
+        F.col("community").alias("daily_community"),
+        (F.col("_rk") + 1 + max_alltime).cast("long").alias("alltime_community"),
+    )
+    remap = matches.unionByName(fresh)
+    d_cent.unpersist()
+    a_cent.unpersist()
+    return remap
+
+
+def _remap_one_task(members: DataFrame, dim, threshold, orphan_threshold) -> DataFrame | None:
+    """(daily_community, alltime_community) from one applyInPandas task
+    (remap_kernel), or None when the cached member rows do not fit it.
+
+    Their counts ride the action that fills the cache. They fit when
+    n_day·n_alltime ≤ gate.BLOCKED_MATCH_ABOVE (the kernel scores every
+    centroid pair, and communities ≤ members) and n_day + n_alltime ≤
     gate.ONE_BLOCK_MAX_EDGES (the worker holds every member row)."""
     if gate.ONE_BLOCK_MAX_EDGES <= 0:
         return None
-    members = (
-        _members(daily_assign, daily_attrs, text_col, 0)
-        .unionByName(_members(alltime_assign, alltime_attrs, text_col, 1))
-        .persist()
+    obs = Observation()
+    day = F.col("_side") == 0
+    members.observe(
+        obs, F.count(F.when(day, 1)).alias("d"), F.count(F.when(~day, 1)).alias("a")
+    ).write.format("noop").mode("overwrite").save()
+    n_d, n_a = obs.get["d"], obs.get["a"]
+    if n_d * n_a > gate.BLOCKED_MATCH_ABOVE or n_d + n_a > gate.ONE_BLOCK_MAX_EDGES:
+        return None
+
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        return remap_kernel(pdf, dim, threshold, orphan_threshold)
+
+    return (
+        members.withColumn("_g", F.lit(0))
+        .groupBy("_g")
+        .applyInPandas(run, "daily_community long, alltime_community long")
+        .localCheckpoint(eager=True)
     )
-    try:
-        obs = Observation()
-        day = F.col("_side") == 0
-        members.observe(
-            obs, F.count(F.when(day, 1)).alias("d"), F.count(F.when(~day, 1)).alias("a")
-        ).write.format("noop").mode("overwrite").save()
-        n_d, n_a = obs.get["d"], obs.get["a"]
-        if n_d * n_a > gate.BLOCKED_MATCH_ABOVE or n_d + n_a > gate.ONE_BLOCK_MAX_EDGES:
-            return None
-
-        def run(pdf: pd.DataFrame) -> pd.DataFrame:
-            return remap_kernel(pdf, dim, threshold, orphan_threshold)
-
-        return (
-            members.withColumn("_g", F.lit(0))
-            .groupBy("_g")
-            .applyInPandas(run, "daily_community long, alltime_community long")
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        members.unpersist()
 
 
 def remap_kernel(

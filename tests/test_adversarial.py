@@ -28,7 +28,7 @@ from louvain_spark.operators.quality import modularity
 from louvain_spark.operators.triangles import triangle_count, triangles_per_vertex
 from louvain_spark.plans import gate
 from tests import graphs
-from tests.conftest import on_both_sides
+from tests.conftest import local_df, on_both_sides, vertices_df
 from tests.oracle import louvain_ref
 from tests.test_cc import _nx_components
 from tests.test_louvain import canon
@@ -50,10 +50,12 @@ LPA_ITERS = 10  # the hub 2-cycles under synchronous LPA
 
 def _graph(spark, fixture):
     edges, n = getattr(graphs, fixture)()
-    e = spark.createDataFrame(
-        [(int(u), int(v), float(w)) for u, v, w in edges], "src long, dst long, weight double"
+    e = local_df(
+        spark,
+        [(int(u), int(v), float(w)) for u, v, w in edges],
+        "src long, dst long, weight double",
     )
-    verts = spark.createDataFrame([(i,) for i in range(n)], "id long")
+    verts = vertices_df(spark, n)
     return edges, n, e, verts
 
 
@@ -134,7 +136,7 @@ def _partitions(fixture, n):
 
 
 def _assign_df(spark, part):
-    return spark.createDataFrame(sorted(part.items()), "id long, community long")
+    return local_df(spark, sorted(part.items()), "id long, community long")
 
 
 @pytest.mark.parametrize("fixture", GRAPHS)
@@ -149,7 +151,7 @@ def test_modularity_adversarial(spark, fixture):
 def test_cluster_summary_adversarial(spark, fixture):
     n = getattr(graphs, fixture)()[1]
     names = {v: f"v{(7 * v) % max(n, 1):05d}" for v in range(n)}  # not in id order
-    named = spark.createDataFrame(sorted(names.items()), "id long, name string")
+    named = local_df(spark, sorted(names.items()), "id long, name string")
     for part in _partitions(fixture, n):
         got = cluster_summary(_assign_df(spark, part), named).collect()
         pdf = pd.DataFrame({"community": list(part.values()), "name": [names[v] for v in part]})

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from louvain_spark.operators.cc import connected_components
 from louvain_spark.plans.loop import SuperstepRunner
 from tests import graphs
-from tests.conftest import edges_df, on_both_sides, use_gate_side
+from tests.conftest import edges_df, on_both_sides, use_gate_side, vertices_df
 
 
 def _nx_components(edges, n):
@@ -23,7 +23,7 @@ def _nx_components(edges, n):
 
 def _run(spark, edges, n, **kw):
     e = edges_df(spark, edges)
-    verts = spark.createDataFrame([(i,) for i in range(n)], "id long")
+    verts = vertices_df(spark, n)
     got = connected_components(spark, e, vertices=verts, **kw)
     return {r["id"]: r["component"] for r in got.collect()}
 
@@ -68,7 +68,7 @@ def test_cc_weight_permutation_invariant_distributed(spark, gate_side):
 def test_cc_resume_equals_uninterrupted(spark, tmp_path):
     edges, n = graphs.g_random(100, 0.015, seed=3)
     e = edges_df(spark, edges)
-    verts = spark.createDataFrame([(i,) for i in range(n)], "id long")
+    verts = vertices_df(spark, n)
 
     full_dir = str(tmp_path / "full")
     runner = SuperstepRunner(spark, "run-a", "cc", checkpoint_dir=full_dir)
@@ -107,7 +107,7 @@ def test_cc_resume_across_paths(spark, tmp_path, monkeypatch, first, second):
     uninterrupted components."""
     edges, n = graphs.g_random(100, 0.015, seed=3)
     e = edges_df(spark, edges)
-    verts = spark.createDataFrame([(i,) for i in range(n)], "id long")
+    verts = vertices_df(spark, n)
     full = connected_components(spark, e, vertices=verts)
     want = {r["id"]: r["component"] for r in full.collect()}
 
@@ -133,7 +133,7 @@ def test_ledger_partition_rows_match_checkpoint(spark, tmp_path):
     from tests.conftest import edges_df
 
     e = edges_df(spark, [(0, 1, 1.0), (1, 2, 1.0), (3, 4, 1.0)])
-    verts = spark.createDataFrame([(i,) for i in range(5)], "id long")
+    verts = vertices_df(spark, 5)
     d = str(tmp_path / "ck")
     runner = SuperstepRunner(spark, "run-l", "cc", checkpoint_dir=d)
     connected_components(spark, e, vertices=verts, runner=runner)

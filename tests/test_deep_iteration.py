@@ -22,7 +22,7 @@ import pytest
 from louvain_spark.operators.lpa import label_propagation
 from louvain_spark.operators.pagerank import pagerank
 from tests import graphs
-from tests.conftest import edges_df, use_gate_side
+from tests.conftest import edges_df, use_gate_side, vertices_df
 from tests.test_pagerank import np_pagerank
 
 WALL_BOUND_S = 180  # pre-fix: optimizer alone burned >420s by superstep ~25
@@ -38,7 +38,7 @@ def test_pagerank_30_supersteps_adhoc_runner(spark):
     it never early-stops. Must complete quickly and match the oracle."""
     edges, n = graphs.g_random(40, 0.1, seed=9, weighted=True)
     e = edges_df(spark, edges)
-    verts = spark.createDataFrame([(i,) for i in range(n)], "id long")
+    verts = vertices_df(spark, n)
     t0 = time.monotonic()
     got_df = pagerank(spark, e, vertices=verts, max_iter=30, tol=0.0)
     got = np.zeros(n)
@@ -59,7 +59,7 @@ def test_lpa_oscillating_bipartite_40_supersteps(spark):
     a, b = range(4), range(4, 8)
     edges = [(u, v, 1.0) for u in a for v in b]
     e = edges_df(spark, edges)
-    verts = spark.createDataFrame([(i,) for i in range(8)], "id long")
+    verts = vertices_df(spark, 8)
     t0 = time.monotonic()
     got = {
         r["id"]: r["community"]
@@ -87,7 +87,7 @@ def test_pagerank_batch_sizes_same_trajectory(spark):
 
     edges, n = graphs.g_random(40, 0.12, seed=11, weighted=True)
     e = edges_df(spark, edges)
-    verts = spark.createDataFrame([(i,) for i in range(n)], "id long")
+    verts = vertices_df(spark, n)
     ref = None
     for spa in (1, 2, 3, 7):
         got = {
@@ -113,7 +113,7 @@ def test_lpa_batch_sizes_same_partition(spark):
 
     edges, n = graphs.g_ring_of_cliques(k=5, c=4)
     e = edges_df(spark, edges)
-    verts = spark.createDataFrame([(i,) for i in range(n)], "id long")
+    verts = vertices_df(spark, n)
     ref = None
     for spa in (1, 2, 3):
         got = {
@@ -139,7 +139,7 @@ def test_pagerank_batched_early_stop_within_tol(spark):
 
     edges, n = graphs.g_random(40, 0.12, seed=3, weighted=True)
     e = edges_df(spark, edges)
-    verts = spark.createDataFrame([(i,) for i in range(n)], "id long")
+    verts = vertices_df(spark, n)
     tol = 1e-3
     r1 = {
         r["id"]: r["score"]

@@ -21,12 +21,12 @@ from louvain_spark.operators.pagerank import pagerank
 from louvain_spark.plans import gate
 from louvain_spark.plans.loop import SuperstepRunner
 from tests import graphs
-from tests.conftest import edges_df, use_gate_side
+from tests.conftest import edges_df, use_gate_side, vertices_df
 
 
 def _graph(spark, edges, n):
     e = edges_df(spark, edges)
-    verts = spark.createDataFrame([(i,) for i in range(n)], "id long")
+    verts = vertices_df(spark, n)
     return e, verts
 
 

@@ -8,7 +8,7 @@ import pytest
 
 from louvain_spark.operators.louvain import louvain
 from tests import graphs
-from tests.conftest import edges_df
+from tests.conftest import edges_df, vertices_df
 from tests.oracle import louvain_ref
 
 
@@ -23,7 +23,7 @@ def canon(partition):
 
 def _run(spark, edges, n, **kw):
     e = edges_df(spark, edges)
-    verts = spark.createDataFrame([(i,) for i in range(n)], "id long")
+    verts = vertices_df(spark, n)
     assign, mod = louvain(spark, e, vertices=verts, **kw)
     return {r["id"]: r["community"] for r in assign.collect()}, mod
 
@@ -127,7 +127,7 @@ def test_parallel_mode_multiblock(spark):
     must still land on one community per clique."""
     edges, n = graphs.g_ring_of_cliques(k=8, c=5)
     e = edges_df(spark, edges)
-    verts = spark.createDataFrame([(i,) for i in range(n)], "id long")
+    verts = vertices_df(spark, n)
     assign, got_mod = louvain(
         spark, e, vertices=verts, mode="parallel",
         parallel_opts={"n_blocks": 4, "block_target": 1},

@@ -8,13 +8,13 @@ from louvain_spark.cli import main as cli_main
 from louvain_spark.operators.louvain import louvain, resume_louvain
 from louvain_spark.plans.loop import SuperstepRunner
 from tests import graphs
-from tests.conftest import edges_df
+from tests.conftest import edges_df, local_df, vertices_df
 
 
 def test_louvain_resume_equals_uninterrupted(spark, tmp_path):
     edges, n = graphs.g_ring_of_cliques(k=6, c=5)
     e = edges_df(spark, edges)
-    verts = spark.createDataFrame([(i,) for i in range(n)], "id long")
+    verts = vertices_df(spark, n)
 
     full_dir = str(tmp_path / "full")
     r_full = SuperstepRunner(spark, "lv-full", "louvain-exact", checkpoint_dir=full_dir)
@@ -64,7 +64,7 @@ def test_louvain_resume_from_each_level(spark, tmp_path, mode, gate_side, graph,
     run, in every mode."""
     edges, n = RESUME_GRAPHS[graph]()
     e = edges_df(spark, edges)
-    verts = spark.createDataFrame([(i,) for i in range(n)], "id long")
+    verts = vertices_df(spark, n)
     opts, op = RESUME_MODES[mode], f"louvain-{mode}"
     if (mode, graph) not in _uninterrupted:
         assign, mod = louvain(spark, e, vertices=verts, mode=mode, parallel_opts=opts)

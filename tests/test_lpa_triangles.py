@@ -6,7 +6,7 @@ import pytest
 from louvain_spark.operators.lpa import label_propagation
 from louvain_spark.operators.triangles import triangle_count, triangles_per_vertex
 from tests import graphs
-from tests.conftest import edges_df, on_both_sides, use_gate_side
+from tests.conftest import edges_df, on_both_sides, use_gate_side, vertices_df
 
 
 def sync_lpa(edges, n, max_iter=20):
@@ -52,7 +52,7 @@ def _partition_sets(d):
 def test_lpa_matches_sync_oracle(spark, fixture, gate_side):
     edges, n = getattr(graphs, fixture)()
     e = edges_df(spark, edges)
-    verts = spark.createDataFrame([(i,) for i in range(n)], "id long")
+    verts = vertices_df(spark, n)
     got = {r["id"]: r["community"] for r in label_propagation(spark, e, vertices=verts).collect()}
     want = sync_lpa(edges, n)
     assert got == want
@@ -61,7 +61,7 @@ def test_lpa_matches_sync_oracle(spark, fixture, gate_side):
 def test_lpa_weighted(spark):
     edges, n = graphs.g_weighted_split()
     e = edges_df(spark, edges)
-    verts = spark.createDataFrame([(i,) for i in range(n)], "id long")
+    verts = vertices_df(spark, n)
     got = {r["id"]: r["community"] for r in label_propagation(spark, e, vertices=verts).collect()}
     assert got == sync_lpa(edges, n)
 
@@ -88,7 +88,7 @@ def test_triangles_random_vs_networkx(spark, seed):
     want_total = sum(want_per_v.values()) // 3
     e = edges_df(spark, edges)
     assert triangle_count(e) == want_total
-    verts = spark.createDataFrame([(i,) for i in range(n)], "id long")
+    verts = vertices_df(spark, n)
     got = {r["id"]: r["triangles"] for r in triangles_per_vertex(e, verts).collect()}
     assert got == dict(want_per_v)
 
@@ -107,7 +107,7 @@ def test_lpa_resume_matches_uninterrupted(spark, tmp_path):
 
     edges, n = graphs.g_ring_of_cliques(k=4, c=5)
     e = edges_df(spark, edges)
-    verts = spark.createDataFrame([(i,) for i in range(n)], "id long")
+    verts = vertices_df(spark, n)
 
     full = label_propagation(spark, e, vertices=verts, max_iter=8)
     want = {r["id"]: r["community"] for r in full.collect()}
@@ -136,7 +136,7 @@ def test_lpa_resume_across_paths(spark, tmp_path, monkeypatch, first, second):
 
     edges, n = graphs.g_ring_of_cliques(k=4, c=5)
     e = edges_df(spark, edges)
-    verts = spark.createDataFrame([(i,) for i in range(n)], "id long")
+    verts = vertices_df(spark, n)
     full = label_propagation(spark, e, vertices=verts, max_iter=8)
     want = {r["id"]: r["community"] for r in full.collect()}
 

@@ -14,7 +14,7 @@ import pytest
 from louvain_spark.operators.pagerank import pagerank
 from louvain_spark.plans.loop import SuperstepRunner
 from tests import graphs
-from tests.conftest import edges_df, on_both_sides, use_gate_side
+from tests.conftest import edges_df, local_df, on_both_sides, use_gate_side, vertices_df
 
 K = 15
 
@@ -46,7 +46,7 @@ def np_pagerank(edges, n, damping=0.85, tol=0.0, max_iter=K, directed=False):
 
 def _run(spark, edges, n, **kw):
     e = edges_df(spark, edges)
-    verts = spark.createDataFrame([(i,) for i in range(n)], "id long")
+    verts = vertices_df(spark, n)
     got = pagerank(spark, e, vertices=verts, **kw)
     out = np.zeros(n)
     for r in got.collect():
@@ -81,8 +81,8 @@ def test_pagerank_weighted_random_distributed(spark, gate_side):
 def test_pagerank_directed(spark):
     # build directly — edges_df canonicalizes pairs, which would destroy direction
     edges = [(0, 1, 1.0), (1, 2, 1.0), (2, 0, 1.0), (2, 3, 2.0)]
-    e = spark.createDataFrame(edges, "src long, dst long, weight double")
-    verts = spark.createDataFrame([(i,) for i in range(4)], "id long")
+    e = local_df(spark, edges, "src long, dst long, weight double")
+    verts = vertices_df(spark, 4)
     got_df = pagerank(spark, e, vertices=verts, max_iter=K, tol=0.0, directed=True)
     got = np.zeros(4)
     for r in got_df.collect():
@@ -99,7 +99,7 @@ def test_pagerank_directed_distributed(spark, gate_side):
 def test_pagerank_tol_early_stop(spark):
     edges, n = graphs.g_two_cliques()
     e = edges_df(spark, edges)
-    verts = spark.createDataFrame([(i,) for i in range(n)], "id long")
+    verts = vertices_df(spark, n)
     runner = SuperstepRunner(spark, "pr-tol", "pagerank")
     got = pagerank(
         spark, e, vertices=verts, tol=1e-3, max_iter=100, runner=runner
@@ -120,7 +120,7 @@ def test_pagerank_resume_matches_uninterrupted(spark, tmp_path):
 
     edges, n = graphs.g_random(40, 0.1, seed=6, weighted=True)
     e = edges_df(spark, edges)
-    verts = spark.createDataFrame([(i,) for i in range(n)], "id long")
+    verts = vertices_df(spark, n)
 
     full = pagerank(spark, e, vertices=verts, max_iter=10, tol=0.0)
     want = {r["id"]: r["score"] for r in full.collect()}
@@ -150,7 +150,7 @@ def test_pagerank_resume_across_paths(spark, tmp_path, monkeypatch, first, secon
     either side to the uninterrupted scores."""
     edges, n = graphs.g_random(40, 0.1, seed=6, weighted=True)
     e = edges_df(spark, edges)
-    verts = spark.createDataFrame([(i,) for i in range(n)], "id long")
+    verts = vertices_df(spark, n)
     want = _run(spark, edges, n, max_iter=10, tol=0.0)
 
     d = str(tmp_path / "ck")

@@ -8,19 +8,21 @@ from louvain_spark.plans import gate
 from louvain_spark.streaming.incremental import cluster_centroids, migrate
 from louvain_spark.streaming.ingest import compact_increments, stream_edge_increments
 from louvain_spark.synth import transcripts_df
-from tests.conftest import on_both_sides, use_gate_side
+from tests.conftest import local_df, on_both_sides, use_gate_side
 
 
 def test_migrate_matches_and_relabels(spark):
     # all-time: cluster 0 = "alpha"-docs; daily: cluster 0 = "alpha"-docs
     # (should match → relabel to 0), cluster 1 = novel docs (fresh id)
-    at_assign = spark.createDataFrame([(1, 0), (2, 0), (3, 5)], "id long, community long")
-    at_attrs = spark.createDataFrame(
+    at_assign = local_df(spark, [(1, 0), (2, 0), (3, 5)], "id long, community long")
+    at_attrs = local_df(
+        spark,
         [(1, "alpha bravo charlie"), (2, "alpha bravo delta"), (3, "zulu yankee xray")],
         "id long, text string",
     )
-    d_assign = spark.createDataFrame([(10, 0), (11, 0), (12, 1), (13, 1)], "id long, community long")
-    d_attrs = spark.createDataFrame(
+    d_assign = local_df(spark, [(10, 0), (11, 0), (12, 1), (13, 1)], "id long, community long")
+    d_attrs = local_df(
+        spark,
         [(10, "alpha bravo charlie"), (11, "alpha bravo delta"),
          (12, "totally novel words here"), (13, "totally novel words there")],
         "id long, text string",
@@ -36,17 +38,17 @@ def test_migrate_matches_and_relabels(spark):
 
 
 def test_migrate_existing_vertices_keep_assignment(spark):
-    at_assign = spark.createDataFrame([(1, 0)], "id long, community long")
-    at_attrs = spark.createDataFrame([(1, "alpha")], "id long, text string")
-    d_assign = spark.createDataFrame([(1, 7)], "id long, community long")
-    d_attrs = spark.createDataFrame([(1, "alpha")], "id long, text string")
+    at_assign = local_df(spark, [(1, 0)], "id long, community long")
+    at_attrs = local_df(spark, [(1, "alpha")], "id long, text string")
+    d_assign = local_df(spark, [(1, 7)], "id long, community long")
+    d_attrs = local_df(spark, [(1, "alpha")], "id long, text string")
     merged = migrate(spark, d_assign, d_attrs, at_assign, at_attrs)
     assert {r["id"]: r["community"] for r in merged.collect()} == {1: 0}
 
 
 def test_centroids_unit_norm(spark):
-    assign = spark.createDataFrame([(1, 0), (2, 0)], "id long, community long")
-    attrs = spark.createDataFrame([(1, "hello world"), (2, "hello spark")], "id long, text string")
+    assign = local_df(spark, [(1, 0), (2, 0)], "id long, community long")
+    attrs = local_df(spark, [(1, "hello world"), (2, "hello spark")], "id long, text string")
     import numpy as np
 
     rows = cluster_centroids(assign, attrs, dim=16).collect()
@@ -61,10 +63,12 @@ def test_centroids_exploded_path_matches_wide(spark):
     high-dim plan must not contain a dim-wide aggregate expression list."""
     import numpy as np
 
-    assign = spark.createDataFrame(
+    assign = local_df(
+        spark,
         [(1, 0), (2, 0), (3, 1), (4, 1), (5, 1)], "id long, community long"
     )
-    attrs = spark.createDataFrame(
+    attrs = local_df(
+        spark,
         [(i, t) for i, t in enumerate(
             ["hello world", "hello spark", "graph engine", "louvain pass", "edge table"],
             start=1,
@@ -114,21 +118,25 @@ def test_migrate_subgraph_edges_and_orphans(spark):
     stays out."""
     from louvain_spark.streaming.incremental import migrate_subgraph
 
-    at_assign = spark.createDataFrame([(1, 0), (2, 0)], "id long, community long")
-    at_attrs = spark.createDataFrame(
+    at_assign = local_df(spark, [(1, 0), (2, 0)], "id long, community long")
+    at_attrs = local_df(
+        spark,
         [(1, "alpha bravo charlie"), (2, "alpha bravo charlie")], "id long, text string"
     )
-    at_edges = spark.createDataFrame([(1, 2, 3.0)], "src long, dst long, weight double")
-    d_assign = spark.createDataFrame([(10, 0), (11, 0)], "id long, community long")
-    d_attrs = spark.createDataFrame(
+    at_edges = local_df(spark, [(1, 2, 3.0)], "src long, dst long, weight double")
+    d_assign = local_df(spark, [(10, 0), (11, 0)], "id long, community long")
+    d_attrs = local_df(
+        spark,
         [(10, "alpha bravo charlie"), (11, "alpha bravo charlie")], "id long, text string"
     )
     # (1,2) already exists all-time (keeps weight 3.0); (10,11) is new
-    d_edges = spark.createDataFrame(
+    d_edges = local_df(
+        spark,
         [(10, 11, 7.0), (1, 2, 9.0)], "src long, dst long, weight double"
     )
     # orphan 20: exact member text → sim 1.0 ≥ 0.95; orphan 21: unrelated
-    orphans = spark.createDataFrame(
+    orphans = local_df(
+        spark,
         [(20, "alpha bravo charlie"), (21, "qqq www zzz unrelated")],
         "id long, text string",
     )
@@ -434,10 +442,10 @@ def test_migrate_edge_cases(spark, case, gate_side):
     assign_schema, attrs_schema = "id long, community long", "id long, text string"
     merged = migrate(
         spark,
-        spark.createDataFrame(d_assign, assign_schema),
-        spark.createDataFrame(d_attrs, attrs_schema),
-        spark.createDataFrame(at_assign, assign_schema),
-        spark.createDataFrame(at_attrs, attrs_schema),
+        local_df(spark, d_assign, assign_schema),
+        local_df(spark, d_attrs, attrs_schema),
+        local_df(spark, at_assign, assign_schema),
+        local_df(spark, at_attrs, attrs_schema),
     )
     assert {r["id"]: r["community"] for r in merged.collect()} == want
 
