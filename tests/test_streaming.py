@@ -8,7 +8,7 @@ from louvain_spark.plans import gate
 from louvain_spark.streaming.incremental import cluster_centroids, migrate
 from louvain_spark.streaming.ingest import compact_increments, stream_edge_increments
 from louvain_spark.synth import transcripts_df
-from tests.conftest import local_df, on_both_sides, use_gate_side
+from tests.conftest import cached_rdds, local_df, on_both_sides, use_gate_side
 
 
 def test_migrate_matches_and_relabels(spark):
@@ -434,10 +434,8 @@ MIGRATE_CASES = {
 }
 
 
-@pytest.mark.parametrize(
-    "case,gate_side", on_both_sides(list(MIGRATE_CASES)), indirect=["gate_side"]
-)
-def test_migrate_edge_cases(spark, case, gate_side):
+def _migrate_case(spark, case):
+    """(merged {id: community}, wanted) for MIGRATE_CASES[case]."""
     d_assign, d_attrs, at_assign, at_attrs, want = MIGRATE_CASES[case]
     assign_schema, attrs_schema = "id long, community long", "id long, text string"
     merged = migrate(
@@ -447,7 +445,25 @@ def test_migrate_edge_cases(spark, case, gate_side):
         local_df(spark, at_assign, assign_schema),
         local_df(spark, at_attrs, attrs_schema),
     )
-    assert {r["id"]: r["community"] for r in merged.collect()} == want
+    return {r["id"]: r["community"] for r in merged.collect()}, want
+
+
+@pytest.mark.parametrize(
+    "case,gate_side", on_both_sides(list(MIGRATE_CASES)), indirect=["gate_side"]
+)
+def test_migrate_edge_cases(spark, case, gate_side):
+    got, want = _migrate_case(spark, case)
+    assert got == want
+
+
+def test_migrate_counted_above_gate_runs_distributed(spark, monkeypatch):
+    """Member rows counted above the row bound: the distributed remap
+    reads the same cache, gives the same table, and nothing stays cached."""
+    monkeypatch.setattr(gate, "ONE_BLOCK_MAX_EDGES", 1)
+    before = cached_rdds(spark)
+    got, want = _migrate_case(spark, "singleton_orphan_threshold")
+    assert got == want
+    assert cached_rdds(spark) <= before
 
 
 def test_migrate_synth_day_same_on_both_sides(spark, monkeypatch):
