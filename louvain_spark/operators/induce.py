@@ -76,7 +76,7 @@ def membership(
     )
 
 
-def entity_vertices(mem: DataFrame, rank_partitions: int = 64) -> DataFrame:
+def entity_vertices(mem: DataFrame) -> DataFrame:
     """Distinct entities with stable dense ids (sorted-name rank, 0-based).
 
     Uses the shared two-phase distributed rank (plans/rank.py) — exactly
@@ -86,7 +86,7 @@ def entity_vertices(mem: DataFrame, rank_partitions: int = 64) -> DataFrame:
     from louvain_spark.plans.rank import dense_sorted_rank
 
     ents = mem.select("entity", "etype").distinct()
-    return dense_sorted_rank(ents, "entity", partitions=rank_partitions).select(
+    return dense_sorted_rank(ents, "entity").select(
         "id", F.col("entity").alias("name"), F.col("etype").alias("vtype")
     )
 

@@ -165,12 +165,29 @@ def repetition_scores(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    impl: str = "arrow",
 ) -> DataFrame:
-    """Gopher-style repetition signals per document — Arrow-batched
-    kernel by default (guide §4.2), with the original pure-Catalyst
-    expression form retained as impl='expr' (the semantics spec and the
-    parity-test twin; the DuckDB oracle replays that form).
+    """Gopher-style repetition signals per document (Rae et al. 2021,
+    "Scaling Language Models", table A1 family; reference analog: the
+    doc-quality pruning the reference's curation scripts perform by hand),
+    as an Arrow-batched kernel (guide §4.2).
+
+    Output: (doc_id, n_lines, n_words, dup_line_frac, dup_line_char_frac,
+    top_bigram_char_frac, dup_5gram_frac) where
+
+    - dup_line_frac        = 1 - distinct_lines / lines (count-weighted)
+    - dup_line_char_frac   = repeated-occurrence line chars / total line chars
+    - top_bigram_char_frac = max over distinct word-bigrams of
+                             occurrences * bigram_token_chars, / total token
+                             chars. Deliberately deterministic under count
+                             ties (maximizes count*chars, not count alone);
+                             can exceed 1.0 under heavy overlap — it is a
+                             repetition score, not a probability.
+    - dup_5gram_frac       = 1 - distinct_5grams / total_5grams
+
+    Lines are the non-empty pieces of the text split on newlines, tokens
+    are TOKEN_RE matches, and a null text counts as empty. The
+    pure-Catalyst expression form that the DuckDB oracle replays lives in
+    tests/oracle/repetition_ref.py as the semantics spec.
 
     Why a Python kernel here, against the repo's JVM-first bias:
     Catalyst higher-order functions (transform/aggregate/array_sort
@@ -185,13 +202,7 @@ def repetition_scores(
     Python agree on the ASCII token regex (parity pinned by
     tests over unicode/newline/empty/null edge cases and the driver's
     repetition_docs oracle hash).
-
-    See _repetition_scores_expr for the signal definitions.
     """
-    if impl == "expr":
-        return _repetition_scores_expr(docs, id_col, text_col)
-    if impl != "arrow":
-        raise ValueError(f"unknown repetition_scores impl: {impl!r}")
     from pyspark.sql import types as T
 
     from louvain_spark.plans.fanout import apply_scan_fanout
@@ -263,88 +274,3 @@ def repetition_scores(
             )
 
     return sel.mapInPandas(gen, schema)
-
-
-def _repetition_scores_expr(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Gopher-style repetition signals per document (Rae et al. 2021,
-    "Scaling Language Models", table A1 family; reference analog: the
-    doc-quality pruning the reference's curation scripts perform by hand).
-
-    Output: (doc_id, n_lines, n_words, dup_line_frac, dup_line_char_frac,
-    top_bigram_char_frac, dup_5gram_frac) where
-
-    - dup_line_frac        = 1 - distinct_lines / lines (count-weighted)
-    - dup_line_char_frac   = repeated-occurrence line chars / total line chars
-    - top_bigram_char_frac = max over distinct word-bigrams of
-                             occurrences * bigram_token_chars, / total token
-                             chars. Deliberately deterministic under count
-                             ties (maximizes count*chars, not count alone);
-                             can exceed 1.0 under heavy overlap — it is a
-                             repetition score, not a probability.
-    - dup_5gram_frac       = 1 - distinct_5grams / total_5grams
-
-    Scale note: every signal is computed ROW-LOCALLY with array HOFs
-    (split / transform / aggregate / array_distinct) — no explode, no
-    groupBy, zero shuffle. A per-document statistic that shuffles per
-    token would be the dominant stage at 100 TB; this one is a pure map.
-    The top-bigram count uses an O(n log n) sort + single-pass fold, not
-    an O(n*distinct) filter-per-element scan, so 100k-token documents
-    stay linear-ish per row.
-    """
-    t = F.coalesce(F.col(text_col), F.lit(""))
-    # --- lines -----------------------------------------------------------
-    lines = F.filter(F.split(t, r"\n"), lambda x: F.length(x) > 0)
-    nl = F.size(lines)
-    dl = F.size(F.array_distinct(lines))
-    sum_chars = lambda arr: F.aggregate(  # noqa: E731
-        arr, F.lit(0).cast("long"), lambda acc, x: acc + F.length(x)
-    )
-    line_chars = sum_chars(lines)
-    dline_chars = sum_chars(F.array_distinct(lines))
-    # --- word n-grams ----------------------------------------------------
-    toks = F.regexp_extract_all(t, F.lit(TOKEN_RE), 0)
-    nw = F.size(toks)
-    word_chars = sum_chars(toks)
-    ngrams = lambda n: F.when(  # noqa: E731
-        nw >= n,
-        F.transform(
-            F.sequence(F.lit(1), nw - (n - 1)),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    bi = ngrams(2)
-    five = ngrams(5)
-    n5 = F.size(five)
-    d5 = F.size(F.array_distinct(five))
-    # max over distinct bigrams of count*token_chars: sort, then one fold
-    # tracking the current run; token chars of 'a b' = length - 1 space.
-    top_bi = F.aggregate(
-        F.array_sort(bi),
-        F.struct(
-            F.lit("").alias("prev"),
-            F.lit(0).cast("long").alias("run"),
-            F.lit(0).cast("long").alias("best"),
-        ),
-        lambda acc, x: F.struct(
-            x.alias("prev"),
-            F.when(x == acc.prev, acc.run + 1).otherwise(F.lit(1).cast("long")).alias("run"),
-            F.greatest(
-                acc.best,
-                F.when(x == acc.prev, acc.run + 1).otherwise(F.lit(1).cast("long"))
-                * (F.length(x) - 1).cast("long"),
-            ).alias("best"),
-        ),
-        lambda acc: acc.best,
-    )
-    g = lambda d: F.greatest(d, F.lit(1)).cast("double")  # noqa: E731
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
-        nl.alias("n_lines"),
-        nw.alias("n_words"),
-        ((nl - dl) / g(nl)).alias("dup_line_frac"),
-        ((line_chars - dline_chars) / g(line_chars)).alias("dup_line_char_frac"),
-        (top_bi / g(word_chars)).alias("top_bigram_char_frac"),
-        ((n5 - d5) / g(n5)).alias("dup_5gram_frac"),
-    )

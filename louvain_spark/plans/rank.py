@@ -23,13 +23,18 @@ def dense_sorted_rank(
     df: DataFrame,
     order_col: str,
     id_col: str = "id",
-    partitions: int = 64,
     checkpoint: bool = True,
 ) -> DataFrame:
     """Add `id_col` = 0-based global rank of `order_col` (ascending).
 
     Input rows must be distinct on order_col for the rank to be a dense id
     (callers pass dictionaries, which are). Output keeps all input columns.
+
+    The range exchange takes its partition count from the session
+    (spark.sql.shuffle.partitions), and AQE coalesces it like any other
+    shuffle, so the rank is sized by the session rather than a constant.
+    Coalesced partitions are adjacent ranges, so the offsets below still
+    follow the sort order.
     """
     # cache the (small) dictionary: the range partitioner runs a separate
     # sampling job over its input, which would otherwise re-execute the
@@ -43,7 +48,7 @@ def dense_sorted_rank(
     # recomputed: lost blocks FAIL the job instead, and are freed with
     # the frame (no persist leak in either checkpoint branch).
     parts = (
-        src.repartitionByRange(partitions, order_col)
+        src.repartitionByRange(order_col)
         .sortWithinPartitions(order_col)
         .withColumn("_pid", F.spark_partition_id())
         .localCheckpoint(eager=True)
@@ -54,8 +59,9 @@ def dense_sorted_rank(
     # former driver-side counts collect() was a separate blocking job +
     # python round-trip per rank call (~0.2s each, and every dictionary
     # build pays it); the offsets table rides the consumer's own action
-    # as a broadcast build instead. The single-task window is over at
-    # most `partitions` rows — a user parameter, never data-sized.
+    # as a broadcast build instead. The single-task window is over one
+    # row per range partition — at most spark.sql.shuffle.partitions,
+    # never data-sized.
     cnts = parts.groupBy("_pid").agg(F.count(F.lit(1)).alias("_cnt"))
     a, b = cnts.alias("_ra"), cnts.alias("_rb")
     offs = (

@@ -76,27 +76,27 @@ def cluster_centroids(
     attrs: DataFrame,
     text_col: str = "text",
     dim: int = 64,
-    wide_agg: bool | None = None,
 ) -> DataFrame:
     """(community, centroid) — mean of member text features, re-normalized.
 
     attrs: (id, <text_col>) vertex attributes. The deterministic stand-in
-    for the reference's per-cluster why/what embeddings. wide_agg overrides
-    the dim-based path choice (tests only); both paths are exact.
+    for the reference's per-cluster why/what embeddings. Above
+    WIDE_AGG_MAX_DIM the mean runs per index (posexplode); both paths are
+    exact.
 
     remap_kernel (_unit_centroids) mirrors this arithmetic in numpy for
     the one-task migration — float64 sums, the mean cast to float32,
     l2_normalize's norm — and must change with it.
     """
     texts = assignments.join(attrs, "id").select("community", F.col(text_col).alias("_text"))
-    return _centroids(texts, dim, wide_agg)
+    return _centroids(texts, dim)
 
 
-def _centroids(texts: DataFrame, dim: int, wide_agg: bool | None = None) -> DataFrame:
+def _centroids(texts: DataFrame, dim: int) -> DataFrame:
     """cluster_centroids from (community, _text) member rows."""
     vec = featurize(F.coalesce(F.col("_text"), F.lit("")), dim=dim)
     member_vecs = texts.select("community", vec.alias("v"))
-    if wide_agg is False or (wide_agg is None and dim > WIDE_AGG_MAX_DIM):
+    if dim > WIDE_AGG_MAX_DIM:
         return _centroids_exploded(member_vecs)
     n = member_vecs.groupBy("community").agg(
         F.count(F.lit(1)).alias("n"),

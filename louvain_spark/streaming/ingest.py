@@ -109,149 +109,6 @@ def compact_increments(spark: SparkSession, increments_dir: str) -> tuple[DataFr
     return verts, edges
 
 
-def stream_windowed_rates(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    available_now: bool = True,
-):
-    """Watermarked event-time windowed aggregation over the transcript
-    stream: per (window, role) turn counts in APPEND mode.
-
-    The canonical Structured Streaming shape for late data: rows later
-    than `watermark` behind the max event time are dropped by the engine,
-    and a window's row is emitted exactly once — when the watermark
-    passes its end (finalized) — so the parquet sink only ever holds
-    closed windows. Complements foreachBatch ingestion
-    (stream_edge_increments), whose exactness contract is restored at
-    compaction instead.
-    """
-    stream = (
-        spark.readStream.schema(TRANSCRIPTS)
-        .option("maxFilesPerTrigger", 16)
-        .parquet(input_dir)
-    )
-    agg = (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("win"), F.col("role"))
-        .agg(F.count(F.lit(1)).alias("n_turns"))
-        .select(
-            F.col("win.start").alias("win_start"),
-            F.col("win.end").alias("win_end"),
-            "role",
-            "n_turns",
-        )
-    )
-    writer = (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def stream_conversation_state(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-):
-    """Custom stateful streaming operator (applyInPandasWithState):
-    per-conversation running session state — turn count, tool-turn count,
-    first/last event time — carried across micro-batches in the state
-    store and emitted in UPDATE mode after every batch that touches the
-    conversation (batch_id-stamped parquet via foreachBatch; readers take
-    the max-batch_id row per conversation).
-
-    This is the engine's canonical "operator Spark lacks, expressed as
-    Arrow-batched stateful logic" shape (SURVEY.md §2.9): state is a flat
-    numeric tuple (timestamps as epoch micros — the state store holds no
-    tz-sensitive types), updates are pandas-vectorized, and grouping keys
-    shuffle once per micro-batch.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    # fail fast instead of silently shifting first_us/last_us: the state
-    # kernel's epoch-micros arithmetic is only correct under the engine's
-    # UTC session contract (see the utc=True note below)
-    tz = spark.conf.get("spark.sql.session.timeZone")
-    if tz != "UTC":
-        raise ValueError(
-            f"stream_conversation_state requires spark.sql.session.timeZone=UTC "
-            f"(got {tz!r}); build the session via louvain_spark.get_spark or set "
-            f"the conf before starting the stream"
-        )
-
-    out_schema = (
-        "conv_id string, n_turns long, n_tool_turns long, "
-        "first_us long, last_us long"
-    )
-    state_schema = "n_turns long, n_tool_turns long, first_us long, last_us long"
-
-    def update(key, pdfs, state: GroupState):
-        n, nt, first, last = state.get if state.exists else (0, 0, None, None)
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            n += len(pdf)
-            nt += int(pdf["tool"].notna().sum())
-            # utc=True: Arrow hands the kernel tz-naive timestamps in the
-            # SESSION time zone; the engine pins UTC (session.py), under
-            # which naive==UTC and .value//1000 is true epoch micros. A
-            # caller-built session MUST also set
-            # spark.sql.session.timeZone=UTC for these state values to be
-            # unix times.
-            ts = pd.to_datetime(pdf["ts"], utc=True)
-            mn = int(ts.min().value // 1000)
-            mx = int(ts.max().value // 1000)
-            first = mn if first is None else min(first, mn)
-            last = mx if last is None else max(last, mx)
-        state.update((n, nt, first, last))
-        yield pd.DataFrame(
-            {
-                "conv_id": [key[0]],
-                "n_turns": [n],
-                "n_tool_turns": [nt],
-                "first_us": [first],
-                "last_us": [last],
-            }
-        )
-
-    stream = (
-        spark.readStream.schema(TRANSCRIPTS)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(input_dir)
-    )
-    stateful = stream.groupBy("conv_id").applyInPandasWithState(
-        update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-    )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # no isEmpty() pre-check: that would execute the stateful plan
-        # (state-store load + Python kernel) a second time per batch — an
-        # empty append is far cheaper than a duplicate execution
-        batch_df.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(output_dir)
-
-    writer = (
-        stateful.writeStream.outputMode("update")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def stream_dedup_docs(
     spark: SparkSession,
     input_dir: str,

@@ -184,8 +184,8 @@ def test_strip_boilerplate_offender_join_broadcast_gate(spark, monkeypatch):
 
 
 def test_repetition_scores_arrow_matches_expr(spark):
-    """The Arrow batch kernel (default) must reproduce the Catalyst
-    expression form bit-for-bit — including unicode/multibyte text
+    """The Arrow batch kernel must reproduce the Catalyst expression spec
+    (tests/oracle/repetition_ref.py) bit-for-bit — including unicode/multibyte text
     (code-point lengths), astral-plane chars, apostrophe tokens,
     newline-only and null/empty docs, and <2/<5-token edges."""
     rows = [
@@ -202,8 +202,8 @@ def test_repetition_scores_arrow_matches_expr(spark):
         (11, "𝄞clef 𝄞clef text text text text"),
     ]
     df = spark.createDataFrame(rows, "doc_id int, text string")
-    from louvain_spark.operators.textstats import repetition_scores as rs
+    from tests.oracle.repetition_ref import repetition_scores_expr
 
-    a = {r["doc_id"]: r.asDict() for r in rs(df, impl="arrow").collect()}
-    b = {r["doc_id"]: r.asDict() for r in rs(df, impl="expr").collect()}
+    a = {r["doc_id"]: r.asDict() for r in repetition_scores(df).collect()}
+    b = {r["doc_id"]: r.asDict() for r in repetition_scores_expr(df).collect()}
     assert a == b

@@ -122,24 +122,52 @@ def test_dense_sorted_rank_matches_global_sort_and_stays_partitioned(spark):
     """The two-phase rank (plans/rank.py) must equal the single-partition
     Window.orderBy rank exactly, with NO single-partition exchange in its
     plan — the vertex dictionary path must never funnel through one task."""
-    from pyspark.sql import Window
-
     from louvain_spark.plans.rank import dense_sorted_rank
 
-    names = spark.range(0, 997).select(
+    names = _rank_names(spark)
+    got = dense_sorted_rank(names, "entity", checkpoint=False)
+    assert "SinglePartition" not in _plan(got), _plan(got)
+    assert _rows(got) == _rows(_window_rank(names))
+
+
+def test_dense_sorted_rank_offsets_across_range_partitions(spark):
+    """With AQE's coalescing off, the range exchange keeps the session's
+    shuffle partitions, so the per-partition offsets are exercised; the
+    rank must still equal the single-window rank."""
+    from louvain_spark.plans.rank import dense_sorted_rank
+
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        names = _rank_names(spark)
+        got = dense_sorted_rank(names, "entity")
+        assert got.rdd.getNumPartitions() > 1
+        assert _rows(got) == _rows(_window_rank(names))
+    finally:
+        spark.conf.set(key, old)
+
+
+def _rank_names(spark):
+    """997 distinct names, generated out of sort order."""
+    return spark.range(0, 997).select(
         F.concat(F.lit("e"), F.format_string("%05d", (F.col("id") * 7919) % 997)).alias(
             "entity"
         )
     ).distinct()
-    got = dense_sorted_rank(names, "entity", partitions=8, checkpoint=False)
-    want = names.select(
+
+
+def _window_rank(names):
+    from pyspark.sql import Window
+
+    return names.select(
         (F.row_number().over(Window.orderBy("entity")) - 1).cast("long").alias("id"),
         "entity",
     )
-    assert "SinglePartition" not in _plan(got), _plan(got)
-    got_rows = {(r["id"], r["entity"]) for r in got.collect()}
-    want_rows = {(r["id"], r["entity"]) for r in want.collect()}
-    assert got_rows == want_rows
+
+
+def _rows(df) -> set:
+    return {(r["id"], r["entity"]) for r in df.collect()}
 
 
 def test_lsh_ann_dedup_exchange_carries_only_ids(spark):

@@ -5,6 +5,7 @@ from pyspark.sql import functions as F
 
 from louvain_spark.operators.induce import cooccurrence_edges
 from louvain_spark.plans import gate
+from louvain_spark.streaming import incremental
 from louvain_spark.streaming.incremental import cluster_centroids, migrate
 from louvain_spark.streaming.ingest import compact_increments, stream_edge_increments
 from louvain_spark.synth import transcripts_df
@@ -56,7 +57,7 @@ def test_centroids_unit_norm(spark):
     assert abs(np.linalg.norm(v) - 1.0) < 1e-5
 
 
-def test_centroids_exploded_path_matches_wide(spark):
+def test_centroids_exploded_path_matches_wide(spark, monkeypatch):
     """dim>128 routes to the posexplode path (VERDICT r3 #4: 1024 per-index
     agg expressions stress Catalyst at the reference's real embedding dim).
     Both paths are exact — same centroids to float tolerance — and the
@@ -76,8 +77,11 @@ def test_centroids_exploded_path_matches_wide(spark):
         "id long, text string",
     )
     dim = 1024
+    # raise the switch above dim to force the per-index sum path
+    monkeypatch.setattr(incremental, "WIDE_AGG_MAX_DIM", dim + 1)
     wide = {r["community"]: r["centroid"]
-            for r in cluster_centroids(assign, attrs, dim=dim, wide_agg=True).collect()}
+            for r in cluster_centroids(assign, attrs, dim=dim).collect()}
+    monkeypatch.undo()
     expl = cluster_centroids(assign, attrs, dim=dim)  # auto-routes: dim > 128
     plan = expl._jdf.queryExecution().optimizedPlan().toString()
     assert "posexplode" in plan or "Generate" in plan
@@ -152,44 +156,6 @@ def test_migrate_subgraph_edges_and_orphans(spark):
     assert e == {(1, 2): 3.0, (10, 11): 7.0}
 
 
-def test_stream_windowed_rates_watermark(spark, tmp_path):
-    """Watermarked windowed aggregation: emitted rows are exactly the
-    batch per-(window, role) counts for FINALIZED windows (window end ≤
-    max event time − watermark); open windows are withheld."""
-    import datetime as dt
-
-    from louvain_spark.streaming.ingest import stream_windowed_rates
-
-    t = transcripts_df(spark, n_conv=300, seed=9)  # ts spans ~25h
-    in_dir, out_dir, ckpt = (str(tmp_path / d) for d in ("in", "out", "ck"))
-    t.repartition(8).write.mode("overwrite").parquet(in_dir)
-
-    q = stream_windowed_rates(
-        spark, in_dir, out_dir, ckpt, window="1 hour", watermark="2 hours"
-    )
-    q.awaitTermination(120)
-
-    got = {
-        (r["win_start"], r["role"]): r["n_turns"]
-        for r in spark.read.parquet(out_dir).collect()
-    }
-    max_ts = t.agg(F.max("ts")).collect()[0][0]
-    horizon = max_ts - dt.timedelta(hours=2)
-    batch = (
-        t.groupBy(F.window("ts", "1 hour").alias("win"), "role")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.col("win.start").alias("ws"), F.col("win.end").alias("we"), "role", "n"
-        )
-        .collect()
-    )
-    want = {(r["ws"], r["role"]): r["n"] for r in batch if r["we"] <= horizon}
-    open_windows = {(r["ws"], r["role"]) for r in batch if r["we"] > horizon}
-    assert got == want
-    assert not (set(got) & open_windows)
-    assert len(got) > 5
-
-
 def test_match_routing_above_gate_no_crossjoin(spark, monkeypatch):
     """VERDICT r2 #9: above BLOCKED_MATCH_ABOVE the matcher must use the
     cogrouped block nested-loop — no CartesianProduct/BroadcastNestedLoop
@@ -219,123 +185,6 @@ def test_match_routing_above_gate_no_crossjoin(spark, monkeypatch):
     got = {(r["query_id"], r["item_id"]) for r in blocked.collect()}
     want = {(r["query_id"], r["item_id"]) for r in brute.collect()}
     assert got == want
-
-
-def test_stream_conversation_state_across_batches(spark, tmp_path):
-    """applyInPandasWithState: running per-conversation state must survive
-    micro-batch boundaries (maxFilesPerTrigger=4 over 8 files forces >1
-    batch) and the final emitted row per conversation must equal the batch
-    aggregation over all turns."""
-    from louvain_spark.streaming.ingest import stream_conversation_state
-    from louvain_spark.synth import transcripts_df
-    from pyspark.sql import functions as F
-
-    t = transcripts_df(spark, preset="tiny")
-    inp = str(tmp_path / "in")
-    t.repartition(8).write.mode("overwrite").parquet(inp)
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    q = stream_conversation_state(spark, inp, out, ckpt)
-    q.awaitTermination(120)
-
-    res = spark.read.parquet(out)
-    w = __import__("pyspark.sql", fromlist=["Window"]).Window.partitionBy(
-        "conv_id"
-    ).orderBy(F.col("batch_id").desc())
-    final = (
-        res.withColumn("_rn", F.row_number().over(w))
-        .where("_rn = 1")
-        .select("conv_id", "n_turns", "n_tool_turns", "first_us", "last_us")
-    )
-    want = t.groupBy("conv_id").agg(
-        F.count(F.lit(1)).alias("n_turns"),
-        F.sum(F.col("tool").isNotNull().cast("long")).alias("n_tool_turns"),
-        (F.unix_micros(F.min("ts"))).alias("first_us"),
-        (F.unix_micros(F.max("ts"))).alias("last_us"),
-    )
-    got_rows = {r["conv_id"]: tuple(r)[1:] for r in final.collect()}
-    want_rows = {r["conv_id"]: tuple(r)[1:] for r in want.collect()}
-    assert got_rows == want_rows
-    # state genuinely crossed batches: at least one conversation was
-    # emitted in more than one micro-batch
-    multi = res.groupBy("conv_id").count().where("count > 1").count()
-    assert multi > 0
-
-
-def test_conversation_state_requires_utc(spark, tmp_path):
-    """ADVICE r3: the epoch-micros state contract is only valid under
-    spark.sql.session.timeZone=UTC — fail fast, don't silently shift."""
-    import pytest
-
-    from louvain_spark.streaming.ingest import stream_conversation_state
-
-    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
-    try:
-        with pytest.raises(ValueError, match="timeZone"):
-            stream_conversation_state(
-                spark, str(tmp_path / "in"), str(tmp_path / "out"),
-                str(tmp_path / "ck"),
-            )
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-
-
-def test_conversation_state_restart_parity(spark, tmp_path):
-    """r3 VERDICT #6 — the streaming analog of louvain resume-parity:
-    stop the stateful query after processing only part of the input,
-    restart from the SAME checkpoint with the rest of the files present,
-    and the final per-conversation state must equal (a) an uninterrupted
-    single run over everything and (b) the batch aggregation twin. This
-    exercises state-store recovery across query restarts."""
-    from louvain_spark.streaming.ingest import stream_conversation_state
-    from louvain_spark.synth import transcripts_df
-
-    t = transcripts_df(spark, preset="tiny").localCheckpoint(eager=True)
-    # split by TURN, not by conversation: every conversation has turns on
-    # both sides of the restart, so the restarted query must merge the
-    # recovered phase-1 state with phase-2 input (not just start fresh)
-    t1 = t.where(F.col("turn_idx") % 2 == 0)
-    t2 = t.where(F.col("turn_idx") % 2 == 1)
-
-    def final_state(out_dir):
-        from pyspark.sql import Window
-
-        res = spark.read.parquet(out_dir)
-        w = Window.partitionBy("conv_id").orderBy(F.col("batch_id").desc())
-        f = (
-            res.withColumn("_rn", F.row_number().over(w))
-            .where("_rn = 1")
-            .select("conv_id", "n_turns", "n_tool_turns", "first_us", "last_us")
-        )
-        return {r["conv_id"]: tuple(r)[1:] for r in f.collect()}
-
-    # interrupted run: phase 1 sees only half the conversations' files,
-    # the query drains (availableNow) and terminates = the "kill";
-    # phase 2 adds the remaining files and restarts from the checkpoint
-    inp = str(tmp_path / "in")
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ck")
-    t1.repartition(4).write.mode("append").parquet(inp)
-    stream_conversation_state(spark, inp, out, ckpt).awaitTermination(120)
-    t2.repartition(4).write.mode("append").parquet(inp)
-    stream_conversation_state(spark, inp, out, ckpt).awaitTermination(120)
-
-    # uninterrupted twin over the identical input dir
-    out2, ckpt2 = str(tmp_path / "out2"), str(tmp_path / "ck2")
-    stream_conversation_state(spark, inp, out2, ckpt2).awaitTermination(120)
-
-    want = {
-        r["conv_id"]: tuple(r)[1:]
-        for r in t.groupBy("conv_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_turns"),
-            F.sum(F.col("tool").isNotNull().cast("long")).alias("n_tool_turns"),
-            F.unix_micros(F.min("ts")).alias("first_us"),
-            F.unix_micros(F.max("ts")).alias("last_us"),
-        )
-        .collect()
-    }
-    restarted = final_state(out)
-    assert restarted == want
-    assert restarted == final_state(out2)
 
 
 def test_stream_dedup_docs_first_arrival_only(spark, tmp_path):
