@@ -2,11 +2,11 @@
 
 At or below plans/gate.ONE_BLOCK_MAX_EDGES input edges, the superstep
 operators skip their distributed loops. They ship edges, explicit
-vertices and any resume state as ONE applyInPandas group (one_block), and
-a numpy kernel iterates to the end inside that task. At that size every
-distributed superstep pays per-stage latency, not compute; the block
-layout with B = 1 is the in-memory half of the split in Hybrid Edge
-Partitioner (SIGMOD'21).
+vertices and any resume state as ONE applyInPandas group (one_block,
+through gate.one_task), and a numpy kernel iterates to the end inside
+that task. At that size every distributed superstep pays per-stage
+latency, not compute; the block layout with B = 1 is the in-memory half
+of the split in Hybrid Edge Partitioner (SIGMOD'21).
 
 Vertex ids map to indices through np.searchsorted over the sorted ids.
 Each kernel reproduces its distributed superstep exactly:
@@ -32,8 +32,10 @@ from typing import Callable, NamedTuple
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from louvain_spark.plans.gate import one_task
 
 _EDGE, _VERTEX, _STATE = 0, 1, 2
 
@@ -161,11 +163,11 @@ def one_block(
     value: str,
     value_type: str,
 ) -> tuple[DataFrame, int, float | None]:
-    """Run `kernel` over the whole graph in one applyInPandas task.
+    """Run `kernel` over the whole graph as one task (gate.one_task).
 
     edges(src, dst, w); vertices(id) or None; state(id, <value>) or None.
     value_type is "long" (a label) or "double" (a score). Returns (the
-    localCheckpointed result (id, <value>), the kernel's step count, its
+    snapshot (id, <value>, _steps, _metric), the kernel's step count, its
     metric); an empty graph gives no rows, 0 steps and None. Louvain's
     dendrogram tail (operators/louvain.py) runs through here too, with
     each node's min member vertex id as its long state.
@@ -202,7 +204,6 @@ def one_block(
                 F.lit(_STATE).alias("_k"),
             )
         )
-    packed = reduce(DataFrame.unionByName, parts).withColumn("_g", F.lit(0))
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         b = unpack(pdf)
@@ -213,12 +214,9 @@ def one_block(
             {"id": b.ids, value: vals, "_steps": steps, "_metric": metric}
         )
 
-    obs = Observation()
-    out = (
-        packed.groupBy("_g")
-        .applyInPandas(run, f"id long, {value} {value_type}, _steps long, _metric double")
-        .observe(obs, F.max("_steps").alias("steps"), F.max("_metric").alias("metric"))
-        .localCheckpoint(eager=True)
+    snap, got = one_task(
+        reduce(DataFrame.unionByName, parts), run,
+        f"id long, {value} {value_type}, _steps long, _metric double",
+        steps=F.max("_steps"), metric=F.max("_metric"),
     )
-    got = obs.get
-    return out.select("id", value), int(got["steps"] or 0), got["metric"]
+    return snap, int(got["steps"] or 0), got["metric"]

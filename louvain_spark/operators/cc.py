@@ -109,10 +109,11 @@ def connected_components(
         pairs = edges.select("src", "dst")
         if start_state is not None:
             pairs = pairs.unionByName(start_state.select("src", "dst"))
-        labels, steps, _ = one_block(
+        snap, steps, _ = one_block(
             pairs.withColumn("w", F.lit(1.0)), vertices, None, cc_block,
             "component", "long",
         )
+        labels = snap.select("id", "component")
         stars = labels.where(F.col("id") != F.col("component")).select(
             F.col("component").alias("src"), F.col("id").alias("dst")
         )

@@ -30,45 +30,23 @@ from pyspark.sql import functions as F
 from louvain_spark.plans.gate import broadcast_or_shuffle
 
 
-def membership(
-    transcripts: DataFrame,
-    include_conv: bool = True,
-    include_role: bool = True,
-    include_tool: bool = True,
-) -> DataFrame:
-    """Explode transcripts into (conv_id, turn_idx, entity, etype) rows.
+def membership(transcripts: DataFrame) -> DataFrame:
+    """Explode transcripts into (conv_id, turn_idx, entity, etype) rows:
+    the turn's tool (when not null), its role and its conversation.
 
     The analog of the reference's What→entity edges
     (/root/reference/tool/upload.py:118-163), done with explode over a
     struct array — pure Catalyst, no Python.
     """
-    if not (include_conv or include_role or include_tool):
-        raise ValueError("at least one entity family must be included")
-    parts = []
-    if include_tool:
-        parts.append(
-            F.when(
-                F.col("tool").isNotNull(),
-                F.struct(
-                    F.concat(F.lit("tool:"), F.col("tool")).alias("entity"),
-                    F.lit("tool").alias("etype"),
-                ),
-            )
-        )
-    if include_role:
-        parts.append(
-            F.struct(
-                F.concat(F.lit("role:"), F.col("role")).alias("entity"),
-                F.lit("role").alias("etype"),
-            )
-        )
-    if include_conv:
-        parts.append(
-            F.struct(
-                F.concat(F.lit("conv:"), F.col("conv_id")).alias("entity"),
-                F.lit("conv").alias("etype"),
-            )
-        )
+    def entity(etype: str, col: str):
+        name = F.concat(F.lit(f"{etype}:"), F.col(col)).alias("entity")
+        return F.struct(name, F.lit(etype).alias("etype"))
+
+    parts = [
+        F.when(F.col("tool").isNotNull(), entity("tool", "tool")),
+        entity("role", "role"),
+        entity("conv", "conv_id"),
+    ]
     ent = F.explode(F.array(*parts)).alias("e")
     out = transcripts.select("conv_id", "turn_idx", ent)
     return out.where(F.col("e").isNotNull()).select(
@@ -111,9 +89,6 @@ def cooccurrence_edges(
     transcripts: DataFrame,
     vertices: DataFrame | None = None,
     window: int | None = None,
-    include_conv: bool = True,
-    include_role: bool = True,
-    include_tool: bool = True,
     salt_buckets: int = 256,
     salt_threshold: int = 65536,
     salt_target_pairs: int = 1 << 26,
@@ -151,7 +126,7 @@ def cooccurrence_edges(
     nb×. salt_buckets<=1 disables. The banded path needs no salting —
     its groups are O(window) by construction.
     """
-    mem = membership(transcripts, include_conv, include_role, include_tool)
+    mem = membership(transcripts)
     if vertices is None:
         vertices = entity_vertices(mem)
     m = _with_ids(mem, vertices).select("conv_id", "turn_idx", "id")

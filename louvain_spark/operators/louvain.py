@@ -83,7 +83,7 @@ from louvain_spark.operators._louvain_kernel import (
 from louvain_spark.operators.graph import vertex_ids
 from louvain_spark.plans import gate
 from louvain_spark.plans.gate import broadcast_or_shuffle
-from louvain_spark.plans.loop import StepResult, SuperstepRunner, stats_reset
+from louvain_spark.plans.loop import StepResult, SuperstepRunner, release, stats_reset
 
 
 class NoCheckpointError(ValueError):
@@ -104,23 +104,25 @@ def _normalize(edges: DataFrame, weight_col: str | None) -> DataFrame:
     return e.groupBy("src", "dst").agg(F.sum("w").alias("w"))
 
 
-def _renumber(assign: DataFrame) -> DataFrame:
-    """(id, community) → (id, community 0..k-1), first-appearance order over
-    ascending ids ≡ communities ranked by their min member id. The rank is
-    the two-phase distributed one (plans/rank.py) — the community-reps
-    table is |communities|-sized, which at level 0 of a big graph is still
-    far too large for a single-partition window."""
+def _renumber(assign: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """((id, community) → (id, community 0..k-1), the rank snapshot it
+    reads): first-appearance order over ascending ids ≡ communities ranked
+    by their min member id. The rank is the two-phase distributed one
+    (plans/rank.py) — the community-reps table is |communities|-sized,
+    which at level 0 of a big graph is still far too large for a
+    single-partition window."""
     from louvain_spark.plans.rank import dense_sorted_rank
 
     reps = assign.groupBy("community").agg(F.min("id").alias("_rep"))
-    remap = dense_sorted_rank(reps, "_rep", id_col="_new").select("community", "_new")
+    ranked = dense_sorted_rank(reps, "_rep", id_col="_new")
     # remap is |communities|-sized — at level 0 of a big graph worst-case
     # O(|V|), so the broadcast is count-gated like every other dimension
     # join (the count reads dense_sorted_rank's checkpoint blocks)
-    remap = broadcast_or_shuffle(remap, remap.count())
-    return assign.join(remap, "community").select(
+    remap = broadcast_or_shuffle(ranked.select("community", "_new"), ranked.count())
+    renumbered = assign.join(remap, "community").select(
         "id", F.col("_new").alias("community")
     )
+    return renumbered, ranked
 
 
 def _coarsen(edges: DataFrame, assign: DataFrame) -> DataFrame:
@@ -412,14 +414,16 @@ def _one_task(
         )
         return com, kept, mod
 
-    out, kept, mod = one_block(
+    snap, kept, mod = one_block(
         edges, nodes, nodes.select("id", F.col("rep").alias("community")),
         kernel, "community", "long",
     )
+    out = snap.select("id", "community")
     if mapping is not None:
         out = _compose(mapping, out)
     if kept:
         out = runner.advance(StepResult(out, metric=mod, steps=kept, one_block=True))
+        release(snap)
     return out, float(mod)
 
 
@@ -466,7 +470,7 @@ def _levels(
             if level > 0 and new_mod - mod < min_gain:
                 return mapping, float(mod)
         if not handoff:
-            assign = _renumber(assign)
+            assign, ranked = _renumber(assign)
         if mapping is None:  # level 0: coarsen from the checkpoint
             mapping = assign = runner.advance(StepResult(assign, metric=new_mod))
         else:
@@ -476,6 +480,8 @@ def _levels(
         edges, n_edges = _level_graph(
             spark, _coarsen(edges, assign), os.path.join(ckpt_base, f"edges-l{level + 1}")
         )
+        if not handoff:  # the level graph was the last frame to read it
+            release(ranked)
         ids, n, mod, level = None, n_next, new_mod, level + 1
     if mapping is None:
         nodes = ids.select("id", F.col("id").alias("rep"))

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from louvain_spark.operators._block_kernels import lpa_block, one_block
 from louvain_spark.operators.graph import symmetrize, vertex_ids
 from louvain_spark.plans.gate import broadcast_or_shuffle, fits_one_block
-from louvain_spark.plans.loop import StepResult, SuperstepRunner
+from louvain_spark.plans.loop import StepResult, SuperstepRunner, release
 
 
 def label_propagation(
@@ -68,18 +68,21 @@ def label_propagation(
     w = F.col(weight_col) if weight_col else F.lit(1.0)
     wedges = edges.select("src", "dst", w.cast("double").alias("w"))
     if fits_one_block(edges):
-        labels, steps, moved = one_block(
+        snap, steps, moved = one_block(
             wedges, vertices,
             None if start_state is None else start_state.select("id", "community"),
             partial(lpa_block, max_iter=max_iter), "community", "long",
         )
         # a fresh run also counts its initial state as superstep 0
-        return runner.advance(
+        labels = runner.advance(
             StepResult(
-                labels, moved=None if moved is None else int(moved),
+                snap.select("id", "community"),
+                moved=None if moved is None else int(moved),
                 steps=steps + (start_state is None), one_block=True,
             )
         )
+        release(snap)
+        return labels
     adj = symmetrize(wedges, "w").persist()
     adj.count()
     ids = vertex_ids(edges, vertices).persist()

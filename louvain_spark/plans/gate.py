@@ -1,5 +1,5 @@
 """The size gates: broadcast vs shuffle joins, one task vs supersteps,
-crossJoin vs blocked top-1 match.
+crossJoin vs blocked top-1 match; and the one-task harness behind them.
 
 A dimension table (vertex dictionary, per-vertex state, community remap,
 offender-key set, vocabulary) joins a much larger fact side. Below
@@ -80,11 +80,17 @@ costs less than the distributed path's stages. So both bounds stand.
 Tests and `tools/check_oracle.py --distributed` set ONE_BLOCK_MAX_EDGES
 and LOUVAIN_ONE_TASK_MAX_EDGES to 0, which turns every one-task path off,
 the migration's included.
+
+Every one-task path counts with observed() (a noop write: one scan stage,
+where count() adds an aggregate one), then runs one_task(): one group,
+snapshotted by an eager localCheckpoint that plans/loop.release frees.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 BROADCAST_MAX_ROWS = 4_000_000
@@ -101,16 +107,31 @@ def broadcast_or_shuffle(df: DataFrame, rows: int) -> DataFrame:
     return df.hint("shuffle_hash")
 
 
+def observed(df: DataFrame, **aggs: Column) -> dict:
+    """The aggregates `aggs` over df's rows, observed on a noop write."""
+    obs = Observation()
+    counted = df.observe(obs, *[a.alias(k) for k, a in aggs.items()])
+    counted.write.format("noop").mode("overwrite").save()
+    return obs.get
+
+
+def one_task(
+    df: DataFrame, fn: Callable, schema: str, **metrics: Column
+) -> tuple[DataFrame, dict]:
+    """(snapshot, metrics): fn over all of df's rows (plus the constant
+    group column _g) as one applyInPandas group, materialized by an eager
+    localCheckpoint, and the aggregates `metrics` over its output rows,
+    observed at the root of that action."""
+    out = df.withColumn("_g", F.lit(0)).groupBy("_g").applyInPandas(fn, schema)
+    obs = Observation()
+    if metrics:
+        out = out.observe(obs, *[a.alias(k) for k, a in metrics.items()])
+    return out.localCheckpoint(eager=True), obs.get if metrics else {}
+
+
 def fits_one_block(edges: DataFrame) -> bool:
     """Count the input edge rows; True when the graph runs as one task.
-
-    The count rides a no-op write as an observed metric: one scan stage,
-    where count() adds a second, aggregate stage. With the gate at 0
-    nothing is counted."""
+    With the gate at 0 nothing is counted."""
     if ONE_BLOCK_MAX_EDGES <= 0:
         return False
-    obs = Observation()
-    edges.observe(obs, F.count(F.lit(1)).alias("n")).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    return obs.get["n"] <= ONE_BLOCK_MAX_EDGES
+    return observed(edges, n=F.count(F.lit(1)))["n"] <= ONE_BLOCK_MAX_EDGES

@@ -17,6 +17,11 @@ such a run resumes only from before the kernel. Louvain's dendrogram tail
 mode) is one advance too, with steps = the levels it kept; a Louvain run
 resumes after a parallel level or before the tail, never inside it.
 
+Snapshots: unpersist() does not free an eager localCheckpoint; release()
+does. An operator releases each snapshot it made once nothing it returns
+reads it (a frame reading a released one fails, it does not recompute);
+the rest stay until JVM GC. The runner releases each state it replaces.
+
 The reference's ad-hoc resume story is its legacy-cluster reconciliation
 (/root/reference/tool/Neo4jLouvainProcessor.py:305-364); this replaces it
 with explicit per-superstep lineage.
@@ -31,6 +36,16 @@ from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+STATS_RESET_EVERY = 4  # localCheckpointed supersteps between stats_resets
+
+
+def release(df: DataFrame) -> None:
+    """Unpersist `df`; free its blocks if it is an eager localCheckpoint."""
+    df.unpersist()
+    plan = df._jdf.logicalPlan()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
 
 
 def stats_reset(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
@@ -82,9 +97,10 @@ class SuperstepRunner:
     otherwise every `checkpoint_every` supersteps the state is written to
     parquet and recorded in the ledger, enabling mid-iteration resume.
 
-    Every `stats_reset_every` consecutive localCheckpoints the state is
+    Every STATS_RESET_EVERY consecutive localCheckpoints the state is
     instead parquet-roundtripped through a session temp dir (see
-    stats_reset — not optional hygiene).
+    stats_reset — not optional hygiene). Each advance releases the state
+    the previous one returned.
 
     checkpoint_dir must be a local path (or a file:// URI): the ledger is
     written and its checkpoints' footers are read driver-side with
@@ -98,7 +114,6 @@ class SuperstepRunner:
         operator: str,
         checkpoint_dir: str | None = None,
         checkpoint_every: int = 1,
-        stats_reset_every: int = 4,
     ):
         if checkpoint_dir is not None:
             uri = urlparse(checkpoint_dir)
@@ -115,7 +130,6 @@ class SuperstepRunner:
         self.operator = operator
         self.checkpoint_dir = checkpoint_dir
         self.checkpoint_every = max(1, checkpoint_every)
-        self.stats_reset_every = max(1, stats_reset_every)
         self.superstep = -1
         self._ckpt_bucket = -1  # last superstep//checkpoint_every checkpointed
         self._persisted: DataFrame | None = None
@@ -239,9 +253,9 @@ class SuperstepRunner:
             state = stats_reset(self.spark, state, ckpt_path)
             self._ckpt_bucket = self.superstep // self.checkpoint_every
             self._local_since_reset = 0  # parquet roundtrip resets stats too
-        elif self._local_since_reset + ticks >= self.stats_reset_every:
+        elif self._local_since_reset + ticks >= STATS_RESET_EVERY:
             # alternate between two paths so a reset never overwrites the
-            # files backing the frame it is reading from (stats_reset_every=1)
+            # files backing the frame it is reading from (back-to-back resets)
             path = os.path.join(self._stats_reset_dir(), f"reset={self._resets % 2}")
             state = stats_reset(self.spark, state, path)
             self._resets += 1
@@ -262,7 +276,7 @@ class SuperstepRunner:
                 metric = float(vals[result.metric_key])
         self._append_ledger(self.superstep, moved, metric, wall_ms, ckpt_path)
         if self._persisted is not None:
-            self._persisted.unpersist()
+            release(self._persisted)
         self._persisted = state
         return state
 

@@ -18,12 +18,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from louvain_spark.plans.loop import release
+
 
 def dense_sorted_rank(
     df: DataFrame,
     order_col: str,
     id_col: str = "id",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Add `id_col` = 0-based global rank of `order_col` (ascending).
 
@@ -34,7 +35,7 @@ def dense_sorted_rank(
     (spark.sql.shuffle.partitions), and AQE coalesces it like any other
     shuffle, so the rank is sized by the session rather than a constant.
     Coalesced partitions are adjacent ranges, so the offsets below still
-    follow the sort order.
+    follow the sort order. The result is an eager localCheckpoint.
     """
     # cache the (small) dictionary: the range partitioner runs a separate
     # sampling job over its input, which would otherwise re-execute the
@@ -45,8 +46,7 @@ def dense_sorted_rank(
     # this exact layout, and a persisted frame whose cached blocks are
     # evicted would re-run the range sampler and may pick different
     # boundaries — silently wrong ids. Checkpoint blocks are never
-    # recomputed: lost blocks FAIL the job instead, and are freed with
-    # the frame (no persist leak in either checkpoint branch).
+    # recomputed: lost blocks FAIL the job instead.
     parts = (
         src.repartitionByRange(order_col)
         .sortWithinPartitions(order_col)
@@ -54,14 +54,10 @@ def dense_sorted_rank(
         .localCheckpoint(eager=True)
     )
     src.unpersist()
-    # per-partition offsets IN-PLAN (r7): a running sum over the ≤
-    # `partitions`-row count table, broadcast-joined back on _pid. The
-    # former driver-side counts collect() was a separate blocking job +
-    # python round-trip per rank call (~0.2s each, and every dictionary
-    # build pays it); the offsets table rides the consumer's own action
-    # as a broadcast build instead. The single-task window is over one
-    # row per range partition — at most spark.sql.shuffle.partitions,
-    # never data-sized.
+    # per-partition offsets in-plan, with no driver collect: a partition's
+    # offset is the row count of the partitions before it, from a table of
+    # one row per range partition (at most spark.sql.shuffle.partitions),
+    # broadcast back on _pid
     cnts = parts.groupBy("_pid").agg(F.count(F.lit(1)).alias("_cnt"))
     a, b = cnts.alias("_ra"), cnts.alias("_rb")
     offs = (
@@ -73,7 +69,6 @@ def dense_sorted_rank(
     out = parts.join(F.broadcast(offs), "_pid").select(
         (F.row_number().over(w) - 1 + F.col("_off")).cast("long").alias(id_col),
         *[c for c in df.columns],
-    )
-    if checkpoint:
-        out = out.localCheckpoint(eager=True)
+    ).localCheckpoint(eager=True)
+    release(parts)
     return out

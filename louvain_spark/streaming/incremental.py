@@ -265,24 +265,16 @@ def _remap_one_task(members: DataFrame, dim, threshold, orphan_threshold) -> Dat
     gate.ONE_BLOCK_MAX_EDGES (the worker holds every member row)."""
     if gate.ONE_BLOCK_MAX_EDGES <= 0:
         return None
-    obs = Observation()
     day = F.col("_side") == 0
-    members.observe(
-        obs, F.count(F.when(day, 1)).alias("d"), F.count(F.when(~day, 1)).alias("a")
-    ).write.format("noop").mode("overwrite").save()
-    n_d, n_a = obs.get["d"], obs.get["a"]
+    n = gate.observed(members, d=F.count(F.when(day, 1)), a=F.count(F.when(~day, 1)))
+    n_d, n_a = n["d"], n["a"]
     if n_d * n_a > gate.BLOCKED_MATCH_ABOVE or n_d + n_a > gate.ONE_BLOCK_MAX_EDGES:
         return None
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         return remap_kernel(pdf, dim, threshold, orphan_threshold)
 
-    return (
-        members.withColumn("_g", F.lit(0))
-        .groupBy("_g")
-        .applyInPandas(run, "daily_community long, alltime_community long")
-        .localCheckpoint(eager=True)
-    )
+    return gate.one_task(members, run, "daily_community long, alltime_community long")[0]
 
 
 def remap_kernel(

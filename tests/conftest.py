@@ -58,14 +58,25 @@ def edges_df(spark, triples, weighted=True):
     return local_df(spark, rows, "src long, dst long, weight double")
 
 
-def cached_rdds(spark) -> set[int]:
-    """Ids of the persisted RDDs, except localCheckpoint ones: Spark frees
-    those when they are garbage-collected, not on unpersist."""
+def _persistent_rdds(spark, local_checkpoint: bool) -> set[int]:
     rdds = spark.sparkContext._jsc.getPersistentRDDs()
     return {
         int(i) for i in rdds.keySet()
-        if not rdds[i].rdd().getCreationSite().startswith("localCheckpoint")
+        if rdds[i].rdd().getCreationSite().startswith("localCheckpoint")
+        == local_checkpoint
     }
+
+
+def cached_rdds(spark) -> set[int]:
+    """Ids of the persisted RDDs, except localCheckpoint ones: those are
+    snapshots, which unpersist() does not free (plans/loop.release does;
+    otherwise they go when the JVM garbage-collects them)."""
+    return _persistent_rdds(spark, False)
+
+
+def local_checkpoints(spark) -> set[int]:
+    """Ids of the persisted localCheckpoint RDDs (see cached_rdds)."""
+    return _persistent_rdds(spark, True)
 
 
 def use_gate_side(monkeypatch, side: str) -> None:

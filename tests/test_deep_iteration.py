@@ -6,7 +6,7 @@ PRODUCTS of child sizes, so k joins/superstep compound the estimate
 exponentially until the optimizer hangs for minutes and dies with
 "BigInteger would overflow supported range" (r2 driver crash:
 pagerank_events at max_iter=30). The SuperstepRunner now parquet-
-roundtrips every stats_reset_every localCheckpoints; these tests run the
+roundtrips every STATS_RESET_EVERY localCheckpoints; these tests run the
 exact crash shape — NO checkpoint_dir, ≥30 supersteps — under a wall-time
 bound far below the pre-fix behavior (>7 min hang on a 20-vertex graph).
 

@@ -18,7 +18,7 @@ from louvain_spark.operators.cc import connected_components
 from louvain_spark.operators.louvain import louvain
 from louvain_spark.operators.lpa import label_propagation
 from louvain_spark.operators.pagerank import pagerank
-from louvain_spark.plans import gate
+from louvain_spark.plans import gate, loop
 from louvain_spark.plans.loop import SuperstepRunner
 from tests import graphs
 from tests.conftest import edges_df, use_gate_side, vertices_df
@@ -82,15 +82,16 @@ _RUNS = {
 
 
 @pytest.mark.parametrize("operator", list(_RUNS))
-def test_one_block_run_is_one_advance(spark, tmp_path, operator):
+def test_one_block_run_is_one_advance(spark, monkeypatch, tmp_path, operator):
     """Below the gate a run makes one runner advance that counts its
     iterations, writes one checkpoint, and skips the stats-reset roundtrip
-    (its plan has no chain of joins)."""
+    (its plan has no chain of joins), even with a reset due every step."""
+    monkeypatch.setattr(loop, "STATS_RESET_EVERY", 1)
     edges, n = graphs.g_ring_of_cliques(k=4, c=4)
     e, verts = _graph(spark, edges, n)
     d = str(tmp_path / "ck")
     run = _RUNS[operator]
-    runner = SuperstepRunner(spark, "one", operator, checkpoint_dir=d, stats_reset_every=1)
+    runner = SuperstepRunner(spark, "one", operator, checkpoint_dir=d)
     run(spark, e, verts, runner)
     ledger = spark.read.parquet(runner.ledger_path).select("superstep").distinct().collect()
     assert [r["superstep"] for r in ledger] == [runner.superstep]
@@ -99,7 +100,7 @@ def test_one_block_run_is_one_advance(spark, tmp_path, operator):
     assert runner.superstep >= 1
     assert operator != "pagerank" or runner.superstep == 7
 
-    local = SuperstepRunner(spark, "one", operator, stats_reset_every=1)
+    local = SuperstepRunner(spark, "one", operator)
     run(spark, e, verts, local)
     assert local.superstep == runner.superstep
     assert local._resets == 0 and local._tmp_dir is None

@@ -17,7 +17,7 @@ from louvain_spark.operators.induce import cooccurrence_edges
 from louvain_spark.operators.louvain import louvain
 from louvain_spark.synth import transcripts_df
 from tests import graphs
-from tests.conftest import cached_rdds, edges_df, use_gate_side
+from tests.conftest import cached_rdds, edges_df, local_checkpoints, use_gate_side
 
 
 BOUNDS = {"long": (-(2**63), 2**63 - 1), "int": (-(2**31), 2**31 - 1)}
@@ -77,25 +77,20 @@ def test_failed_sweep_leaves_nothing_cached(spark, monkeypatch):
     assert cached_rdds(spark) <= before
 
 
-def test_parallel_level_leaves_three_local_checkpoints(spark, monkeypatch):
+def test_parallel_level_leaves_one_local_checkpoint(spark, monkeypatch):
     """One distributed level and sweep: the sweep-0 state is read from the
-    cached degree table, so the only localCheckpoints left (freed when
-    garbage-collected, not on unpersist) are the renumbering rank's two
-    and the runner's result; nothing stays cached."""
+    cached degree table, the renumbering rank's snapshots are released
+    once the next level graph is written, and the runner's result is the
+    only localCheckpoint left; nothing stays cached."""
     use_gate_side(monkeypatch, "distributed")
     e = edges_df(spark, graphs.g_ring_of_cliques(k=8, c=5)[0])
-
-    def local_checkpoints() -> set[int]:
-        rdds = spark.sparkContext._jsc.getPersistentRDDs()
-        return {
-            int(i) for i in rdds.keySet()
-            if rdds[i].rdd().getCreationSite().startswith("localCheckpoint")
-        }
-
-    lc, cached = local_checkpoints(), cached_rdds(spark)
-    louvain(spark, e, mode="parallel", max_levels=1, parallel_opts={"max_sweeps": 1})
-    assert len(local_checkpoints() - lc) <= 3
+    lc, cached = local_checkpoints(spark), cached_rdds(spark)
+    assign, _ = louvain(
+        spark, e, mode="parallel", max_levels=1, parallel_opts={"max_sweeps": 1}
+    )
+    assert len(local_checkpoints(spark) - lc) == 1
     assert cached_rdds(spark) <= cached
+    assert assign.count() == 40
 
 
 def test_unknown_parallel_opt_is_rejected(spark):

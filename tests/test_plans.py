@@ -81,10 +81,10 @@ def test_renumber_remap_join_gated(spark, monkeypatch):
     assign = spark.createDataFrame(
         [(i, 100 + (i % 3) * 7) for i in range(30)], "id long, community long"
     )
-    small = lv._renumber(assign)
+    small, _ = lv._renumber(assign)
     assert "BroadcastHashJoin" in _plan(small)
     monkeypatch.setattr(gate, "BROADCAST_MAX_ROWS", 0)
-    big = lv._renumber(assign)
+    big, _ = lv._renumber(assign)
     plan = _plan(big)
     assert "BroadcastHashJoin" not in plan, plan
     assert re.search(r"ShuffledHashJoin|SortMergeJoin", plan), plan
@@ -118,15 +118,27 @@ def test_whole_stage_codegen_on_relational(spark):
     assert "isFinalPlan=true" in plan
 
 
-def test_dense_sorted_rank_matches_global_sort_and_stays_partitioned(spark):
+def test_dense_sorted_rank_matches_global_sort_and_stays_partitioned(spark, monkeypatch):
     """The two-phase rank (plans/rank.py) must equal the single-partition
     Window.orderBy rank exactly, with NO single-partition exchange in its
-    plan — the vertex dictionary path must never funnel through one task."""
+    plans — the vertex dictionary path must never funnel through one task.
+    Both plans are read as the rank snapshots them: the range partitions,
+    then the ranked rows."""
     from louvain_spark.plans.rank import dense_sorted_rank
 
     names = _rank_names(spark)
-    got = dense_sorted_rank(names, "entity", checkpoint=False)
-    assert "SinglePartition" not in _plan(got), _plan(got)
+    plans = []
+    snapshot = type(names).localCheckpoint
+
+    def spy(df, *args, **kwargs):
+        plans.append(_plan(df))
+        return snapshot(df, *args, **kwargs)
+
+    monkeypatch.setattr(type(names), "localCheckpoint", spy)
+    got = dense_sorted_rank(names, "entity")
+    assert len(plans) == 2
+    for plan in plans:
+        assert "SinglePartition" not in plan, plan
     assert _rows(got) == _rows(_window_rank(names))
 
 
