@@ -8,7 +8,7 @@ Run on a cluster (north_rule: `spark-submit --py-files`):
 or locally:
 
     python -m louvain_spark.cli induce  --input T --output E [--window 8]
-    python -m louvain_spark.cli louvain --input E --output A [--mode parallel]
+    python -m louvain_spark.cli louvain --input E --output A [--mode exact]
     python -m louvain_spark.cli cc|pagerank|lpa|triangles --input E --output O
     python -m louvain_spark.cli resume  --operator cc --run-id R --checkpoint-dir D --input E --output O
 
@@ -50,7 +50,7 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--window", type=int, default=8)
     p.add_argument("--resolution", type=float, default=1.0)
     p.add_argument("--seed", type=int, default=42)
-    p.add_argument("--mode", default="auto", choices=["exact", "parallel", "auto"])
+    p.add_argument("--mode", default="auto", choices=["exact", "auto"])
     p.add_argument("--weight-col", default="weight")
     p.add_argument("--max-iter", type=int, default=100)
     p.add_argument("--tol", type=float, default=1e-8)

@@ -23,23 +23,14 @@ from pyspark.sql.types import ArrayType, FloatType
 # Python's salted hash())
 _FNV_OFFSET = 14695981039346656037
 _FNV_PRIME = 1099511628211
-_MASK64 = (1 << 64) - 1
-
-
-def _fnv1a_bytes(data: bytes) -> int:
-    # python ints with explicit 64-bit wraparound (numpy uint64 emits
-    # overflow RuntimeWarnings on the intentional modular multiply)
-    h = _FNV_OFFSET
-    for b in data:
-        h = ((h ^ b) * _FNV_PRIME) & _MASK64
-    return h
 
 
 def fnv1a_masked(buf: np.ndarray, lens: np.ndarray) -> np.ndarray:
     """Vectorized FNV-1a over a padded uint8 matrix: row i hashes
     buf[i, :lens[i]]. One XOR-multiply pass per byte position across the
-    whole batch; bit-identical to _fnv1a_bytes per row (uint64 array ops
-    wrap silently — only scalar numpy ops warn). The single shared kernel
+    whole batch; bit-identical per row to the scalar FNV-1a definition,
+    tests/test_dedup_textstats._fnv1a_bytes (uint64 array ops wrap
+    silently — only scalar numpy ops warn). The single shared kernel
     behind the featurizer's short-text path and the SimHash token hash."""
     h = np.full(len(lens), _FNV_OFFSET, dtype=np.uint64)
     prime = np.uint64(_FNV_PRIME)
@@ -55,8 +46,8 @@ def featurize_batch(texts: pd.Series, dim: int = 64, ngram: int = 3) -> pd.Serie
     Fully vectorized across the batch: all texts' byte n-gram windows hash
     in `ngram` numpy passes over a padded byte matrix (one XOR-multiply
     per window byte position), then one scatter-add builds every vector.
-    Bit-identical to the scalar per-gram definition (_fnv1a_bytes), which
-    the tests pin.
+    Each window hashes as scalar FNV-1a over its bytes would (the
+    definition tests/test_dedup_textstats._fnv1a_bytes spells out).
     """
     if len(texts) == 0:
         return pd.Series([], dtype=object)

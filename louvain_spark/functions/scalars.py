@@ -1,5 +1,6 @@
-"""Scalar function library (SURVEY.md §2.7, F1–F16) — all JVM-side
-expressions, no Python in the hot path.
+"""Scalar column functions (SURVEY.md §2.7) — all JVM-side expressions, no
+Python in the hot path: vector unit-normalization (F7) and column-level
+JSON encode/decode (F14).
 
 Each helper mirrors a reference behavior (file:line cited per function);
 they compose into projections, so Catalyst folds constants and pushes
@@ -16,71 +17,6 @@ def _c(col: str | Column) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
-def normalize_separators(col, sep_from: str = "，", sep_to: str = ",") -> Column:
-    """F1: full-width → ASCII separator, then split
-    (/root/reference/tool/NewsProcessor.py:67)."""
-    return F.split(F.regexp_replace(_c(col), sep_from, sep_to), sep_to)
-
-
-def clean_entities(col) -> Column:
-    """F1+F2+T4: split on normalized commas, trim, drop empties, dedup,
-    sort, rejoin (/root/reference/tool/NewsProcessor.py:67-88)."""
-    arr = F.transform(normalize_separators(col), lambda x: F.trim(x))
-    arr = F.filter(arr, lambda x: x != "")
-    return F.array_join(F.array_sort(F.array_distinct(arr)), ",")
-
-
-def parse_who_triple(col, unknown: str = "未知") -> Column:
-    """F3: 'name-position-org' 3-way split with 2-way fallback →
-    struct(name, position, org); position defaults to `unknown`
-    (/root/reference/tool/NewsProcessor.py:76-81, tool/upload.py:108-145)."""
-    parts = F.split(_c(col), "-")
-    three = F.size(parts) >= 3
-    two = F.size(parts) == 2
-    return F.struct(
-        F.trim(parts[0]).alias("name"),
-        F.when(three, F.trim(parts[1])).otherwise(F.lit(unknown)).alias("position"),
-        F.when(three, F.trim(parts[2]))
-        .when(two, F.trim(parts[1]))
-        .otherwise(F.lit(None).cast("string"))
-        .alias("org"),
-    )
-
-
-def strip_city_suffix(col, suffix: str = "市") -> Column:
-    """F4: rstrip of a place suffix (/root/reference/tool/NewsProcessor.py:83-84)."""
-    return F.regexp_replace(_c(col), f"{suffix}+$", "")
-
-
-def md5_event_id(news_id, idx) -> Column:
-    """F5: '{news_id}-{md5(news_id_idx)[:8]}'
-    (/root/reference/tool/NewsProcessor.py:37-41)."""
-    return F.concat(
-        _c(news_id).cast("string"),
-        F.lit("-"),
-        F.substring(F.md5(F.concat_ws("_", _c(news_id), _c(idx))), 1, 8),
-    )
-
-
-# the reference tries ~10 formats then falls back to a reference date
-# (/root/reference/tool/NewsProcessor.py:43-59)
-DATE_FORMATS = [
-    "yyyy-MM-dd", "yyyy/MM/dd", "yyyy.MM.dd", "yyyyMMdd",
-    "yyyy-MM-dd HH:mm:ss", "yyyy/MM/dd HH:mm:ss",
-    "MM/dd/yyyy", "dd-MM-yyyy", "yyyy年MM月dd日", "MM-dd-yyyy",
-]
-
-
-def parse_date_multi(col, fallback: Column | None = None) -> Column:
-    """F6: multi-format date parse → DateType, NULL/fallback when no
-    format matches; emit with date_format(..., 'yyyy-MM-dd') to mirror
-    the reference's output shape."""
-    attempts = [F.try_to_timestamp(_c(col), F.lit(fmt)).cast("date") for fmt in DATE_FORMATS]
-    if fallback is not None:
-        attempts.append(fallback)
-    return F.coalesce(*attempts)
-
-
 def l2_normalize(col) -> Column:
     """F7: unit-normalize an array<float> column via HOFs
     (/root/reference/tool/Neo4jLouvainProcessor.py:96)."""
@@ -89,46 +25,8 @@ def l2_normalize(col) -> Column:
     return F.when(norm > 0, F.transform(v, lambda x: (x / norm).cast("float"))).otherwise(v)
 
 
-def cosine_sim(a, b) -> Column:
-    """F8: cosine of two unit vectors = dot product (HOF, no Python)."""
-    return F.aggregate(
-        F.zip_with(_c(a), _c(b), lambda x, y: x * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def weighted_blend(semantic, relation, w_sem: float = 0.7, w_rel: float = 0.3) -> Column:
-    """F9: 0.7·semantic + 0.3·relation
-    (/root/reference/tool/Neo4jLouvainProcessor.py:258-261)."""
-    return F.lit(w_sem) * _c(semantic) + F.lit(w_rel) * _c(relation)
-
-
-def minmax_normalize(col, mn, mx, degenerate: float = 0.5) -> Column:
-    """F11: (w-min)/(max-min) with 0.5 on degenerate range
-    (/root/reference/trach/Neo4jLouvainProcessor_old.py:148-158)."""
-    rng = _c(mx) - _c(mn)
-    return F.when(rng > 0, (_c(col) - _c(mn)) / rng).otherwise(F.lit(degenerate))
-
-
-def truncate_fields(df, limits: dict[str, int]):
-    """F13/P11: fixed-length truncation per column
-    (/root/reference/tool/NewsProcessor.py:211-220)."""
-    out = df
-    for name, n in limits.items():
-        out = out.withColumn(name, F.substring(F.col(name), 1, n))
-    return out
-
-
-def zero_vector_fallback(col, dim: int) -> Column:
-    """F16: NULL embedding → zero vector
-    (/root/reference/tool/TextProcessor.py:79)."""
-    return F.coalesce(_c(col), F.array_repeat(F.lit(0.0).cast("float"), dim))
-
-
 def json_encode(col) -> Column:
-    """F14: struct/map/array column → JSON string (column-level, not the
-    file-level read_json/write_json in sources/io.py). Spark's to_json is
+    """F14: struct/map/array column → JSON string. Spark's to_json is
     timestamp-aware (ISO-8601), the engine twin of the reference's
     datetime-handling JSON encoder (/root/reference/tool/NewsProcessor.py:28-31,
     /root/reference/thing copy.py:115-128)."""

@@ -24,7 +24,11 @@ import math
 import numpy as np
 
 MIN_GAIN = 1e-7
-BLOCK_TARGET = 64  # parallel levels: nodes per block
+# parallel levels: nodes per block; sweeps per level at most; a sweep
+# moving fewer than this fraction of the nodes ends the level
+BLOCK_TARGET = 64
+MAX_SWEEPS = 16
+MIN_MOVED_FRAC = 0.02
 
 
 def one_level_csr(
@@ -264,24 +268,19 @@ def xxhash64(x: np.ndarray, int32: bool = False, seed: int = 42) -> np.ndarray:
     return (h ^ (h >> np.uint64(32))).view(np.int64)
 
 
-def sweep_plan(
-    n: int,
-    cores: int,
-    n_blocks: int | None = None,
-    block_target: int = BLOCK_TARGET,
-    min_moved_frac: float = 0.02,
-) -> tuple[int, int]:
+def sweep_plan(n: int, cores: int, n_blocks: int | None = None) -> tuple[int, int]:
     """(blocks, stop count) of a parallel level over n nodes.
 
     Without an explicit n_blocks the blocks scale to the graph: coarse
     levels collapse to one block (sequential local moves, guaranteed
-    convergence), big ones fan out to one block per core. Sweeps stop
-    once one moves fewer than min_moved_frac of the nodes — negligible
-    modularity that the next level recovers — or, in one block, nothing.
+    convergence), big ones fan out to one block per core of BLOCK_TARGET
+    nodes or more. Sweeps stop once one moves fewer than MIN_MOVED_FRAC
+    of the nodes — negligible modularity that the next level recovers —
+    or, in one block, nothing.
     """
     if n_blocks is None:
-        n_blocks = max(1, min(cores, n // block_target))
-    return n_blocks, max(1, int(n * min_moved_frac)) if n_blocks > 1 else 1
+        n_blocks = max(1, min(cores, n // BLOCK_TARGET))
+    return n_blocks, max(1, int(n * MIN_MOVED_FRAC)) if n_blocks > 1 else 1
 
 
 def parallel_level_csr(
@@ -295,23 +294,22 @@ def parallel_level_csr(
     level: int,
     cores: int,
     int32: bool = False,
-    max_sweeps: int = 16,
-    **plan,
+    n_blocks: int | None = None,
 ) -> np.ndarray:
     """One parallel level over a whole level graph, sweep for sweep the
     distributed one (louvain._one_level_parallel).
 
     ids: sorted node ids, the values the blocks hash (int32: as Spark
     hashes an int column); s/d: canonical edges as indices into ids,
-    self-loops kept; w: weights; m: total weight. plan: sweep_plan's
-    keyword arguments. Block b holds the symmetric non-loop rows whose
+    self-loops kept; w: weights; m: total weight; n_blocks: as in
+    sweep_plan. Block b holds the symmetric non-loop rows whose
     src hashes to b (pmod(xxhash64(src), blocks)). Each sweep tags them
     with the sweep-start communities and Σ_tot, runs block_local_moves
     per block and only then applies every block's moves. Returns the
     community per node, labelled by a member's index.
     """
     n = len(ids)
-    n_blocks, min_moved = sweep_plan(n, cores, **plan)
+    n_blocks, min_moved = sweep_plan(n, cores, n_blocks)
     loop = s == d
     heads = np.concatenate([s[~loop], d[~loop]])
     tails = np.concatenate([d[~loop], s[~loop]])
@@ -324,7 +322,7 @@ def parallel_level_csr(
     heads, tails, hw = heads[order], tails[order], hw[order]
     bounds = np.searchsorted(blk[order], np.arange(n_blocks + 1))
     com = np.arange(n)
-    for sweep in range(max_sweeps):
+    for sweep in range(MAX_SWEEPS):
         tot = np.bincount(com, weights=k, minlength=n)
         new = com.copy()
         moved = 0

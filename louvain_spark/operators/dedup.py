@@ -9,9 +9,9 @@ string minima — md5 is identical across engines, unlike xxhash64):
 - MinHash + LSH: shingle → per-seed min(md5(seed‖shingle)) signature →
   band buckets via md5(band signature) → bucket join for candidates
 - SimHash: 64-bit signed-bit-sum signature via vectorized pandas UDF
-  (Arrow batches), Hamming-distance candidate filter
+  (Arrow batches)
 - embedding cosine near-dup: embedding_near_dup_pairs (exact blocked
-  top-k or LSH-bucketed approximate candidates, threshold filter)
+  top-k, threshold filter)
 
 Scale notes: every join here is keyed by content-derived digests, which
 hash-distribute uniformly (no skew salting needed except the shingle join,
@@ -192,9 +192,9 @@ def lsh_cluster_edges(
     (BENCH/dedup_10x_advisory.md).
 
     ONLY valid when candidates feed transitive clustering unverified
-    (near_dup_clusters). Per-pair verification (verify_threshold /
-    jaccard re-check) needs the real pairs: a verified star edge says
-    nothing about non-root member pairs, so use minhash_lsh_pairs there.
+    (near_dup_clusters). Per-pair verification (an exact Jaccard
+    re-check) needs the real pairs: a verified star edge says nothing
+    about non-root member pairs, so use minhash_lsh_pairs there.
     """
     bucket = _minhash_buckets(docs, num_hashes, bands, id_col, text_col, n)
     roots = bucket.groupBy("bucket").agg(F.min("doc_id").alias("src"))
@@ -213,14 +213,12 @@ def minhash_lsh_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 3,
-    verify_threshold: float | None = None,
 ) -> DataFrame:
     """Candidate near-dup pairs via banded MinHash-LSH.
 
     Signature split into `bands` bands of num_hashes/bands rows; docs
     sharing any band bucket (md5 of the band's mins) become a candidate
-    pair. verify_threshold, if set, re-checks candidates with exact
-    shingle Jaccard and filters.
+    pair.
 
     Pair volume is O(Σ bucket_size²) — at hot near-dup family shapes
     that is quadratic by spec (191M pairs at 1.5M docs / 320-doc
@@ -232,42 +230,9 @@ def minhash_lsh_pairs(
     bucket = _minhash_buckets(docs, num_hashes, bands, id_col, text_col, n)
     a = bucket.withColumnRenamed("doc_id", "src")
     b = bucket.withColumnRenamed("doc_id", "dst")
-    pairs = (
+    return (
         a.join(b, "bucket").where(F.col("src") < F.col("dst")).select("src", "dst").distinct()
     )
-    if verify_threshold is not None:
-        # exact Jaccard on the CANDIDATE pairs only — joining shingles to
-        # candidates keeps the verify cost O(|candidates|·|doc shingles|),
-        # never resurrecting the all-pairs shingle self-join LSH exists to
-        # avoid (VERDICT r1 #5 / ADVICE)
-        sh = shingles(docs, id_col, text_col, n)
-        sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-        src_sh = pairs.join(
-            sh.select(F.col("doc_id").alias("src"), "shingle"), "src"
-        )
-        inter = (
-            src_sh.join(
-                sh.select(F.col("doc_id").alias("dst"), "shingle"),
-                ["dst", "shingle"],
-            )
-            .groupBy("src", "dst")
-            .agg(F.count(F.lit(1)).alias("_inter"))
-        )
-        pairs = (
-            pairs.join(inter, ["src", "dst"], "left")
-            .join(sizes.select(F.col("doc_id").alias("src"), F.col("n_sh").alias("_na")), "src")
-            .join(sizes.select(F.col("doc_id").alias("dst"), F.col("n_sh").alias("_nb")), "dst")
-            .select(
-                "src",
-                "dst",
-                (
-                    F.coalesce("_inter", F.lit(0))
-                    / (F.col("_na") + F.col("_nb") - F.coalesce("_inter", F.lit(0)))
-                ).alias("jaccard"),
-            )
-            .where(F.col("jaccard") >= verify_threshold)
-        )
-    return pairs
 
 
 def fnv1a_hash_tokens(tokens) -> np.ndarray:
@@ -367,66 +332,12 @@ def simhash_signatures(
     return docs.select(F.col(id_col).alias("doc_id"), _simhash(F.col(text_col)).alias("simhash"))
 
 
-def simhash_pairs(
-    docs: DataFrame,
-    max_hamming: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """(src, dst, hamming) pairs within Hamming distance via block LSH.
-
-    The 64-bit signature splits into max_hamming+1 blocks: a pair within
-    distance d ≤ max_hamming differs in at most d blocks, so it must agree
-    on ≥1 of d+1 (pigeonhole) — candidate recall is exact by construction
-    for ANY max_hamming (the block count derives from the parameter; a
-    fixed 4-block split silently loses pairs at max_hamming ≥ 4).
-    """
-    n_blocks = int(max_hamming) + 1
-    if not 1 <= n_blocks <= 64:
-        raise ValueError(f"max_hamming must be in [0, 63], got {max_hamming}")
-    base, extra = divmod(64, n_blocks)
-    widths = [base + (1 if i < extra else 0) for i in range(n_blocks)]
-    offsets = [sum(widths[:i]) for i in range(n_blocks)]
-    sigs = simhash_signatures(docs, id_col, text_col).persist()
-    blocks = sigs.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.concat(
-                        F.lit(f"{i}:"),
-                        F.shiftrightunsigned(F.col("simhash"), offsets[i])
-                        .bitwiseAND(F.lit((1 << widths[i]) - 1))
-                        .cast("string"),
-                    )
-                    for i in range(n_blocks)
-                ]
-            )
-        ).alias("block"),
-    )
-    a = blocks.select(F.col("doc_id").alias("src"), F.col("simhash").alias("ha"), "block")
-    b = blocks.select(F.col("doc_id").alias("dst"), F.col("simhash").alias("hb"), "block")
-    cand = (
-        a.join(b, "block")
-        .where(F.col("src") < F.col("dst"))
-        .select("src", "dst", "ha", "hb")
-        .distinct()
-    )
-    out = cand.select(
-        "src", "dst", F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))).alias("hamming")
-    ).where(F.col("hamming") <= max_hamming)
-    return out
-
-
 def embedding_near_dup_pairs(
     embeddings: DataFrame,
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 50,
-    approximate: bool = False,
-    dim: int = 64,
 ) -> DataFrame:
     """(src, dst, sim) canonical near-duplicate pairs by embedding cosine.
 
@@ -434,13 +345,8 @@ def embedding_near_dup_pairs(
     generation is per-query top-k (each near-dup pair surfaces from
     either endpoint's top-k, so pairs with more than k neighbors above
     threshold are still found as long as either side lists the other).
-    approximate=True routes through the LSH-bucketed scale path
-    (similarity.cosine_topk_lsh) instead of the exact blocked join.
     """
-    from louvain_spark.operators.similarity import (
-        cosine_topk_blocked,
-        cosine_topk_lsh,
-    )
+    from louvain_spark.operators.similarity import cosine_topk_blocked
 
     norm = F.sqrt(
         F.aggregate(
@@ -448,7 +354,7 @@ def embedding_near_dup_pairs(
         )
     )
     # zero-norm guard (NULL-embedding fallbacks are zero vectors by
-    # contract, scalars.zero_vector_fallback): keep them as zero vectors
+    # contract): keep them as zero vectors
     # (sim 0 → below any threshold) instead of NaN-poisoning the top-k.
     # Double-precision normalize, matching the DuckDB oracle.
     unit = embeddings.select(
@@ -460,9 +366,8 @@ def embedding_near_dup_pairs(
         ).alias("vec"),
     )
     spark = embeddings.sparkSession
-    topk = (cosine_topk_lsh if approximate else cosine_topk_blocked)(
-        spark, unit, unit, k=k, min_sim=threshold, exclude_self=True,
-        **({"dim": dim} if approximate else {}),
+    topk = cosine_topk_blocked(
+        spark, unit, unit, k=k, min_sim=threshold, exclude_self=True
     )
     return (
         topk.select(
@@ -481,7 +386,7 @@ def near_dup_clusters(spark, pairs: DataFrame) -> DataFrame:
 
     The "keep one per near-duplicate cluster" action of a training-data
     dedup pipeline: `pairs` (src, dst) comes from any candidate generator
-    (minhash_lsh_pairs, simhash_pairs, ngram_jaccard_pairs,
+    (minhash_lsh_pairs, lsh_cluster_edges, ngram_jaccard_pairs,
     embedding_near_dup_pairs); the transitive closure runs through the
     skew-safe distributed connected-components operator (min-id label
     propagation — a 100 TB pair set never fits a driver-side union-find),

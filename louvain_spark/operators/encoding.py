@@ -115,8 +115,10 @@ def bigram_lm_scores(
     # and every downstream branch (bigram pairs twice, unigrams once)
     # reads the blocks instead of re-running the full-corpus regex
     # lineage — the r6 form executed it three times (ADVICE r6). Lazy:
-    # the first consumer's action materializes it; blocks are freed with
-    # the frame. Chosen over checkpointing a per-doc DISTINCT bigram
+    # the first consumer's action materializes it. The returned frame
+    # reads the snapshot, so its blocks stay until the JVM
+    # garbage-collects it (the lifetime rule in plans/loop.py).
+    # Chosen over checkpointing a per-doc DISTINCT bigram
     # count table (also evaluated): that form adds a (doc,w1,w2) shuffle
     # before the branches and measured 1.39s vs 1.07s for this form at
     # the bench corpus, with identical output.

@@ -24,10 +24,19 @@ Scale notes (10^12-turn design):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import math
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from louvain_spark.plans.gate import broadcast_or_shuffle
+
+# hub salting of the unwindowed pair join (cooccurrence_edges): a
+# conversation with more than SALT_THRESHOLD membership rows splits into
+# at most SALT_BUCKETS blocks of ~SALT_TARGET_PAIRS pair work each
+SALT_BUCKETS = 256
+SALT_THRESHOLD = 65536
+SALT_TARGET_PAIRS = 1 << 26
 
 
 def membership(transcripts: DataFrame) -> DataFrame:
@@ -51,6 +60,18 @@ def membership(transcripts: DataFrame) -> DataFrame:
     out = transcripts.select("conv_id", "turn_idx", ent)
     return out.where(F.col("e").isNotNull()).select(
         "conv_id", "turn_idx", F.col("e.entity").alias("entity"), F.col("e.etype").alias("etype")
+    )
+
+
+def heavy_keys(df: DataFrame, key_col: str, min_count: int) -> DataFrame:
+    """(key, count) of the keys with more than min_count rows — the
+    salting trigger of cooccurrence_edges' unwindowed self-join: a key
+    above the bound would put > min_count rows into one join group."""
+    return (
+        df.groupBy(key_col)
+        .count()
+        .where(F.col("count") > min_count)
+        .select(key_col, "count")
     )
 
 
@@ -89,9 +110,6 @@ def cooccurrence_edges(
     transcripts: DataFrame,
     vertices: DataFrame | None = None,
     window: int | None = None,
-    salt_buckets: int = 256,
-    salt_threshold: int = 65536,
-    salt_target_pairs: int = 1 << 26,
 ) -> tuple[DataFrame, DataFrame]:
     """Induce the canonical undirected co-occurrence edge table.
 
@@ -109,22 +127,23 @@ def cooccurrence_edges(
     output — into ONE conv_id join group, computed by one task (AQE's
     runtime skew-split did not rescue this shape in measurement:
     BENCH/skew_induce_r5.md). Conversations whose membership exceeds
-    salt_threshold rows (histogram pre-pass, plans/skew.heavy_keys —
-    the reference's 'histogram first' pattern) get 2-D blocked
-    self-joins: per conversation, nb = min(salt_buckets,
-    ceil(rows/sqrt(salt_target_pairs))) and each occurrence row gets a
+    SALT_THRESHOLD rows (histogram pre-pass, heavy_keys — the
+    reference's 'histogram first' pattern) get 2-D blocked self-joins:
+    per conversation, nb = min(SALT_BUCKETS,
+    ceil(rows/sqrt(SALT_TARGET_PAIRS))) and each occurrence row gets a
     block coordinate h = hash(id, turn_idx) % nb — the ROW, not just
     id, because a dominant entity (role:assistant on half the turns)
     would keep all its occurrences in one id-hash block. The left side
     holds (_ia = h, all _ib), the right (_ib = h, all _ia); joining on
     (conv, _ia, _ib) makes every pair meet exactly once at (h(a), h(b))
-    while per-task pair work is bounded at ~salt_target_pairs and
-    per-task input at ~2·rows/nb — independent of AQE. Results are
-    identical (pure plan change; duplicate (src,dst,conv) pair rows
-    from multi-turn entities existed unsalted too and the same distinct
-    absorbs them). Replication cost is explicit: each hot side travels
-    nb×. salt_buckets<=1 disables. The banded path needs no salting —
-    its groups are O(window) by construction.
+    while per-task pair work is bounded at ~SALT_TARGET_PAIRS and
+    per-task input at ~2·rows/nb — independent of AQE. Every other
+    conversation has nb = 1, a plain conv_id self-join. Results do not
+    depend on the salting (pure plan change; duplicate (src,dst,conv)
+    pair rows from multi-turn entities exist unsalted too and the same
+    distinct absorbs them). Replication cost is explicit: each hot side
+    travels nb×. The banded path needs no salting — its groups are
+    O(window) by construction.
     """
     mem = membership(transcripts)
     if vertices is None:
@@ -132,40 +151,31 @@ def cooccurrence_edges(
     m = _with_ids(mem, vertices).select("conv_id", "turn_idx", "id")
 
     if window is None:
-        if salt_buckets and salt_buckets > 1:
-            import math
-
-            from louvain_spark.plans.skew import heavy_keys
-
-            chunk = max(1.0, math.sqrt(float(salt_target_pairs)))
-            hot = heavy_keys(m, "conv_id", salt_threshold).select(
-                "conv_id",
-                F.least(
-                    F.lit(int(salt_buckets)),
-                    F.greatest(
-                        F.lit(2),
-                        F.ceil(F.col("count") / F.lit(chunk)).cast("int"),
-                    ),
-                ).alias("_nb"),
-            )
-            mt = m.join(F.broadcast(hot), "conv_id", "left").withColumn(
-                "_nb", F.coalesce("_nb", F.lit(1))
-            )
-            rowh = F.pmod(F.xxhash64("id", "turn_idx"), F.col("_nb")).cast("int")
-            blocks = F.explode(F.sequence(F.lit(0), F.col("_nb") - 1))
-            a = mt.select(
-                "conv_id", "id", rowh.alias("_ia"), blocks.alias("_ib")
-            ).alias("a")
-            b = mt.select(
-                "conv_id", "id", rowh.alias("_ib"), blocks.alias("_ia")
-            ).alias("b")
-            pairs = a.join(b, on=["conv_id", "_ia", "_ib"]).where(
-                F.col("a.id") < F.col("b.id")
-            )
-        else:
-            a = m.alias("a")
-            b = m.alias("b")
-            pairs = a.join(b, on="conv_id").where(F.col("a.id") < F.col("b.id"))
+        chunk = max(1.0, math.sqrt(SALT_TARGET_PAIRS))
+        hot = heavy_keys(m, "conv_id", SALT_THRESHOLD).select(
+            "conv_id",
+            F.least(
+                F.lit(SALT_BUCKETS),
+                F.greatest(
+                    F.lit(2),
+                    F.ceil(F.col("count") / F.lit(chunk)).cast("int"),
+                ),
+            ).alias("_nb"),
+        )
+        mt = m.join(F.broadcast(hot), "conv_id", "left").withColumn(
+            "_nb", F.coalesce("_nb", F.lit(1))
+        )
+        rowh = F.pmod(F.xxhash64("id", "turn_idx"), F.col("_nb")).cast("int")
+        blocks = F.explode(F.sequence(F.lit(0), F.col("_nb") - 1))
+        a = mt.select(
+            "conv_id", "id", rowh.alias("_ia"), blocks.alias("_ib")
+        ).alias("a")
+        b = mt.select(
+            "conv_id", "id", rowh.alias("_ib"), blocks.alias("_ia")
+        ).alias("b")
+        pairs = a.join(b, on=["conv_id", "_ia", "_ib"]).where(
+            F.col("a.id") < F.col("b.id")
+        )
     else:
         band = max(int(window), 1)  # window=0 → same-turn only; band by turn
         # 2-band replication (r7; was 3-band): the b side explodes only to
@@ -219,8 +229,8 @@ def cooccurrence_edges(
     # key; the final count has map-side combine. etypes (the reference's
     # COLLECT(DISTINCT type(r)), /root/reference/tool/Neo4jLouvainProcessor.py:202-203)
     # are pure functions of the endpoint vertices in this model, so they
-    # attach via two broadcast dictionary joins AFTER the wide aggregation
-    # instead of dragging two string columns through the pair shuffle.
+    # attach AFTER the wide aggregation instead of dragging two string
+    # columns through the pair shuffle.
     per_conv = proj.distinct()
     counts = per_conv.groupBy("src", "dst").agg(
         F.count(F.lit(1)).cast("double").alias("weight")
@@ -230,8 +240,9 @@ def cooccurrence_edges(
     # type): three boundary scalars replace two more 400k-row broadcast
     # builds. That only holds for entity_vertices-produced dictionaries —
     # validate (contiguous: per-type count == hi-lo+1, and ranges
-    # disjoint) and fall back to broadcast dictionary joins for caller-
-    # supplied vertex tables with other id assignments.
+    # disjoint) and fall back to two dictionary joins for caller-supplied
+    # vertex tables with other id assignments, gated on the dictionary's
+    # row count (the sum of the per-type counts collected here).
     stats = (
         vertices.groupBy("vtype")
         .agg(
@@ -261,14 +272,18 @@ def cooccurrence_edges(
             F.array_sort(F.array_distinct(F.array(_vt("src"), _vt("dst")))).alias("etypes"),
         )
     else:
-        vt_dim = vertices.select("id", "vtype")
+        n = sum(r["cnt"] for r in stats)
         edges = (
             counts.join(
-                F.broadcast(vt_dim.select(F.col("id").alias("src"), F.col("vtype").alias("_ts"))),
+                broadcast_or_shuffle(
+                    vertices.select(F.col("id").alias("src"), F.col("vtype").alias("_ts")), n
+                ),
                 "src",
             )
             .join(
-                F.broadcast(vt_dim.select(F.col("id").alias("dst"), F.col("vtype").alias("_td"))),
+                broadcast_or_shuffle(
+                    vertices.select(F.col("id").alias("dst"), F.col("vtype").alias("_td")), n
+                ),
                 "dst",
             )
             .select(
@@ -279,35 +294,6 @@ def cooccurrence_edges(
             )
         )
     return vertices, edges
-
-
-def turn_adjacency_edges(transcripts: DataFrame, vertices: DataFrame) -> DataFrame:
-    """Consecutive-turn tool-transition edges via lag window (SURVEY §2.5).
-
-    For each conversation ordered by turn_idx, link the tools of
-    consecutive tool-bearing turns; weight = distinct conversations.
-    """
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    t = transcripts.where(F.col("tool").isNotNull()).select(
-        "conv_id",
-        "turn_idx",
-        F.concat(F.lit("tool:"), F.col("tool")).alias("entity"),
-    )
-    t = t.withColumn("prev", F.lag("entity").over(w)).where(
-        F.col("prev").isNotNull() & (F.col("prev") != F.col("entity"))
-    )
-    dict_df = F.broadcast(vertices.select(F.col("name").alias("entity"), F.col("id").alias("_dst")))
-    dict_p = F.broadcast(vertices.select(F.col("name").alias("prev"), F.col("id").alias("_src")))
-    pairs = t.join(dict_df, "entity").join(dict_p, "prev").select(
-        F.least("_src", "_dst").alias("src"),
-        F.greatest("_src", "_dst").alias("dst"),
-        "conv_id",
-    )
-    return (
-        pairs.distinct()
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).cast("double").alias("weight"))
-    )
 
 
 def typed_edges(

@@ -9,32 +9,33 @@ weight_col: None reproduces that unweighted behavior; weight_col='weight'
 is the genuinely weighted mode of the older path
 (/root/reference/trach/Neo4jLouvainProcessor_old.py:184-198).
 
-Three local-move modes ('auto' composes the other two):
+Two modes:
 
 - mode='exact': the whole dendrogram runs as one applyInPandas task, the
   deterministic CSR kernel (_louvain_kernel.dendrogram_csr) looping
   local moves → renumber → coarsen over every level — bit-for-bit the
   sequential oracle's visit order, so partitions match exactly, not just
   modularity. Since coarsened graphs shrink geometrically, at 100TB scale
-  you run level 0 in parallel mode and switch to exact once the level
-  graph fits one block.
-
-- mode='parallel': Grappolo-style block-parallel local moves: nodes are
-  hash-partitioned into blocks sized to the graph (coarse levels collapse
-  to one block → sequential convergence); each sweep ships every block its
-  adjacency tagged with a sweep-start snapshot of assignments and Σ_tot,
-  and the block kernel runs sequential python-louvain moves to in-block
-  fixpoint, tracking local Σ_tot deltas. Sweep 0 activates all nodes
-  (bulk consolidation); later sweeps activate a deterministic
-  pseudo-random half to damp cross-block swap cycles; the loop stops when
-  a sweep moves <2% of nodes (min_moved_frac). Validated on modularity
-  (allclose vs oracle on order-invariant graphs) rather than exact
-  partition, which is order-dependent by nature.
+  you run level 0 in parallel and switch to exact once the level graph
+  fits one block.
 
 - mode='auto': parallel levels while the level graph has more than
-  auto_exact_max vertices (default block_target × defaultParallelism),
+  auto_exact_max vertices (default BLOCK_TARGET × defaultParallelism),
   then every remaining level exact — the executable form of the "run
-  level 0 in parallel, switch to exact" story.
+  level 0 in parallel, switch to exact" story. auto_exact_max=0 runs
+  every level parallel.
+
+A parallel level is Grappolo-style block-parallel local moves: nodes are
+hash-partitioned into blocks sized to the graph (coarse levels collapse
+to one block → sequential convergence); each sweep ships every block its
+adjacency tagged with a sweep-start snapshot of assignments and Σ_tot,
+and the block kernel runs sequential python-louvain moves to in-block
+fixpoint, tracking local Σ_tot deltas. Sweep 0 activates all nodes
+(bulk consolidation); later sweeps activate a deterministic pseudo-random
+half to damp cross-block swap cycles; the loop stops when a sweep moves
+<2% of nodes (_louvain_kernel.MIN_MOVED_FRAC). Validated on modularity
+(allclose vs oracle on order-invariant graphs) rather than exact
+partition, which is order-dependent by nature.
 
 Where the levels run: from the first level graph with at most
 gate.LOUVAIN_ONE_TASK_MAX_EDGES edges, or (exact levels) at most
@@ -45,8 +46,8 @@ blocks, sweep-start snapshots, RNG seeds and stopping rule — so the
 partition does not depend on the side of the gate (up to the summation
 order of non-integer weights). Above the gate each parallel level runs
 as distributed sweeps (_one_level_parallel), the only path for a graph
-that outgrows one task. So below the gate 'parallel' and 'auto' are one
-task end to end, like 'exact'.
+that outgrows one task. So below the gate 'auto' is one task end to end,
+like 'exact'.
 
 Level loop (all modes): renumber communities by first appearance over
 ascending node order (≡ rank by min member vertex id) → coarsen
@@ -72,9 +73,9 @@ from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ByteType, IntegerType, ShortType
 
+from louvain_spark.operators import _louvain_kernel
 from louvain_spark.operators._block_kernels import one_block
 from louvain_spark.operators._louvain_kernel import (
-    BLOCK_TARGET,
     MIN_GAIN,
     block_local_moves,
     dendrogram_csr,
@@ -142,7 +143,7 @@ def _coarsen(edges: DataFrame, assign: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# parallel mode: synchronous DataFrame sweeps
+# parallel levels: synchronous DataFrame sweeps
 # ---------------------------------------------------------------------------
 
 def _one_level_parallel(
@@ -154,10 +155,7 @@ def _one_level_parallel(
     level: int,
     ckpt_dir: str,
     n_nodes: int,
-    max_sweeps: int = 16,
     n_blocks: int | None = None,
-    block_target: int = BLOCK_TARGET,
-    min_moved_frac: float = 0.02,
     total_w: float | None = None,
 ) -> DataFrame:
     """Block-parallel local-move phase (Grappolo-style, the north-star shape).
@@ -168,17 +166,15 @@ def _one_level_parallel(
     (_louvain_kernel.block_local_moves — the same CSR/numpy construction as
     the exact kernel) runs sequential python-louvain moves to in-block
     fixpoint, tracking local Σ_tot deltas. Cross-block state refreshes
-    between sweeps; sweeps stop once one moves too few nodes (sweep_plan).
+    between sweeps; sweeps stop once one moves too few nodes (sweep_plan)
+    or after _louvain_kernel.MAX_SWEEPS.
     Order-dependent (as all parallel Louvain is) — validated on modularity
     + order-invariant graphs.
     Returns the level's assignment (id, community); the callers guarantee
     a total edge weight > 0. _louvain_kernel.parallel_level_csr runs the
     same sweeps over a whole level graph in one task.
     """
-    n_blocks, min_moved = sweep_plan(
-        n_nodes, spark.sparkContext.defaultParallelism, n_blocks, block_target,
-        min_moved_frac,
-    )
+    n_blocks, min_moved = sweep_plan(n_nodes, spark.sparkContext.defaultParallelism, n_blocks)
     e = edges.persist()
     loops = e.where(F.col("src") == F.col("dst")).select(
         F.col("src").alias("id"), F.col("w").alias("self_w")
@@ -243,7 +239,7 @@ def _one_level_parallel(
             )
             return pd.DataFrame({"id": moved_ids, "new_com": new_coms}).astype("int64")
 
-        for sweep in range(max_sweeps):
+        for sweep in range(_louvain_kernel.MAX_SWEEPS):
             # ONE combined per-vertex dimension per sweep — (id, community, k,
             # Σ_tot of its community) — joined twice (src side and dst side)
             # through TWO ALIASES OF THE IDENTICAL SUBTREE, both keyed on id:
@@ -340,13 +336,13 @@ def _one_level_parallel(
 # one task: every level from the first that fits, in one applyInPandas task
 # ---------------------------------------------------------------------------
 
-_SWEEP_OPTS = {"max_sweeps", "n_blocks", "block_target", "min_moved_frac"}
+_SWEEP_OPTS = {"n_blocks"}
 
 
 def _tail_max(spark: SparkSession, mode: str, popts: dict) -> float:
     """The largest level graph, in vertices, that runs exact levels: every
-    level in exact mode, none in parallel mode, auto_exact_max (popped
-    from popts) in auto mode. The other popts keys must be sweep options."""
+    level in exact mode, auto_exact_max (popped from popts) in auto mode.
+    The other popts keys must be sweep options."""
     auto_exact_max = popts.pop("auto_exact_max", None)
     if set(popts) - _SWEEP_OPTS:
         raise ValueError(
@@ -355,13 +351,11 @@ def _tail_max(spark: SparkSession, mode: str, popts: dict) -> float:
         )
     if mode == "exact":
         return math.inf
-    if mode == "parallel":
-        return -1
     if mode != "auto":
         raise ValueError(f"unknown louvain mode: {mode!r}")
     if auto_exact_max is not None:
         return auto_exact_max
-    return popts.get("block_target", BLOCK_TARGET) * spark.sparkContext.defaultParallelism
+    return _louvain_kernel.BLOCK_TARGET * spark.sparkContext.defaultParallelism
 
 
 def _level_graph(spark: SparkSession, edges: DataFrame, path: str) -> tuple[DataFrame, int]:
@@ -514,7 +508,7 @@ def louvain(
 
     mode='auto' is the executable form of the 100TB story: each dendrogram
     level runs parallel block sweeps while the level graph is larger than
-    auto_exact_max vertices (parallel_opts key; default block_target ×
+    auto_exact_max vertices (parallel_opts key; default BLOCK_TARGET ×
     defaultParallelism), and every level from the first that fits runs
     exact — coarse levels shrink geometrically, so the tail of the
     dendrogram converges sequentially instead of burning multi-block
@@ -522,8 +516,8 @@ def louvain(
     edges the parallel levels run in the same single task as the exact
     ones, with the partition the distributed sweeps give.
 
-    parallel_opts keys: auto_exact_max, and the sweep plan's max_sweeps,
-    n_blocks, block_target and min_moved_frac (_louvain_kernel.sweep_plan).
+    parallel_opts keys: auto_exact_max, and the sweep plan's n_blocks
+    (_louvain_kernel.sweep_plan).
     """
     popts = dict(parallel_opts or {})
     tail_max = _tail_max(spark, mode, popts)

@@ -227,11 +227,12 @@ def cosine_topk_blocked(
     """
     # snapshot both sides once (LAZY localCheckpoint): the block-sizing
     # counts and the cogroup would otherwise re-execute the callers' (often
-    # pandas-UDF) lineage 2x each. localCheckpoint instead of persist so
-    # repeated calls (bench loops, per-micro-batch near-dup) don't
-    # accumulate cached blocks — checkpoint blocks are freed with the
-    # frame. Lazy, not eager (r3 VERDICT #2): the sizing count() right
-    # below triggers materialization, so each side pays exactly ONE action;
+    # pandas-UDF) lineage 2x each. The returned frame reads both
+    # snapshots, so their blocks stay until the JVM garbage-collects them
+    # (the lifetime rule in plans/loop.py): unpersist() does not free a
+    # localCheckpoint, and releasing one here would break the result.
+    # Lazy, not eager (r3 VERDICT #2): the sizing count() right below
+    # triggers materialization, so each side pays exactly ONE action;
     # eager paid a full materialization pass plus a separate count job.
     q = queries.select(
         F.col(q_id).alias("query_id"), F.col(q_vec).alias("_qv")
@@ -417,7 +418,6 @@ def cosine_topk_lsh(
     min_sim: float | None = None,
     exclude_self: bool = True,
     max_bucket: int | None = None,
-    rerank: str = "bucket",
 ) -> DataFrame:
     """APPROXIMATE top-k cosine via sign-random-projection LSH.
 
@@ -433,83 +433,53 @@ def cosine_topk_lsh(
     planes) and, at max_bucket=None, fully SQL-expressible — the driver
     oracle replays it verbatim.
 
-    rerank picks where the exact dot runs; both produce IDENTICAL rows:
-    - 'bucket' (default): vectors ride the bucket shuffle (once per
-      table per vector) into cogrouped Arrow cells — one numpy matmul
-      per bucket cell emitting the cell's per-query top-k (exact: a
-      global top-k pair outranks all but <k candidates in any cell
-      containing it, and cross-table duplicates carry identical sims,
-      deduped by max) — so the only pair-wide exchange is the narrow
-      (query_id, item_id, sim) dedup groupBy, bounded at
-      |Q|·n_tables·k rows. Pair bytes: ~24·|Q|·n_tables·k +
-      n_tables·(|Q|+|I|)·dim_bytes. The scale default: on clustered/
-      near-dup corpora candidates per query ≫ 2·n_tables, and the r5
-      10× advisory measured the rejoin form at ~130 GB of shuffle for
-      600k clustered 64-dim vectors (killed two hosts' tmpfs) vs ~4 GB
-      for this form (r7: the former in-join JVM pair dot — 10M wide
-      join rows + interpreted HOF fold — measured 10.5s vs ~2s for the
-      cogrouped cells at the 30k bench shape). Neither side is
-      snapshotted here, so every action on the result (a count, then a
-      collect) re-runs the callers' upstream lineage — often a
-      pandas-UDF featurize — once more; localCheckpoint the inputs or the
-      result when you take several actions.
-    - 'rejoin': bucket join and dedup move only (bucket, id) pairs and
-      vectors rejoin once per UNIQUE candidate. Wins only when
-      candidates per query < 2·n_tables (highly selective setups with
-      very wide vectors, e.g. 1024-dim at n_planes ≥ 16).
+    The exact dot runs inside the bucket join: vectors ride the bucket
+    shuffle (once per table per vector) into cogrouped Arrow cells — one
+    numpy matmul per bucket cell emitting the cell's per-query top-k
+    (exact: a global top-k pair outranks all but <k candidates in any
+    cell containing it, and cross-table duplicates carry identical sims,
+    deduped by max) — so the only pair-wide exchange is the narrow
+    (query_id, item_id, sim) dedup groupBy, bounded at |Q|·n_tables·k
+    rows. Pair bytes: ~24·|Q|·n_tables·k + n_tables·(|Q|+|I|)·dim_bytes.
+    On clustered/near-dup corpora candidates per query ≫ 2·n_tables, and
+    the r5 10× advisory measured a form that rejoins the vectors to each
+    unique candidate (_lsh_candidates) at ~130 GB of shuffle for 600k
+    clustered 64-dim vectors (killed two hosts' tmpfs) vs ~4 GB for this
+    form (r7: the former in-join JVM pair dot — 10M wide join rows +
+    interpreted HOF fold — measured 10.5s vs ~2s for the cogrouped cells
+    at the 30k bench shape). Neither side is snapshotted here, so every
+    action on the result (a count, then a collect) re-runs the callers'
+    upstream lineage — often a pandas-UDF featurize — once more;
+    localCheckpoint the inputs or the result when you take several
+    actions.
     """
-    if rerank not in ("bucket", "rejoin"):
-        raise ValueError("rerank must be 'bucket' or 'rejoin'")
     planes = rademacher_planes(dim, n_planes, n_tables, seed)
-    # rejoin mode consumes each side twice (bucketing branch + scoring
-    # rejoin), so it snapshots both to keep the callers' upstream lineage
-    # (often a pandas-UDF featurize) from executing twice per side. In
-    # bucket mode the vectors RIDE the bucket rows — one consumer per
-    # side — so a snapshot is a pure extra materialization pass and is
-    # skipped (r7; results identical either way, checkpoints are
-    # value-neutral).
     q = queries.select(F.col(q_id).alias("query_id"), F.col(q_vec).alias("_qv"))
     i = items.select(F.col(i_id).alias("item_id"), F.col(i_vec).alias("_iv"))
-    if rerank == "rejoin":
-        q = q.localCheckpoint(eager=True)
-        i = i.localCheckpoint(eager=True)
-    if rerank == "bucket":
-        keys = _bucket_keys_udf(planes, n_tables)
-        qb = q.select("query_id", "_qv", F.explode(keys(F.col("_qv"))).alias("bucket"))
-        ib = i.select("item_id", "_iv", F.explode(keys(F.col("_iv"))).alias("bucket"))
-        if max_bucket is not None:
-            ib = _cap_items(ib, max_bucket)
-        # Score each bucket CELL in the shared cogrouped Arrow kernel (one
-        # numpy matmul per cell, 16MB-blocked) instead of materializing
-        # every (query, item) pair as a wide JVM join row and folding an
-        # interpreted per-pair dot: at the 30k×64-dim bench shape the join
-        # emitted 10M+ rows each dragging two 512B vectors (~10 GB of row
-        # copies) and the HOF dot was CodegenFallback — measured 10.5s for
-        # join+dot+dedup vs ~2s for the cogrouped form. Emitting only each
-        # cell's per-query top-k is exact: a pair in the GLOBAL top-k
-        # outranks all but <k candidates in any cell containing it (cells
-        # are candidate subsets), so it survives every cell's local top-k;
-        # cross-table duplicate pairs carry identical sims, which the
-        # existing max() dedup collapses. min_sim/self-exclusion happen
-        # in-kernel, identically to the former pre-window filters.
-        cell = _make_topk_cell_arrow(int(k), min_sim, bool(exclude_self))
-        pair = (
-            qb.groupby("bucket")
-            .cogroup(ib.groupby("bucket"))
-            .applyInArrow(cell, "query_id long, item_id long, sim double")
-        )
-        scored = pair.groupBy("query_id", "item_id").agg(F.max("sim").alias("sim"))
-    else:
-        cand = _lsh_candidates(q, i, planes, n_tables, exclude_self, max_bucket)
-        scored = (
-            cand.join(q, "query_id")
-            .join(i, "item_id")
-            .select(
-                "query_id", "item_id", dot_col(F.col("_qv"), F.col("_iv")).alias("sim")
-            )
-        )
-        if min_sim is not None:
-            scored = scored.where(F.col("sim") >= min_sim)
+    keys = _bucket_keys_udf(planes, n_tables)
+    qb = q.select("query_id", "_qv", F.explode(keys(F.col("_qv"))).alias("bucket"))
+    ib = i.select("item_id", "_iv", F.explode(keys(F.col("_iv"))).alias("bucket"))
+    if max_bucket is not None:
+        ib = _cap_items(ib, max_bucket)
+    # Score each bucket CELL in the shared cogrouped Arrow kernel (one
+    # numpy matmul per cell, 16MB-blocked) instead of materializing every
+    # (query, item) pair as a wide JVM join row and folding an interpreted
+    # per-pair dot: at the 30k×64-dim bench shape the join emitted 10M+
+    # rows each dragging two 512B vectors (~10 GB of row copies) and the
+    # HOF dot was CodegenFallback — measured 10.5s for join+dot+dedup vs
+    # ~2s for the cogrouped form. Emitting only each cell's per-query
+    # top-k is exact: a pair in the GLOBAL top-k outranks all but <k
+    # candidates in any cell containing it (cells are candidate subsets),
+    # so it survives every cell's local top-k; cross-table duplicate
+    # pairs carry identical sims, which the max() dedup collapses.
+    # min_sim/self-exclusion happen in-kernel.
+    cell = _make_topk_cell_arrow(int(k), min_sim, bool(exclude_self))
+    pair = (
+        qb.groupby("bucket")
+        .cogroup(ib.groupby("bucket"))
+        .applyInArrow(cell, "query_id long, item_id long, sim double")
+    )
+    scored = pair.groupBy("query_id", "item_id").agg(F.max("sim").alias("sim"))
     w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("item_id").asc())
     return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 

@@ -52,18 +52,6 @@ def bpe_token_count(col):
     return F.size(F.regexp_extract_all(col, F.lit(BPE_SPLIT_RE), 0))
 
 
-def with_token_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    t = F.col(text_col)
-    return docs.withColumns(
-        {
-            "n_tokens": token_count(t),
-            "n_tokens_bpe": bpe_token_count(t),
-            "n_chars_engine": F.length(t),
-            "n_words": F.size(F.split(F.trim(t), r"\s+")),
-        }
-    )
-
-
 def quality_scores(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """(doc_id, n_tokens, mean_token_len, punct_ratio, upper_ratio,
     stopword_ratio, quality) — length/punct/stopword heuristics."""

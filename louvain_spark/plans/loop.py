@@ -192,8 +192,7 @@ class SuperstepRunner:
         (lineage for resume); localCheckpoint-only steps get a single
         summary row with partition_id = -1 (they are not resume targets).
 
-        LOCAL-FS ASSUMPTION (same contract as sources.io.upsert_by_key):
-        the footer read + pyarrow append assume checkpoint_dir is a local
+        LOCAL-FS ASSUMPTION: the footer read + pyarrow append assume checkpoint_dir is a local
         path (__init__ rejects other URI schemes). On HDFS/S3 pass a fuse
         mount, or swap this for a Spark append write (the pre-r2
         implementation) at the cost of one tiny Spark job per superstep.

@@ -9,8 +9,7 @@ partition counts). Deterministic and cluster-size-independent — never
 monotonically_increasing_id, whose values depend on partition layout.
 
 Every vertex-dictionary build in the engine (entity_vertices,
-events_vertices, streaming compaction, migration fresh-id assignment) goes
-through here, so the entity dictionary never funnels through one task.
+events_vertices, migration fresh-id assignment) goes through here, so the entity dictionary never funnels through one task.
 """
 
 from __future__ import annotations

@@ -2,8 +2,9 @@
 
 Defaults chosen for the sandbox (single-JVM local[N]); on a real cluster
 the same config keys apply, scaled to executor count. AQE is on so skewed
-joins are split at runtime; explicit salting (plans/skew.py) covers skewed
-*aggregations*, which AQE does not split.
+joins are split at runtime; the one skewed join that split did not rescue,
+the unwindowed co-occurrence self-join over a huge conversation, is salted
+explicitly (operators/induce.py).
 """
 
 from __future__ import annotations

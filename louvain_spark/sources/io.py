@@ -1,34 +1,17 @@
 """Source/sink helpers (SURVEY.md §2.1, S1–S11) — Spark-first equivalents
-of the reference's JSON/xlsx/Neo4j IO.
+of the reference's xlsx/Neo4j IO.
 
 | ref | here |
 |---|---|
-| S1 JSON array scan (NewsProcessor.py:24-35) | read_json (multiLine, schema-enforced) |
 | S2 xlsx scan + projection (upload.py:17-30) | read_table + select |
-| S5/S6 json/xlsx sinks (DataProcessor.py:54-69) | write_json / write_table (ordered columns) |
-| S7 MERGE-style upsert (upload.py:72-168) | upsert_by_key (dedup-before-append) |
+| S6 xlsx sink (DataProcessor.py:54-69) | write_table (ordered columns) |
 | S8 result writeback + unused-cluster delete (Neo4jLouvainProcessor.py:289-366) | overwrite_assignments |
 | S9 truncate (upload.py:62-70) | mode('overwrite') |
-| S4 anti-join export (Neo4jLouvainProcessor.py:49-58) | unassigned_vertices |
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
-
-
-def read_json(spark: SparkSession, path: str, schema: T.StructType | None = None, multi_line: bool = True) -> DataFrame:
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.option("multiLine", multi_line).json(path)
-
-
-def write_json(df: DataFrame, path: str, column_order: list[str] | None = None) -> None:
-    if column_order:
-        df = df.select(*column_order)
-    df.write.mode("overwrite").json(path)
 
 
 def read_table(spark: SparkSession, path: str, columns: list[str] | None = None) -> DataFrame:
@@ -40,43 +23,6 @@ def write_table(df: DataFrame, path: str, column_order: list[str] | None = None,
     if column_order:
         df = df.select(*column_order)
     df.write.mode(mode).parquet(path)
-
-
-def upsert_by_key(
-    spark: SparkSession, new_rows: DataFrame, path: str, key: str
-) -> DataFrame:
-    """MERGE-equivalent for plain parquet (local-fs helper; Iceberg
-    `MERGE INTO` is the cluster path — an overwrite of a path a live plan
-    still reads from is unsafe under recompute no matter how it is
-    staged). existing ∪ (new ∖ existing-by-key), written to a TEMP path
-    first and swapped in: the merge plan never writes over its own input,
-    so executor loss / block eviction during the write can only recompute
-    against the intact source, never a half-overwritten one."""
-    import os
-    import shutil
-
-    try:
-        existing = spark.read.parquet(path)
-    except Exception:
-        new_rows.dropDuplicates([key]).write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
-    merged = existing.unionByName(
-        new_rows.dropDuplicates([key]).join(existing.select(key), key, "left_anti")
-    )
-    tmp = path.rstrip("/") + ".__upsert_tmp"
-    merged.write.mode("overwrite").parquet(tmp)
-    old = path.rstrip("/") + ".__upsert_old"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
-    return spark.read.parquet(path)
-
-
-def unassigned_vertices(vertices: DataFrame, assignments: DataFrame) -> DataFrame:
-    """S4: vertices not yet assigned to any community (anti-join export,
-    the engine twin of `WHERE NOT EXISTS((n)-[:BELONGS_TO]->(:Cluster))`)."""
-    return vertices.join(assignments.select("id"), "id", "left_anti")
 
 
 def overwrite_assignments(assignments: DataFrame, path: str) -> None:

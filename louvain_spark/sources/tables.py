@@ -14,6 +14,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from louvain_spark.plans.gate import broadcast_or_shuffle
+
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
@@ -125,12 +127,14 @@ def events_vertices(mem: DataFrame) -> DataFrame:
 
 
 def events_cooc(events: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(vertices(id,name), edges(src,dst,weight)) co-occurrence graph."""
+    """(vertices(id,name), edges(src,dst,weight)) co-occurrence graph.
+
+    The dictionary joins the membership through the dimension-join gate
+    (plans/gate.py); its count reads the rank's checkpoint blocks."""
     mem = events_membership(events)
     verts = events_vertices(mem)
-    mi = mem.join(F.broadcast(verts.withColumnRenamed("name", "entity")), "entity").select(
-        "context", "id"
-    )
+    d = broadcast_or_shuffle(verts.withColumnRenamed("name", "entity"), verts.count())
+    mi = mem.join(d, "entity").select("context", "id")
     a = mi.alias("a")
     b = mi.alias("b")
     pairs = (

@@ -86,10 +86,12 @@ def test_cc_adversarial(spark, fixture, gate_side):
     assert {r["id"]: r["component"] for r in got} == _nx_components(edges, n)
 
 
-# auto_exact_max=0 keeps auto on its parallel levels to the end
+# auto_exact_max=0 keeps auto on its parallel levels to the end: in the
+# blocks sweep_plan sizes to the graph ("auto": one block below 128
+# vertices) or in four ("parallel": cross-block moves on every graph)
 LOUVAIN_MODES = {
     "exact": {"mode": "exact"},
-    "parallel": {"mode": "parallel"},
+    "parallel": {"mode": "auto", "parallel_opts": {"auto_exact_max": 0, "n_blocks": 4}},
     "auto": {"mode": "auto", "parallel_opts": {"auto_exact_max": 0}},
 }
 # the parallel levels run in one task under the default gates, and as

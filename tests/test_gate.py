@@ -51,8 +51,8 @@ def test_louvain_parallel_above_gate_matches_default(spark, monkeypatch):
 
     def run():
         assign, mod = louvain(
-            spark, e, vertices=verts, mode="parallel",
-            parallel_opts={"n_blocks": 4, "block_target": 1},
+            spark, e, vertices=verts, mode="auto",
+            parallel_opts={"auto_exact_max": 0, "n_blocks": 4},
         )
         return {r["id"]: r["community"] for r in assign.collect()}, mod
 
@@ -130,10 +130,10 @@ def test_louvain_parallel_levels_below_gate_are_one_advance(spark, monkeypatch, 
     edges, n = graphs.g_ring_of_cliques(k=8, c=5)
     e, verts = _graph(spark, edges, n)
     d = tmp_path / "ck"
-    runner = SuperstepRunner(spark, "par", "louvain-parallel", checkpoint_dir=str(d))
+    runner = SuperstepRunner(spark, "par", "louvain-auto", checkpoint_dir=str(d))
     louvain(
-        spark, e, vertices=verts, mode="parallel", runner=runner,
-        parallel_opts={"n_blocks": 4, "block_target": 1},
+        spark, e, vertices=verts, mode="auto", runner=runner,
+        parallel_opts={"auto_exact_max": 0, "n_blocks": 4},
     )
     ledger = spark.read.parquet(runner.ledger_path).select("superstep").distinct().collect()
     sweeps = list(d.glob("assign-l*-s*"))

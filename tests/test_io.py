@@ -3,34 +3,6 @@
 from louvain_spark.sources import io
 
 
-def test_json_roundtrip_ordered(spark, tmp_path):
-    df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, name string")
-    p = str(tmp_path / "j")
-    io.write_json(df, p, column_order=["name", "id"])
-    back = io.read_json(spark, p, multi_line=False)
-    assert sorted((r["id"], r["name"]) for r in back.collect()) == [(1, "a"), (2, "b")]
-
-
-def test_upsert_by_key(spark, tmp_path):
-    p = str(tmp_path / "t")
-    a = spark.createDataFrame([(1, "x"), (2, "y")], "k long, v string")
-    io.upsert_by_key(spark, a, p, "k")
-    # second upsert: existing key 2 kept (MERGE no-op), new key 3 appended,
-    # duplicate inside the batch deduped
-    b = spark.createDataFrame([(2, "OVERWRITE"), (3, "z"), (3, "z2")], "k long, v string")
-    merged = io.upsert_by_key(spark, b, p, "k")
-    got = {r["k"]: r["v"] for r in merged.collect()}
-    assert got[1] == "x" and got[2] == "y" and got[3] in ("z", "z2")
-    assert len(got) == 3
-
-
-def test_unassigned_vertices(spark):
-    verts = spark.createDataFrame([(i,) for i in range(5)], "id long")
-    assign = spark.createDataFrame([(0, 0), (1, 0)], "id long, community long")
-    got = sorted(r["id"] for r in io.unassigned_vertices(verts, assign).collect())
-    assert got == [2, 3, 4]
-
-
 def test_write_table_column_order(spark, tmp_path):
     df = spark.createDataFrame([(1, "a")], "id long, name string")
     p = str(tmp_path / "o")

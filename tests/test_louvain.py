@@ -1,6 +1,7 @@
 """Louvain parity: engine exact mode vs sequential oracle — exact partition
 match up to label permutation + modularity allclose 1e-6 (north_rule).
-Parallel mode validated on well-separated graphs + modularity quality.
+Parallel levels (auto with auto_exact_max=0) validated on well-separated
+graphs + modularity quality.
 """
 
 import networkx as nx
@@ -8,8 +9,11 @@ import pytest
 
 from louvain_spark.operators.louvain import louvain
 from tests import graphs
-from tests.conftest import edges_df, vertices_df
+from tests.conftest import edges_df, use_gate_side, vertices_df
 from tests.oracle import louvain_ref
+
+# every level parallel
+PARALLEL = {"mode": "auto", "parallel_opts": {"auto_exact_max": 0}}
 
 
 def canon(partition):
@@ -104,7 +108,7 @@ def test_oracle_sanity_vs_networkx(spark):
 @pytest.mark.parametrize("fixture", ["g_two_cliques", "g_ring_of_cliques"])
 def test_parallel_mode_well_separated(spark, fixture):
     edges, n = getattr(graphs, fixture)()
-    got, got_mod = _run(spark, edges, n, mode="parallel")
+    got, got_mod = _run(spark, edges, n, **PARALLEL)
     want = louvain_ref.best_partition(range(n), edges)
     want_mod = louvain_ref.partition_modularity(range(n), edges, want)
     assert canon(got) == canon(want)
@@ -115,7 +119,7 @@ def test_parallel_mode_quality_random(spark):
     """Parallel local moves are order-dependent; require modularity within
     2% of the sequential oracle's on a random graph."""
     edges, n = graphs.g_random(60, 0.08, seed=7, weighted=True)
-    _, got_mod = _run(spark, edges, n, mode="parallel")
+    _, got_mod = _run(spark, edges, n, **PARALLEL)
     want = louvain_ref.best_partition(range(n), edges)
     want_mod = louvain_ref.partition_modularity(range(n), edges, want)
     assert got_mod >= want_mod - 0.02 * abs(want_mod)
@@ -129,8 +133,8 @@ def test_parallel_mode_multiblock(spark):
     e = edges_df(spark, edges)
     verts = vertices_df(spark, n)
     assign, got_mod = louvain(
-        spark, e, vertices=verts, mode="parallel",
-        parallel_opts={"n_blocks": 4, "block_target": 1},
+        spark, e, vertices=verts, mode="auto",
+        parallel_opts={"auto_exact_max": 0, "n_blocks": 4},
     )
     got = {r["id"]: r["community"] for r in assign.collect()}
     want = louvain_ref.best_partition(range(n), edges)
@@ -151,15 +155,15 @@ def test_adhoc_runner_removes_its_checkpoint_dir(spark, tmp_path):
     from louvain_spark.plans.loop import SuperstepRunner
 
     edges, n = graphs.g_ring_of_cliques(k=8, c=5)
-    opts = {"n_blocks": 4, "block_target": 1}
+    opts = {"auto_exact_max": 0, "n_blocks": 4}
     pattern = os.path.join(tempfile.gettempdir(), "louvain-ckpt-*")
     before = set(glob.glob(pattern))
-    got, _ = _run(spark, edges, n, mode="parallel", parallel_opts=opts)
+    got, _ = _run(spark, edges, n, mode="auto", parallel_opts=opts)
     assert set(glob.glob(pattern)) <= before
     runner = SuperstepRunner(
-        spark, "leak", "louvain-parallel", checkpoint_dir=str(tmp_path / "ck")
+        spark, "leak", "louvain-auto", checkpoint_dir=str(tmp_path / "ck")
     )
-    want, _ = _run(spark, edges, n, mode="parallel", parallel_opts=opts, runner=runner)
+    want, _ = _run(spark, edges, n, mode="auto", parallel_opts=opts, runner=runner)
     assert got == want
 
 
@@ -174,14 +178,14 @@ def test_auto_mode_small_graph_equals_exact(spark):
     assert abs(got_mod - want_mod) < 1e-6
 
 
-def test_auto_mode_forced_parallel_matches_parallel_trajectory(spark):
+def test_auto_mode_forced_parallel_matches_parallel_trajectory(spark, monkeypatch):
     """auto_exact_max=0 forces the parallel path at every level — the
-    trajectory (seeded sweeps) must be identical to mode='parallel'."""
+    one-task trajectory (seeded sweeps) must be identical to the
+    distributed sweeps'."""
     edges, n = graphs.g_random(60, 0.08, seed=7, weighted=True)
-    got_a, mod_a = _run(
-        spark, edges, n, mode="auto", parallel_opts={"auto_exact_max": 0}
-    )
-    got_p, mod_p = _run(spark, edges, n, mode="parallel")
+    got_a, mod_a = _run(spark, edges, n, **PARALLEL)
+    use_gate_side(monkeypatch, "distributed")
+    got_p, mod_p = _run(spark, edges, n, **PARALLEL)
     assert got_a == got_p
     assert abs(mod_a - mod_p) < 1e-12
 

@@ -11,6 +11,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from louvain_spark.operators import _louvain_kernel
 from louvain_spark.operators import louvain as louvain_mod
 from louvain_spark.operators._louvain_kernel import xxhash64
 from louvain_spark.operators.induce import cooccurrence_edges
@@ -73,7 +74,7 @@ def test_failed_sweep_leaves_nothing_cached(spark, monkeypatch):
     monkeypatch.setattr(louvain_mod, "stats_reset", fail_in_sweep_1)
     before = cached_rdds(spark)
     with pytest.raises(RuntimeError, match="sweep failed"):
-        louvain(spark, e, mode="parallel", parallel_opts={"n_blocks": 4, "block_target": 1})
+        louvain(spark, e, mode="auto", parallel_opts={"auto_exact_max": 0, "n_blocks": 4})
     assert cached_rdds(spark) <= before
 
 
@@ -83,10 +84,11 @@ def test_parallel_level_leaves_one_local_checkpoint(spark, monkeypatch):
     once the next level graph is written, and the runner's result is the
     only localCheckpoint left; nothing stays cached."""
     use_gate_side(monkeypatch, "distributed")
+    monkeypatch.setattr(_louvain_kernel, "MAX_SWEEPS", 1)
     e = edges_df(spark, graphs.g_ring_of_cliques(k=8, c=5)[0])
     lc, cached = local_checkpoints(spark), cached_rdds(spark)
     assign, _ = louvain(
-        spark, e, mode="parallel", max_levels=1, parallel_opts={"max_sweeps": 1}
+        spark, e, mode="auto", max_levels=1, parallel_opts={"auto_exact_max": 0}
     )
     assert len(local_checkpoints(spark) - lc) == 1
     assert cached_rdds(spark) <= cached
@@ -96,4 +98,4 @@ def test_parallel_level_leaves_one_local_checkpoint(spark, monkeypatch):
 def test_unknown_parallel_opt_is_rejected(spark):
     e = edges_df(spark, graphs.g_two_cliques()[0])
     with pytest.raises(ValueError, match="nblocks"):
-        louvain(spark, e, mode="parallel", parallel_opts={"nblocks": 2})
+        louvain(spark, e, mode="auto", parallel_opts={"nblocks": 2})

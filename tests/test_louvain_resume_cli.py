@@ -37,10 +37,12 @@ def test_louvain_resume_equals_uninterrupted(spark, tmp_path):
     assert abs(again_mod - full_mod) < 1e-9
 
 
+# (mode, parallel_opts) per test id; "parallel" is auto with every level
+# parallel (auto_exact_max=0)
 RESUME_MODES = {
-    "exact": None,
-    "auto": {"auto_exact_max": 20, "n_blocks": 2},
-    "parallel": {"n_blocks": 2},
+    "exact": ("exact", None),
+    "auto": ("auto", {"auto_exact_max": 20, "n_blocks": 2}),
+    "parallel": ("auto", {"auto_exact_max": 0, "n_blocks": 2}),
 }
 # the parallel levels run in one task under the default gates, and as
 # distributed sweeps on the "-distributed" side
@@ -65,20 +67,20 @@ def test_louvain_resume_from_each_level(spark, tmp_path, mode, gate_side, graph,
     edges, n = RESUME_GRAPHS[graph]()
     e = edges_df(spark, edges)
     verts = vertices_df(spark, n)
-    opts, op = RESUME_MODES[mode], f"louvain-{mode}"
-    if (mode, graph) not in _uninterrupted:
-        assign, mod = louvain(spark, e, vertices=verts, mode=mode, parallel_opts=opts)
-        _uninterrupted[mode, graph] = {r["id"]: r["community"] for r in assign.collect()}, mod
-    want, want_mod = _uninterrupted[mode, graph]
+    (lv_mode, opts), key = RESUME_MODES[mode], (mode, graph)
+    if key not in _uninterrupted:
+        assign, mod = louvain(spark, e, vertices=verts, mode=lv_mode, parallel_opts=opts)
+        _uninterrupted[key] = {r["id"]: r["community"] for r in assign.collect()}, mod
+    want, want_mod = _uninterrupted[key]
 
     d = str(tmp_path / "part")
-    runner = SuperstepRunner(spark, "lv-part", op, checkpoint_dir=d)
+    runner = SuperstepRunner(spark, "lv-part", f"louvain-{lv_mode}", checkpoint_dir=d)
     louvain(
-        spark, e, vertices=verts, mode=mode, parallel_opts=opts, runner=runner,
+        spark, e, vertices=verts, mode=lv_mode, parallel_opts=opts, runner=runner,
         max_levels=stop,
     )
     got_assign, got_mod = resume_louvain(
-        spark, "lv-part", d, mode=mode, parallel_opts=opts
+        spark, "lv-part", d, mode=lv_mode, parallel_opts=opts
     )
     assert {r["id"]: r["community"] for r in got_assign.collect()} == want
     assert abs(got_mod - want_mod) < 1e-9

@@ -70,6 +70,42 @@ def test_dictionary_join_shuffles_above_gate(spark, monkeypatch):
     assert re.search(r"ShuffledHashJoin|SortMergeJoin", plan), plan
 
 
+def test_etypes_fallback_shuffles_above_gate(spark, monkeypatch):
+    """A scrambled dictionary takes the etypes fallback's two dictionary
+    joins. Above the gate they shuffle: same edges as the broadcast side,
+    and no BroadcastExchange in the plan."""
+    from louvain_spark.plans import gate
+
+    t = transcripts_df(spark, preset="tiny")
+    verts = entity_vertices(membership(t))
+    scrambled = verts.select((F.col("id") * 7 + 3).alias("id"), "name", "vtype")
+    _, small = cooccurrence_edges(t, vertices=scrambled, window=4)
+    assert "BroadcastExchange" in _plan(small)
+    monkeypatch.setattr(gate, "BROADCAST_MAX_ROWS", 0)
+    _, big = cooccurrence_edges(t, vertices=scrambled, window=4)
+    plan = _plan(big)
+    assert "BroadcastExchange" not in plan, plan
+    rows = lambda df: sorted(  # noqa: E731
+        (r["src"], r["dst"], r["weight"], tuple(r["etypes"])) for r in df.collect()
+    )
+    assert rows(big) == rows(small)
+
+
+def test_events_dictionary_join_shuffles_above_gate(spark, monkeypatch):
+    """events_cooc's membership→id join goes through the same gate: above
+    it, same graph as the broadcast side and no BroadcastExchange."""
+    from louvain_spark.plans import gate
+    from louvain_spark.sources.tables import events_cooc
+
+    events = load(spark, SF, "events")
+    _, small = events_cooc(events)
+    assert "BroadcastExchange" in _plan(small)
+    monkeypatch.setattr(gate, "BROADCAST_MAX_ROWS", 0)
+    _, big = events_cooc(events)
+    assert "BroadcastExchange" not in _plan(big), _plan(big)
+    assert sorted(big.collect()) == sorted(small.collect())
+
+
 def test_renumber_remap_join_gated(spark, monkeypatch):
     """_renumber's community remap is |communities|-sized — worst-case
     O(|V|) at level 0 — so its broadcast must be count-gated too
@@ -183,12 +219,11 @@ def _rows(df) -> set:
 
 
 def test_lsh_ann_dedup_exchange_carries_only_ids(spark):
-    """VERDICT r2 #4, generalized for the r5 bucket-local default: NO
+    """VERDICT r2 #4, generalized for the r5 bucket-local scoring: NO
     pair-wide exchange may carry the vectors — at 1024-dim embeddings
     that would move ~8KB per candidate row (the exact shuffle explosion
-    the r5 10x advisory caught, BENCH/ann_10x_advisory.md). rejoin mode
-    dedups bare id pairs (2 columns); bucket mode's pair-wide exchange is
-    the sim dedup groupBy (ids + one 8-byte partial max)."""
+    the r5 10x advisory caught, BENCH/ann_10x_advisory.md). The pair-wide
+    exchange is the sim dedup groupBy (ids + one 8-byte partial max)."""
     from louvain_spark.operators.similarity import cosine_topk_lsh
 
     emb = load(spark, SF, "embeddings")
@@ -197,23 +232,22 @@ def test_lsh_ann_dedup_exchange_carries_only_ids(spark):
         F.col("vec_id").alias("id"),
         F.transform("embedding", lambda x: x / norm).alias("vec"),
     )
-    for mode, max_cols in (("rejoin", "2"), ("bucket", "3")):
-        top = cosine_topk_lsh(
-            spark, unit.where(F.col("id") < 20), unit, k=5, dim=64,
-            n_planes=6, n_tables=3, rerank=mode,
-        )
-        plan = _plan(top)
-        dedup_exchanges = [
-            b
-            for b in re.split(r"\n(?=\(\d+\) )", plan)
-            if b.split("\n")[0].endswith("Exchange")
-            and re.search(r"hashpartitioning\(query_id#\d+L, item_id#\d+L", b)
-        ]
-        assert dedup_exchanges, (mode, plan)
-        for b in dedup_exchanges:
-            m = re.search(r"Input \[(\d+)\]: \[([^\]]*)\]", b)
-            assert m and int(m.group(1)) <= int(max_cols), (mode, b)
-            assert "_qv" not in b and "_iv" not in b, (mode, b)
+    top = cosine_topk_lsh(
+        spark, unit.where(F.col("id") < 20), unit, k=5, dim=64,
+        n_planes=6, n_tables=3,
+    )
+    plan = _plan(top)
+    dedup_exchanges = [
+        b
+        for b in re.split(r"\n(?=\(\d+\) )", plan)
+        if b.split("\n")[0].endswith("Exchange")
+        and re.search(r"hashpartitioning\(query_id#\d+L, item_id#\d+L", b)
+    ]
+    assert dedup_exchanges, plan
+    for b in dedup_exchanges:
+        m = re.search(r"Input \[(\d+)\]: \[([^\]]*)\]", b)
+        assert m and int(m.group(1)) <= 3, b
+        assert "_qv" not in b and "_iv" not in b, b
 
 
 def test_events_vertices_plan_has_no_single_partition_window(spark):

@@ -1,67 +1,10 @@
-"""Scalar function library (F1–F16) vs hand-computed goldens."""
+"""Scalar column functions (F7, F14) vs hand-computed goldens; the
+cosine of two unit vectors is similarity.dot_col."""
 
 from pyspark.sql import functions as F
 
 from louvain_spark.functions import scalars as S
-
-
-def test_clean_entities(spark):
-    df = spark.createDataFrame(
-        [("张三，李四, 王五，张三",), (" a ,b,,a ",), ("",)], "s string"
-    )
-    got = [r[0] for r in df.select(S.clean_entities("s").alias("o")).collect()]
-    assert got[0] == "张三,李四,王五"
-    assert got[1] == "a,b"
-    assert got[2] == ""
-
-
-def test_parse_who_triple(spark):
-    df = spark.createDataFrame(
-        [("张三-主席-政府",), ("李四-公司",), ("王五",)], "s string"
-    )
-    got = [r[0].asDict() for r in df.select(S.parse_who_triple("s").alias("o")).collect()]
-    assert got[0] == {"name": "张三", "position": "主席", "org": "政府"}
-    assert got[1] == {"name": "李四", "position": "未知", "org": "公司"}
-    assert got[2] == {"name": "王五", "position": "未知", "org": None}
-
-
-def test_strip_city_suffix(spark):
-    df = spark.createDataFrame([("北京市",), ("上海",), ("市市",)], "s string")
-    got = [r[0] for r in df.select(S.strip_city_suffix("s").alias("o")).collect()]
-    assert got == ["北京", "上海", ""]
-
-
-def test_md5_event_id(spark):
-    import hashlib
-
-    df = spark.createDataFrame([(42, 1)], "news_id int, idx int")
-    got = df.select(S.md5_event_id("news_id", "idx").alias("o")).collect()[0][0]
-    want = f"42-{hashlib.md5(b'42_1').hexdigest()[:8]}"
-    assert got == want
-
-
-def test_parse_date_multi(spark):
-    df = spark.createDataFrame(
-        [("2026-01-02",), ("2026/01/02",), ("20260102",),
-         ("2026-01-02 13:30:00",), ("01/02/2026",), ("garbage",)],
-        "s string",
-    )
-    got = [
-        r[0]
-        for r in df.select(
-            F.date_format(S.parse_date_multi("s"), "yyyy-MM-dd").alias("o")
-        ).collect()
-    ]
-    assert got[:4] == ["2026-01-02"] * 4
-    assert got[4] == "2026-01-02"
-    assert got[5] is None
-    # fallback date engages when nothing parses
-    fb = df.select(
-        F.date_format(
-            S.parse_date_multi("s", fallback=F.to_date(F.lit("2020-12-31"))), "yyyy-MM-dd"
-        ).alias("o")
-    ).collect()
-    assert fb[5][0] == "2020-12-31"
+from louvain_spark.operators.similarity import dot_col
 
 
 def test_l2_normalize_and_cosine(spark):
@@ -70,25 +13,8 @@ def test_l2_normalize_and_cosine(spark):
     assert [round(x, 6) for x in rows[0][0]] == [0.6, 0.8]
     assert list(rows[1][0]) == [0.0, 0.0]
     two = spark.createDataFrame([([1.0, 0.0], [0.6, 0.8])], "a array<float>, b array<float>")
-    sim = two.select(S.cosine_sim("a", "b").alias("s")).collect()[0][0]
+    sim = two.select(dot_col(F.col("a"), F.col("b")).alias("s")).collect()[0][0]
     assert abs(sim - 0.6) < 1e-6
-
-
-def test_minmax_and_blend_and_truncate(spark):
-    df = spark.createDataFrame([(5.0, 0.0, 10.0), (5.0, 5.0, 5.0)], "x double, mn double, mx double")
-    got = [r[0] for r in df.select(S.minmax_normalize("x", "mn", "mx").alias("o")).collect()]
-    assert got == [0.5, 0.5]
-    b = spark.range(1).select(S.weighted_blend(F.lit(1.0), F.lit(0.0)).alias("o")).collect()[0][0]
-    assert abs(b - 0.7) < 1e-9
-    t = spark.createDataFrame([("abcdef",)], "title string")
-    assert S.truncate_fields(t, {"title": 3}).collect()[0][0] == "abc"
-
-
-def test_zero_vector_fallback(spark):
-    df = spark.createDataFrame([(None,), ([1.0],)], "v array<float>")
-    got = [list(r[0]) for r in df.select(S.zero_vector_fallback("v", 3).alias("o")).collect()]
-    assert got[0] == [0.0, 0.0, 0.0]
-    assert got[1] == [1.0]
 
 
 def test_json_encode_decode_roundtrip(spark):

@@ -304,12 +304,19 @@ def test_ivf_pretrained_centroids_same_topk(spark):
 
 
 def test_lsh_rerank_modes_identical(spark):
-    """'bucket' (scale default: score inside the bucket join, dedup by
-    max) and 'rejoin' (bare-id exchanges, vectors rejoin once) must
-    return byte-identical rows — with and without the hot-cell cap."""
+    """The bucket-cell scoring (score inside the bucket join, dedup by
+    max) must return byte-identical rows to rejoining the vectors to each
+    unique candidate pair from _lsh_candidates and scoring it there —
+    with and without the hot-cell cap."""
     import numpy as np
+    from pyspark.sql import Window
 
-    from louvain_spark.operators.similarity import cosine_topk_lsh
+    from louvain_spark.operators.similarity import (
+        _lsh_candidates,
+        cosine_topk_lsh,
+        dot_col,
+        rademacher_planes,
+    )
 
     rng = np.random.default_rng(7)
     base = rng.normal(size=(6, 16))
@@ -319,14 +326,29 @@ def test_lsh_rerank_modes_identical(spark):
         v = v / np.linalg.norm(v)
         rows.append((i, [float(x) for x in v]))
     df = spark.createDataFrame(rows, "id long, vec array<double>")
+    qs = df.select(F.col("id").alias("query_id"), F.col("vec").alias("_qv"))
+    its = df.select(F.col("id").alias("item_id"), F.col("vec").alias("_iv"))
+    planes = rademacher_planes(16, 6, 3)
+    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("item_id").asc())
+
+    def collect(top):
+        return sorted(
+            (r["query_id"], r["item_id"], r["rank"], round(r["sim"], 9))
+            for r in top.collect()
+        )
+
     for cap in (None, 8):
         got = {}
-        for mode in ("bucket", "rejoin"):
-            got[mode] = sorted(
-                (r["query_id"], r["item_id"], r["rank"], round(r["sim"], 9))
-                for r in cosine_topk_lsh(
-                    spark, df, df, k=5, dim=16, n_planes=6, n_tables=3,
-                    max_bucket=cap, rerank=mode,
-                ).collect()
-            )
+        got["bucket"] = collect(cosine_topk_lsh(
+            spark, df, df, k=5, dim=16, n_planes=6, n_tables=3, max_bucket=cap,
+        ))
+        scored = (
+            _lsh_candidates(qs, its, planes, 3, True, cap)
+            .join(qs, "query_id")
+            .join(its, "item_id")
+            .select("query_id", "item_id", dot_col(F.col("_qv"), F.col("_iv")).alias("sim"))
+        )
+        got["rejoin"] = collect(
+            scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= 5)
+        )
         assert got["bucket"] == got["rejoin"], f"cap={cap}"

@@ -2,10 +2,8 @@
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
 
 from louvain_spark.operators.induce import cooccurrence_edges
-from louvain_spark.plans.skew import hub_keys, salted_sum, with_salt
 from louvain_spark.schema import TRANSCRIPTS
 
 
@@ -46,34 +44,3 @@ def test_windowed_vs_unwindowed_pair_counts(spark):
     _, capped = cooccurrence_edges(t, window=2)
     _, full = cooccurrence_edges(t, window=None)
     assert capped.count() <= full.count()
-
-
-def test_hub_keys_detects_zipf_head(spark):
-    from louvain_spark.operators.induce import membership
-    from louvain_spark.synth import transcripts_df
-
-    mem = membership(transcripts_df(spark, preset="small"))
-    hubs = hub_keys(mem, "entity", quantile=0.99)
-    names = [r["entity"] for r in hubs.collect()]
-    # role entities appear on every turn → always in the hub head
-    assert any(n.startswith("role:") for n in names)
-
-
-def test_salted_sum_equals_plain(spark):
-    df = spark.range(0, 10000).select(
-        (F.col("id") % 7).alias("k"), (F.col("id") % 13).cast("double").alias("v")
-    )
-    plain = {r["k"]: r["s"] for r in df.groupBy("k").agg(F.sum("v").alias("s")).collect()}
-    salted = {
-        r["k"]: r["s"]
-        for r in salted_sum(df, ["k"], "v", "s", buckets=8, salt_from="v").collect()
-    }
-    assert plain == salted
-
-
-def test_with_salt_range(spark):
-    df = spark.range(0, 1000).select(F.col("id").cast("string").alias("x"))
-    out = with_salt(df, "x", buckets=16)
-    vals = [r["_salt"] for r in out.select("_salt").distinct().collect()]
-    assert all(0 <= v < 16 for v in vals)
-    assert len(vals) > 8  # spreads across most buckets

@@ -9,10 +9,11 @@ the window=None self-join at 10^12-turn scale.
 Evidence pinned here:
   1. exactness — salted and unsalted plans produce identical edges
      (salting is a pure plan change: each pair meets in exactly one
-     salt bucket);
+     salt bucket); the unsalted plan is the same call with
+     SALT_THRESHOLD above every conversation;
   2. bounded per-task input — the hot conversation's left-side join
-     groups split into salt_buckets hash groups, each within 2x of the
-     balanced share |conv|/salt_buckets, while the unsalted plan has a
+     groups split into SALT_BUCKETS hash groups, each within 2x of the
+     balanced share |conv|/SALT_BUCKETS, while the unsalted plan has a
      single group of the full |conv| membership;
   3. the trigger — heavy_keys flags exactly the hot conversation at the
      configured threshold.
@@ -24,8 +25,8 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from louvain_spark.operators.induce import cooccurrence_edges, membership
-from louvain_spark.plans.skew import heavy_keys
+from louvain_spark.operators import induce
+from louvain_spark.operators.induce import cooccurrence_edges, heavy_keys, membership
 from louvain_spark.schema import TRANSCRIPTS
 from louvain_spark.synth import transcripts_pandas
 
@@ -65,14 +66,15 @@ def test_heavy_keys_flags_only_hot_conv(spark, skewed):
     assert flagged[0]["count"] > SALT_THRESHOLD
 
 
-def test_salted_equals_unsalted(spark, skewed):
-    _, salted = cooccurrence_edges(
-        skewed,
-        salt_buckets=SALT_BUCKETS,
-        salt_threshold=SALT_THRESHOLD,
-        salt_target_pairs=TARGET_PAIRS,
-    )
-    _, plain = cooccurrence_edges(skewed, salt_buckets=1)
+def test_salted_equals_unsalted(spark, skewed, monkeypatch):
+    monkeypatch.setattr(induce, "SALT_BUCKETS", SALT_BUCKETS)
+    monkeypatch.setattr(induce, "SALT_TARGET_PAIRS", TARGET_PAIRS)
+    monkeypatch.setattr(induce, "SALT_THRESHOLD", SALT_THRESHOLD)
+    _, salted = cooccurrence_edges(skewed)
+    # a turn has at most 3 membership rows and no conversation has more
+    # than HOT_TURNS turns, so nothing is salted
+    monkeypatch.setattr(induce, "SALT_THRESHOLD", 3 * HOT_TURNS)
+    _, plain = cooccurrence_edges(skewed)
     key = lambda r: (r["src"], r["dst"])  # noqa: E731
     s_rows = sorted(salted.collect(), key=key)
     p_rows = sorted(plain.collect(), key=key)
@@ -88,7 +90,7 @@ def test_salting_bounds_per_task_group(spark, skewed):
     (hash of the occurrence ROW — id alone would leave a dominant
     entity's rows in one block) each within 2x of the balanced share, so
     every (conv, _ia, _ib) join cell's per-side input is bounded at
-    ~rows/nb and its pair work at ~salt_target_pairs — vs one full-size
+    ~rows/nb and its pair work at ~SALT_TARGET_PAIRS — vs one full-size
     group computing the whole quadratic output unsalted."""
     import math
 

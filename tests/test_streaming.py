@@ -1,4 +1,4 @@
-"""Incremental merge (daily→all-time) + streaming ingestion equivalence."""
+"""Incremental merge (daily→all-time) + streaming ingest dedup."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -7,7 +7,6 @@ from louvain_spark.operators.induce import cooccurrence_edges
 from louvain_spark.plans import gate
 from louvain_spark.streaming import incremental
 from louvain_spark.streaming.incremental import cluster_centroids, migrate
-from louvain_spark.streaming.ingest import compact_increments, stream_edge_increments
 from louvain_spark.synth import transcripts_df
 from tests.conftest import cached_rdds, local_df, on_both_sides, use_gate_side
 
@@ -92,28 +91,6 @@ def test_centroids_exploded_path_matches_wide(spark, monkeypatch):
         assert np.allclose(np.array(got[c]), np.array(wide[c]), atol=1e-6)
         assert abs(np.linalg.norm(np.array(got[c])) - 1.0) < 1e-5
 
-
-def test_stream_ingestion_equals_batch(spark, tmp_path):
-    """availableNow file stream over transcript chunks == batch induction."""
-    t = transcripts_df(spark, n_conv=30, seed=5)
-    in_dir = str(tmp_path / "in")
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    # one file per conv group → convs never span micro-batches
-    t.repartition("conv_id").write.mode("overwrite").parquet(in_dir)
-
-    q = stream_edge_increments(spark, in_dir, out_dir, ckpt, window=4)
-    q.awaitTermination(120)
-
-    verts_s, edges_s = compact_increments(spark, out_dir)
-    verts_b, edges_b = cooccurrence_edges(t, window=4)
-
-    vs = {(r["id"], r["name"]) for r in verts_s.collect()}
-    vb = {(r["id"], r["name"]) for r in verts_b.collect()}
-    assert vs == vb
-    es = {(r["src"], r["dst"]): (r["weight"], tuple(r["etypes"])) for r in edges_s.collect()}
-    eb = {(r["src"], r["dst"]): (r["weight"], tuple(r["etypes"])) for r in edges_b.collect()}
-    assert es == eb
 
 def test_migrate_subgraph_edges_and_orphans(spark):
     """Edge MERGE + orphan-vertex matching (reference eventMove.py:236-332,

@@ -1,19 +1,12 @@
 """Synth generator determinism + transcripts→edges induction correctness,
-including the per-turn text round-trip invariant (BASELINE.json input_hint)
-and salted-vs-plain aggregation equality (SURVEY.md §5.2 #4/#5)."""
+including the per-turn text round-trip invariant (BASELINE.json input_hint)."""
 
 import itertools
 
 import pandas as pd
 from pyspark.sql import functions as F
 
-from louvain_spark.operators.induce import (
-    cooccurrence_edges,
-    entity_vertices,
-    membership,
-    turn_adjacency_edges,
-)
-from louvain_spark.plans.skew import salted_count_distinct
+from louvain_spark.operators.induce import cooccurrence_edges, entity_vertices, membership
 from louvain_spark.synth import transcripts_df, transcripts_pandas
 
 
@@ -92,35 +85,9 @@ def test_cooccurrence_windowed_matches_brute(spark):
         assert got == want, f"window={w}"
 
 
-def test_salted_count_distinct_equals_plain(spark):
-    df = transcripts_df(spark, n_conv=60, seed=42)
-    mem = membership(df)
-    plain = (
-        mem.groupBy("entity").agg(F.count_distinct("conv_id").alias("n"))
-    )
-    salted = salted_count_distinct(mem, ["entity"], "conv_id", "n", buckets=8)
-    p = {r["entity"]: r["n"] for r in plain.collect()}
-    s = {r["entity"]: r["n"] for r in salted.collect()}
-    assert p == s
-
-
-def test_turn_adjacency(spark):
-    df = transcripts_df(spark, n_conv=60, seed=42)
-    mem = membership(df)
-    verts = entity_vertices(mem)
-    adj = turn_adjacency_edges(df, verts)
-    rows = adj.collect()
-    # canonical, positive weights, tool vertices only
-    vt = {r["id"]: r["vtype"] for r in verts.collect()}
-    for r in rows:
-        assert r["src"] < r["dst"]
-        assert r["weight"] >= 1.0
-        assert vt[r["src"]] == "tool" and vt[r["dst"]] == "tool"
-
-
 def test_etypes_correct_for_noncontiguous_vertex_ids(spark):
     """A caller-supplied vertex table whose ids are NOT dense name-sorted
-    ranks must still get correct etypes (broadcast-join fallback — the
+    ranks must still get correct etypes (dictionary-join fallback — the
     id-range shortcut is validated before use)."""
     t = transcripts_df(spark, preset="tiny")
     verts = entity_vertices(membership(t))
