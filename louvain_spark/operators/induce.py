@@ -20,15 +20,24 @@ Scale notes (10^12-turn design):
   sizes (monotonically_increasing_id is partition-dependent and would
   break parity). The global sort is over the *entity dictionary* (tiny
   relative to the corpus: |tools|+|roles|+|convs|), not the turn table.
+
+Below the gate (window given, membership plus caller-dictionary rows at
+or below plans/gate.ONE_BLOCK_MAX_EDGES) the same (vertices, edges) come
+from one applyInPandas task (induce_kernel): at that size the banded
+plan's ~25 stages of latency, not its pair work, are the cost. The gate
+counts rows, so no 10^12-turn input ever takes this path.
 """
 
 from __future__ import annotations
 
 import math
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from louvain_spark.plans import gate
 from louvain_spark.plans.gate import broadcast_or_shuffle
 
 # hub salting of the unwindowed pair join (cooccurrence_edges): a
@@ -82,15 +91,21 @@ def entity_vertices(mem: DataFrame) -> DataFrame:
     the global-sort rank, no single-partition window. Deterministic and
     cluster-size-independent (never monotonically_increasing_id).
     """
+    return _entity_dictionary(mem)[0]
+
+
+def _entity_dictionary(mem: DataFrame) -> tuple[DataFrame, int]:
+    """(entity_vertices(mem), its row count, observed by the rank)."""
     from louvain_spark.plans.rank import dense_sorted_rank
 
     ents = mem.select("entity", "etype").distinct()
-    return dense_sorted_rank(ents, "entity").select(
+    ranked, n = dense_sorted_rank(ents, "entity")
+    return ranked.select(
         "id", F.col("entity").alias("name"), F.col("etype").alias("vtype")
-    )
+    ), n
 
 
-def _with_ids(mem: DataFrame, vertices: DataFrame) -> DataFrame:
+def _with_ids(mem: DataFrame, vertices: DataFrame, rows: int | None = None) -> DataFrame:
     """Attach vertex ids to membership rows via the entity dictionary.
 
     The dictionary is O(|entities|), which includes one conv: entity per
@@ -98,12 +113,127 @@ def _with_ids(mem: DataFrame, vertices: DataFrame) -> DataFrame:
     10^12-turn design point, far past any broadcast. Same count-gated
     auto-choice as every other dimension join (plans/gate.py): broadcast
     while small, shuffled-hash join on entity name above the gate (entity
-    names hash uniformly). vertices from entity_vertices is already
-    localCheckpointed (plans/rank.py), so the gate's count() reads
-    checkpoint blocks — no lineage re-execution.
+    names hash uniformly). `rows` is the dictionary's row count when the
+    caller holds it (the rank observes it); otherwise it is counted here.
     """
+    if rows is None:
+        rows = vertices.count()
     d = vertices.select(F.col("name").alias("entity"), "id", F.col("vtype"))
-    return mem.join(broadcast_or_shuffle(d, vertices.count()), "entity")
+    return mem.join(broadcast_or_shuffle(d, rows), "entity")
+
+
+def induce_kernel(pdf: pd.DataFrame, window: int, given: bool) -> pd.DataFrame:
+    """cooccurrence_edges' banded plan over one task's rows: membership
+    rows (_k = 0: conv_id, turn_idx, entity, vtype) and, when `given`,
+    the caller's dictionary (_k = 1: entity = name, id, vtype).
+
+    Ids: without a dictionary, the rank of the sorted unique entity names
+    (Python's code-point order is Spark's UTF-8 binary order, so they are
+    entity_vertices' ids); with one, each name's id by searchsorted over
+    the dictionary sorted by name, and a name it lacks drops its rows, as
+    the inner join does. Pairs: with the rows sorted by (conv, turn), row
+    i pairs with row i + k for k = 1, 2, … while the conversation is the
+    same and Δturn ≤ window; the first k with no such pair ends the scan,
+    since every longer offset spans it. Weight: the number of distinct
+    (src, dst, conv) per canonical (src, dst), by np.unique over packed
+    keys, deduplicated per offset so that only distinct keys are held.
+
+    Returns edge rows (_k = 0: src, dst, weight, _ts = vtype(src),
+    _td = vtype(dst)) and, without a dictionary, vertex rows (_k = 1:
+    src = id, _ts = name, _td = vtype).
+    """
+    kind = pdf["_k"].to_numpy()
+    mem, dic = pdf[kind == 0], pdf[kind == 1]
+    codes, names = pd.factorize(mem["entity"])
+    names = names.to_numpy(dtype=object)
+    if given:
+        dic = dic.sort_values("entity")
+        dn = dic["entity"].to_numpy(dtype=object)
+        pos = np.searchsorted(dn, names)
+        hit = pos < len(dn)
+        hit[hit] = dn[pos[hit]] == names[hit]
+        keep = hit[codes]
+        pos = pos[codes][keep]
+        row_id = dic["id"].to_numpy(np.int64)[pos]
+        row_vt = dic["vtype"].to_numpy(dtype=object)[pos]
+        mem = mem[keep]
+    else:
+        rank = np.empty(len(names), np.int64)
+        rank[np.argsort(names)] = np.arange(len(names))
+        row_id, row_vt = rank[codes], mem["vtype"].to_numpy(dtype=object)
+    vid, v = np.unique(row_id, return_inverse=True)
+    vt = np.empty(len(vid), dtype=object)
+    vt[v] = row_vt
+    conv, convs = pd.factorize(mem["conv_id"])
+    turn = mem["turn_idx"].to_numpy(np.int64)
+    order = np.lexsort((turn, conv))
+    c, t, v = conv[order], turn[order], v[order]
+
+    n_v, n_c = len(vid), max(len(convs), 1)
+    # packed (src, dst, conv) keys stay below 2**63 while n_v² · n_c does
+    assert n_v * n_v * n_c < 1 << 63, (n_v, n_c)
+    keys = [np.empty(0, np.int64)]
+    for k in range(1, len(c)):
+        ok = (c[k:] == c[:-k]) & (t[k:] - t[:-k] <= window)
+        if not ok.any():
+            break
+        a, b = v[:-k][ok], v[k:][ok]
+        lo, hi, cc = np.minimum(a, b), np.maximum(a, b), c[k:][ok]
+        d = lo != hi
+        keys.append(np.unique((lo[d] * n_v + hi[d]) * n_c + cc[d]))
+    pair, weight = np.unique(np.unique(np.concatenate(keys)) // n_c, return_counts=True)
+    lo, hi = np.divmod(pair, n_v)
+    out = pd.DataFrame({
+        "_k": 0, "src": vid[lo], "dst": vid[hi], "weight": weight.astype(np.float64),
+        "_ts": vt[lo], "_td": vt[hi],
+    })
+    if given:
+        return out
+    ids = np.arange(len(names), dtype=np.int64)
+    verts = pd.DataFrame({
+        "_k": 1, "src": ids, "dst": ids, "weight": 0.0,
+        "_ts": names[np.argsort(names)], "_td": vt,
+    })
+    return pd.concat([out, verts], ignore_index=True)
+
+
+def _one_task_edges(
+    mem: DataFrame, vertices: DataFrame | None, window: int
+) -> tuple[DataFrame, DataFrame] | None:
+    """cooccurrence_edges(window=window) as one applyInPandas task
+    (induce_kernel), or None when its input rows — membership plus the
+    caller's dictionary — are above gate.ONE_BLOCK_MAX_EDGES."""
+    if gate.ONE_BLOCK_MAX_EDGES <= 0:
+        return None
+    rows = mem.select(
+        F.lit(0).alias("_k"), "conv_id", "turn_idx", "entity",
+        F.lit(None).cast("long").alias("id"), F.col("etype").alias("vtype"),
+    )
+    if vertices is not None:
+        rows = rows.unionByName(vertices.where(F.col("name").isNotNull()).select(
+            F.lit(1).alias("_k"), F.lit(None).cast("string").alias("conv_id"),
+            F.lit(None).cast("int").alias("turn_idx"), F.col("name").alias("entity"),
+            F.col("id").cast("long"), "vtype",
+        ))
+    if gate.observed(rows, n=F.count(F.lit(1)))["n"] > gate.ONE_BLOCK_MAX_EDGES:
+        return None
+    given = vertices is not None
+
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        return induce_kernel(pdf, window, given)
+
+    snap, _ = gate.one_task(
+        rows, run, "_k int, src long, dst long, weight double, _ts string, _td string"
+    )
+    edges = snap.where(F.col("_k") == 0).select(
+        "src", "dst", "weight",
+        F.array_sort(F.array_distinct(F.array("_ts", "_td"))).alias("etypes"),
+    )
+    if vertices is None:
+        vertices = snap.where(F.col("_k") == 1).select(
+            F.col("src").alias("id"), F.col("_ts").alias("name"), F.col("_td").alias("vtype")
+        )
+    return vertices, edges
 
 
 def cooccurrence_edges(
@@ -121,6 +251,18 @@ def cooccurrence_edges(
     (banded join: each side bucketed by turn_idx // w, right side
     replicated to adjacent buckets — bounds join-group size for huge
     conversations).
+
+    With a window, input at or below gate.ONE_BLOCK_MAX_EDGES rows (the
+    membership rows plus the caller's dictionary rows, observed on one
+    noop write) runs as one applyInPandas task instead (_one_task_edges,
+    induce_kernel). It returns the rows the plans below return: ids are
+    entity_vertices' ranks or the caller's, a name the caller's
+    dictionary lacks drops out as the inner join drops it, and etypes are
+    the same expression over the endpoints' vtypes. It reads one
+    snapshot, so the rank, the dictionary join, the vtype-range collect
+    and the banded join do not run. window=None keeps the plans below at
+    every size: its pair work grows with the square of a conversation's
+    length, which is what the salting bounds.
 
     Hub salting (window=None only; SURVEY §4.3): a single huge
     conversation puts its whole membership — and its QUADRATIC pair
@@ -146,9 +288,14 @@ def cooccurrence_edges(
     O(window) by construction.
     """
     mem = membership(transcripts)
+    if window is not None:
+        one = _one_task_edges(mem, vertices, window)
+        if one is not None:
+            return one
+    rows = None
     if vertices is None:
-        vertices = entity_vertices(mem)
-    m = _with_ids(mem, vertices).select("conv_id", "turn_idx", "id")
+        vertices, rows = _entity_dictionary(mem)
+    m = _with_ids(mem, vertices, rows).select("conv_id", "turn_idx", "id")
 
     if window is None:
         chunk = max(1.0, math.sqrt(SALT_TARGET_PAIRS))

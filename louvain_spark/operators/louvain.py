@@ -115,11 +115,11 @@ def _renumber(assign: DataFrame) -> tuple[DataFrame, DataFrame]:
     from louvain_spark.plans.rank import dense_sorted_rank
 
     reps = assign.groupBy("community").agg(F.min("id").alias("_rep"))
-    ranked = dense_sorted_rank(reps, "_rep", id_col="_new")
+    ranked, n = dense_sorted_rank(reps, "_rep", id_col="_new")
     # remap is |communities|-sized — at level 0 of a big graph worst-case
     # O(|V|), so the broadcast is count-gated like every other dimension
-    # join (the count reads dense_sorted_rank's checkpoint blocks)
-    remap = broadcast_or_shuffle(ranked.select("community", "_new"), ranked.count())
+    # join, by the row count the rank observed
+    remap = broadcast_or_shuffle(ranked.select("community", "_new"), n)
     renumbered = assign.join(remap, "community").select(
         "id", F.col("_new").alias("community")
     )
@@ -542,7 +542,7 @@ def louvain(
         if not total_w:
             from louvain_spark.plans.rank import dense_sorted_rank
 
-            assign = dense_sorted_rank(ids, "id", id_col="community").select(
+            assign = dense_sorted_rank(ids, "id", id_col="community")[0].select(
                 "id", F.col("community").cast("long")
             )
             return assign, 0.0

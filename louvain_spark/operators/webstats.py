@@ -97,7 +97,7 @@ def build_vocab(
         .where(F.col("df") >= min_df)
         .withColumn("_key", F.struct((-F.col("tf")).alias("ntf"), F.col("term")))
     )
-    ranked = dense_sorted_rank(terms, "_key", id_col="term_id")
+    ranked = dense_sorted_rank(terms, "_key", id_col="term_id")[0]
     return ranked.where(F.col("term_id") < top_k).select(
         "term_id", "term", "tf", "df"
     )

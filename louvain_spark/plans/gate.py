@@ -77,9 +77,35 @@ Xeon host, two alternating runs per side:
 One task wins at every size up to the sum bound: featurizing on one core
 costs less than the distributed path's stages. So both bounds stand.
 
+Windowed co-occurrence induction (operators/induce.cooccurrence_edges)
+runs in one applyInPandas task (induce_kernel) when its input rows, the
+membership rows plus any caller-dictionary rows, number at most
+ONE_BLOCK_MAX_EDGES. Measured peak RSS of that worker per membership row
+(synth transcripts, seed 2, window 8, 100k to 1.5M rows, numpy 1.26):
+350-410 bytes above the idle worker's ~121 MiB. 1M rows peak at 482 MiB,
+close to LPA's 1M edges, and take 1.7 s in the kernel on one core. So the
+block kernels' bound serves it too. The switch was timed: whole
+cooccurrence_edges calls with their edge and vertex parquet writes, one
+task vs the banded join, on the same transcripts staged as parquet,
+local[4] with 16 partitions, 4-core Xeon host, two alternating runs per
+side:
+
+    membership rows  one task     distributed
+    50.9k            2.8, 1.7 s   6.1, 4.4 s
+    100.8k           3.1, 1.8 s   6.4, 3.7 s
+    250.1k           3.8, 2.3 s   7.5, 5.4 s
+    504.0k           5.5, 3.7 s   10.6, 6.3 s
+    1.02M            9.2, 5.4 s   14.4, 9.9 s
+
+One task wins at every size up to the bound (50.9k rows is perfbench's
+communities input). bench.py's sf0.1 input (1.30M membership rows) is
+above it and keeps the banded join. Every turn has a role row and a conv
+row, so a 10^12-turn input has at least 2·10^12 membership rows and never
+takes the one-task path.
+
 Tests and `tools/check_oracle.py --distributed` set ONE_BLOCK_MAX_EDGES
 and LOUVAIN_ONE_TASK_MAX_EDGES to 0, which turns every one-task path off,
-the migration's included.
+the migration's and the induction's included.
 
 Every one-task path counts with observed() (a noop write: one scan stage,
 where count() adds an aggregate one), then runs one_task(): one group,

@@ -14,7 +14,7 @@ events_vertices, migration fresh-id assignment) goes through here, so the entity
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from louvain_spark.plans.loop import release
@@ -24,8 +24,9 @@ def dense_sorted_rank(
     df: DataFrame,
     order_col: str,
     id_col: str = "id",
-) -> DataFrame:
-    """Add `id_col` = 0-based global rank of `order_col` (ascending).
+) -> tuple[DataFrame, int]:
+    """(df plus `id_col` = 0-based global rank of `order_col` (ascending),
+    its row count).
 
     Input rows must be distinct on order_col for the rank to be a dense id
     (callers pass dictionaries, which are). Output keeps all input columns.
@@ -34,7 +35,9 @@ def dense_sorted_rank(
     (spark.sql.shuffle.partitions), and AQE coalesces it like any other
     shuffle, so the rank is sized by the session rather than a constant.
     Coalesced partitions are adjacent ranges, so the offsets below still
-    follow the sort order. The result is an eager localCheckpoint.
+    follow the sort order. The result is an eager localCheckpoint, and
+    its row count is observed on that action, so callers that size a
+    join by it run no count() of their own.
     """
     # cache the (small) dictionary: the range partitioner runs a separate
     # sampling job over its input, which would otherwise re-execute the
@@ -65,9 +68,10 @@ def dense_sorted_rank(
         .agg(F.coalesce(F.sum("_rb._cnt"), F.lit(0)).alias("_off"))
     )
     w = Window.partitionBy("_pid").orderBy(order_col)
+    obs = Observation()
     out = parts.join(F.broadcast(offs), "_pid").select(
         (F.row_number().over(w) - 1 + F.col("_off")).cast("long").alias(id_col),
         *[c for c in df.columns],
-    ).localCheckpoint(eager=True)
+    ).observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
     release(parts)
-    return out
+    return out, obs.get["n"]

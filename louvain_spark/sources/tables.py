@@ -117,23 +117,25 @@ def events_membership(events: DataFrame) -> DataFrame:
     return m.distinct()
 
 
-def events_vertices(mem: DataFrame) -> DataFrame:
-    """(id, name) — dense sorted rank over distinct entities, via the
-    two-phase distributed rank (plans/rank.py; no single-partition window)."""
+def events_vertices(mem: DataFrame) -> tuple[DataFrame, int]:
+    """((id, name), its row count) — dense sorted rank over distinct
+    entities, via the two-phase distributed rank (plans/rank.py; no
+    single-partition window)."""
     from louvain_spark.plans.rank import dense_sorted_rank
 
     ents = mem.select("entity").distinct()
-    return dense_sorted_rank(ents, "entity").select("id", F.col("entity").alias("name"))
+    ranked, n = dense_sorted_rank(ents, "entity")
+    return ranked.select("id", F.col("entity").alias("name")), n
 
 
 def events_cooc(events: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(vertices(id,name), edges(src,dst,weight)) co-occurrence graph.
 
     The dictionary joins the membership through the dimension-join gate
-    (plans/gate.py); its count reads the rank's checkpoint blocks."""
+    (plans/gate.py), sized by the row count the rank observed."""
     mem = events_membership(events)
-    verts = events_vertices(mem)
-    d = broadcast_or_shuffle(verts.withColumnRenamed("name", "entity"), verts.count())
+    verts, n = events_vertices(mem)
+    d = broadcast_or_shuffle(verts.withColumnRenamed("name", "entity"), n)
     mi = mem.join(d, "entity").select("context", "id")
     a = mi.alias("a")
     b = mi.alias("b")

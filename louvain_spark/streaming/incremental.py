@@ -245,7 +245,7 @@ def _remap_distributed(
         .distinct()
         .join(matches.withColumnRenamed("daily_community", "community"), "community", "left_anti")
     )
-    fresh = dense_sorted_rank(unmatched, "community", id_col="_rk").select(
+    fresh = dense_sorted_rank(unmatched, "community", id_col="_rk")[0].select(
         F.col("community").alias("daily_community"),
         (F.col("_rk") + 1 + max_alltime).cast("long").alias("alltime_community"),
     )

@@ -80,8 +80,9 @@ def local_checkpoints(spark) -> set[int]:
 
 
 def use_gate_side(monkeypatch, side: str) -> None:
-    """Run PageRank, LPA and CC on one side of gate.ONE_BLOCK_MAX_EDGES,
-    and Louvain's parallel levels on one side of
+    """Run PageRank, LPA, CC, windowed co-occurrence induction and the
+    daily→all-time migration on one side of gate.ONE_BLOCK_MAX_EDGES, and
+    Louvain's parallel levels on one side of
     gate.LOUVAIN_ONE_TASK_MAX_EDGES: "one_block" keeps the default gates,
     "distributed" sets both to 0."""
     assert side in ("one_block", "distributed"), side

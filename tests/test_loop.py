@@ -71,7 +71,7 @@ _CALLS = {
     "cc": lambda s, e, v: connected_components(s, e, vertices=v),
     "louvain-auto": lambda s, e, v: louvain(s, e, vertices=v, mode="auto")[0],
     "louvain-exact": lambda s, e, v: louvain(s, e, vertices=v, mode="exact")[0],
-    "dense_sorted_rank": lambda s, e, v: dense_sorted_rank(v, "id", id_col="rank"),
+    "dense_sorted_rank": lambda s, e, v: dense_sorted_rank(v, "id", id_col="rank")[0],
     "migrate": lambda s, e, v: _migrate(s),
 }
 

@@ -7,12 +7,14 @@ answer is right.
 """
 
 import re
+import uuid
 
 from pyspark.sql import functions as F
 
 from louvain_spark.operators.induce import cooccurrence_edges, entity_vertices, membership
 from louvain_spark.sources.tables import load
 from louvain_spark.synth import transcripts_df
+from tests.conftest import use_gate_side
 
 SF = "/root/testdata/sf0.001"
 
@@ -73,9 +75,11 @@ def test_dictionary_join_shuffles_above_gate(spark, monkeypatch):
 def test_etypes_fallback_shuffles_above_gate(spark, monkeypatch):
     """A scrambled dictionary takes the etypes fallback's two dictionary
     joins. Above the gate they shuffle: same edges as the broadcast side,
-    and no BroadcastExchange in the plan."""
+    and no BroadcastExchange in the plan. The joins are the banded plan's,
+    above the one-task gate."""
     from louvain_spark.plans import gate
 
+    use_gate_side(monkeypatch, "distributed")
     t = transcripts_df(spark, preset="tiny")
     verts = entity_vertices(membership(t))
     scrambled = verts.select((F.col("id") * 7 + 3).alias("id"), "name", "vtype")
@@ -106,6 +110,48 @@ def test_events_dictionary_join_shuffles_above_gate(spark, monkeypatch):
     assert sorted(big.collect()) == sorted(small.collect())
 
 
+def _jobs(spark, fn):
+    """(fn(), the number of Spark jobs it ran), counted under a job group."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4()}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_dictionary_joins_run_no_count_of_their_own(spark):
+    """events_cooc and _renumber size their dictionary joins by the row
+    count dense_sorted_rank observes, so each runs exactly its rank's
+    jobs; the graph still equals its DuckDB twin (EVENTS_COOC_SQL)."""
+    import duckdb
+
+    from louvain_spark.operators import louvain as lv
+    from louvain_spark.plans.rank import dense_sorted_rank
+    from louvain_spark.sources.tables import EVENTS_COOC_SQL, events_cooc, events_membership
+
+    events = load(spark, SF, "events")
+    ents = events_membership(events).select("entity").distinct()
+    _, rank_jobs = _jobs(spark, lambda: dense_sorted_rank(ents, "entity"))
+    (_, edges), cooc_jobs = _jobs(spark, lambda: events_cooc(events))
+    assert cooc_jobs == rank_jobs > 0
+    con = duckdb.connect()
+    con.execute(f"create view events as select * from read_parquet('{SF}/events.parquet')")
+    want = con.execute(EVENTS_COOC_SQL + "SELECT src, dst, weight FROM e").fetchall()
+    assert sorted(tuple(r) for r in edges.collect()) == sorted(want)
+
+    assign = spark.createDataFrame(
+        [(i, 100 + (i % 3) * 7) for i in range(30)], "id long, community long"
+    ).localCheckpoint(eager=True)
+    reps = assign.groupBy("community").agg(F.min("id").alias("_rep"))
+    _, rank_jobs = _jobs(spark, lambda: dense_sorted_rank(reps, "_rep", id_col="_new"))
+    (renumbered, _), jobs = _jobs(spark, lambda: lv._renumber(assign))
+    assert jobs == rank_jobs > 0
+    assert sorted(renumbered.collect()) == [(i, i % 3) for i in range(30)]
+
+
 def test_renumber_remap_join_gated(spark, monkeypatch):
     """_renumber's community remap is |communities|-sized — worst-case
     O(|V|) at level 0 — so its broadcast must be count-gated too
@@ -127,10 +173,11 @@ def test_renumber_remap_join_gated(spark, monkeypatch):
     assert sorted(small.collect()) == sorted(big.collect())
 
 
-def test_cooccurrence_plan_has_partial_aggregation(spark):
+def test_cooccurrence_plan_has_partial_aggregation(spark, monkeypatch):
     """The final pair-count groupBy must show a partial (map-side) agg
     before the exchange — the skew-resistance property the induction
-    relies on (SURVEY.md §4.3)."""
+    relies on (SURVEY.md §4.3) above the one-task gate."""
+    use_gate_side(monkeypatch, "distributed")
     t = transcripts_df(spark, preset="tiny")
     _, edges = cooccurrence_edges(t, window=4)
     plan = _plan(edges)
@@ -171,8 +218,8 @@ def test_dense_sorted_rank_matches_global_sort_and_stays_partitioned(spark, monk
         return snapshot(df, *args, **kwargs)
 
     monkeypatch.setattr(type(names), "localCheckpoint", spy)
-    got = dense_sorted_rank(names, "entity")
-    assert len(plans) == 2
+    got, n = dense_sorted_rank(names, "entity")
+    assert len(plans) == 2 and n == 997
     for plan in plans:
         assert "SinglePartition" not in plan, plan
     assert _rows(got) == _rows(_window_rank(names))
@@ -189,8 +236,8 @@ def test_dense_sorted_rank_offsets_across_range_partitions(spark):
     spark.conf.set(key, "false")
     try:
         names = _rank_names(spark)
-        got = dense_sorted_rank(names, "entity")
-        assert got.rdd.getNumPartitions() > 1
+        got, n = dense_sorted_rank(names, "entity")
+        assert got.rdd.getNumPartitions() > 1 and n == 997
         assert _rows(got) == _rows(_window_rank(names))
     finally:
         spark.conf.set(key, old)

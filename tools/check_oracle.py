@@ -8,8 +8,11 @@ gate.LOUVAIN_ONE_TASK_MAX_EDGES to 0 before any query runs, so PageRank,
 LPA and CC take their distributed superstep path instead of the one-block
 kernel, and Louvain's parallel levels run as distributed sweeps instead
 of in one task. The same zero also turns off the one-task daily→all-time
-migration (streaming/incremental.migrate), but no oracle query calls it:
-its distributed side is covered by tests only.
+migration (streaming/incremental.migrate) and the one-task windowed
+co-occurrence induction (operators/induce.cooccurrence_edges), but no
+oracle query calls either (the graph queries induce with
+sources/tables.events_cooc): their distributed sides are covered by tests
+only.
 """
 
 from __future__ import annotations
@@ -80,8 +83,9 @@ def main() -> None:
     ap.add_argument("queries", nargs="*", help="query names (default: all oracled)")
     ap.add_argument(
         "--distributed", action="store_true",
-        help="run PageRank, LPA, CC, Louvain's parallel levels and the "
-        "migration (which no oracle query calls) distributed",
+        help="run PageRank, LPA, CC, Louvain's parallel levels, the "
+        "migration and windowed induction (which no oracle query calls) "
+        "distributed",
     )
     args = ap.parse_args()
     if args.distributed:
