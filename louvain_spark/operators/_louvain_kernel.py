@@ -1,9 +1,13 @@
 """Vectorized-CSR kernels for Louvain's local-move phase.
 
-one_level_csr runs one level on a whole level graph; dendrogram_csr
-loops it over every remaining dendrogram level inside one applyInPandas
-task (exact mode from level 0; auto once the level graph has shrunk to
-auto_exact_max vertices). Both implement the pinned spec shared with
+dendrogram_csr runs every remaining dendrogram level of one level graph
+inside one applyInPandas task: parallel levels (parallel_level_csr, the
+distributed sweeps replayed block for block) while the level graph has
+more than tail_max nodes, then exact levels (one_level_csr). The
+distributed sweeps run block_local_moves in each block's task.
+
+All three make their moves through one pass, _local_pass, over a CSR
+that _csr builds, and implement the pinned spec shared with
 tests/oracle/louvain_ref.py — python-louvain 0.16 gain/termination
 semantics with deterministic orderings:
 
@@ -25,115 +29,112 @@ import numpy as np
 
 MIN_GAIN = 1e-7
 # parallel levels: nodes per block; sweeps per level at most; a sweep
-# moving fewer than this fraction of the nodes ends the level
+# moving fewer than this fraction of the nodes ends the level; passes per
+# block and sweep at most
 BLOCK_TARGET = 64
 MAX_SWEEPS = 16
 MIN_MOVED_FRAC = 0.02
+MAX_PASSES = 10
+
+
+def _symmetric(s: np.ndarray, d: np.ndarray, w: np.ndarray, n: int):
+    """(heads, tails, w) of the non-loop edges in both directions, and each
+    node's strength k (a self-loop counts twice)."""
+    loop = s == d
+    heads = np.concatenate([s[~loop], d[~loop]])
+    tails = np.concatenate([d[~loop], s[~loop]])
+    hw = np.concatenate([w[~loop], w[~loop]])
+    k = np.bincount(heads, weights=hw, minlength=n) + 2.0 * np.bincount(
+        s[loop], weights=w[loop], minlength=n
+    )
+    return heads, tails, hw, k
+
+
+def _csr(heads: np.ndarray, tails: np.ndarray, w: np.ndarray, n: int):
+    """(indptr, tails, w) of the rows grouped by head over n nodes, each
+    head's rows in their input order."""
+    order = np.argsort(heads, kind="stable")
+    indptr = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(np.bincount(heads, minlength=n), out=indptr[1:])
+    return indptr, tails[order], w[order]
+
+
+def _local_pass(visit, indptr, tails, hw, com, tot, k, resolution, two_m) -> int:
+    """One python-louvain move per node of visit, in that order; updates
+    com and tot (Σ_tot per community) in place and returns how many nodes
+    moved.
+
+    A node leaves its community (remove cost) and joins the neighbouring
+    community of largest gain, scanned in ascending community order with a
+    strict '>' over 0: np.argmax's first maximum. It stays when none gains.
+    """
+    moved = 0
+    for u in visit:
+        cu = com[u]
+        lo, hi = indptr[u], indptr[u + 1]
+        cands, inv = np.unique(com[tails[lo:hi]], return_inverse=True)
+        dnc = np.zeros(len(cands))
+        np.add.at(dnc, inv, hw[lo:hi])
+        degc = k[u] / two_m
+        pos = np.searchsorted(cands, cu)
+        own_dnc = dnc[pos] if pos < len(cands) and cands[pos] == cu else 0.0
+        remove_cost = -own_dnc + resolution * (tot[cu] - k[u]) * degc
+        tot[cu] -= k[u]
+        incr = remove_cost + dnc - resolution * tot[cands] * degc
+        best = cu
+        if len(incr):
+            p = np.argmax(incr)
+            if incr[p] > 0.0:
+                best = cands[p]
+        tot[best] += k[u]
+        if best != cu:
+            com[u] = best
+            moved += 1
+    return moved
 
 
 def one_level_csr(
-    node_ids: np.ndarray,
-    src: np.ndarray,
-    dst: np.ndarray,
+    n: int,
+    s: np.ndarray,
+    d: np.ndarray,
     w: np.ndarray,
     resolution: float,
     seed: int,
     level: int,
-    min_gain: float = MIN_GAIN,
 ) -> tuple[np.ndarray, float]:
-    """One local-move phase over the graph given as canonical edge arrays.
+    """One exact local-move phase over n nodes (python-louvain's
+    __one_level).
 
-    node_ids: sorted unique vertex ids (may include isolated vertices).
-    src/dst/w: canonical undirected edges (src<=dst), parallel arrays;
-    self-loops allowed. Returns (community index per node_ids position,
+    s/d: canonical edges as node indices, self-loops allowed; w: their
+    weights (float64). Each pass visits all n nodes in a fresh shuffle
+    and runs _local_pass; passes stop when one moves nothing or gains
+    less than MIN_GAIN modularity. Returns (community per node,
     renumbered 0..k-1 by first appearance over ascending node order,
     modularity after the level).
     """
-    n = len(node_ids)
-    s = np.searchsorted(node_ids, src)
-    d = np.searchsorted(node_ids, dst)
-    w = np.asarray(w, dtype=np.float64)
-
-    loops = s == d
-    self_w = np.zeros(n)
-    np.add.at(self_w, s[loops], w[loops])
-
-    es, ed, ew = s[~loops], d[~loops], w[~loops]
-    # CSR over the symmetric view
-    heads = np.concatenate([es, ed])
-    tails = np.concatenate([ed, es])
-    hw = np.concatenate([ew, ew])
-    order = np.argsort(heads, kind="stable")
-    heads, tails, hw = heads[order], tails[order], hw[order]
-    indptr = np.zeros(n + 1, dtype=np.int64)
-    np.add.at(indptr, heads + 1, 1)
-    indptr = np.cumsum(indptr)
-
-    k = np.zeros(n)
-    np.add.at(k, heads, hw)
-    k += 2.0 * self_w
     m = float(w.sum())
     if m <= 0:
         return np.arange(n, dtype=np.int64), 0.0
-
+    heads, tails, hw, k = _symmetric(s, d, w, n)
+    indptr, tails, hw = _csr(heads, tails, hw, n)
     com = np.arange(n, dtype=np.int64)
     tot = k.copy()
-    internals = self_w.copy()
     rng = np.random.RandomState((seed + 1000003 * level) % (2**32))
 
     def mod() -> float:
-        return float(
-            (internals * resolution / m - (tot / (2.0 * m)) ** 2).sum()
-        )
+        inside = com[s] == com[d]
+        internals = np.bincount(com[s][inside], weights=w[inside], minlength=n)
+        return float((internals * resolution / m - (tot / (2.0 * m)) ** 2).sum())
 
-    modified = True
-    cur_mod = mod()
-    new_mod = cur_mod
-    while modified:
+    new_mod = mod()
+    while True:
         cur_mod = new_mod
-        modified = False
         visit = np.arange(n)
         rng.shuffle(visit)
-        for u in visit:
-            cu = com[u]
-            lo, hi = indptr[u], indptr[u + 1]
-            nbr_coms = com[tails[lo:hi]]
-            nbr_w = hw[lo:hi]
-            # dnc per neighboring community, scanned in ascending-com order
-            cands, inv = np.unique(nbr_coms, return_inverse=True)
-            dnc = np.zeros(len(cands))
-            np.add.at(dnc, inv, nbr_w)
-            degc = k[u] / (2.0 * m)
-            pos_u = np.searchsorted(cands, cu)
-            own_dnc = (
-                dnc[pos_u] if pos_u < len(cands) and cands[pos_u] == cu else 0.0
-            )
-            remove_cost = -own_dnc + resolution * (tot[cu] - k[u]) * degc
-            tot[cu] -= k[u]
-            internals[cu] -= own_dnc + self_w[u]
-            incr = remove_cost + dnc - resolution * tot[cands] * degc
-            best_com, best_incr = cu, 0.0
-            pos = np.argmax(incr) if len(incr) else -1
-            if pos >= 0 and incr[pos] > 0.0:
-                # strict '>' with ascending-com scan ⇒ first max wins
-                first = np.flatnonzero(incr == incr[pos])[0]
-                if incr[first] > best_incr:
-                    best_incr = float(incr[first])
-                    best_com = int(cands[first])
-            add_dnc = 0.0
-            posb = np.searchsorted(cands, best_com)
-            if posb < len(cands) and cands[posb] == best_com:
-                add_dnc = dnc[posb]
-            tot[best_com] += k[u]
-            internals[best_com] += add_dnc + self_w[u]
-            com[u] = best_com
-            if best_com != cu:
-                modified = True
+        moved = _local_pass(visit, indptr, tails, hw, com, tot, k, resolution, 2.0 * m)
         new_mod = mod()
-        if new_mod - cur_mod < min_gain:
-            break
-
-    return _renumber(com), new_mod
+        if not moved or new_mod - cur_mod < MIN_GAIN:
+            return _renumber(com), new_mod
 
 
 def _renumber(com: np.ndarray) -> np.ndarray:
@@ -176,7 +177,6 @@ def dendrogram_csr(
     seed: int,
     start_level: int,
     max_levels: int,
-    min_gain: float = MIN_GAIN,
     tail_max: float = math.inf,
     sweeps: dict | None = None,
 ) -> tuple[np.ndarray, float, int]:
@@ -192,8 +192,8 @@ def dendrogram_csr(
     While the level graph has more than tail_max nodes a level is a
     parallel one (parallel_level_csr with the keyword arguments `sweeps`),
     kept up to max(1, max_levels) levels and, above level 0, while it
-    gains at least min_gain — louvain._levels' distributed loop. The rest
-    are one_level_csr levels, kept while they gain at least min_gain, up
+    gains at least MIN_GAIN — louvain._levels' distributed loop. The rest
+    are one_level_csr levels, kept while they gain at least MIN_GAIN, up
     to max_levels.
 
     Returns (final community per node, 0..k-1 in rep order; the
@@ -221,7 +221,7 @@ def dendrogram_csr(
         new_mod = None
         if level > 0 or com.max() + 1 > tail_max:  # level 0 handing off has no check
             new_mod = _modularity(com, s, d, w, resolution)
-            if level > 0 and new_mod - mod < min_gain:
+            if level > 0 and new_mod - mod < MIN_GAIN:
                 return final, mod, kept
         final, mod, kept = com[final], new_mod, kept + 1
         s, d, w, n = _coarsen(com, s, d, w)
@@ -229,8 +229,8 @@ def dendrogram_csr(
     if kept:  # the exact levels start from the coarse graph's singletons
         mod = _modularity(np.arange(n), s, d, w, resolution)
     while level == 0 or level < max_levels:
-        com, new_mod = one_level_csr(np.arange(n), s, d, w, resolution, seed, level)
-        if mod is not None and new_mod - mod < min_gain:
+        com, new_mod = one_level_csr(n, s, d, w, resolution, seed, level)
+        if mod is not None and new_mod - mod < MIN_GAIN:
             break
         final, mod, kept = com[final], new_mod, kept + 1
         s, d, w, n = _coarsen(com, s, d, w)
@@ -310,13 +310,7 @@ def parallel_level_csr(
     """
     n = len(ids)
     n_blocks, min_moved = sweep_plan(n, cores, n_blocks)
-    loop = s == d
-    heads = np.concatenate([s[~loop], d[~loop]])
-    tails = np.concatenate([d[~loop], s[~loop]])
-    hw = np.concatenate([w[~loop], w[~loop]])
-    k = np.bincount(heads, weights=hw, minlength=n) + 2.0 * np.bincount(
-        s[loop], weights=w[loop], minlength=n
-    )
+    heads, tails, hw, k = _symmetric(s, d, w, n)
     blk = np.mod(xxhash64(ids, int32), n_blocks)[heads]
     order = np.argsort(blk, kind="stable")
     heads, tails, hw = heads[order], tails[order], hw[order]
@@ -360,7 +354,6 @@ def block_local_moves(
     sweep: int,
     block: int,
     n_blocks: int,
-    max_passes: int = 10,
 ) -> tuple[np.ndarray, np.ndarray]:
     """One block's local-move phase for parallel Louvain (Grappolo-style).
 
@@ -372,10 +365,10 @@ def block_local_moves(
     see in-block updates. Σ_tot is tracked as snapshot + local delta, the
     cross-block reconciliation happening at the next sweep's refresh.
 
-    Same CSR + per-node numpy construction as one_level_csr (the exact
-    kernel): candidates scanned in ascending community order, strict '>'
-    improvement, first max wins. Runs to in-block fixpoint (≤ max_passes).
-    Returns (moved vertex ids, their new global community labels).
+    The block's active nodes make _local_pass moves, the exact levels'
+    move loop, over the block's CSR and a compact community universe,
+    until a pass moves nothing (at most MAX_PASSES passes). Returns
+    (moved vertex ids, their new global community labels).
     """
     verts = np.unique(np.concatenate([src, dst]))
     nv = len(verts)
@@ -398,12 +391,7 @@ def block_local_moves(
     init_comc = comc.copy()
 
     # CSR over the block's adjacency (src is always a block node)
-    order = np.argsort(su, kind="stable")
-    tails = sv[order]
-    hw = np.asarray(w, dtype=np.float64)[order]
-    indptr = np.zeros(nv + 1, dtype=np.int64)
-    np.add.at(indptr, su + 1, 1)
-    indptr = np.cumsum(indptr)
+    indptr, tails, hw = _csr(su, sv, np.asarray(w, dtype=np.float64), nv)
 
     act_pos = np.unique(su)
     if n_blocks > 1 and sweep > 0:
@@ -419,40 +407,9 @@ def block_local_moves(
     rng = np.random.RandomState(
         (seed + 1000003 * level + 7919 * sweep + 104729 * block) % (2**32)
     )
-    act_pos = act_pos.copy()
-    two_m = 2.0 * m
-
-    for _ in range(max_passes):
+    for _ in range(MAX_PASSES):
         rng.shuffle(act_pos)
-        pass_moved = 0
-        for u in act_pos:
-            cu_i = comc[u]
-            ku = k_v[u]
-            lo, hi = indptr[u], indptr[u + 1]
-            nbr_coms = comc[tails[lo:hi]]
-            nw = hw[lo:hi]
-            cands, inv = np.unique(nbr_coms, return_inverse=True)
-            dnc = np.zeros(len(cands))
-            np.add.at(dnc, inv, nw)
-            degc = ku / two_m
-            pos_u = np.searchsorted(cands, cu_i)
-            own_dnc = (
-                dnc[pos_u] if pos_u < len(cands) and cands[pos_u] == cu_i else 0.0
-            )
-            remove_cost = -own_dnc + resolution * (tot[cu_i] - ku) * degc
-            tot[cu_i] -= ku
-            incr = remove_cost + dnc - resolution * tot[cands] * degc
-            best_com = cu_i
-            if len(incr):
-                p = np.argmax(incr)
-                if incr[p] > 0.0:
-                    # strict '>' with ascending-com scan ⇒ first max wins
-                    best_com = int(cands[np.flatnonzero(incr == incr[p])[0]])
-            tot[best_com] += ku
-            if best_com != cu_i:
-                comc[u] = best_com
-                pass_moved += 1
-        if pass_moved == 0:
+        if not _local_pass(act_pos, indptr, tails, hw, comc, tot, k_v, resolution, 2.0 * m):
             break
 
     ch = np.flatnonzero(comc != init_comc)

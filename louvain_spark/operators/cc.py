@@ -42,20 +42,19 @@ def _tag_min(df: DataFrame) -> DataFrame:
     return df.join(mins.hint("shuffle_hash"), "src")
 
 
-def _large_star(edges: DataFrame, dedup: bool = False) -> DataFrame:
+def _large_star(edges: DataFrame) -> DataFrame:
     """For each u: m = min(Γ(u) ∪ {u}); emit (v, m) for v ∈ Γ(u), v > u.
 
-    dedup=False skips the intermediate distinct (one full shuffle per
-    round): the output has one row per (u,v) orientation — no inflation —
-    and the downstream small★ is duplicate-insensitive (its min aggregate
+    No intermediate distinct (it would cost one full shuffle per round):
+    the output has one row per (u,v) orientation — no inflation — and the
+    downstream small★ is duplicate-insensitive (its min aggregate
     collapses dupes; the round's single canonicalize dedups at the end).
     Emitted rows always have src=v > dst=m, so no self-loops either."""
     sym = symmetrize(edges)
     tagged = _tag_min(sym).withColumn("_m", F.least(F.col("src"), F.col("_mn")))
-    out = tagged.where(F.col("dst") > F.col("src")).select(
+    return tagged.where(F.col("dst") > F.col("src")).select(
         F.col("dst").alias("src"), F.col("_m").alias("dst")
     )
-    return canonicalize(out) if dedup else out
 
 
 def _small_star(edges: DataFrame) -> DataFrame:

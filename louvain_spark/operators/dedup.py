@@ -256,8 +256,9 @@ def fnv1a_hash_tokens(tokens) -> np.ndarray:
     return fnv1a_masked(buf, lens)
 
 
-def simhash_batch(texts: pd.Series, bits: int = 64, hash_name: str = "fnv") -> np.ndarray:
-    """Vectorized SimHash over a pandas batch of texts → int64 signatures.
+def simhash_batch(texts: pd.Series, hash_name: str = "fnv") -> np.ndarray:
+    """Vectorized 64-bit SimHash over a pandas batch of texts → int64
+    signatures.
 
     tokenization (lower + whitespace split) → unique-token hash (each
     distinct token hashed once per batch) → per-doc signed bit-sums via
@@ -290,7 +291,7 @@ def simhash_batch(texts: pd.Series, bits: int = 64, hash_name: str = "fnv") -> n
     else:
         raise ValueError(f"unknown hash_name: {hash_name!r}")
     h = hu[codes]  # per-occurrence token hash
-    bit_idx = np.arange(bits, dtype=np.uint64)
+    bit_idx = np.arange(64, dtype=np.uint64)
     # ones-count per (doc, bit) via one segmented reduce over the
     # occurrence-ordered bit matrix; signed sum = 2·ones − n_tokens
     ones = ((h[:, None] >> bit_idx[None, :]) & np.uint64(1)).astype(np.int32)
@@ -310,10 +311,9 @@ def simhash_signatures(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    bits: int = 64,
     hash_name: str = "fnv",
 ) -> DataFrame:
-    """(doc_id, simhash: long) — signed bit-sum over per-token hashes.
+    """(doc_id, simhash: long) — 64-bit signed bit-sum over per-token hashes.
 
     Arrow-batched pandas UDF; the batch kernel is fully vectorized
     (simhash_batch: unique tokens hashed once, one segmented reduce per
@@ -327,7 +327,7 @@ def simhash_signatures(
 
     @F.pandas_udf("long")
     def _simhash(texts: pd.Series) -> pd.Series:
-        return pd.Series(simhash_batch(texts, bits, hash_name))
+        return pd.Series(simhash_batch(texts, hash_name))
 
     return docs.select(F.col(id_col).alias("doc_id"), _simhash(F.col(text_col)).alias("simhash"))
 

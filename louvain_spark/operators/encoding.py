@@ -87,13 +87,12 @@ def encode_documents(
 
 def bigram_lm_scores(
     docs: DataFrame,
-    k_smooth: float = 0.5,
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
     """(doc_id, n_bigrams, sum_nll_u, score) — per-document mean
     negative log-likelihood under an add-k-smoothed bigram LM trained on
-    the corpus itself: P(w2|w1) = (c(w1,w2)+k) / (c(w1)+k·V). Lower
+    the corpus itself: P(w2|w1) = (c(w1,w2)+k) / (c(w1)+k·V), k = 0.5. Lower
     score = more predictable text; the standard in-corpus stand-in for
     the KenLM perplexity filter in CCNet-style curation.
 
@@ -110,7 +109,7 @@ def bigram_lm_scores(
     rows); occurrences then join the scored table on (w1,w2) with
     fan-out exactly 1. V is a 1-row broadcast fold.
     """
-    k = float(k_smooth)
+    k = 0.5
     # ONE tokenization pass: the regex-tokenized arrays are checkpointed
     # and every downstream branch (bigram pairs twice, unigrams once)
     # reads the blocks instead of re-running the full-corpus regex

@@ -2,7 +2,7 @@
 
 The load-bearing construction (SURVEY.md §1.2, §2.3 J1): vertices are
 conv/tool/role entities; two entities that co-occur within the same
-conversation (optionally within a bounded turn window) get an undirected
+conversation within a bounded turn window get an undirected
 edge weighted by the number of DISTINCT conversations in which they
 co-occur — the transposition of the reference's common-neighbor count
 (/root/reference/tool/Neo4jLouvainProcessor.py:183-210: pairs of What
@@ -21,16 +21,14 @@ Scale notes (10^12-turn design):
   break parity). The global sort is over the *entity dictionary* (tiny
   relative to the corpus: |tools|+|roles|+|convs|), not the turn table.
 
-Below the gate (window given, membership plus caller-dictionary rows at
-or below plans/gate.ONE_BLOCK_MAX_EDGES) the same (vertices, edges) come
+Below the gate (membership plus caller-dictionary rows at or below
+plans/gate.ONE_BLOCK_MAX_EDGES) the same (vertices, edges) come
 from one applyInPandas task (induce_kernel): at that size the banded
 plan's ~25 stages of latency, not its pair work, are the cost. The gate
 counts rows, so no 10^12-turn input ever takes this path.
 """
 
 from __future__ import annotations
-
-import math
 
 import numpy as np
 import pandas as pd
@@ -39,13 +37,6 @@ from pyspark.sql import functions as F
 
 from louvain_spark.plans import gate
 from louvain_spark.plans.gate import broadcast_or_shuffle
-
-# hub salting of the unwindowed pair join (cooccurrence_edges): a
-# conversation with more than SALT_THRESHOLD membership rows splits into
-# at most SALT_BUCKETS blocks of ~SALT_TARGET_PAIRS pair work each
-SALT_BUCKETS = 256
-SALT_THRESHOLD = 65536
-SALT_TARGET_PAIRS = 1 << 26
 
 
 def membership(transcripts: DataFrame) -> DataFrame:
@@ -69,18 +60,6 @@ def membership(transcripts: DataFrame) -> DataFrame:
     out = transcripts.select("conv_id", "turn_idx", ent)
     return out.where(F.col("e").isNotNull()).select(
         "conv_id", "turn_idx", F.col("e.entity").alias("entity"), F.col("e.etype").alias("etype")
-    )
-
-
-def heavy_keys(df: DataFrame, key_col: str, min_count: int) -> DataFrame:
-    """(key, count) of the keys with more than min_count rows — the
-    salting trigger of cooccurrence_edges' unwindowed self-join: a key
-    above the bound would put > min_count rows into one join group."""
-    return (
-        df.groupBy(key_col)
-        .count()
-        .where(F.col("count") > min_count)
-        .select(key_col, "count")
     )
 
 
@@ -239,139 +218,81 @@ def _one_task_edges(
 def cooccurrence_edges(
     transcripts: DataFrame,
     vertices: DataFrame | None = None,
-    window: int | None = None,
+    *,
+    window: int,
 ) -> tuple[DataFrame, DataFrame]:
     """Induce the canonical undirected co-occurrence edge table.
 
     Returns (vertices, edges) where edges = (src:long < dst:long,
     weight:double = COUNT(DISTINCT conv_id), etypes:array<string>).
 
-    window=None → co-occurrence anywhere within the conversation;
-    window=w → only entity occurrences within |Δturn_idx| <= w pair up
-    (banded join: each side bucketed by turn_idx // w, right side
-    replicated to adjacent buckets — bounds join-group size for huge
-    conversations).
+    Only entity occurrences within |Δturn_idx| <= window pair up; a
+    window at least as long as the longest conversation pairs them
+    anywhere in it. The plan is a banded join: each side bucketed by
+    turn_idx // window, the right side replicated to the next bucket,
+    which bounds the join-group size of a huge conversation at
+    O(window) rows.
 
-    With a window, input at or below gate.ONE_BLOCK_MAX_EDGES rows (the
-    membership rows plus the caller's dictionary rows, observed on one
-    noop write) runs as one applyInPandas task instead (_one_task_edges,
-    induce_kernel). It returns the rows the plans below return: ids are
+    Input at or below gate.ONE_BLOCK_MAX_EDGES rows (the membership rows
+    plus the caller's dictionary rows, observed on one noop write) runs
+    as one applyInPandas task instead (_one_task_edges, induce_kernel).
+    It returns the rows the banded plan returns: ids are
     entity_vertices' ranks or the caller's, a name the caller's
     dictionary lacks drops out as the inner join drops it, and etypes are
     the same expression over the endpoints' vtypes. It reads one
     snapshot, so the rank, the dictionary join, the vtype-range collect
-    and the banded join do not run. window=None keeps the plans below at
-    every size: its pair work grows with the square of a conversation's
-    length, which is what the salting bounds.
-
-    Hub salting (window=None only; SURVEY §4.3): a single huge
-    conversation puts its whole membership — and its QUADRATIC pair
-    output — into ONE conv_id join group, computed by one task (AQE's
-    runtime skew-split did not rescue this shape in measurement:
-    BENCH/skew_induce_r5.md). Conversations whose membership exceeds
-    SALT_THRESHOLD rows (histogram pre-pass, heavy_keys — the
-    reference's 'histogram first' pattern) get 2-D blocked self-joins:
-    per conversation, nb = min(SALT_BUCKETS,
-    ceil(rows/sqrt(SALT_TARGET_PAIRS))) and each occurrence row gets a
-    block coordinate h = hash(id, turn_idx) % nb — the ROW, not just
-    id, because a dominant entity (role:assistant on half the turns)
-    would keep all its occurrences in one id-hash block. The left side
-    holds (_ia = h, all _ib), the right (_ib = h, all _ia); joining on
-    (conv, _ia, _ib) makes every pair meet exactly once at (h(a), h(b))
-    while per-task pair work is bounded at ~SALT_TARGET_PAIRS and
-    per-task input at ~2·rows/nb — independent of AQE. Every other
-    conversation has nb = 1, a plain conv_id self-join. Results do not
-    depend on the salting (pure plan change; duplicate (src,dst,conv)
-    pair rows from multi-turn entities exist unsalted too and the same
-    distinct absorbs them). Replication cost is explicit: each hot side
-    travels nb×. The banded path needs no salting — its groups are
-    O(window) by construction.
+    and the banded join do not run.
     """
     mem = membership(transcripts)
-    if window is not None:
-        one = _one_task_edges(mem, vertices, window)
-        if one is not None:
-            return one
+    one = _one_task_edges(mem, vertices, window)
+    if one is not None:
+        return one
     rows = None
     if vertices is None:
         vertices, rows = _entity_dictionary(mem)
     m = _with_ids(mem, vertices, rows).select("conv_id", "turn_idx", "id")
 
-    if window is None:
-        chunk = max(1.0, math.sqrt(SALT_TARGET_PAIRS))
-        hot = heavy_keys(m, "conv_id", SALT_THRESHOLD).select(
-            "conv_id",
-            F.least(
-                F.lit(SALT_BUCKETS),
-                F.greatest(
-                    F.lit(2),
-                    F.ceil(F.col("count") / F.lit(chunk)).cast("int"),
-                ),
-            ).alias("_nb"),
+    band = max(int(window), 1)  # window=0 → same-turn only; band by turn
+    # 2-band replication (r7; was 3-band): the b side explodes only to
+    # {its band, its band + 1}, so an occurrence pair spanning adjacent
+    # bands meets exactly once with a = the LATER-band occurrence (b
+    # replicated up into a's band), and a same-band pair — which the
+    # join produces in both role orders — keeps exactly one order via
+    # the (turn_idx, id) lexicographic tiebreak. Probe volume drops by
+    # a third vs replicating b to {-1,0,+1} with the a.id<b.id filter;
+    # the (src,dst,conv) set after canonicalization is IDENTICAL
+    # (verified exceptAll-equal both ways at the bench shape, and the
+    # distinct absorbs occurrence-pair multiplicity differences).
+    # shuffle_hash on the unreplicated a side: the planner's default
+    # sort-merge pays an O(n log n) sort of BOTH shuffled sides on the
+    # (conv_id, _b) string key; hashing the smaller side skips it
+    # (measured 3.2s → 1.7s for the full pair phase at 11.4M pairs).
+    a = m.withColumn("_b", (F.col("turn_idx") / band).cast("long")).alias("a")
+    b = (
+        m.withColumn(
+            "_b", F.explode(F.array(*[
+                ((F.col("turn_idx") / band).cast("long") + d) for d in (0, 1)
+            ]))
         )
-        mt = m.join(F.broadcast(hot), "conv_id", "left").withColumn(
-            "_nb", F.coalesce("_nb", F.lit(1))
-        )
-        rowh = F.pmod(F.xxhash64("id", "turn_idx"), F.col("_nb")).cast("int")
-        blocks = F.explode(F.sequence(F.lit(0), F.col("_nb") - 1))
-        a = mt.select(
-            "conv_id", "id", rowh.alias("_ia"), blocks.alias("_ib")
-        ).alias("a")
-        b = mt.select(
-            "conv_id", "id", rowh.alias("_ib"), blocks.alias("_ia")
-        ).alias("b")
-        pairs = a.join(b, on=["conv_id", "_ia", "_ib"]).where(
-            F.col("a.id") < F.col("b.id")
-        )
-    else:
-        band = max(int(window), 1)  # window=0 → same-turn only; band by turn
-        # 2-band replication (r7; was 3-band): the b side explodes only to
-        # {its band, its band + 1}, so an occurrence pair spanning adjacent
-        # bands meets exactly once with a = the LATER-band occurrence (b
-        # replicated up into a's band), and a same-band pair — which the
-        # join produces in both role orders — keeps exactly one order via
-        # the (turn_idx, id) lexicographic tiebreak. Probe volume drops by
-        # a third vs replicating b to {-1,0,+1} with the a.id<b.id filter;
-        # the (src,dst,conv) set after canonicalization is IDENTICAL
-        # (verified exceptAll-equal both ways at the bench shape, and the
-        # distinct absorbs occurrence-pair multiplicity differences).
-        # shuffle_hash on the unreplicated a side: the planner's default
-        # sort-merge pays an O(n log n) sort of BOTH shuffled sides on the
-        # (conv_id, _b) string key; hashing the smaller side skips it
-        # (measured 3.2s → 1.7s for the full pair phase at 11.4M pairs).
-        a = m.withColumn("_b", (F.col("turn_idx") / band).cast("long")).alias("a")
-        b = (
-            m.withColumn(
-                "_b", F.explode(F.array(*[
-                    ((F.col("turn_idx") / band).cast("long") + d) for d in (0, 1)
-                ]))
+    ).alias("b")
+    pairs = (
+        a.hint("shuffle_hash")
+        .join(b, on=[a["conv_id"] == b["conv_id"], a["_b"] == b["_b"]])
+        .where(F.abs(F.col("a.turn_idx") - F.col("b.turn_idx")) <= window)
+        .where(F.col("a.id") != F.col("b.id"))
+        .where(
+            (
+                F.struct(F.col("a.turn_idx"), F.col("a.id"))
+                < F.struct(F.col("b.turn_idx"), F.col("b.id"))
             )
-        ).alias("b")
-        pairs = (
-            a.hint("shuffle_hash")
-            .join(b, on=[a["conv_id"] == b["conv_id"], a["_b"] == b["_b"]])
-            .where(F.abs(F.col("a.turn_idx") - F.col("b.turn_idx")) <= window)
-            .where(F.col("a.id") != F.col("b.id"))
-            .where(
-                (
-                    F.struct(F.col("a.turn_idx"), F.col("a.id"))
-                    < F.struct(F.col("b.turn_idx"), F.col("b.id"))
-                )
-                | ((F.col("b.turn_idx") / band).cast("long") != F.col("b._b"))
-            )
+            | ((F.col("b.turn_idx") / band).cast("long") != F.col("b._b"))
         )
-        proj = pairs.select(
-            F.least(F.col("a.id"), F.col("b.id")).alias("src"),
-            F.greatest(F.col("a.id"), F.col("b.id")).alias("dst"),
-            F.col("a.conv_id").alias("conv_id"),
-        )
-
-    if window is None:
-        proj = pairs.select(
-            F.col("a.id").alias("src"),
-            F.col("b.id").alias("dst"),
-            F.col("a.conv_id").alias("conv_id"),
-        )
+    )
+    proj = pairs.select(
+        F.least(F.col("a.id"), F.col("b.id")).alias("src"),
+        F.greatest(F.col("a.id"), F.col("b.id")).alias("dst"),
+        F.col("a.conv_id").alias("conv_id"),
+    )
     # distinct on (src,dst,conv) carries conv_id in the shuffle key → no hot
     # key; the final count has map-side combine. etypes (the reference's
     # COLLECT(DISTINCT type(r)), /root/reference/tool/Neo4jLouvainProcessor.py:202-203)

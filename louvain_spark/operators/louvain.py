@@ -52,7 +52,7 @@ like 'exact'.
 Level loop (all modes): renumber communities by first appearance over
 ascending node order (≡ rank by min member vertex id) → coarsen
 groupBy(min(c_src,c_dst), max(...)).sum(w) with self-loops kept → repeat
-while level modularity gain ≥ 1e-7. Between two distributed levels the
+while level modularity gain ≥ _louvain_kernel.MIN_GAIN (1e-7). Between two distributed levels the
 renumber, the modularity and the coarsening are distributed; the task
 does all three itself, renumbering its first level graph by its
 (community → min member id) rows and taking that level's modularity as
@@ -163,8 +163,8 @@ def _one_level_parallel(
     Nodes are hash-partitioned into blocks; each sweep ships every block its
     nodes' full adjacency tagged with a sweep-start snapshot of community
     assignments and Σ_tot aggregates, and the block kernel
-    (_louvain_kernel.block_local_moves — the same CSR/numpy construction as
-    the exact kernel) runs sequential python-louvain moves to in-block
+    (_louvain_kernel.block_local_moves, through the exact levels' move pass
+    _local_pass) runs sequential python-louvain moves to in-block
     fixpoint, tracking local Σ_tot deltas. Cross-block state refreshes
     between sweeps; sweeps stop once one moves too few nodes (sweep_plan)
     or after _louvain_kernel.MAX_SWEEPS.
@@ -377,7 +377,7 @@ def _compose(mapping: DataFrame, assign: DataFrame) -> DataFrame:
 
 def _one_task(
     spark, runner, edges, nodes, mapping, level, max_levels, resolution, seed,
-    min_gain, tail_max, popts,
+    tail_max, popts,
 ) -> tuple[DataFrame, float]:
     """Levels `level`, `level`+1, … in one task (dendrogram_csr): parallel
     levels while the level graph has more than tail_max vertices, then
@@ -403,8 +403,7 @@ def _one_task(
         rep = np.empty(len(b.ids), dtype=np.int64)
         rep[b.state_at] = b.state_label
         com, mod, kept = dendrogram_csr(
-            rep, b.src, b.dst, b.w, resolution, seed, level, max_levels, min_gain,
-            tail_max, sweeps,
+            rep, b.src, b.dst, b.w, resolution, seed, level, max_levels, tail_max, sweeps,
         )
         return com, kept, mod
 
@@ -423,7 +422,7 @@ def _one_task(
 
 def _levels(
     spark, runner, ckpt_base, edges, n_edges, ids, mapping, mod, level, n, tail_max,
-    popts, max_levels, resolution, seed, min_gain, total_w=None,
+    popts, max_levels, resolution, seed, total_w=None,
 ) -> tuple[DataFrame, float]:
     """Dendrogram levels from `level` on (shared by louvain() and
     resume_louvain()): distributed parallel levels while the level graph
@@ -461,7 +460,7 @@ def _levels(
         new_mod = None
         if level > 0 or not handoff:
             new_mod = q_mod(edges.withColumnRenamed("w", "weight"), assign, resolution, "weight")
-            if level > 0 and new_mod - mod < min_gain:
+            if level > 0 and new_mod - mod < MIN_GAIN:
                 return mapping, float(mod)
         if not handoff:
             assign, ranked = _renumber(assign)
@@ -483,7 +482,7 @@ def _levels(
         nodes = mapping.groupBy(F.col("community").alias("id")).agg(F.min("id").alias("rep"))
     return _one_task(
         spark, runner, edges, nodes, mapping, level, max_levels, resolution, seed,
-        min_gain, tail_max, popts,
+        tail_max, popts,
     )
 
 
@@ -495,7 +494,6 @@ def louvain(
     seed: int = 42,
     weight_col: str | None = "weight",
     mode: str = "exact",
-    min_gain: float = MIN_GAIN,
     max_levels: int = 32,
     runner: SuperstepRunner | None = None,
     parallel_opts: dict | None = None,
@@ -553,7 +551,7 @@ def louvain(
             n = ids.count()
         return _levels(
             spark, runner, ckpt_base, e, n_edges, ids, None, None, 0, n, tail_max,
-            popts, max_levels, resolution, seed, min_gain, total_w=float(total_w),
+            popts, max_levels, resolution, seed, total_w=float(total_w),
         )
     finally:
         ids.unpersist()
@@ -588,7 +586,6 @@ def resume_louvain(
     resolution: float = 1.0,
     seed: int = 42,
     mode: str = "exact",
-    min_gain: float = MIN_GAIN,
     max_levels: int = 32,
     parallel_opts: dict | None = None,
 ) -> tuple[DataFrame, float]:
@@ -622,5 +619,5 @@ def resume_louvain(
             mod = _ledger_modularity(spark, runner, run_id, f"louvain-{mode}", step)
     return _levels(
         spark, runner, checkpoint_dir, cur_edges, n_edges, None, mapping, mod, step + 1,
-        n, tail_max, popts, max_levels, resolution, seed, min_gain,
+        n, tail_max, popts, max_levels, resolution, seed,
     )

@@ -68,15 +68,14 @@ def featurize_fields(
 def semantic_pairs(
     spark: SparkSession,
     docs: DataFrame,
-    fields: dict[str, float] | None = None,
     threshold: float = DEFAULT_THRESHOLD,
     k: int = 100,
     dim: int = 64,
 ) -> DataFrame:
-    """Canonical (src, dst, semantic_weight) pairs above the blend threshold."""
-    fields = fields or FIELD_WEIGHTS
-    emb = featurize_fields(docs, fields, dim).persist()
-    vec_cols = ["id", "_v_combined"] + [f"_v_{f}" for f in fields]
+    """Canonical (src, dst, semantic_weight) pairs above the blend
+    threshold, blending the FIELD_WEIGHTS fields."""
+    emb = featurize_fields(docs, FIELD_WEIGHTS, dim).persist()
+    vec_cols = ["id", "_v_combined"] + [f"_v_{f}" for f in FIELD_WEIGHTS]
     emb_slim = emb.select(*vec_cols)
 
     # candidate generation: combined-vector kNN with dynamic prefilter
@@ -97,14 +96,16 @@ def semantic_pairs(
 
     # refine: field-weighted blend on the candidate pairs only
     a = emb_slim.select(
-        F.col("id").alias("src"), *[F.col(f"_v_{f}").alias(f"_av_{f}") for f in fields]
+        F.col("id").alias("src"),
+        *[F.col(f"_v_{f}").alias(f"_av_{f}") for f in FIELD_WEIGHTS],
     )
     b = emb_slim.select(
-        F.col("id").alias("dst"), *[F.col(f"_v_{f}").alias(f"_bv_{f}") for f in fields]
+        F.col("id").alias("dst"),
+        *[F.col(f"_v_{f}").alias(f"_bv_{f}") for f in FIELD_WEIGHTS],
     )
     joined = pairs.join(a, "src").join(b, "dst")
     blend = None
-    for f, w in fields.items():
+    for f, w in FIELD_WEIGHTS.items():
         term = F.lit(w) * dot_col(F.col(f"_av_{f}"), F.col(f"_bv_{f}"))
         blend = term if blend is None else blend + term
     out = (
@@ -116,20 +117,19 @@ def semantic_pairs(
     return out
 
 
-def relation_weight_col(etypes_a, etypes_b=None, weights: dict[str, float] | None = None):
-    """Mean of per-type weights over concatenated type lists (F10) — a
-    JVM-side higher-order aggregate, no Python (input_hint: no per-row py)."""
+def relation_weight_col(etypes, weights: dict[str, float] | None = None):
+    """Mean of per-type weights over a type list (F10) — a JVM-side
+    higher-order aggregate, no Python (input_hint: no per-row py)."""
     weights = weights or TYPE_WEIGHTS
     keys = list(weights)
     lookup = F.map_from_arrays(
         F.array(*[F.lit(k) for k in keys]),
         F.array(*[F.lit(float(weights[k])) for k in keys]),
     )
-    arr = etypes_a if etypes_b is None else F.concat(etypes_a, etypes_b)
     total = F.aggregate(
-        arr, F.lit(0.0), lambda acc, t: acc + F.coalesce(lookup[t], F.lit(0.0))
+        etypes, F.lit(0.0), lambda acc, t: acc + F.coalesce(lookup[t], F.lit(0.0))
     )
-    return F.when(F.size(arr) > 0, total / F.size(arr)).otherwise(F.lit(0.0))
+    return F.when(F.size(etypes) > 0, total / F.size(etypes)).otherwise(F.lit(0.0))
 
 
 def blend_weights(

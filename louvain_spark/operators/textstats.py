@@ -120,30 +120,28 @@ def fingerprint(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
 def corpus_stats(
     docs: DataFrame,
     keys: tuple[str, ...] = ("lang",),
-    value_col: str = "n_chars",
     exact: bool = False,
-    accuracy: int = 10_000,
 ) -> DataFrame:
     """Dataset-card summary per key group: doc count, distinct sources,
-    mean and p50/p90 of `value_col`.
+    mean and p50/p90 of `n_chars`.
 
     exact=False (the 100 TB default) uses `percentile_approx` — a
     mergeable t-digest-style sketch that aggregates map-side and never
-    materializes a per-group sort; `accuracy` trades memory for error
-    (worst-case rank error 1/accuracy). exact=True uses `percentile`
+    materializes a per-group sort, at accuracy 10,000 (worst-case rank
+    error 1e-4). exact=True uses `percentile`
     (exact linear interpolation, bit-equal to DuckDB quantile_cont —
     the oracle mode), which buffers each group's values and is only for
     oracle parity and small data.
     """
     pctl = (
-        (lambda p: F.percentile(value_col, p))
+        (lambda p: F.percentile("n_chars", p))
         if exact
-        else (lambda p: F.percentile_approx(value_col, p, accuracy))
+        else (lambda p: F.percentile_approx("n_chars", p, 10_000))
     )
     return docs.groupBy(*keys).agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.count_distinct(F.col("source")).alias("n_sources"),
-        F.round(F.avg(value_col), 6).alias("mean_val"),
+        F.round(F.avg("n_chars"), 6).alias("mean_val"),
         F.round(pctl(0.5).cast("double"), 6).alias("p50_val"),
         F.round(pctl(0.9).cast("double"), 6).alias("p90_val"),
     )

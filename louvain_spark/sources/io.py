@@ -14,15 +14,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 
-def read_table(spark: SparkSession, path: str, columns: list[str] | None = None) -> DataFrame:
-    df = spark.read.parquet(path)
-    return df.select(*columns) if columns else df
+def read_table(spark: SparkSession, path: str) -> DataFrame:
+    return spark.read.parquet(path)
 
 
-def write_table(df: DataFrame, path: str, column_order: list[str] | None = None, mode: str = "overwrite") -> None:
+def write_table(df: DataFrame, path: str, column_order: list[str] | None = None) -> None:
     if column_order:
         df = df.select(*column_order)
-    df.write.mode(mode).parquet(path)
+    df.write.mode("overwrite").parquet(path)
 
 
 def overwrite_assignments(assignments: DataFrame, path: str) -> None:

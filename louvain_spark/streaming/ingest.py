@@ -14,13 +14,15 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+# arrivals of one digest farther apart than this may both be kept
+DEDUP_HORIZON = "24 hours"
+
 
 def stream_dedup_docs(
     spark: SparkSession,
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    dedup_horizon: str = "24 hours",
     available_now: bool = True,
 ):
     """Streaming exact-dedup during ingest: append only the first arrival
@@ -30,7 +32,7 @@ def stream_dedup_docs(
     state bounded by the watermark horizon instead of the corpus size —
     the only state shape that survives an unbounded 100 TB ingest (a
     plain streaming dropDuplicates grows state forever). Duplicates
-    farther apart than `dedup_horizon` can both land in the store;
+    farther apart than DEDUP_HORIZON can both land in the store;
     EXACTNESS is restored at compaction —
     run `operators/dedup.exact_duplicates` over the accumulated store and
     keep `is_canonical` rows. Which arrival survives inside the horizon
@@ -50,7 +52,7 @@ def stream_dedup_docs(
     deduped = (
         stream.withColumn("digest", F.md5(normalize_text(F.col("text"))))
         .withColumn("ingest_ts", F.current_timestamp())
-        .withWatermark("ingest_ts", dedup_horizon)
+        .withWatermark("ingest_ts", DEDUP_HORIZON)
         .dropDuplicatesWithinWatermark(["digest"])
         .drop("ingest_ts")
     )

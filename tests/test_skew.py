@@ -5,6 +5,7 @@ import pandas as pd
 
 from louvain_spark.operators.induce import cooccurrence_edges
 from louvain_spark.schema import TRANSCRIPTS
+from tests.conftest import use_gate_side
 
 
 def _long_conv(spark, n_turns=2000, n_tools=5):
@@ -37,10 +38,13 @@ def test_windowed_induction_bounds_hub_conversation(spark):
     assert all(r["weight"] == 1.0 for r in rows)
 
 
-def test_windowed_vs_unwindowed_pair_counts(spark):
+def test_windowed_vs_unwindowed_pair_counts(spark, monkeypatch):
     """The window cap must strictly reduce the candidate pair volume on a
-    long conversation (the 10^12-turn tractability argument)."""
+    long conversation (the 10^12-turn tractability argument); a window as
+    long as the conversation is the unwindowed count."""
     t = _long_conv(spark, n_turns=400)
-    _, capped = cooccurrence_edges(t, window=2)
-    _, full = cooccurrence_edges(t, window=None)
-    assert capped.count() <= full.count()
+    for side in ("one_block", "distributed"):
+        use_gate_side(monkeypatch, side)
+        _, capped = cooccurrence_edges(t, window=2)
+        _, full = cooccurrence_edges(t, window=400)
+        assert capped.count() <= full.count(), side

@@ -73,15 +73,20 @@ def _brute_edges(pdf, window=None, include_conv=True):
     return names, {k: float(len(v)) for k, v in pair_convs.items()}
 
 
-def test_cooccurrence_matches_brute(spark):
+def test_cooccurrence_matches_brute(spark, monkeypatch):
+    """A window as long as the longest conversation pairs every two
+    entities of a conversation: the unwindowed oracle."""
     pdf = transcripts_pandas(n_conv=40, seed=42)
     df = transcripts_df(spark, n_conv=40, seed=42)
     names, want = _brute_edges(pdf)
-    verts, edges = cooccurrence_edges(df)
-    got_v = {r["id"]: r["name"] for r in verts.collect()}
-    assert [got_v[i] for i in range(len(names))] == names
-    got = {(r["src"], r["dst"]): r["weight"] for r in edges.collect()}
-    assert got == want
+    window = int(pdf["turn_idx"].max() - pdf["turn_idx"].min())
+    for side in SIDES:
+        use_gate_side(monkeypatch, side)
+        verts, edges = cooccurrence_edges(df, window=window)
+        got_v = {r["id"]: r["name"] for r in verts.collect()}
+        assert [got_v[i] for i in range(len(names))] == names, side
+        got = {(r["src"], r["dst"]): r["weight"] for r in edges.collect()}
+        assert got == want, side
 
 
 def _names(verts):
